@@ -10,6 +10,10 @@ POST /process-logs → run_logs_pipeline (ExtractionLogger.py:95-176)
 
 Each stage is lazy until its sink write; incremental semantics come from
 the staged-MERGE upsert (K4) exactly like the reference's BigQuery MERGE.
+
+The convo route's stages (``analyze_convo``, ``write_convo_analysis``)
+and ``run_logs_pipeline`` are shared: the service routes (api.Engine)
+and the parity member (plans/parity.py) both call them.
 """
 from __future__ import annotations
 
@@ -20,7 +24,9 @@ from pyspark.sql import functions as F
 
 from .enrich.convo import analyze_conversations
 from .functions.datetimes import fuse_schedule
+from .operators.dedup import lineage_cut
 from .operators.setops import new_vs_existing_counts
+from .session import ship_package
 from .sinks.writers import append, history_append, overwrite, table_path, upsert
 from .transforms.messages import process_messages
 from .transforms.tickets import process_agents, process_tags, process_tickets
@@ -65,20 +71,28 @@ def run_tags_pipeline(
     return overwrite(process_tags(raw_tags), base_dir, "tags")
 
 
-def run_convo_pipeline(
+def convo_messages(messages: DataFrame) -> DataFrame:
+    """P4: the messages the LLM analyses — chat (type M) rows in text
+    (format T)."""
+    return messages.where(
+        (F.col("message_type") == "M") & (F.col("message_format") == "T")
+    )
+
+
+def analyze_convo(
     spark: SparkSession,
     messages: DataFrame,
     gateway: Callable[[str], tuple[str, int, str]],
-    base_dir: str,
-) -> str:
-    """LLM conversation analysis: P4 filter → A5+U1 applyInPandas →
-    F11 schedule fusion → K5 history append → K4 upsert
-    (Extractor.py:254-327)."""
-    convo_msgs = messages.where(
-        (F.col("message_type") == "M") & (F.col("message_format") == "T")
-    )
+) -> DataFrame:
+    """P4 filter → A5+U1 mapInPandas → F11 schedule fusion, materialized
+    by an EAGER lineage cut: every consumer (history append, the MERGE's
+    anti-join and union, concurrent broadcast jobs) reads the cut, so the
+    gateway runs once per conversation per run and history and current
+    state record the same analysis. The package is shipped first: the
+    workers import it whatever the driver's cwd."""
+    ship_package(spark)
     analyzed = analyze_conversations(
-        convo_msgs,
+        convo_messages(messages),
         gateway,
         key_col="ticket_id",
         order_cols=("message_datecreated", "message_id"),
@@ -89,8 +103,29 @@ def run_convo_pipeline(
         "schedule_ts",
         fuse_schedule(F.col("schedule_date"), F.col("schedule_time")),
     )
+    return lineage_cut(analyzed, eager=True)
+
+
+def write_convo_analysis(
+    spark: SparkSession, analyzed: DataFrame, base_dir: str
+) -> str:
+    """K5 history append, THEN K4 current-state MERGE on ticket_id — the
+    reference order (extractor_bq_helpers.py:83-108): a failed history
+    load leaves the current state untouched."""
     history_append(spark, analyzed, base_dir, "convo_analysis")
     return upsert(spark, analyzed, base_dir, "convo_analysis", "ticket_id")
+
+
+def run_convo_pipeline(
+    spark: SparkSession,
+    messages: DataFrame,
+    gateway: Callable[[str], tuple[str, int, str]],
+    base_dir: str,
+) -> str:
+    """POST /extract/process-convo (Extractor.py:254-327)."""
+    return write_convo_analysis(
+        spark, analyze_convo(spark, messages, gateway), base_dir
+    )
 
 
 def run_logs_pipeline(
@@ -100,19 +135,24 @@ def run_logs_pipeline(
     key: str,
     analyzed: DataFrame,
     base_dir: str,
+    now: Column | None = None,
 ) -> str:
     """Run metrics: E1/E2 new-vs-existing accounting + A1 token totals →
-    one-row append to logs (ExtractionLogger.py:95-176)."""
+    one-row append to logs (ExtractionLogger.py:95-176). ``now`` is the
+    extraction clock, injectable like transforms/tickets.py:
+    add_extraction_timestamp (default: the current second)."""
     counts = new_vs_existing_counts(run_keys, existing_keys, key)
     tokens = analyzed.agg(
-        F.sum("tokens").alias("total_tokens"),
+        F.coalesce(F.sum("tokens"), F.lit(0)).cast("long").alias("total_tokens"),
         F.max("model").alias("model"),
     )
+    if now is None:
+        now = F.date_trunc("second", F.current_timestamp())
     row = counts.crossJoin(tokens).select(
-        F.date_trunc("second", F.current_timestamp()).alias("extraction_date"),
-        F.col("n_new").alias("no_new"),
-        F.col("n_existing").alias("no_existing"),
-        F.col("n_total").alias("no_total"),
+        now.alias("extraction_date"),
+        F.col("n_new").cast("long").alias("no_new"),
+        F.col("n_existing").cast("long").alias("no_existing"),
+        F.col("n_total").cast("long").alias("no_total"),
         "total_tokens",
         "model",
     )

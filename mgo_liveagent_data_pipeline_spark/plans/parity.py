@@ -83,7 +83,7 @@ def _fmt(c: Column) -> Column:
     return F.date_format(c, _FMT_SPARK)
 
 
-def _overlap(*thunks) -> None:
+def _overlap(*thunks) -> list:
     """Run independent writer steps concurrently (guide §2.6 thread-pool
     job submission). ONLY for steps that write DIFFERENT tables and read
     only already-materialized inputs: every table's own write order is
@@ -97,7 +97,8 @@ def _overlap(*thunks) -> None:
     cancellation, so a failing step does not abort its sibling writers.
     Every failure is surfaced: the first exception is raised and any
     further ones are logged before it propagates, so a multi-writer
-    failure is fully reported instead of the extras being discarded."""
+    failure is fully reported instead of the extras being discarded.
+    Returns the steps' results in submission order."""
     from concurrent.futures import ThreadPoolExecutor, wait
 
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
@@ -112,6 +113,7 @@ def _overlap(*thunks) -> None:
                 "concurrent writer step also failed: %r", extra
             )
         raise errs[0]
+    return [f.result() for f in futures]
 
 
 def _run_keyed_persist(df: DataFrame, run_tag: str) -> "DataFrame":
@@ -121,12 +123,13 @@ def _run_keyed_persist(df: DataFrame, run_tag: str) -> "DataFrame":
     the member's full compute (no result reuse across invocations) —
     the same no-reuse property the round-11 shape got for free from
     persisting read-backs of per-run scratch paths. The predicate
-    (run_tag = run_tag, both literals) is constant-folded out of the
-    physical plan, so runtime cost and schema are unchanged; only the
-    analyzed-plan cache key differs per run."""
+    (literal run_tag IS NOT NULL; an equality of two equal literals logs
+    a trivially-true WARN) is constant-folded out of the physical plan,
+    so runtime cost and schema are unchanged; only the analyzed-plan
+    cache key differs per run."""
     from ..operators.dedup import _scoped_persist
 
-    return _scoped_persist(df.where(F.lit(run_tag) == F.lit(run_tag)))
+    return _scoped_persist(df.where(F.lit(run_tag).isNotNull()))
 
 
 def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,29 +152,32 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
          (the reference's user cache, Ticket.py get_user_cache) → K4
       5. ``convo_analysis``  P4 type/format filter → A5 ordered group
          concat → U1 LLM gateway (Failing→Stub chain) → F11 schedule
-         fusion (Extractor.py:254-327, core/LLMGateway.py:39-42)
+         fusion (Extractor.py:254-327, core/LLMGateway.py:39-42) — the
+         convo route's own stage, pipelines.analyze_convo
       6. ``geocode_viable``  U2/J5 gazetteer similarity argmax + J6
          fuzzy serviceability tag, score columns dropped (P11 sweep —
          Extractor.py:290-296, core/Geocode.py, utils/geocode_utils.py)
-      7. ``history_merge``   K5 history append + K4 current-state MERGE,
-         run twice: history accumulates 2x, current stays deduped
-         (extractor_bq_helpers.py:83-108). The reference appends history
-         strictly BEFORE each merge; here a round's two writes overlap
-         (different tables), so equivalence to the reference's failure
-         ordering holds on the happy path only — see _overlap
+      7. ``history_merge``   K5 history append, then K4 current-state
+         MERGE, run twice: history accumulates 2x, current stays deduped
+         (extractor_bq_helpers.py:83-108) — the route's writer,
+         pipelines.write_convo_analysis
       8. ``logs_metrics``    E1/E2 new-vs-existing key accounting + A1
          token totals → one-row logs append, read back
-         (ExtractionLogger.py:95-176)
+         (ExtractionLogger.py:95-176) — pipelines.run_logs_pipeline
 
     Returns the 8-row ledger (stage_no, stage, rows_in, rows_out,
     checksum). Driver-visible via the ``elt_parity`` mode of
     ``k5_history_sink``; the twin is ``_elt_parity_sql``."""
-    from ..operators.dedup import _scoped_persist, lineage_cut
+    from ..operators.dedup import _scoped_persist
     from ..operators.joins import fuzzy_threshold_join, similarity_join_argmax
-    from ..operators.setops import new_vs_existing_counts
-    from ..enrich.convo import analyze_conversations
-    from ..functions.datetimes import fuse_schedule, to_manila
-    from ..sinks.writers import append, history_append, table_path, upsert
+    from ..functions.datetimes import to_manila
+    from ..pipelines import (
+        analyze_convo,
+        convo_messages,
+        run_logs_pipeline,
+        write_convo_analysis,
+    )
+    from ..sinks.writers import append, table_path, upsert
     from ..transforms.messages import SPECIAL_USER_ID, SYSTEM_USER_ID, process_messages
     from ..transforms.tickets import process_tickets
 
@@ -309,31 +315,23 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # below, off the critical path (guide §2.6; the round-11 shape wrote
     # the table first and re-scanned it back into the cache, putting the
     # write job AND the read-back fill in sequence in front of stage 5).
-    # Downstream consumers read the in-hand cache, which is value-
-    # identical to a read-back of the written table (the parquet
-    # roundtrip of these deterministic columns is exact; pinned by
-    # test_parity_inhand_equals_readback against the written files).
-    # Persist AND materialize now: five consumers read this relation
-    # (s3 stats, users dim, convo filter, both ledger branches), several
-    # inside CONCURRENT broadcast-exchange jobs — a lazy persist lets
-    # each racing first consumer recompute the scan instead of hitting
-    # the cache (guide §5; the round-11 event-log profile measured the
-    # same messages subtree in 9 separate jobs of one run).
+    # Downstream stages read the in-hand cache, which is value-identical
+    # to a read-back of the written table (the parquet roundtrip of these
+    # deterministic columns is exact; pinned by
+    # test_parity_inhand_equals_readback against the written files); the
+    # ledger's s3 reads the written table back.
+    # Persist AND materialize now: four consumers read this relation
+    # (messages append, users dim, convo analysis, the stage-5 ledger
+    # count), several inside CONCURRENT broadcast-exchange jobs — a lazy
+    # persist lets each racing first consumer recompute the scan instead
+    # of hitting the cache (guide §5; the round-11 event-log profile
+    # measured the same messages subtree in 9 separate jobs of one run).
     msgs = _run_keyed_persist(
         process_messages(raw_msgs, agents, now=now2), base
     )
     _overlap(_tickets_writes, msgs.count)
     tickets = spark.read.parquet(table_path(base, "tickets"))
     s1 = _stats(tickets, ck1)
-    s3 = _stats(
-        msgs,
-        F.concat_ws(
-            "|",
-            "message_id", "userid", "sender_name", "sender_type",
-            "receiver_name", "receiver_type", "agent_name", "reference_code",
-            _fmt(F.col("message_datecreated")),
-        ),
-    )
 
     # stage 4 — user dimension from the senders (deterministic first-pick
     # via min, the A6 pattern) → K4 upsert
@@ -341,25 +339,9 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("sender_name").alias("name")
     )
 
-    # stage 5 — convo analysis over the read-back messages (P4 filter →
-    # A5 group concat → Failing→Stub gateway → F11 fusion)
-    elig = msgs.where(
-        (F.col("message_type") == "M") & (F.col("message_format") == "T")
-    )
-    gateway = FallbackGateway(FailingGateway(), StubGateway())
-    from ..session import ship_package
-
-    ship_package(spark)
-    # EAGER lineage cut, not a lazy persist: this is the member's most
-    # expensive subtree (groupBy + mapInPandas gateway + schedule-fusion
-    # expressions), and it feeds the geocode argmax, the viability tag,
-    # the history/current writes AND the ledger — several of those run
-    # as concurrent broadcast-exchange jobs, so with a lazy persist each
-    # racing consumer recomputed the whole analysis (the round-11
-    # event-log profile measured the identical 8.6 s analysis stage
-    # running 3× in parallel inside one member execution). The eager cut
-    # materializes it exactly once, synchronously, and truncates the
-    # giant fusion plan out of every downstream optimizer pass.
+    # stage 5 — the convo route's analysis stage (materialized once, see
+    # pipelines.analyze_convo) over the in-hand messages, with the
+    # Failing→Stub gateway chain.
     # The stage-3 messages append and stage-4 users upsert overlap it
     # (guide §2.6): all three read only the materialized msgs cache and
     # write different outputs (messages table, users table, checkpoint
@@ -370,31 +352,22 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # THEN analysis): a failing messages write no longer prevents the
     # users write from completing — equivalence holds on the happy path,
     # which is all the ledger/twin observe (see _overlap).
-    _box: dict[str, DataFrame] = {}
-
-    def _build_ana() -> None:
-        _box["ana"] = lineage_cut(
-            analyze_conversations(
-                elig,
-                gateway,
-                key_col="ticket_id",
-                order_cols=("message_datecreated", "message_id"),
-                text_col="message",
-                id_col="message_id",
-                ts_col="message_datecreated",
-            ).withColumn(
-                "schedule_ts",
-                fuse_schedule(F.col("schedule_date"), F.col("schedule_time")),
-            ),
-            eager=True,
-        )
-
-    _overlap(
-        _build_ana,
+    gateway = FallbackGateway(FailingGateway(), StubGateway())
+    ana, _, _ = _overlap(
+        lambda: analyze_convo(spark, msgs, gateway),
         lambda: append(msgs, base, "messages"),
         lambda: upsert(spark, users_src, base, "users", "id"),
     )
-    ana = _box["ana"]
+    messages = spark.read.parquet(table_path(base, "messages"))
+    s3 = _stats(
+        messages,
+        F.concat_ws(
+            "|",
+            "message_id", "userid", "sender_name", "sender_type",
+            "receiver_name", "receiver_type", "agent_name", "reference_code",
+            _fmt(F.col("message_datecreated")),
+        ),
+    )
     users = spark.read.parquet(table_path(base, "users"))
     s4 = _stats(users, F.concat_ws("|", "id", "name"))
     ck5 = F.concat_ws(
@@ -412,7 +385,7 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         _fmt(F.col("date_extracted")),
         _fmt(F.col("schedule_ts")),
     )
-    s_in5 = _count(elig)
+    s_in5 = _count(convo_messages(msgs))
     s5 = _stats(ana, ck5)
 
     # stage 6 — geocode the analysis locations (J5 argmax vs the
@@ -458,47 +431,24 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # analysis checkpoint fix removed).
     anag.count()
 
-    # the two rounds form TWO independent per-table chains — history
-    # round 2 needs only history round 1, the current-state merge round 2
-    # needs only merge round 1 — so each table's writes run in order
-    # inside its own thread and the chains overlap each other (guide
-    # §2.6); final table states are identical to the sequential schedule.
-    # Failure-semantics divergence from the reference
-    # (extractor_bq_helpers.py raises on a failed history load BEFORE the
-    # merge runs): overlapped, a history failure can leave convo_analysis
-    # already merged — final states are equivalent on the happy path
-    # only, which is all the ledger and the twin observe (see _overlap).
-    def _hist_rounds() -> None:
+    def _convo_rounds() -> None:
         for _ in range(2):
-            history_append(spark, anag, base, "convo_analysis")
+            write_convo_analysis(spark, anag, base)
 
-    def _cur_rounds() -> None:
-        for _ in range(2):
-            upsert(spark, anag, base, "convo_analysis", "ticket_id")
-
-    # stage 8 — run metrics: wave-2 keys vs wave-1 pre-existing keys +
-    # token totals from the loaded analysis → one-row logs append. The
-    # token totals come from the in-hand anag cache, which is value-
-    # identical to the read-back current state (anag is ticket_id-unique,
-    # so the idempotent K4 MERGE of it into the fresh table IS anag —
-    # pinned by test_parity_inhand_equals_readback) — making the one-row
-    # logs append independent of the stage-7 tables, so it overlaps both
-    # merge rounds (guide §2.6) instead of serializing after them.
+    # stage 8 — the logs route's stage: wave-2 keys vs wave-1 keys +
+    # token totals → one-row logs append. The totals come from the
+    # in-hand anag cache, value-identical to the read-back current state
+    # (anag is ticket_id-unique, so its K4 MERGE into the fresh table IS
+    # anag — pinned by test_parity_inhand_equals_readback), so the logs
+    # append overlaps both write rounds (guide §2.6).
     run_keys = w2.select("id")
-    counts = new_vs_existing_counts(run_keys, w1.select("id"), "id")
-    tokens = anag.agg(
-        F.coalesce(F.sum("tokens"), F.lit(0)).cast("long").alias("total_tokens"),
-        F.max("model").alias("model"),
+    _overlap(
+        _convo_rounds,
+        lambda: run_logs_pipeline(
+            spark, run_keys, w1.select("id"), "id", anag, base,
+            now=to_manila(now2),
+        ),
     )
-    logrow = counts.crossJoin(tokens).select(
-        to_manila(now2).alias("extraction_date"),
-        F.col("n_new").cast("long").alias("no_new"),
-        F.col("n_existing").cast("long").alias("no_existing"),
-        F.col("n_total").cast("long").alias("no_total"),
-        "total_tokens",
-        "model",
-    )
-    _overlap(_hist_rounds, _cur_rounds, lambda: append(logrow, base, "logs"))
     # the ledger still READS BACK the written stage-7/8 tables (the
     # certification the member exists for): s7/s8 scan the final table
     # states inside the one ledger-count job

@@ -16,7 +16,10 @@ def spark():
         "tests",
         master="local[4]",
         shuffle_partitions=4,
-        extra_conf={"spark.sql.ansi.enabled": "true"},
+        # a bounded heap: under the session default (48g) the JVM grows
+        # past a 16 GB host's memory before collecting and is OOM-killed
+        # mid-suite; at 6g the whole suite peaks near 7 GB RSS
+        extra_conf={"spark.sql.ansi.enabled": "true", "spark.driver.memory": "6g"},
     )
     yield s
     s.stop()

@@ -191,6 +191,7 @@ def test_parity_inhand_equals_readback(spark, monkeypatch):
     — the hand-off certification the removed physical read-backs used
     to provide per run, pinned once here."""
     import mgo_liveagent_data_pipeline_spark.plans.parity as parity
+    from mgo_liveagent_data_pipeline_spark.pipelines import convo_messages
     from mgo_liveagent_data_pipeline_spark.scratch import scratch_dir
     from mgo_liveagent_data_pipeline_spark.sinks.writers import table_path
 
@@ -231,8 +232,8 @@ def test_parity_inhand_equals_readback(spark, monkeypatch):
         ),
     )
     assert got2 == (rows[2]["rows_out"], rows[2]["checksum"])
-    # stage 3: the ledger's messages stats (in-hand enrichment cache)
-    # equal the same stats recomputed from the READ-BACK messages table
+    # stage 3: the ledger's messages stats are those of the READ-BACK
+    # messages table
     msgs = spark.read.parquet(table_path(base, "messages"))
     got3 = ck_agg(
         msgs,
@@ -244,6 +245,14 @@ def test_parity_inhand_equals_readback(spark, monkeypatch):
         ),
     )
     assert got3 == (rows[3]["rows_out"], rows[3]["checksum"])
+    # the in-hand messages cache the table was written from feeds the
+    # users dim and the convo analysis: both match the read-back table
+    users = spark.read.parquet(table_path(base, "users")).collect()
+    users_rb = msgs.groupBy(F.col("userid").alias("id")).agg(
+        F.min("sender_name").alias("name")
+    )
+    assert sorted(map(tuple, users)) == sorted(map(tuple, users_rb.collect()))
+    assert rows[5]["rows_in"] == convo_messages(msgs).count()
     # stage 7/8: the logs row's token total (taken from in-hand anag) and
     # the ledger's current-state count equal the READ-BACK table's
     cur = spark.read.parquet(table_path(base, "convo_analysis"))
@@ -321,3 +330,126 @@ def test_logs_pipeline_metrics_row(spark, tmp_path, agents, raw_messages):
     assert log["no_new"] == 1 and log["no_existing"] == 1 and log["no_total"] == 2
     assert log["total_tokens"] > 0
     assert log["model"] == "stub-v1"
+
+
+def _counting_stub(sc):
+    """A StubGateway that counts its calls through a Spark accumulator,
+    so calls made inside Python workers are summed on the driver. Defined
+    locally, so it pickles by value and workers never import this file."""
+
+    class CountingStub(StubGateway):
+        def __init__(self, calls):
+            self.calls = calls
+
+        def __call__(self, prompt: str):
+            self.calls.add(1)
+            return super().__call__(prompt)
+
+    return CountingStub(sc.accumulator(0))
+
+
+def test_llm_called_once_per_conversation(
+    spark, tmp_path, agents, raw_messages, monkeypatch
+):
+    """The convo analysis is one LLM call per eligible conversation per
+    run (Extractor.py:254-327), however many sinks read it: the history
+    append and the MERGE (whose anti-join reads its source twice once
+    the target exists) both consume one materialized analysis. Pinned on
+    the route into an empty target, on a second route run into the
+    existing target, and on one run of the parity member."""
+    import mgo_liveagent_data_pipeline_spark.plans.parity as parity
+
+    base = str(tmp_path)
+    run_message_pipeline(spark, raw_messages, agents, base, now=NOW())
+    messages = read_table(spark, base, "messages")
+    eligible = (
+        messages.where(
+            (F.col("message_type") == "M") & (F.col("message_format") == "T")
+        )
+        .select("ticket_id")
+        .distinct()
+        .count()
+    )
+    assert eligible == 2
+    for run in ("empty target", "existing target"):
+        gw = _counting_stub(spark.sparkContext)
+        run_convo_pipeline(spark, messages, gw, base)
+        assert gw.calls.value == eligible, run
+    assert read_table(spark, base, "convo_analysis_history").count() == 2 * eligible
+
+    gateways = []
+
+    def counting_stub():
+        gateways.append(_counting_stub(spark.sparkContext))
+        return gateways[-1]
+
+    monkeypatch.setattr(parity, "StubGateway", counting_stub)
+    rows = {
+        r["stage_no"]: r
+        for r in parity.q_elt_parity_pipeline(
+            spark, "/root/testdata/sf0.001"
+        ).collect()
+    }
+    assert len(gateways) == 1
+    assert gateways[0].calls.value == rows[5]["rows_out"] > 0
+
+
+def test_convo_route_outside_repo_root(tmp_path):
+    """The convo route's Python workers import this package even when the
+    driver runs from another directory with the package only on its own
+    sys.path: the route ships the package to the workers itself."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import datetime as dt, sys
+        sys.path.insert(0, {repo!r})
+        from pyspark.sql import SparkSession
+        from mgo_liveagent_data_pipeline_spark.enrich.gateway import StubGateway
+        from mgo_liveagent_data_pipeline_spark.pipelines import read_table, run_convo_pipeline
+
+        spark = (SparkSession.builder.master("local[1]")
+                 .config("spark.ui.enabled", "false").getOrCreate())
+        messages = spark.createDataFrame(
+            [("t1", "m1", "M", "T", dt.datetime(2024, 1, 1, 10, 0), "need help")],
+            "ticket_id string, message_id string, message_type string,"
+            "message_format string, message_datecreated timestamp, message string",
+        )
+        run_convo_pipeline(spark, messages, StubGateway(), "tables")
+        print("rows", read_table(spark, "tables", "convo_analysis").count())
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "rows 1" in out.stdout
+
+
+def test_run_keyed_persist_keys_cache_per_run(spark):
+    """The parity member's run-keyed persist: a second run's relation is
+    never served from the first run's cache, the same run's is, and the
+    run key folds out of the physical plan."""
+    from mgo_liveagent_data_pipeline_spark.plans.parity import _run_keyed_persist
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    src = spark.range(50).withColumn("v", F.col("id") * 2)
+    first = _run_keyed_persist(src, "/runs/a")
+    first.count()
+    try:
+        assert "InMemoryTableScan" in plan(src.where(F.lit("/runs/a").isNotNull()))
+        second = src.where(F.lit("/runs/b").isNotNull())
+        assert "InMemoryTableScan" not in plan(second)
+        assert "Filter" not in plan(second)
+        assert second.count() == 50
+    finally:
+        first.unpersist()

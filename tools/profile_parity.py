@@ -21,6 +21,7 @@ def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 1
     from mgo_liveagent_data_pipeline_spark.scratch import purge_scratch
     from mgo_liveagent_data_pipeline_spark.session import get_spark
+    from mgo_liveagent_data_pipeline_spark import pipelines
     from mgo_liveagent_data_pipeline_spark.plans import parity
     from mgo_liveagent_data_pipeline_spark.sinks import writers
     from mgo_liveagent_data_pipeline_spark.operators import dedup as dedup_mod
@@ -63,6 +64,9 @@ def main() -> None:
     wrap(writers, "ensure_table")
     wrap(dedup_mod, "_scoped_persist")
     wrap(convo_mod, "analyze_conversations")
+    # the shared convo/logs stages (pipelines.py) bind these at import
+    for name in ("upsert", "append", "history_append", "analyze_conversations"):
+        wrap(pipelines, name)
 
     # warm
     parity.q_elt_parity_pipeline(spark, SF_DIR).count()
