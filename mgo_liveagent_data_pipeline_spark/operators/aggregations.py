@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_table
+
 # Decimal wide enough for sf100k money sums, exact in both Spark and DuckDB.
 MONEY = "decimal(12,2)"
 RATE = "decimal(12,4)"
@@ -834,8 +836,8 @@ def histogram_quantiles(
     )
     q_df = c.crossJoin(
         F.broadcast(
-            c.sparkSession.createDataFrame(
-                [(float(q),) for q in quantiles], "q double"
+            local_table(
+                c.sparkSession, [(float(q),) for q in quantiles], "q double"
             )
         )
     )

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.similarity import cosine, jaccard, word_shingles
+from ..sources.tables import local_table
 
 # Intermediates persisted by the multi-stage operators below (band tables,
 # candidate lists, pruned shingle maps). They must outlive the operator
@@ -1059,7 +1060,10 @@ def connected_components(
     jobs of fixed overhead per pointer-jumping round. The distributed
     loop remains the path for adversarial graphs; pass
     ``driver_threshold=None`` to force it. The gating count is an action
-    on the ALREADY-materialized checkpoint — no extra upstream work.
+    on the ALREADY-materialized checkpoint — no extra upstream work. The
+    labels go back to the JVM as an Arrow-built ``LocalRelation``
+    (``sources.tables.local_table``), so the hand-off runs no Python task
+    and starts no pickled-RDD worker pool.
     """
     _require_numeric(pairs, (id_a, id_b), "connected_components")
     # Materialize the (possibly very expensive) upstream pair plan ONCE
@@ -1115,8 +1119,10 @@ def connected_components(
             for root, ms in members.items()
             for n in ms
         ]
-        return pairs.sparkSession.createDataFrame(
-            rows, "node long, cluster_id long, cluster_size long"
+        return local_table(
+            pairs.sparkSession,
+            rows,
+            "node long, cluster_id long, cluster_size long",
         )
     edges = _scoped_persist(
         e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))

@@ -9,6 +9,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.similarity import word_shingles
+from ..sources.tables import local_table
 
 # tiny function-word gazetteer for the n-gram/stopword language heuristic
 EN_STOPWORDS = ("the", "a", "and", "of", "to", "in", "is", "it")
@@ -1289,10 +1290,10 @@ def psl_dim(spark, suffixes: tuple[str, ...] = PUBLIC_SUFFIXES) -> DataFrame:
     """The public-suffix list as a broadcast dimension relation — join it
     into ``extract_urls``/``domain_stats`` to fix ``co.uk``-class
     registered-domain rollups. Tiny (≤ ~9k rows even in full form), so
-    always broadcast."""
-    return spark.createDataFrame(
-        [(s,) for s in suffixes], ["public_suffix"]
-    )
+    always broadcast. Built through ``sources.tables.local_table``: an
+    Arrow-backed ``LocalRelation`` that evaluates inside the JVM with no
+    Python task, so the join starts no Python worker pool."""
+    return local_table(spark, [(s,) for s in suffixes], "public_suffix string")
 
 
 def extract_urls(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..scratch import scratch_dir
 from ..sources.rest import HAS_DATASOURCE_API, LiveAgentDataSource
+from ..sources.tables import local_table
 
 _PAGES = [
     [
@@ -83,7 +84,7 @@ def q_s3_correlated_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     fd, path = tempfile.mkstemp(suffix=".json", prefix="liveagent_msgs_")
     with os.fdopen(fd, "w") as f:
         json.dump(_MESSAGES, f)
-    keys = spark.createDataFrame([("t1",), ("t2",), ("t3",)], ["id"])
+    keys = local_table(spark, [("t1",), ("t2",), ("t3",)], "id string")
     from pyspark.sql.types import StructType
 
     return fetch_correlated(
@@ -112,10 +113,12 @@ def q_s4_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fd, path = tempfile.mkstemp(suffix=".json", prefix="liveagent_users_")
     with os.fdopen(fd, "w") as f:
         json.dump(_USERS, f)
-    candidates = spark.createDataFrame(
-        [("u1",), ("u2",), ("u2",), ("u3",), ("u4",), ("u5",)], ["id"]
+    candidates = local_table(
+        spark,
+        [("u1",), ("u2",), ("u2",), ("u3",), ("u4",), ("u5",)],
+        "id string",
     ).distinct()
-    cached = spark.createDataFrame([("u5",)], ["id"])
+    cached = local_table(spark, [("u5",)], "id string")
     from pyspark.sql import functions as F
 
     # the known-ids side is a bounded cache — broadcast the anti-join

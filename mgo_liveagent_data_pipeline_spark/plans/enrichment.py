@@ -21,7 +21,7 @@ from ..functions.datetimes import fuse_schedule
 from ..operators.joins import two_phase_similarity_join
 from ..operators.multimodal import decode_image_meta, to_media_column
 from ..session import ship_package
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_table
 
 
 def q_u1_convo_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -145,7 +145,9 @@ def q_j1_sender_receiver(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("u"), F.col("n_nationkey").cast("string")).alias("id"),
         F.col("n_name").alias("name"),
     ).unionByName(
-        spark.createDataFrame([("00054iwg", "Special Raw")], ["id", "name"])
+        local_table(
+            spark, [("00054iwg", "Special Raw")], "id string, name string"
+        )
     )
     out = resolve_sender_receiver(msgs, agents)
     return out.select(

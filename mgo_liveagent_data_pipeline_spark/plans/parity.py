@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..enrich.gateway import FailingGateway, FallbackGateway, StubGateway
 from ..scratch import scratch_dir
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_table
 from .enrichment import _GRAMS3, _JAC3, _hexn
 
 # fixed extraction clocks (UTC instants; +8h Manila after normalization)
@@ -308,7 +308,9 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("u"), F.col("n_nationkey").cast("string")).alias("id"),
         F.col("n_name").alias("name"),
     ).unionByName(
-        spark.createDataFrame([(SPECIAL_USER_ID, "Special Raw")], ["id", "name"])
+        local_table(
+            spark, [(SPECIAL_USER_ID, "Special Raw")], "id string, name string"
+        )
     )
     # The enrichment is computed ONCE into a persisted cache, and the K2
     # messages append writes FROM that cache — overlapped with stage 4/5
@@ -395,15 +397,17 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaz = nation.select(
         F.lower("n_name").alias("g"), F.lit("nation").alias("geo_level")
     ).unionByName(
-        spark.createDataFrame(
-            [(c, "municity") for c in _CITIES], ["g", "geo_level"]
+        local_table(
+            spark,
+            [(c, "municity") for c in _CITIES],
+            "g string, geo_level string",
         )
     )
     geo = similarity_join_argmax(
         locs, gaz, "location", "g", n=3, threshold=0.3,
         keep_right=["g", "geo_level"],
     ).select("location", F.col("g").alias("matched_address"), "geo_level")
-    svc = spark.createDataFrame([(m,) for m in _SERVICEABLE], ["muni"])
+    svc = local_table(spark, [(m,) for m in _SERVICEABLE], "muni string")
     vi = fuzzy_threshold_join(locs, svc, "location", "muni", threshold=40.0)
     # geo and vi are LOCATION-grained (a handful of distinct analysis
     # locations), but they descend from a mapInPandas output whose size

@@ -25,7 +25,7 @@ from ..sinks.writers import (
     upsert,
     zorder_write,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_table
 from ..streaming.windows import session_windows, stream_tumbling_6h
 from . import pipeline as _pipe
 from .parity import _elt_parity_sql
@@ -611,7 +611,8 @@ def q_stream_media_dedup(
     from ..streaming.windows import stream_media_dedup
 
     base_dir = scratch_dir("mgo_stream_phash_")
-    fixture = spark.createDataFrame(
+    fixture = local_table(
+        spark,
         [(c["img_id"], bytearray(c["payload"])) for c in phash_fixture_images()],
         T.StructType(
             [

@@ -33,7 +33,7 @@ from ..operators.textops import (
     quality_score,
     token_counts,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_table
 
 # MinHash/LSH parameters shared by query and oracle
 NUM_HASHES = 16
@@ -1971,7 +1971,8 @@ def q_dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ship_package
 
     ship_package(spark)
-    fixture = spark.createDataFrame(
+    fixture = local_table(
+        spark,
         [(c["img_id"], bytearray(c["payload"])) for c in phash_fixture_images()],
         T.StructType(
             [
@@ -2096,7 +2097,8 @@ def q_dedup_video_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ship_package
 
     ship_package(spark)
-    fixture = spark.createDataFrame(
+    fixture = local_table(
+        spark,
         [
             (c["video_id"], bytearray(c["payload"]))
             for c in video_fixture_clips()
@@ -2150,7 +2152,8 @@ def q_dedup_image_phash_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def fps(rows):
-        df = spark.createDataFrame(
+        df = local_table(
+            spark,
             [(c["img_id"], bytearray(c["payload"])) for c in rows], schema
         )
         return real_image_dhash(df).select("key", F.col("dhash").alias("fp"))
@@ -2195,7 +2198,8 @@ def q_dedup_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ship_package
 
     ship_package(spark)
-    fixture = spark.createDataFrame(
+    fixture = local_table(
+        spark,
         [
             (c["clip_id"], bytearray(c["payload"]))
             for c in audio_fp_fixture_clips()

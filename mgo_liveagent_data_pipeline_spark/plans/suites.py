@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_table
 from . import connector, enrichment, persistence, pipeline, relational
 
 
@@ -1086,7 +1087,8 @@ def q_multimodal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import real_audio_features, wav_fixture_clips
 
     clips = wav_fixture_clips()
-    fixture = spark.createDataFrame(
+    fixture = local_table(
+        spark,
         [(c["clip_id"], bytearray(c["payload"])) for c in clips],
         T.StructType(
             [
@@ -1120,7 +1122,8 @@ def q_multimodal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import bmp_fixture_images, real_image_features
 
     imgs = bmp_fixture_images()
-    ifixture = spark.createDataFrame(
+    ifixture = local_table(
+        spark,
         [(c["img_id"], bytearray(c["payload"])) for c in imgs],
         T.StructType(
             [
@@ -1154,7 +1157,8 @@ def q_multimodal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import png_fixture_images, real_png_features
 
     pngs = png_fixture_images()
-    pfixture = spark.createDataFrame(
+    pfixture = local_table(
+        spark,
         [(c["img_id"], bytearray(c["payload"])) for c in pngs],
         T.StructType(
             [
@@ -1188,7 +1192,8 @@ def q_multimodal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import jpeg_fixture_images, real_jpeg_features
 
     jpgs = jpeg_fixture_images()
-    jfixture = spark.createDataFrame(
+    jfixture = local_table(
+        spark,
         [(c["img_id"], bytearray(c["payload"])) for c in jpgs],
         T.StructType(
             [
@@ -1222,7 +1227,8 @@ def q_multimodal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import gif_fixture_images, real_gif_features
 
     gifs = gif_fixture_images()
-    gfixture = spark.createDataFrame(
+    gfixture = local_table(
+        spark,
         [(c["img_id"], bytearray(c["payload"])) for c in gifs],
         T.StructType(
             [

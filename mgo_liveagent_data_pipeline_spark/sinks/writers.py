@@ -48,6 +48,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_table
+
 
 def table_path(base_dir: str, name: str) -> str:
     return os.path.join(base_dir, f"{name}.parquet")
@@ -639,7 +641,7 @@ def read_partitioned(spark: SparkSession, base_dir: str, name: str) -> DataFrame
                 f"ptable {pdir} has no buckets and no recorded schema — "
                 "create it with ensure_partitioned"
             )
-        return spark.createDataFrame([], StructType.fromJson(sch))
+        return local_table(spark, [], StructType.fromJson(sch))
     return spark.read.parquet(*paths)
 
 

@@ -14,9 +14,11 @@ tables; the loaders keep that swap localized to this module.
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TPCH_TABLES = (
     "region",
@@ -73,17 +75,44 @@ def load_table(
     with a per-plan HintErrorLogger WARN and it does nothing."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     ts_cols = EVENT_TS_TABLES.get(name)
-    if not ts_cols:
+    if ts_cols:
+        # Runtime-settable SQL conf; affects only NANOS-precision columns,
+        # so micros tables (orders/lineitem) are untouched.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = _normalize_ts(spark.read.parquet(path), ts_cols)
+    else:
         df = spark.read.parquet(path)
-        return (
-            F.broadcast(df)
-            if broadcast_dim and name in BROADCAST_DIMS
-            else df
-        )
-    # Runtime-settable SQL conf; affects only NANOS-precision columns, so
-    # micros tables (orders/lineitem) are untouched.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return _normalize_ts(spark.read.parquet(path), ts_cols)
+    return F.broadcast(df) if broadcast_dim and name in BROADCAST_DIMS else df
+
+
+def local_table(
+    spark: SparkSession,
+    rows: Sequence[Sequence],
+    schema: str | StructType,
+) -> DataFrame:
+    """A driver-built relation: ``rows`` (tuples in ``schema`` field
+    order; may be empty) under a DDL string or ``StructType`` schema.
+
+    The rows travel to the JVM as one Arrow table, so the frame analyzes
+    to a ``LocalRelation`` with exactly ``schema``'s names, types and
+    nullability and evaluating it runs no Python task. A plain
+    ``spark.createDataFrame(<list>)`` goes through ``sc.parallelize`` and a
+    pickling map instead, which starts a pool of Python workers that stays
+    idle for the rest of the session; this helper is the package's only
+    ``createDataFrame`` call (pinned by a lint test). Naive ``datetime``
+    values are read as UTC, the pinned session timezone (session.py)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(

@@ -22,6 +22,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_table
+
 _MEMSINK_IDS = itertools.count()
 
 MONEY = "decimal(12,2)"
@@ -413,9 +415,10 @@ def stream_incremental_dedup(
         spark,
         base_dir,
         corpus_name,
-        spark.createDataFrame([], "doc_id long, text string"),
+        local_table(spark, [], "doc_id long, text string"),
     )
-    pairs_template = spark.createDataFrame(
+    pairs_template = local_table(
+        spark,
         [], "pk string, id_a long, id_b long, jaccard_sim double"
     )
     ensure_table(spark, base_dir, pairs_name, pairs_template)
@@ -583,7 +586,8 @@ def stream_semantic_dedup(
         spark,
         base_dir,
         index_name,
-        spark.createDataFrame(
+        local_table(
+            spark,
             [],
             "key long, cluster_id int, centroid_sim double, "
             "v array<double>, nv double",
@@ -593,14 +597,15 @@ def stream_semantic_dedup(
         spark,
         base_dir,
         verdicts_name,
-        spark.createDataFrame(
+        local_table(
+            spark,
             [], "vec_id long, cluster_id int, centroid_sim double, kept int"
         ),
     )
     if stream_cluster_cap is not None:
         ensure_table(
             spark, base_dir, refused_name,
-            spark.createDataFrame([], src_schema),
+            local_table(spark, [], src_schema),
         )
 
     def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
@@ -810,13 +815,14 @@ def stream_media_dedup(
         spark,
         base_dir,
         index_name,
-        spark.createDataFrame([], "key long, fp string"),
+        local_table(spark, [], "key long, fp string"),
     )
     ensure_table(
         spark,
         base_dir,
         pairs_name,
-        spark.createDataFrame(
+        local_table(
+            spark,
             [], "pk string, id_a long, id_b long, hamming_dist int"
         ),
     )
@@ -1263,20 +1269,20 @@ def stream_entity_resolution(
         mode = {"buckets": state_num_buckets}
     if mode["buckets"] is None:
         ensure_table(
-            spark, base_dir, rec_name, spark.createDataFrame([], src_schema)
+            spark, base_dir, rec_name, local_table(spark, [], src_schema)
         )
         ensure_table(
-            spark, base_dir, asg_name, spark.createDataFrame([], asg_schema)
+            spark, base_dir, asg_name, local_table(spark, [], asg_schema)
         )
     else:
         ensure_partitioned(
             spark, base_dir, rec_name,
-            spark.createDataFrame([], src_schema),
+            local_table(spark, [], src_schema),
             num_buckets=mode["buckets"],
         )
         ensure_partitioned(
             spark, base_dir, asg_name,
-            spark.createDataFrame([], asg_schema),
+            local_table(spark, [], asg_schema),
             num_buckets=mode["buckets"],
         )
 
@@ -1325,8 +1331,9 @@ def stream_entity_resolution(
         # inputs — no job runs): an empty first golden set must not
         # leave the dimension unreadable for the sweep or any consumer
         g_template = golden_records(
-            spark.createDataFrame([], src_schema),
-            spark.createDataFrame(
+            local_table(spark, [], src_schema),
+            local_table(
+                spark,
                 [], "rec_id long, entity_id long, n_records long"
             ),
             rules=golden_rules,
@@ -1338,7 +1345,8 @@ def stream_entity_resolution(
     if block_index_buckets is not None:
         ensure_partitioned(
             spark, base_dir, blockindex_name,
-            spark.createDataFrame(
+            local_table(
+                spark,
                 [], "p int, bk string, rec_id long, ikey string"
             ),
             num_buckets=block_index_buckets,
@@ -1562,20 +1570,28 @@ def stream_entity_resolution(
             t.start()
             _compaction["thread"] = t
 
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            rec_stream.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # settle any in-flight background fold before returning: the caller
-    # may read, compact or delete the table next, and the stream's state
-    # must be deterministic at return
+    # settle any in-flight background fold before returning, on success
+    # AND on failure: the caller may read, compact or delete the table
+    # next, and the stream's state must be deterministic at return. A
+    # fold error pending behind a stream error is chained onto it.
+    try:
+        with state_partitions(spark, n_state_partitions), _checkpoint(
+            checkpoint_dir
+        ) as ckpt:
+            q = (
+                rec_stream.writeStream.outputMode("update")
+                .foreachBatch(merge_batch)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+    except BaseException as stream_err:
+        try:
+            _reap_compaction(wait=True)
+        except BaseException as fold_err:
+            raise stream_err from fold_err
+        raise
     _reap_compaction(wait=True)
     return (
         _pt_asg if mode["buckets"] is not None else _flat_asg
@@ -1659,13 +1675,13 @@ def stream_gated_ingest(
     )
     if num_buckets is None:
         kept_path = ensure_table(
-            spark, base_dir, kept_name, spark.createDataFrame([], src_schema)
+            spark, base_dir, kept_name, local_table(spark, [], src_schema)
         )
         quarantine_path = ensure_table(
             spark,
             base_dir,
             quarantine_name,
-            spark.createDataFrame([], src_schema),
+            local_table(spark, [], src_schema),
         )
     else:
         # seed BOTH destinations with an empty committed manifest: a
@@ -1673,7 +1689,7 @@ def stream_gated_ingest(
         # passes, so the quarantine is never written) must still read
         # back as an empty table via read_partitioned — the same
         # guarantee ensure_table gives the flat path
-        template = spark.createDataFrame([], src_schema)
+        template = local_table(spark, [], src_schema)
         kept_path = ensure_partitioned(
             spark, base_dir, kept_name, template, num_buckets=num_buckets
         )
@@ -1759,7 +1775,8 @@ def stream_hypertable_rollup(
         spark,
         base_dir,
         partials_name,
-        spark.createDataFrame(
+        local_table(
+            spark,
             [],
             "pk string, bucket_ts timestamp, n_events long, "
             "total decimal(22,2)",
@@ -1854,7 +1871,8 @@ def stream_ann_ingest(
         spark,
         base_dir,
         index_name,
-        spark.createDataFrame(
+        local_table(
+            spark,
             [], "vec_id long, cluster_id int, cv array<double>"
         ),
     )

@@ -1,0 +1,177 @@
+"""Driver-built relations (``sources.tables.local_table``): every frame the
+package builds from Python rows is an Arrow-backed ``LocalRelation`` with
+the exact schema the old ``createDataFrame(<list>, schema)`` gave, so it
+evaluates in the JVM and starts no pickled-RDD Python worker pool. The
+lint test keeps ``createDataFrame`` confined to that one helper."""
+from __future__ import annotations
+
+import ast
+import decimal
+import os
+
+import pytest
+from pyspark.sql import types as T
+
+from mgo_liveagent_data_pipeline_spark.sources import tables
+from mgo_liveagent_data_pipeline_spark.sources.tables import (
+    load_table,
+    local_table,
+)
+
+PKG = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "mgo_liveagent_data_pipeline_spark",
+)
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+
+_MEDIA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), nullable=False),
+        T.StructField("media", T.BinaryType()),
+    ]
+)
+
+_CASES = [
+    # non-empty rows, DDL schema
+    (
+        [(1, 1, 2), (2, 1, 2)],
+        "node long, cluster_id long, cluster_size long",
+    ),
+    # empty rows, DDL schema with nested and decimal/timestamp types
+    (
+        [],
+        "pk string, bucket_ts timestamp, v array<double>, "
+        "total decimal(22,2), cluster_id int",
+    ),
+    # non-empty rows, StructType schema with a NOT NULL field
+    ([(7, bytearray(b"\x00\x01")), (8, None)], _MEDIA),
+    # empty rows, StructType schema
+    ([], _MEDIA),
+    # NULLs and a decimal value
+    (
+        [("a", None, decimal.Decimal("1.25")), (None, 2.5, None)],
+        "id string, score double, amount decimal(12,2)",
+    ),
+]
+
+
+@pytest.mark.parametrize("rows,schema", _CASES)
+def test_local_table_is_local_relation_with_old_schema(spark, rows, schema):
+    df = local_table(spark, rows, schema)
+    assert _analyzed(df) == "LocalRelation"
+    # field for field — names, types AND nullability — what the
+    # list-based createDataFrame produced for the same schema
+    old = spark.createDataFrame(rows, schema).schema
+    assert [
+        (f.name, f.dataType, f.nullable) for f in df.schema.fields
+    ] == [(f.name, f.dataType, f.nullable) for f in old.fields]
+    got = [tuple(r) for r in df.collect()]
+    want = [
+        tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+        for r in rows
+    ]
+    assert got == want
+
+
+def test_connected_components_fast_path_is_local_relation(spark):
+    from mgo_liveagent_data_pipeline_spark.operators.dedup import (
+        connected_components,
+    )
+
+    pairs = local_table(
+        spark, [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long"
+    )
+    cc = connected_components(pairs)  # default driver_threshold
+    assert _analyzed(cc) == "LocalRelation"
+    assert {tuple(r) for r in cc.collect()} == {
+        (1, 1, 3), (2, 1, 3), (3, 1, 3), (10, 10, 2), (11, 10, 2),
+    }
+
+
+def test_psl_dim_is_local_relation_with_inferred_schema(spark):
+    from mgo_liveagent_data_pipeline_spark.operators.textops import (
+        PUBLIC_SUFFIXES,
+        psl_dim,
+    )
+
+    psl = psl_dim(spark)
+    assert _analyzed(psl) == "LocalRelation"
+    # the schema the old name-list call inferred from the strings
+    assert psl.schema == spark.createDataFrame(
+        [("co.uk",)], ["public_suffix"]
+    ).schema
+    assert sorted(r[0] for r in psl.collect()) == sorted(PUBLIC_SUFFIXES)
+
+
+def _has_broadcast_hint(df) -> bool:
+    return "ResolvedHint (strategy=broadcast)" in (
+        df._jdf.queryExecution().analyzed().toString()
+    )
+
+
+@pytest.mark.parametrize(
+    "name,schema",
+    [
+        ("nation", "n_nationkey long, n_name string"),
+        ("events", "event_id long, ts timestamp_ntz"),
+    ],
+)
+def test_load_table_broadcast_dim_on_both_branches(
+    spark, monkeypatch, tmp_path, name, schema
+):
+    """``broadcast_dim`` gates the hint on the plain branch and on the
+    EVENT_TS_TABLES branch alike (no table is in both sets today, so the
+    ts table is made a broadcast dimension for the test)."""
+    local_table(spark, [], schema).write.parquet(
+        str(tmp_path / f"{name}.parquet")
+    )
+    sf = str(tmp_path)
+    monkeypatch.setattr(tables, "BROADCAST_DIMS", frozenset({name}))
+    assert _has_broadcast_hint(load_table(spark, sf, name))
+    plain = load_table(spark, sf, name, broadcast_dim=False)
+    assert not _has_broadcast_hint(plain)
+    if name in tables.EVENT_TS_TABLES:
+        # the hint sits over the normalized timestamp
+        assert dict(load_table(spark, sf, name).dtypes)["ts"] == "timestamp"
+
+
+def _create_dataframe_uses(path: str) -> list[int]:
+    """Line numbers of every ``.createDataFrame`` reference in ``path``
+    outside the body of ``sources.tables.local_table``."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    allowed: set[int] = set()
+    if os.path.relpath(path, PKG) == os.path.join("sources", "tables.py"):
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "local_table":
+                allowed.update(range(node.lineno, node.end_lineno + 1))
+    hits = []
+    for node in ast.walk(tree):
+        named = (
+            isinstance(node, ast.Attribute) and node.attr == "createDataFrame"
+        ) or (
+            isinstance(node, ast.Constant) and node.value == "createDataFrame"
+        )
+        if named and node.lineno not in allowed:
+            hits.append(node.lineno)
+    return hits
+
+
+def test_create_dataframe_only_in_local_table():
+    """A list-based ``createDataFrame`` in the package starts a second,
+    idle pool of pickled-RDD Python workers; every driver-built frame
+    must go through ``local_table`` instead."""
+    offenders = []
+    for root, _dirs, files in os.walk(PKG):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(root, fn)
+                offenders += [
+                    f"{os.path.relpath(path, PKG)}:{n}"
+                    for n in _create_dataframe_uses(path)
+                ]
+    assert offenders == []

@@ -1707,6 +1707,66 @@ def test_stream_er_background_compaction_settles_and_surfaces_errors(
         )
 
 
+def test_stream_er_failed_stream_joins_fold_and_chains_its_error(
+    spark, tmp_path, monkeypatch
+):
+    """A stream that fails while a background fold is in flight still
+    joins the fold before raising (the caller may delete the table next),
+    and a fold error pending behind the stream error is chained onto it
+    instead of being lost."""
+    import threading
+    import time
+
+    import mgo_liveagent_data_pipeline_spark.sinks.writers as writers
+    import mgo_liveagent_data_pipeline_spark.streaming.windows as W
+
+    fold_started = threading.Event()
+    stream_failed = threading.Event()
+    fold_done = threading.Event()
+
+    def _slow_failing_fold(*a, **k):
+        fold_started.set()
+        stream_failed.wait(60)
+        # outlive the stream's own teardown: an unjoined fold would still
+        # be running when the caller sees the stream error
+        time.sleep(3)
+        fold_done.set()
+        raise RuntimeError("fold died")
+
+    real_probe = writers.read_partitioned_for_keys
+
+    def _probe_then_fail(*a, **k):
+        if fold_started.is_set():
+            stream_failed.set()
+            raise RuntimeError("ingest died")
+        return real_probe(*a, **k)
+
+    monkeypatch.setattr(W, "compact_er_block_index", _slow_failing_fold)
+    monkeypatch.setattr(
+        writers, "read_partitioned_for_keys", _probe_then_fail
+    )
+    recs = [
+        (10, 1, "Acme Metals Corp", "25-989-741", "12 Dock Rd"),
+        (11, 1, "acme metals corp inc", "25989741", "12 Dock Road Pier 4"),
+        (20, 2, "Blue Harbour Ltd", "77-111-222", "9 Quay St"),
+        (30, 3, "Cedar Freight", "55-000-111", "1 Yard Ln"),
+    ]
+    df = spark.createDataFrame(
+        recs, ["rec_id", "block_key", "name", "phone", "address"]
+    )
+    # the fold starts after batch 1; batch 2's neighborhood probe fails
+    with pytest.raises(Exception, match="ingest died") as ei:
+        W.stream_entity_resolution(
+            spark, df, str(tmp_path / "bgf"), n_batches=4,
+            n_state_partitions=1, state_num_buckets=4,
+            block_index_buckets=4, index_compact_every=2,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+        )
+    assert fold_done.is_set()
+    assert isinstance(ei.value.__cause__, RuntimeError)
+    assert "fold died" in str(ei.value.__cause__)
+
+
 def test_stream_er_block_index_multi_pass_recovers_dirty_key(spark, tmp_path):
     """The multi-pass miss-recovery contract survives the indexed path:
     a record whose primary block key is corrupted is still recovered
