@@ -1,4 +1,4 @@
-"""Datetime expression library (reference ops F7-F9, F11, F12, F16).
+"""Datetime expression library (reference ops F7, F8, F11, F16).
 
 The reference's timestamp pipeline (utils/date_utils.py:4-12): parse with
 errors='coerce', localize naive values as UTC, convert to Asia/Manila, then
@@ -24,17 +24,7 @@ def to_manila(ts: Column | str) -> Column:
     return F.from_utc_timestamp(_c(ts), MANILA_TZ)
 
 
-def parse_ts_coerce(col: Column | str, fmt: str | None = None) -> Column:
-    """``pd.to_datetime(errors='coerce')`` equivalent: null on bad input."""
-    c = _c(col)
-    return F.try_to_timestamp(c, F.lit(fmt)) if fmt else F.try_to_timestamp(c)
-
-
-# F8 — hour floor + trailing window (utils/date_utils.py:14-21)
-def floor_hour(ts: Column | str) -> Column:
-    return F.date_trunc("hour", _c(ts))
-
-
+# F8 — trailing window (utils/date_utils.py:14-21)
 def tumbling_6h_bucket(ts: Column | str) -> Column:
     """Assign each event to its 6-hour tumbling window start.
 
@@ -44,15 +34,6 @@ def tumbling_6h_bucket(ts: Column | str) -> Column:
     """
     sec = F.unix_timestamp(_c(ts))
     return F.timestamp_seconds((sec - sec % (6 * 3600)).cast("long"))
-
-
-# F9 — month bounds (utils/tickets_util.py:6-8)
-def month_start(ts: Column | str) -> Column:
-    return F.date_trunc("month", _c(ts))
-
-
-def month_end_day(ts: Column | str) -> Column:
-    return F.last_day(_c(ts))
 
 
 # F11 — schedule date+time fusion (extraction_helpers.py:164-216).
@@ -77,12 +58,6 @@ def fuse_schedule(date_col: Column | str, time_col: Column | str) -> Column:
         d.isNotNull(),
         F.timestamp_seconds(F.unix_timestamp(d.cast("timestamp")) + seconds),
     )
-
-
-# F12 — SAFE_CAST (extractor_bq_helpers.py:131-153)
-def safe_cast(col: Column | str, dtype: str) -> Column:
-    """BigQuery SAFE_CAST ≡ Spark try_cast: null on failure, never error."""
-    return _c(col).try_cast(dtype)
 
 
 # F16 — ISO serialization (api/logs/routes.py:15-25)

@@ -1,38 +1,19 @@
 """JSON expression library (reference op F14).
 
-The reference json.loads'es LLM output and pd.json_normalize's nested dicts
-(core/extract/ConvoDataExtract.py:126, core/BigQueryManager.py:96-98). In
-Spark, parsing is ``from_json`` against an explicit schema (typed, vectorized)
-and flattening is a struct-star projection — no Python.
+The reference json.loads'es LLM output (core/extract/ConvoDataExtract.py:126).
+In Spark, a field is read with ``get_json_object`` — JVM-side, no Python.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def parse_json(col: Column | str, schema: T.StructType | str) -> Column:
-    """Typed JSON parse; malformed input → null struct (PERMISSIVE)."""
-    return F.from_json(_c(col), schema)
-
-
 def json_get(col: Column | str, path: str) -> Column:
     """Single-field extraction without a declared schema."""
     return F.get_json_object(_c(col), f"$.{path}")
 
-
-def flatten_struct(df: DataFrame, struct_col: str, prefix: str = "") -> DataFrame:
-    """pd.json_normalize equivalent: lift struct fields to top level."""
-    fields = [
-        f.name
-        for f in df.schema[struct_col].dataType.fields  # type: ignore[union-attr]
-    ]
-    cols = [c for c in df.columns if c != struct_col] + [
-        F.col(f"{struct_col}.{f}").alias(f"{prefix}{f}") for f in fields
-    ]
-    return df.select(*cols)

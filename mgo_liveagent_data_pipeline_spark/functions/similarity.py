@@ -51,18 +51,6 @@ def jaccard(a_grams: Column, b_grams: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def ngram_jaccard(a: Column | str, b: Column | str, n: int) -> Column:
-    """Reference F4: Jaccard over character n-grams of two strings."""
-    return jaccard(char_ngrams(a, n), char_ngrams(b, n))
-
-
-def adaptive_ngram_size(col: Column | str, floor: int = 5) -> Column:
-    """Reference n-size rule: ``max(5, round(sqrt(len/2)))``
-    (core/Geocode.py:53)."""
-    c = _c(col)
-    return F.greatest(F.lit(floor), F.round(F.sqrt(F.length(c) / 2)).cast("int"))
-
-
 def levenshtein_ratio(a: Column | str, b: Column | str) -> Column:
     """Fuzzy score (F5) as a 0-100 similarity: ``(1 - dist/max_len) * 100``.
 

@@ -1,4 +1,4 @@
-"""String expression library (reference ops F1-F6, F13).
+"""String expression library (reference ops F1-F3, F13).
 
 Everything here returns a Column built purely from ``pyspark.sql.functions``
 — JVM-side, whole-stage-codegen'd, no Python in the hot path. The reference
@@ -48,12 +48,6 @@ def normalize_location(col: Column | str) -> Column:
     c = F.regexp_replace(c, r"\bgen\b", "general")
     c = F.regexp_replace(c, r"\bsto\b", "santo")
     return F.trim(F.regexp_replace(c, r"\s+", " "))
-
-
-# F6 — array join (core/Ticket.py:60)
-def join_tags(col: Column | str, sep: str = ",") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.array_join(c, sep)
 
 
 # F13 — name resolution coalesce (core/TicketMessageProcessor.py:196-205)

@@ -1,4 +1,4 @@
-"""Aggregation operators (reference §2.4, A1-A6).
+"""Aggregation operators (reference §2.4, A3-A6).
 
 All hash aggregations with map-side partial aggregation — Spark's default.
 Money math is done in DECIMAL so results are bit-exact regardless of
@@ -16,33 +16,6 @@ from ..sources.tables import local_table
 # Decimal wide enough for sf100k money sums, exact in both Spark and DuckDB.
 MONEY = "decimal(12,2)"
 RATE = "decimal(12,4)"
-
-
-def dsum(col: Column, dtype: str = MONEY) -> Column:
-    """Order-independent exact sum: cast to decimal before aggregating."""
-    return F.sum(col.cast(dtype))
-
-
-def token_totals_by_model(
-    logs: DataFrame,
-    start: str,
-    end: str,
-    ts_col: str = "date_extracted",
-    model_col: str = "model",
-    token_col: str = "tokens",
-) -> DataFrame:
-    """A1: ``SELECT model, SUM(tokens) total_tokens WHERE ts in [start,end)
-    GROUP BY model`` (core/extract/ExtractionLogger.py:72-83)."""
-    return (
-        logs.where((F.col(ts_col) >= F.lit(start)) & (F.col(ts_col) < F.lit(end)))
-        .groupBy(model_col)
-        .agg(F.sum(token_col).alias("total_tokens"))
-    )
-
-
-def distinct_keys(df: DataFrame, *cols: str) -> DataFrame:
-    """A2: DISTINCT projection (extraction_helpers.py:99)."""
-    return df.select(*cols).distinct()
 
 
 def distinct_ids_from_columns(df: DataFrame, cols: list[str], out: str = "id") -> DataFrame:

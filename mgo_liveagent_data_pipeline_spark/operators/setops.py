@@ -12,16 +12,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def except_keys(run: DataFrame, existing: DataFrame, key: str) -> DataFrame:
-    """E1: run − existing (new rows this run)."""
-    return run.join(existing, on=key, how="left_anti")
-
-
-def intersect_keys(run: DataFrame, existing: DataFrame, key: str) -> DataFrame:
-    """E2: run ∩ existing (rows that will be updated)."""
-    return run.join(existing, on=key, how="left_semi")
-
-
 def union_all(dfs: list[DataFrame]) -> DataFrame:
     """E3: vertical concat by column name (extraction_helpers.py:218-226)."""
     return reduce(DataFrame.unionByName, dfs)

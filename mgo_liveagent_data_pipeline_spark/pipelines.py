@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .enrich.convo import analyze_conversations
-from .functions.datetimes import fuse_schedule
+from .functions.datetimes import fuse_schedule, to_manila
 from .operators.dedup import lineage_cut
 from .operators.setops import new_vs_existing_counts
 from .session import ship_package
@@ -139,8 +139,9 @@ def run_logs_pipeline(
 ) -> str:
     """Run metrics: E1/E2 new-vs-existing accounting + A1 token totals →
     one-row append to logs (ExtractionLogger.py:95-176). ``now`` is the
-    extraction clock, injectable like transforms/tickets.py:
-    add_extraction_timestamp (default: the current second)."""
+    extraction clock, a UTC instant injectable like add_extraction_timestamp
+    (default: the current second), stored on the Manila wall clock like
+    the tickets' ``datetime_extracted``."""
     counts = new_vs_existing_counts(run_keys, existing_keys, key)
     tokens = analyzed.agg(
         F.coalesce(F.sum("tokens"), F.lit(0)).cast("long").alias("total_tokens"),
@@ -149,7 +150,7 @@ def run_logs_pipeline(
     if now is None:
         now = F.date_trunc("second", F.current_timestamp())
     row = counts.crossJoin(tokens).select(
-        now.alias("extraction_date"),
+        to_manila(now).alias("extraction_date"),
         F.col("n_new").cast("long").alias("no_new"),
         F.col("n_existing").cast("long").alias("no_existing"),
         F.col("n_total").cast("long").alias("no_total"),

@@ -170,14 +170,13 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``k5_history_sink``; the twin is ``_elt_parity_sql``."""
     from ..operators.dedup import _scoped_persist
     from ..operators.joins import fuzzy_threshold_join, similarity_join_argmax
-    from ..functions.datetimes import to_manila
     from ..pipelines import (
         analyze_convo,
         convo_messages,
         run_logs_pipeline,
         write_convo_analysis,
     )
-    from ..sinks.writers import append, table_path, upsert
+    from ..sinks.writers import append, merge_rows, table_path, upsert
     from ..transforms.messages import SPECIAL_USER_ID, SYSTEM_USER_ID, process_messages
     from ..transforms.tickets import process_tickets
 
@@ -232,9 +231,9 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert(spark, t1, base, "tickets", "id")
         upsert(spark, t2, base, "tickets", "id")
 
-    # in-hand merged ticket state — the same anti-join ∪ source algebra
-    # the K4 MERGE writes to disk (the first upsert's empty-target fast
-    # path stores t1 verbatim, the second merges t2 over it), so it is
+    # in-hand merged ticket state — the K4 MERGE algebra the upserts
+    # write to disk (the first upsert merges t1 into an absent table,
+    # which stores t1 verbatim, the second merges t2 over it), so it is
     # value-identical to a read-back of the written table (deterministic
     # transforms, exact parquet roundtrip; pinned by
     # test_parity_inhand_equals_readback). Deriving the recent window
@@ -242,9 +241,7 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for the physical ticket writes — the two upserts overlap the
     # enrichment materialization below (guide §2.6). The ledger's s1
     # still reads back the written table: the certification read.
-    tickets_inhand = t1.join(
-        t2.select("id").distinct(), on="id", how="left_anti"
-    ).unionByName(t2)
+    tickets_inhand = merge_rows(t1, t2, "id")
     ck1 = F.concat_ws(
         "|",
         "id", "status", "tags", "agentid",
@@ -449,8 +446,7 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     _overlap(
         _convo_rounds,
         lambda: run_logs_pipeline(
-            spark, run_keys, w1.select("id"), "id", anag, base,
-            now=to_manila(now2),
+            spark, run_keys, w1.select("id"), "id", anag, base, now=now2
         ),
     )
     # the ledger still READS BACK the written stage-7/8 tables (the

@@ -15,23 +15,22 @@ becomes ``MERGE INTO`` and the read-modify-write below collapses to a
 transactional command; the call-sites don't change).
 
 Scale notes baked in:
-* the merge is anti-join + unionByName — the standard non-transactional
-  merge shape; the anti-join shuffles only the key column of the target
-  thanks to column pruning until the union projection.
+* each merge flavour is ONE pure ``(target | None, source) -> DataFrame``
+  function (``merge_rows``, ``delete_rows``, ``scd2_rows``) that every
+  layout applies; layouts differ only in how they read and publish. The
+  K4 merge is anti-join + unionByName; the anti-join shuffles only the
+  key column of the target thanks to column pruning.
 * ``partitioned_upsert`` is the 100 TB MERGE: a manifest-bucketed table
   where an upsert reads and rewrites ONLY the key-hash buckets containing
   source keys — O(|delta| + |affected buckets|) I/O, matching the
   reference's matched-rows-only BigQuery MERGE, where ``upsert`` /
   ``versioned_upsert`` rewrite the whole table (kept as the small-table /
   simple-layout paths).
-* before the overwrite the result is repartitionByRange on the key, so
-  file sizes stay balanced and downstream key-range scans prune files
-  (SURVEY §4: repartitionByRange before MERGE).
-* writes go to a temp sibling directory then a two-rename swap — a re-run
-  that dies mid-write never *loses committed data* (the next write
-  restores the ``.old`` copy if the swap window was interrupted; see
-  ``_atomic_overwrite`` for the exact non-atomicity window). The
-  reference gets the stronger transactional guarantee from BigQuery
+* flat writes go to a temp sibling directory then a two-rename swap — a
+  re-run that dies mid-write never *loses committed data* (every writer
+  restores the ``.old`` copy an interrupted swap left before it reads or
+  swaps; see ``_atomic_overwrite`` for the exact non-atomicity window).
+  The reference gets the stronger transactional guarantee from BigQuery
   staging tables; swap in Delta for the same here.
 """
 from __future__ import annotations
@@ -67,25 +66,43 @@ def ensure_table(
     return path
 
 
+def _restore_swap(path: str) -> bool:
+    """Undo an interrupted ``_atomic_overwrite`` swap: if ``path`` is gone
+    but ``.old`` survives, the previous run died between its two renames
+    and ``.old`` holds the committed table, so it is renamed back.
+    Returns whether the table exists."""
+    old = path + ".old"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.rename(old, path)
+    return os.path.exists(path)
+
+
+def _current_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """The flat table's committed rows (an interrupted swap restored
+    first), or ``None`` if it was never written. Every read-before-replace
+    writer reads through it, so a crash inside a swap window never makes
+    a writer take the table for absent and replace it with its batch."""
+    return spark.read.parquet(path) if _restore_swap(path) else None
+
+
 def _atomic_overwrite(df: DataFrame, path: str) -> None:
     """Write to a temp sibling, then swap via two renames.
 
     NOT truly atomic: between ``rename(path, .old)`` and
     ``rename(staged, path)`` the table path briefly does not exist, so a
     crash in that window (or a concurrent lister) can see a missing
-    table. The next write self-heals: if ``path`` is gone but ``.old``
-    survives, ``.old`` is restored before proceeding, so no committed
-    data is ever lost — the guarantee is durability, not an atomic swap.
-    True atomicity needs a versioned directory + pointer-file scheme or a
-    transactional format (the documented Delta swap); single-directory
-    parquet keeps the driver-checkable layout.
+    table. No committed data is lost: a surviving ``.old`` is restored
+    before this swap and before every writer's read (``_current_table``)
+    — the guarantee is durability, not an atomic swap. ``df`` may read
+    ``path``: the staging write runs before the swap. True atomicity
+    needs a versioned directory + pointer-file scheme or a transactional
+    format (the documented Delta swap); single-directory parquet keeps
+    the driver-checkable layout.
     """
     parent = os.path.dirname(path) or "."
     os.makedirs(parent, exist_ok=True)
     old = path + ".old"
-    # crash recovery: a previous run died inside its swap window
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
+    _restore_swap(path)
     tmp = tempfile.mkdtemp(dir=parent, prefix=".staging_")
     staged = os.path.join(tmp, "data")
     try:
@@ -115,39 +132,37 @@ def overwrite(df: DataFrame, base_dir: str, name: str) -> str:
     return path
 
 
+def merge_rows(target: DataFrame | None, source: DataFrame, key: str) -> DataFrame:
+    """K4 MERGE algebra: target rows whose key appears in ``source`` are
+    replaced, new source keys are inserted (``MERGE INTO t USING s ON
+    t.key=s.key WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
+    INSERT *``). An absent target is the source itself. Idempotent."""
+    if target is None:
+        return source
+    return target.join(
+        source.select(key).distinct(), on=key, how="left_anti"
+    ).unionByName(source)
+
+
+def delete_rows(target: DataFrame, keys: DataFrame, key: str) -> DataFrame:
+    """MERGE ... WHEN MATCHED THEN DELETE algebra: ``target`` minus the
+    rows whose key appears in ``keys``. Idempotent. Writers skip absent
+    targets: there is nothing to delete."""
+    return target.join(keys.select(key).distinct(), on=key, how="left_anti")
+
+
 def upsert(
     spark: SparkSession,
     source: DataFrame,
     base_dir: str,
     name: str,
     key: str,
-    num_range_partitions: int | None = None,
 ) -> str:
-    """K4: staged MERGE upsert — target rows whose key appears in source
-    are replaced; new source keys are inserted. Idempotent: running the
-    same source twice equals running it once.
-
-    Plan: target ⟮left-anti on key⟯ source → unionByName(source) →
-    repartitionByRange(key) → atomic overwrite. With Delta this whole
-    function is ``MERGE INTO t USING s ON t.key=s.key WHEN MATCHED THEN
-    UPDATE SET * WHEN NOT MATCHED THEN INSERT *``.
-    """
+    """K4: staged MERGE upsert — ``merge_rows`` of the current table
+    (``_current_table``) and ``source``, published by the atomic-overwrite
+    swap. With Delta this whole function is one ``MERGE INTO``."""
     path = table_path(base_dir, name)
-    if not os.path.exists(path):
-        # empty-target fast path: an absent table anti-joins to nothing,
-        # so MERGE degenerates to writing the source — skips the
-        # create-empty + read + anti-join jobs on a table's first batch
-        merged = source
-    else:
-        target = spark.read.parquet(path)
-        merged = target.join(
-            source.select(key).distinct(), on=key, how="left_anti"
-        ).unionByName(source)
-    if num_range_partitions:
-        merged = merged.repartitionByRange(num_range_partitions, F.col(key))
-    # safe to read-while-writing: the staging write happens before the
-    # swap, so the lazy plan still sees the old target files
-    _atomic_overwrite(merged, path)
+    _atomic_overwrite(merge_rows(_current_table(spark, path), source, key), path)
     return path
 
 
@@ -158,29 +173,20 @@ def delete_keys(
     name: str,
     key: str,
 ) -> str:
-    """MERGE ... WHEN MATCHED THEN DELETE: drop target rows whose key
-    appears in ``keys``. Idempotent (deleting absent keys is a no-op),
-    same staged-overwrite mechanics as ``upsert`` — with Delta this is
-    the DELETE leg of the same MERGE statement. Absent targets are a
-    no-op (nothing to delete on a table's first batch) — but a table
-    mid-swap from a crashed ``_atomic_overwrite`` (``path`` gone,
-    ``.old`` survives) is restored FIRST, the same two lines the writer
-    itself runs, so a crash window never silently skips a delete.
+    """MERGE ... WHEN MATCHED THEN DELETE: ``delete_rows`` of the current
+    table and ``keys``, same staged-overwrite mechanics as ``upsert`` —
+    with Delta this is the DELETE leg of the same MERGE statement. An
+    absent target is a no-op (nothing to delete on a table's first
+    batch); a table left mid-swap by a crashed ``_atomic_overwrite`` is
+    restored by ``_current_table`` first, so a crash window never
+    silently skips a delete.
 
     Rewrites the whole table — fine at dimension scale; a 10⁹-row table
     wants ``partitioned_delete_keys`` (bucket-pruned I/O) instead."""
     path = table_path(base_dir, name)
-    old = path + ".old"
-    # crash recovery: a previous run died inside its swap window
-    if not os.path.exists(path) and os.path.exists(old):
-        os.rename(old, path)
-    if not os.path.exists(path):
-        return path
-    target = spark.read.parquet(path)
-    merged = target.join(
-        keys.select(key).distinct(), on=key, how="left_anti"
-    )
-    _atomic_overwrite(merged, path)
+    target = _current_table(spark, path)
+    if target is not None:
+        _atomic_overwrite(delete_rows(target, keys, key), path)
     return path
 
 
@@ -509,8 +515,8 @@ def versioned_upsert(
     spark: SparkSession, source: DataFrame, base_dir: str, name: str, key: str,
     keep: int = 2,
 ) -> str:
-    """K4 MERGE against the versioned table: read current, anti-join +
-    union, publish as a new version (atomic pointer flip). Same idempotent
+    """K4 MERGE against the versioned table: read current, ``merge_rows``,
+    publish as a new version (atomic pointer flip). Same idempotent
     semantics as ``upsert``; readers never observe an intermediate state.
 
     The WHOLE read-merge-publish runs under the writer lease, so two
@@ -522,13 +528,9 @@ def versioned_upsert(
     vdir = _versioned_dir(base_dir, name)
     os.makedirs(vdir, exist_ok=True)
     with WriterLease(vdir) as lease:
-        if not os.path.exists(os.path.join(vdir, "_CURRENT")):
-            return _publish_version(source, vdir, keep, lease)
-        target = read_versioned(spark, base_dir, name)
-        merged = target.join(
-            source.select(key).distinct(), on=key, how="left_anti"
-        ).unionByName(source)
-        return _publish_version(merged, vdir, keep, lease)
+        cur = os.path.exists(os.path.join(vdir, "_CURRENT"))
+        target = read_versioned(spark, base_dir, name) if cur else None
+        return _publish_version(merge_rows(target, source, key), vdir, keep, lease)
 
 
 # --------------------------------------------------------------------------
@@ -892,16 +894,9 @@ def partitioned_upsert(
     The whole read-merge-publish runs under ``WriterLease`` with a
     pre-flip ownership check, like ``versioned_upsert``.
     """
-
-    def merge(target: DataFrame | None, src: DataFrame) -> DataFrame:
-        if target is None:
-            return src
-        return target.join(
-            src.select(key).distinct(), on=key, how="left_anti"
-        ).unionByName(src)
-
     return _partitioned_merge(
-        spark, source, base_dir, name, key, merge,
+        spark, source, base_dir, name, key,
+        lambda target, src: merge_rows(target, src, key),
         num_buckets=num_buckets, keep=keep,
         shuffle_partitions=shuffle_partitions, range_width=range_width,
         bucket_col=bucket_col,
@@ -933,15 +928,10 @@ def partitioned_delete_keys(
     column too (placement hashes it, not the merge key) — a keys-only
     probe fails loudly in the bucket-id select rather than deleting
     from the wrong buckets."""
-
-    def merge(target: DataFrame | None, src: DataFrame) -> DataFrame:
-        # target is never None: absent buckets are skipped before read
-        return target.join(
-            src.select(key).distinct(), on=key, how="left_anti"
-        )
-
+    # target is never None: absent buckets are skipped before the read
     return _partitioned_merge(
-        spark, keys, base_dir, name, key, merge,
+        spark, keys, base_dir, name, key,
+        lambda target, src: delete_rows(target, src, key),
         keep=keep, shuffle_partitions=shuffle_partitions,
         skip_absent_buckets=True, drop_empty_affected=True,
     )
@@ -1032,6 +1022,16 @@ def scd2_merge(
     )
 
 
+def scd2_rows(
+    target: DataFrame | None, source: DataFrame, key: str, effective_ts: str
+) -> DataFrame:
+    """SCD2 merge flavour over an optional target: an absent table opens
+    with ``scd2_init``, an existing one goes through ``scd2_merge``."""
+    if target is None:
+        return scd2_init(source, effective_ts)
+    return scd2_merge(target, source, key, effective_ts)
+
+
 def scd2_upsert(
     spark: SparkSession,
     source: DataFrame,
@@ -1041,16 +1041,11 @@ def scd2_upsert(
     effective_ts: str,
 ) -> str:
     """SCD2 merge into a flat parquet table (small-dimension path): read
-    current state, apply ``scd2_merge``, publish via the atomic-overwrite
-    swap. First batch initializes the table."""
+    current state (``_current_table``), apply ``scd2_rows``, publish via
+    the atomic-overwrite swap. First batch initializes the table."""
     path = table_path(base_dir, name)
-    if not os.path.exists(path):
-        merged = scd2_init(source, effective_ts)
-    else:
-        merged = scd2_merge(
-            spark.read.parquet(path), source, key, effective_ts
-        )
-    _atomic_overwrite(merged, path)
+    target = _current_table(spark, path)
+    _atomic_overwrite(scd2_rows(target, source, key, effective_ts), path)
     return path
 
 
@@ -1072,14 +1067,9 @@ def partitioned_scd2_upsert(
     buckets containing source keys: O(|delta| + affected buckets) I/O,
     untouched buckets byte-identical, manifest-atomic commit — the same
     bound ``partitioned_upsert`` gives the plain MERGE."""
-
-    def merge(target: DataFrame | None, src: DataFrame) -> DataFrame:
-        if target is None:
-            return scd2_init(src, effective_ts)
-        return scd2_merge(target, src, key, effective_ts)
-
     return _partitioned_merge(
-        spark, source, base_dir, name, key, merge,
+        spark, source, base_dir, name, key,
+        lambda target, src: scd2_rows(target, src, key, effective_ts),
         num_buckets=num_buckets, keep=keep,
         shuffle_partitions=shuffle_partitions, range_width=range_width,
     )
@@ -1331,7 +1321,7 @@ def compact(
     with mismatched TTLs).
 
     Returns the number of part files after the call (unchanged if the
-    table was already under the threshold).
+    table was already under the threshold, 0 if it was never written).
     """
     path = table_path(base_dir, name)
 
@@ -1342,6 +1332,10 @@ def compact(
         )
 
     with table_lease(base_dir, name, ttl=lease_ttl):
+        # restore an interrupted swap before counting; the read waits for
+        # the threshold so an under-threshold call issues no Spark job
+        if not _restore_swap(path):
+            return 0
         n = _n_parts()
         if n <= max_files:
             return n

@@ -6,7 +6,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from mgo_liveagent_data_pipeline_spark.api import Engine
+from mgo_liveagent_data_pipeline_spark.api import Engine, build_fastapi_app
 
 
 def _now():
@@ -18,7 +18,7 @@ def engine(spark, tmp_path):
     return Engine(spark, str(tmp_path))
 
 
-def _seed(spark, engine):
+def _seed(spark, engine, now):
     agents = spark.createDataFrame(
         [("a1", "Alice", "a@x.ph", None)],
         "id string, name string, email string, last_pswd_change timestamp",
@@ -41,12 +41,12 @@ def _seed(spark, engine):
         "extract/process-tickets-and-messages",
         raw_tickets=tickets,
         raw_messages=messages,
-        now=_now(),
+        now=now,
     )
 
 
 def test_scheduler_order_end_to_end(spark, engine):
-    _seed(spark, engine)
+    _seed(spark, engine, _now())
     engine.dispatch("extract/process-convo")
     msgs = engine.dispatch("fetch", table="messages")
     run_keys = msgs.select("ticket_id").distinct()
@@ -62,6 +62,24 @@ def test_scheduler_order_end_to_end(spark, engine):
     assert summary["extract/process-convo"]["n"] == 1
     assert engine.tracker.health()["status"] == "ok"
     assert all(r["wall_sec"] is not None for r in engine.tracker.logs())
+
+
+def test_logs_route_clock_matches_tickets_route(spark, engine):
+    """On the default clock, the logs route's extraction_date is on the
+    same Manila wall clock as the tickets route's datetime_extracted: a
+    run stamps both within seconds of each other, not 8 h apart."""
+    _seed(spark, engine, None)
+    engine.dispatch("extract/process-convo")
+    run_keys = engine.dispatch("fetch", table="tickets").select(
+        F.col("id").alias("ticket_id")
+    )
+    existing = spark.createDataFrame([], "ticket_id string")
+    engine.dispatch("process-logs", run_keys=run_keys, existing_keys=existing)
+
+    ticket = engine.dispatch("fetch", table="tickets").collect()[0]
+    log = engine.dispatch("fetch", table="logs").collect()[0]
+    gap = log["extraction_date"] - ticket["datetime_extracted"]
+    assert dt.timedelta(0) <= gap < dt.timedelta(minutes=10)
 
 
 def test_unknown_route_and_table_guard(spark, engine):
@@ -84,3 +102,16 @@ def test_tags_route_nan_fill_truncate(spark, engine):
     assert len(rows) == 2
     assert rows["g1"]["name"] == ""  # NaN-filled
     assert rows["g2"]["color"] == "red"
+
+
+def test_fastapi_adapter_serves_tracker_routes(engine):
+    """The HTTP adapter exposes the tracker's /health, /logs and /summary,
+    and says so plainly when FastAPI is not installed."""
+    try:
+        import fastapi  # noqa: F401
+    except ImportError:
+        with pytest.raises(RuntimeError, match="fastapi is not installed"):
+            build_fastapi_app(engine)
+        return
+    paths = {r.path for r in build_fastapi_app(engine).routes}
+    assert {"/health", "/logs", "/summary"} <= paths

@@ -2,7 +2,8 @@
 package builds from Python rows is an Arrow-backed ``LocalRelation`` with
 the exact schema the old ``createDataFrame(<list>, schema)`` gave, so it
 evaluates in the JVM and starts no pickled-RDD Python worker pool. The
-lint test keeps ``createDataFrame`` confined to that one helper."""
+lint test keeps ``createDataFrame`` confined to that one helper; a second
+lint keeps the package free of top-level definitions nothing uses."""
 from __future__ import annotations
 
 import ast
@@ -18,10 +19,8 @@ from mgo_liveagent_data_pipeline_spark.sources.tables import (
     local_table,
 )
 
-PKG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "mgo_liveagent_data_pipeline_spark",
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "mgo_liveagent_data_pipeline_spark")
 
 
 def _analyzed(df) -> str:
@@ -175,3 +174,44 @@ def test_create_dataframe_only_in_local_table():
                     for n in _create_dataframe_uses(path)
                 ]
     assert offenders == []
+
+
+def _python_files(root: str):
+    if os.path.isfile(root):
+        yield root
+    for d, _dirs, files in os.walk(root):
+        yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
+
+
+def test_every_package_definition_is_referenced():
+    """A top-level package function or class that no code in the package,
+    ``tests/``, ``tools/``, ``perfbench/``, ``bench.py`` or
+    ``__spark_entry__.py`` names (a load, an attribute or an import) is
+    dead code. Strings do not count: a column alias that happens to share
+    a function's name is not a use of it."""
+    roots = [PKG] + [
+        os.path.join(REPO, p)
+        for p in ("tests", "tools", "perfbench", "bench.py", "__spark_entry__.py")
+    ]
+    defined, used = [], set()
+    for root in roots:
+        for path in _python_files(root):
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            if path.startswith(PKG + os.sep):
+                defined += [
+                    (node.name, f"{os.path.relpath(path, PKG)}:{node.lineno}")
+                    for node in tree.body
+                    if isinstance(
+                        node,
+                        (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef),
+                    )
+                ]
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Name):
+                    used.add(node.id)
+                elif isinstance(node, ast.Attribute):
+                    used.add(node.attr)
+                elif isinstance(node, ast.alias):
+                    used.add(node.name.rsplit(".", 1)[-1])
+    assert [f"{loc} {name}" for name, loc in defined if name not in used] == []

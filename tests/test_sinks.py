@@ -3,6 +3,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mgo_liveagent_data_pipeline_spark.sinks.writers import (
@@ -418,27 +419,57 @@ def test_partitioned_delete_keys_prunes_and_drops_empty(spark, tmp_path):
     assert man_empty["buckets"] == {}
 
 
-def test_flat_delete_keys_restores_crashed_swap(spark, tmp_path):
-    """delete_keys self-heals the '.old' crash window before deciding
-    the table is absent — a stale sweep after a crashed swap must not
-    be silently skipped."""
+@pytest.mark.parametrize(
+    "writer", ["upsert", "scd2_upsert", "delete_keys", "compact"]
+)
+def test_flat_writer_restores_crashed_swap(spark, tmp_path, writer):
+    """Every read-before-replace flat writer restores the '.old' copy an
+    interrupted swap left behind BEFORE it reads the table: none may take
+    the table for absent and replace the committed rows with its batch
+    (or, for a delete, silently skip the sweep)."""
     from mgo_liveagent_data_pipeline_spark.sinks.writers import (
+        compact,
         delete_keys,
-        table_path,
-        upsert,
+        scd2_upsert,
     )
 
     base = str(tmp_path)
-    df = spark.range(0, 10).select(F.col("id"), (F.col("id") * 3).alias("v"))
-    upsert(spark, df, base, "t", "id")
     path = table_path(base, "t")
+    first = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    batch = spark.createDataFrame([(1, "A"), (3, "c")], "id long, v string")
+    if writer == "scd2_upsert":
+        scd2_upsert(spark, first, base, "t", "id", T1)
+    elif writer == "compact":
+        for _ in range(3):
+            append(first.repartition(2), base, "t")
+    else:
+        upsert(spark, first, base, "t", "id")
     # simulate a crash inside _atomic_overwrite's swap window
     os.rename(path, path + ".old")
-    delete_keys(
-        spark, spark.createDataFrame([(3,)], ["id"]), base, "t", "id"
+
+    if writer == "upsert":
+        upsert(spark, batch, base, "t", "id")
+        want = [(1, "A"), (2, "b"), (3, "c")]
+    elif writer == "scd2_upsert":
+        scd2_upsert(spark, batch, base, "t", "id", T2)
+        want = [
+            (1, "A", T2, "None", True),
+            (1, "a", T1, T2, False),
+            (2, "b", T1, "None", True),
+            (3, "c", T2, "None", True),
+        ]
+    elif writer == "delete_keys":
+        delete_keys(spark, batch.select("id"), base, "t", "id")
+        want = [(2, "b")]
+    else:
+        assert compact(spark, base, "t", max_files=2, target_files=1) == 1
+        want = [(1, "a")] * 3 + [(2, "b")] * 3
+    got = (
+        _scd2_rows(spark, base, "t")
+        if writer == "scd2_upsert"
+        else sorted(tuple(r) for r in read(spark, base).collect())
     )
-    got = {r["id"] for r in spark.read.parquet(path).collect()}
-    assert got == set(range(10)) - {3}
+    assert got == want
     assert not os.path.exists(path + ".old")
 
 
