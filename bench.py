@@ -94,27 +94,37 @@ def _ambient_sample(interval: float = 0.3) -> dict | None:
     return _cpu_pcts(a, _cpu_snap())
 
 
-def main() -> None:
+def sf_of(sf_dir: str) -> float:
+    """The scale factor a data directory's name carries (``.../sf0.1``),
+    -1.0 when it carries none."""
     try:
-        sf = float(SF_DIR.rstrip("/").rsplit("sf", 1)[-1])
+        return float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     except ValueError:
-        sf = -1.0
-    spark = get_spark("bench")
-    # Warm the JVM outside any timed region: codegen, shuffle machinery,
-    # the vectorized parquet reader, hash-agg, window and broadcast-join
-    # code paths all JIT on first use — without this the first queries
-    # absorb ~1-2 s of one-time cost each (measured: a1's agg is 0.06 s
-    # warm vs 2.4 s cold-in-loop).
+        return -1.0
+
+
+def warm_jvm(spark, sf_dir: str) -> None:
+    """Warm the JVM outside any timed region: codegen, shuffle machinery,
+    the vectorized parquet reader, hash-agg, window and broadcast-join
+    code paths all JIT on first use — without this the first queries
+    absorb ~1-2 s of one-time cost each (measured: a1's agg is 0.06 s
+    warm vs 2.4 s cold-in-loop)."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     spark.range(1000).selectExpr("sum(id)").collect()
-    warm = spark.read.parquet(f"{SF_DIR}/nation.parquet")
+    warm = spark.read.parquet(f"{sf_dir}/nation.parquet")
     warm.groupBy("n_regionkey").count().collect()
     warm.withColumn(
         "rn", F.row_number().over(Window.partitionBy("n_regionkey").orderBy("n_name"))
     ).collect()
     warm.join(F.broadcast(warm.select("n_nationkey")), "n_nationkey").count()
+
+
+def main() -> None:
+    sf = sf_of(SF_DIR)
+    spark = get_spark("bench")
+    warm_jvm(spark, SF_DIR)
     # Steady-state warmup pass (untimed): per-query whole-stage-codegen
     # compilation (1-2 s for the big LSH/simhash expression trees) lands
     # outside the measured runs. At production scale codegen is amortized

@@ -355,7 +355,7 @@ def incremental_resolve_entities(
     to a new pair endpoint (the ER analog of the semantic family's
     hot-cluster prune), every other stored assignment row is carried
     through verbatim, so ingest cost tracks the delta's neighborhood,
-    not the standing corpus (tools/scale_smoke_er.py measures it).
+    not the standing corpus (tools/measure.py smoke er measures it).
     Exactness is unaffected: a component no delta pair touches keeps
     exactly its stored label and size in the full-batch answer.
     ``corpus_assignment`` must be the output of a previous

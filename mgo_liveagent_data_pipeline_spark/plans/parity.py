@@ -98,11 +98,19 @@ def _overlap(*thunks) -> list:
     Every failure is surfaced: the first exception is raised and any
     further ones are logged before it propagates, so a multi-writer
     failure is fully reported instead of the extras being discarded.
-    Returns the steps' results in submission order."""
+    Returns the steps' results in submission order.
+
+    Each step runs under the caller's local properties (job group,
+    description), so the jobs it submits are labelled like the caller's."""
     from concurrent.futures import ThreadPoolExecutor, wait
 
+    from pyspark import inheritable_thread_target
+
+    spark = SparkSession.active()
     with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futures = [ex.submit(t) for t in thunks]
+        futures = [
+            ex.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
         wait(futures)
     errs = [e for f in futures if (e := f.exception()) is not None]
     if errs:

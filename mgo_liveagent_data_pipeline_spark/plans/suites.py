@@ -1422,6 +1422,8 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality / cluster as the member docstrings describe."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     from ..streaming.windows import state_partitions
 
     members = (
@@ -1432,68 +1434,75 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("merge_part", persistence.q_stream_merge_partitioned),
     )
     # pool sized for EVERY submitted future (10 streaming singles + the
-    # mapped members) so no streaming member queues behind the others —
+    # members) so no streaming member queues behind the others —
     # the fixed-cost fan-out overlap is the point of the pool
     with state_partitions(spark, 1), ThreadPoolExecutor(len(members) + 10) as ex:
-        join_fut = ex.submit(
+
+        def submit(fn, *args, **kwargs):
+            # the member's jobs carry the caller's job group/description
+            return ex.submit(
+                inheritable_thread_target(spark)(fn), *args, **kwargs
+            )
+
+        join_fut = submit(
             persistence.q_stream_join_30m, spark, sf_dir, None
         )
         # incdedup: streaming incremental near-dup MERGE over the
         # documents corpus (batch N deduped vs batches 1..N−1)
-        incdedup_fut = ex.submit(
+        incdedup_fut = submit(
             persistence.q_stream_incremental_dedup, spark, sf_dir, None
         )
         # scored_ingest: the same ingestion loop with the quality + ppl
         # gates applied to each micro-batch BEFORE indexing
-        scored_fut = ex.submit(
+        scored_fut = submit(
             persistence.q_stream_scored_ingest, spark, sf_dir, None
         )
         # incsem: streaming SemDeDup over the embeddings corpus — verdict
         # table maintained by monotone kept-flips; drained == batch
-        incsem_fut = ex.submit(
+        incsem_fut = submit(
             persistence.q_stream_semantic_dedup, spark, sf_dir, None
         )
         # incphash: streaming perceptual MEDIA dedup — decode → dHash →
         # delta-vs-corpus pairs against the stored fingerprint index
-        incphash_fut = ex.submit(
+        incphash_fut = submit(
             persistence.q_stream_media_dedup, spark, sf_dir, None
         )
         # incrollup: continuous aggregate via replay-safe keyed partials
-        incrollup_fut = ex.submit(
+        incrollup_fut = submit(
             persistence.q_stream_hypertable_rollup, spark, sf_dir, None
         )
         # incann: IVF index maintained by frozen-centroid assignment
         # MERGEs, queried through the stored posting lists
-        incann_fut = ex.submit(
+        incann_fut = submit(
             persistence.q_stream_ann_ingest, spark, sf_dir, None
         )
         # increr: streaming entity resolution — each record batch
         # resolved delta-vs-corpus against the stored assignment;
         # drained table == full-batch resolve_entities
-        increr_fut = ex.submit(
+        increr_fut = submit(
             persistence.q_stream_entity_resolution, spark, sf_dir, None
         )
         # increridx: the same loop on the fully indexed state layout —
         # ptable record/assignment state + the secondary block index,
         # so per-batch scan I/O tracks the delta's neighborhood
-        increridx_fut = ex.submit(
+        increridx_fut = submit(
             persistence.q_stream_er_indexed, spark, sf_dir, None
         )
         # gated: expectation-gated ingestion with a quarantine table —
         # a batch with any failing check never reaches the kept table
-        gated_fut = ex.submit(
+        gated_fut = submit(
             persistence.q_stream_gated_ingest, spark, sf_dir, None
         )
         # incgold: the golden dimension maintained by streaming ER —
         # touched-entity golden MERGEs + the self-healing stale sweep
-        incgold_fut = ex.submit(
+        incgold_fut = submit(
             persistence.q_stream_er_golden, spark, sf_dir, None
         )
-        done = list(
-            ex.map(
-                lambda m: m[1](spark, sf_dir, n_state_partitions=None), members
-            )
-        )
+        member_futs = [
+            submit(fn, spark, sf_dir, n_state_partitions=None)
+            for _tag, fn in members
+        ]
+        done = [f.result() for f in member_futs]
         join_df = join_fut.result()
         incdedup_df = incdedup_fut.result()
         scored_df = scored_fut.result()

@@ -1365,6 +1365,8 @@ def stream_entity_resolution(
     # matching the inline behavior's failure visibility.
     import threading as _threading
 
+    from pyspark import inheritable_thread_target
+
     _compaction: dict = {"thread": None, "folded": [], "error": None}
 
     def _reap_compaction(wait: bool) -> None:
@@ -1566,7 +1568,10 @@ def stream_entity_resolution(
                 except BaseException as e:  # surfaced at next sync point
                     _compaction["error"] = e
 
-            t = _threading.Thread(target=_fold, daemon=True)
+            # the fold's jobs carry the stream's job group/description
+            t = _threading.Thread(
+                target=inheritable_thread_target(spark)(_fold), daemon=True
+            )
             t.start()
             _compaction["thread"] = t
 

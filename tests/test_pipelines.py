@@ -317,6 +317,39 @@ def test_parity_overlap_equals_sequential_and_raises(spark, tmp_path):
         _overlap(_boom, _boom2)
 
 
+def test_overlap_jobs_keep_the_callers_job_group(spark):
+    """Jobs `_overlap` submits from its worker threads carry the caller's
+    job group, so a per-group job count sees every overlapped writer. A
+    plain worker thread starts without the caller's local properties and
+    its jobs land in no group."""
+    from mgo_liveagent_data_pipeline_spark.plans.parity import _overlap
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    df = spark.range(100)
+
+    def jobs_in(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(group))
+
+    per_count = len(jobs_in("overlap_probe_one", df.count))
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+
+    def chain():
+        df.count()
+        _overlap(df.count, df.count)
+        df.count()
+
+    assert len(jobs_in("overlap_probe_chain", chain)) == 4 * per_count
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+
+
 def test_logs_pipeline_metrics_row(spark, tmp_path, agents, raw_messages):
     base = str(tmp_path)
     run_message_pipeline(spark, raw_messages, agents, base, now=NOW())
