@@ -14,7 +14,7 @@ Layout:
     functions   scalar expression library (strings / datetime / json / sim)
     operators   relational + extension operators (joins, aggs, dedup, ANN, …)
     sinks       upsert (staged MERGE), history append, overwrite/append
-    enrich      U1 LLM stage (applyInPandas) + U2 geocode w/ fallback
+    enrich      U1 LLM stage (mapInArrow) + U2 geocode w/ fallback
     plans       query/oracle registry — the driver contract surface
     streaming   Structured Streaming formalization of the 6-h batch windows
 """

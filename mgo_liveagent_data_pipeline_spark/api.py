@@ -14,7 +14,8 @@ that records per-route wall clock / status, surfaced at /logs /summary
   package is installed (it is not in this environment — the adapter is
   import-guarded and unit-tested through the dispatcher instead).
 
-This layer is deliberately thin: every route body is one pipeline call;
+This layer is deliberately thin: every route body is one pipeline call,
+or independent pipeline calls run concurrently (``pipelines.overlap``);
 all engine behavior lives in pipelines.py and below.
 """
 from __future__ import annotations
@@ -27,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .enrich.gateway import StubGateway
 from .pipelines import (
+    overlap,
     read_table,
     run_agents_pipeline,
     run_convo_pipeline,
@@ -115,7 +117,7 @@ class Engine:
             raise KeyError(f"unknown route: {route}")
         return self.tracker.track(route, fn, **kwargs)
 
-    # route bodies — one pipeline call each -------------------------------
+    # route bodies — one pipeline call each, or overlapped independent ones
     def _process_agents(self, raw_agents: DataFrame):
         return run_agents_pipeline(self.spark, raw_agents, self.base_dir)
 
@@ -125,11 +127,24 @@ class Engine:
     def _process_tickets_and_messages(
         self, raw_tickets: DataFrame, raw_messages: DataFrame, now=None
     ):
-        run_ticket_pipeline(self.spark, raw_tickets, self.base_dir, now=now)
-        agents = read_table(self.spark, self.base_dir, "agents")
-        return run_message_pipeline(
-            self.spark, raw_messages, agents, self.base_dir, now=now
+        """The tickets upsert and the messages append write different
+        tables, and messages read only ``agents``: the two run
+        concurrently. A failing writer does not stop the other; the first
+        error (tickets before messages) is raised."""
+
+        def messages() -> str:
+            agents = read_table(self.spark, self.base_dir, "agents")
+            return run_message_pipeline(
+                self.spark, raw_messages, agents, self.base_dir, now=now
+            )
+
+        _, path = overlap(
+            lambda: run_ticket_pipeline(
+                self.spark, raw_tickets, self.base_dir, now=now
+            ),
+            messages,
         )
+        return path
 
     def _process_convo(self):
         messages = read_table(self.spark, self.base_dir, "messages")

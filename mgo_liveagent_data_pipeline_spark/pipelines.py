@@ -13,7 +13,8 @@ the staged-MERGE upsert (K4) exactly like the reference's BigQuery MERGE.
 
 The convo route's stages (``analyze_convo``, ``write_convo_analysis``)
 and ``run_logs_pipeline`` are shared: the service routes (api.Engine)
-and the parity member (plans/parity.py) both call them.
+and the parity member (plans/parity.py) both call them, and both run
+independent writers concurrently through ``overlap``.
 """
 from __future__ import annotations
 
@@ -27,7 +28,14 @@ from .functions.datetimes import fuse_schedule, to_manila
 from .operators.dedup import lineage_cut
 from .operators.setops import new_vs_existing_counts
 from .session import ship_package
-from .sinks.writers import append, history_append, overwrite, table_path, upsert
+from .sinks.writers import (
+    append,
+    history_append,
+    overwrite,
+    read_flat,
+    table_path,
+    upsert,
+)
 from .transforms.messages import process_messages
 from .transforms.tickets import process_agents, process_tags, process_tickets
 
@@ -84,7 +92,7 @@ def analyze_convo(
     messages: DataFrame,
     gateway: Callable[[str], tuple[str, int, str]],
 ) -> DataFrame:
-    """P4 filter → A5+U1 mapInPandas → F11 schedule fusion, materialized
+    """P4 filter → A5+U1 mapInArrow → F11 schedule fusion, materialized
     by an EAGER lineage cut: every consumer (history append, the MERGE's
     anti-join and union, concurrent broadcast jobs) reads the cut, so the
     gateway runs once per conversation per run and history and current
@@ -161,4 +169,46 @@ def run_logs_pipeline(
 
 
 def read_table(spark: SparkSession, base_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(table_path(base_dir, name))
+    """A route table, read with its stored schema (``read_flat``)."""
+    return read_flat(spark, table_path(base_dir, name))
+
+
+def overlap(*thunks) -> list:
+    """Run independent writer steps concurrently, each submitting its
+    Spark jobs from its own thread. ONLY for steps that write DIFFERENT
+    tables and read only already-materialized inputs or tables no
+    sibling writes: every table's own write order is preserved by the
+    surrounding control flow, so the final table states are
+    byte-identical to the sequential schedule.
+
+    Failure semantics (deliberately weaker than the reference's
+    sequential route, where a step raising prevents every later step
+    from starting): all submitted steps run to completion — there is no
+    cancellation, so a failing step does not abort its sibling writers.
+    Every failure is surfaced: the first exception (in submission order)
+    is raised and any further ones are logged before it propagates, so a
+    multi-writer failure is fully reported instead of the extras being
+    discarded. Returns the steps' results in submission order.
+
+    Each step runs under the caller's local properties (job group,
+    description), so the jobs it submits are labelled like the caller's."""
+    from concurrent.futures import ThreadPoolExecutor, wait
+
+    from pyspark import inheritable_thread_target
+
+    spark = SparkSession.active()
+    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
+        futures = [
+            ex.submit(inheritable_thread_target(spark)(t)) for t in thunks
+        ]
+        wait(futures)
+    errs = [e for f in futures if (e := f.exception()) is not None]
+    if errs:
+        import logging
+
+        for extra in errs[1:]:
+            logging.getLogger(__name__).error(
+                "concurrent writer step also failed: %r", extra
+            )
+        raise errs[0]
+    return [f.result() for f in futures]

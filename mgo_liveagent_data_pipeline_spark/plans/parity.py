@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..enrich.gateway import FailingGateway, FallbackGateway, StubGateway
+from ..pipelines import overlap
 from ..scratch import scratch_dir
 from ..sources.tables import load_table, local_table
 from .enrichment import _GRAMS3, _JAC3, _hexn
@@ -81,47 +82,6 @@ def _count(df: DataFrame) -> DataFrame:
 
 def _fmt(c: Column) -> Column:
     return F.date_format(c, _FMT_SPARK)
-
-
-def _overlap(*thunks) -> list:
-    """Run independent writer steps concurrently (guide §2.6 thread-pool
-    job submission). ONLY for steps that write DIFFERENT tables and read
-    only already-materialized inputs: every table's own write order is
-    preserved by the surrounding control flow, so the final table states
-    — the only thing the ledger and the DuckDB twin observe — are
-    byte-identical to the sequential schedule.
-
-    Failure semantics (deliberately weaker than the reference's
-    sequential route, where a step raising prevents every later step
-    from starting): all submitted steps run to completion — there is no
-    cancellation, so a failing step does not abort its sibling writers.
-    Every failure is surfaced: the first exception is raised and any
-    further ones are logged before it propagates, so a multi-writer
-    failure is fully reported instead of the extras being discarded.
-    Returns the steps' results in submission order.
-
-    Each step runs under the caller's local properties (job group,
-    description), so the jobs it submits are labelled like the caller's."""
-    from concurrent.futures import ThreadPoolExecutor, wait
-
-    from pyspark import inheritable_thread_target
-
-    spark = SparkSession.active()
-    with ThreadPoolExecutor(max_workers=len(thunks)) as ex:
-        futures = [
-            ex.submit(inheritable_thread_target(spark)(t)) for t in thunks
-        ]
-        wait(futures)
-    errs = [e for f in futures if (e := f.exception()) is not None]
-    if errs:
-        import logging
-
-        for extra in errs[1:]:
-            logging.getLogger(__name__).error(
-                "concurrent writer step also failed: %r", extra
-            )
-        raise errs[0]
-    return [f.result() for f in futures]
 
 
 def _run_keyed_persist(df: DataFrame, run_tag: str) -> "DataFrame":
@@ -336,7 +296,7 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     msgs = _run_keyed_persist(
         process_messages(raw_msgs, agents, now=now2), base
     )
-    _overlap(_tickets_writes, msgs.count)
+    overlap(_tickets_writes, msgs.count)
     tickets = spark.read.parquet(table_path(base, "tickets"))
     s1 = _stats(tickets, ck1)
 
@@ -358,9 +318,9 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference's sequential route (messages append, THEN users upsert,
     # THEN analysis): a failing messages write no longer prevents the
     # users write from completing — equivalence holds on the happy path,
-    # which is all the ledger/twin observe (see _overlap).
+    # which is all the ledger/twin observe (see pipelines.overlap).
     gateway = FallbackGateway(FailingGateway(), StubGateway())
-    ana, _, _ = _overlap(
+    ana, _, _ = overlap(
         lambda: analyze_convo(spark, msgs, gateway),
         lambda: append(msgs, base, "messages"),
         lambda: upsert(spark, users_src, base, "users", "id"),
@@ -415,7 +375,7 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     svc = local_table(spark, [(m,) for m in _SERVICEABLE], "muni string")
     vi = fuzzy_threshold_join(locs, svc, "location", "muni", threshold=40.0)
     # geo and vi are LOCATION-grained (a handful of distinct analysis
-    # locations), but they descend from a mapInPandas output whose size
+    # locations), but they descend from a mapInArrow output whose size
     # Catalyst cannot estimate, so the planner fell back to TWO
     # SortMergeJoins that each shuffled the full analysis relation by
     # location (guide §3.1: broadcast the side you know is small).
@@ -451,7 +411,7 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anag — pinned by test_parity_inhand_equals_readback), so the logs
     # append overlaps both write rounds (guide §2.6).
     run_keys = w2.select("id")
-    _overlap(
+    overlap(
         _convo_rounds,
         lambda: run_logs_pipeline(
             spark, run_keys, w1.select("id"), "id", anag, base, now=now2

@@ -35,6 +35,7 @@ Scale notes baked in:
 """
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -77,12 +78,38 @@ def _restore_swap(path: str) -> bool:
     return os.path.exists(path)
 
 
+# the key under which Spark stores a table's own schema in every part
+# file's footer; Spark's schema inference reads the same key
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def read_flat(spark: SparkSession, path: str) -> DataFrame:
+    """Read a flat parquet table with the schema Spark stored in a part
+    file's footer. Inference reads that same footer key, so the two
+    schemas agree, but inference costs a one-task Spark job per read and
+    this costs one footer read on the driver. A table whose footer lacks
+    the key (another engine wrote it) or that has no top-level part file
+    is read with inference."""
+    import pyarrow.parquet as pq
+
+    from pyspark.sql.types import StructType
+
+    # glob skips dot-files; Spark also skips names starting with "_"
+    parts = sorted(glob.glob(os.path.join(glob.escape(path), "[!_]*.parquet")))
+    stored = None
+    if parts:
+        stored = (pq.read_schema(parts[0]).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(StructType.fromJson(json.loads(stored))).parquet(path)
+
+
 def _current_table(spark: SparkSession, path: str) -> DataFrame | None:
     """The flat table's committed rows (an interrupted swap restored
     first), or ``None`` if it was never written. Every read-before-replace
     writer reads through it, so a crash inside a swap window never makes
     a writer take the table for absent and replace it with its batch."""
-    return spark.read.parquet(path) if _restore_swap(path) else None
+    return read_flat(spark, path) if _restore_swap(path) else None
 
 
 def _atomic_overwrite(df: DataFrame, path: str) -> None:
@@ -194,10 +221,9 @@ def history_append(
     spark: SparkSession, df: DataFrame, base_dir: str, name: str
 ) -> str:
     """K5: append-only history table ``<name>_history`` written before the
-    current-state merge (extractor_bq_helpers.py:83-108)."""
-    hist = f"{name}_history"
-    ensure_table(spark, base_dir, hist, df)
-    return append(df, base_dir, hist)
+    current-state merge (extractor_bq_helpers.py:83-108). The first append
+    creates the table with ``df``'s schema, even when ``df`` is empty."""
+    return append(df, base_dir, f"{name}_history")
 
 
 def _versioned_dir(base_dir: str, name: str) -> str:

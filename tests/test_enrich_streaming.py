@@ -168,3 +168,26 @@ def test_stream_dedup_collapses_redelivery(spark):
     }
     # every event was fed twice; dedup state must collapse it exactly
     assert deduped == single
+
+
+def test_u1_worker_imports_neither_pandas_nor_operators():
+    """A U1 Python worker imports ``enrich.convo`` to unpickle its batch
+    function. That import, checked here in a fresh interpreter without
+    Spark, loads neither pandas nor any operator module."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        "import mgo_liveagent_data_pipeline_spark.enrich.convo\n"
+        "print(sorted(m for m in sys.modules if m == 'pandas'"
+        " or m.startswith('mgo_liveagent_data_pipeline_spark.operators')))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip() == "[]"

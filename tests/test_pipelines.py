@@ -266,14 +266,14 @@ def test_parity_inhand_equals_readback(spark, monkeypatch):
 
 
 def test_parity_overlap_equals_sequential_and_raises(spark, tmp_path):
-    """The parity chain's `_overlap` (guide §2.6 thread-pool submission
-    of INDEPENDENT writer steps): (a) overlapped history-append +
-    current-merge of one round produce byte-identical table states to
-    the sequential schedule — the independence claim the member's
-    docstring makes; (b) an exception in either thunk propagates to the
+    """`pipelines.overlap`, shared by the routes and the parity chain
+    (thread-pool submission of INDEPENDENT writer steps):
+    (a) overlapped history-append + current-merge of one round produce
+    byte-identical table states to the sequential schedule — the
+    independence claim its docstring makes; (b) an exception in either thunk propagates to the
     caller (a silently swallowed writer failure would corrupt the
     lifecycle mid-chain)."""
-    from mgo_liveagent_data_pipeline_spark.plans.parity import _overlap
+    from mgo_liveagent_data_pipeline_spark.pipelines import overlap
     from mgo_liveagent_data_pipeline_spark.sinks.writers import (
         history_append,
         table_path,
@@ -288,7 +288,7 @@ def test_parity_overlap_equals_sequential_and_raises(spark, tmp_path):
         history_append(spark, src, seq, "t")
         upsert(spark, src, seq, "t", "ticket_id")
     for _ in range(2):
-        _overlap(
+        overlap(
             lambda: history_append(spark, src, par, "t"),
             lambda: upsert(spark, src, par, "t", "ticket_id"),
         )
@@ -306,7 +306,7 @@ def test_parity_overlap_equals_sequential_and_raises(spark, tmp_path):
         raise RuntimeError("writer died")
 
     with pytest.raises(RuntimeError, match="writer died"):
-        _overlap(lambda: None, _boom)
+        overlap(lambda: None, _boom)
 
     # multi-failure: every step runs, the FIRST (submission-order)
     # exception propagates, the rest are logged — not silently discarded
@@ -314,15 +314,15 @@ def test_parity_overlap_equals_sequential_and_raises(spark, tmp_path):
         raise ValueError("second writer died")
 
     with pytest.raises(RuntimeError, match="writer died"):
-        _overlap(_boom, _boom2)
+        overlap(_boom, _boom2)
 
 
 def test_overlap_jobs_keep_the_callers_job_group(spark):
-    """Jobs `_overlap` submits from its worker threads carry the caller's
+    """Jobs `overlap` submits from its worker threads carry the caller's
     job group, so a per-group job count sees every overlapped writer. A
     plain worker thread starts without the caller's local properties and
     its jobs land in no group."""
-    from mgo_liveagent_data_pipeline_spark.plans.parity import _overlap
+    from mgo_liveagent_data_pipeline_spark.pipelines import overlap
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -343,7 +343,7 @@ def test_overlap_jobs_keep_the_callers_job_group(spark):
 
     def chain():
         df.count()
-        _overlap(df.count, df.count)
+        overlap(df.count, df.count)
         df.count()
 
     assert len(jobs_in("overlap_probe_chain", chain)) == 4 * per_count

@@ -7,10 +7,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from mgo_liveagent_data_pipeline_spark.sinks.writers import (
+    _current_table,
     append,
     ensure_table,
     history_append,
     overwrite,
+    read_flat,
     table_path,
     upsert,
 )
@@ -69,6 +71,76 @@ def test_history_append_accumulates(spark, tmp_path):
     history_append(spark, batch, tmp, "t")
     history_append(spark, batch, tmp, "t")
     assert read(spark, tmp, "t_history").count() == 2
+
+
+def test_history_append_first_append_creates_typed_table(spark, tmp_path):
+    """The first append into an absent history table creates it with the
+    frame's schema, an empty frame included: no separate create-if-absent
+    write is needed."""
+    tmp = str(tmp_path)
+    ddl = "id bigint, v string, ts timestamp"
+    empty = spark.createDataFrame([], ddl)
+    full = spark.createDataFrame([(1, "a", None)], ddl)
+    history_append(spark, empty, tmp, "e")
+    history_append(spark, full, tmp, "f")
+    assert read(spark, tmp, "e_history").schema == empty.schema
+    assert read(spark, tmp, "e_history").count() == 0
+    assert read(spark, tmp, "f_history").schema == full.schema
+    assert read(spark, tmp, "f_history").collect() == full.collect()
+
+
+def _jobs_in(spark, group, run):
+    """Spark jobs ``run`` submits, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_flat_reads_take_the_stored_schema_without_a_job(spark, tmp_path):
+    """``_current_table`` and the routes' ``read_table`` take the schema
+    Spark stored in a part file's footer: the same schema inference
+    gives, with no inference job."""
+    from mgo_liveagent_data_pipeline_spark.pipelines import read_table
+
+    tmp = str(tmp_path)
+    df = spark.createDataFrame(
+        [(1, "a", [1, 2], {"k": 1.5})],
+        "id int not null, v string, xs array<int>, m map<string,double>",
+    ).withColumn("ts", F.current_timestamp())
+    append(df, tmp, "t")
+    path = table_path(tmp, "t")
+    inferred = spark.read.parquet(path)
+    got, jobs = _jobs_in(spark, "flat_read_current", lambda: _current_table(spark, path))
+    assert jobs == 0
+    assert got.schema == inferred.schema
+    got, jobs = _jobs_in(spark, "flat_read_route", lambda: read_table(spark, tmp, "t"))
+    assert jobs == 0
+    assert got.schema == inferred.schema
+    assert got.collect() == inferred.collect()
+
+
+def test_flat_read_without_spark_footer_falls_back_to_inference(spark, tmp_path):
+    """A table another engine wrote carries no Spark schema key in its
+    footers: the reader infers, like ``spark.read.parquet``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "ext.parquet")
+    os.makedirs(path)
+    pq.write_table(
+        pa.table({"id": [1, 2], "v": ["a", None]}),
+        os.path.join(path, "part-0.parquet"),
+    )
+    got, jobs = _jobs_in(spark, "flat_read_foreign", lambda: read_flat(spark, path))
+    assert jobs >= 1  # the inference job
+    assert got.schema == spark.read.parquet(path).schema
+    assert sorted(got.collect()) == [(1, "a"), (2, None)]
 
 
 def test_append_then_overwrite(spark, tmp_path):
