@@ -44,6 +44,8 @@ _RATING_FIELDS = {
     "sentiment_rating",
 }
 
+_STRING_FIELDS = [f for f in EXPECTED_FIELDS if f not in _RATING_FIELDS]
+
 _INT64_MIN, _INT64_MAX = -(2**63), 2**63 - 1
 
 
@@ -153,6 +155,7 @@ def analyze_conversations(
                 prompt = PROMPT_TEMPLATE.format(conversation=convo)
                 try:
                     raw, tok, model = gateway(prompt)
+                    tok = int(tok)
                     data = json.loads(raw)
                     if not isinstance(data, dict):
                         raise ValueError("non-object completion")
@@ -163,14 +166,23 @@ def analyze_conversations(
                 # (ConvoDataExtract.py:132-155)
                 for k in EXPECTED_FIELDS:
                     field_cols[k][i] = data.get(k)
-                tokens[i] = int(tok)
+                tokens[i] = tok
                 models[i] = model
-            # ratings must land as ints or the Arrow conversion kills the
-            # task instead of producing the fallback row; a bad rating
-            # fails its whole record, like the per-record parse errors
+            # ratings must land as ints and the other fields as strings,
+            # or the Arrow conversion kills the task instead of producing
+            # the fallback row; a bad value fails its whole record, like
+            # the per-record parse errors
             for k in _RATING_FIELDS:
                 field_cols[k], bad = _coerce_rating_column(field_cols[k])
                 failed = [f or b for f, b in zip(failed, bad)]
+            for k in _STRING_FIELDS:
+                col = field_cols[k]
+                # one type scan when the column is clean, the common case
+                if not all(v is None or type(v) is str for v in col):
+                    failed = [
+                        f or not (v is None or isinstance(v, str))
+                        for f, v in zip(failed, col)
+                    ]
             # error-fallback rows (ConvoDataExtract.py:163-187)
             for i in (i for i, f in enumerate(failed) if f):
                 for k in EXPECTED_FIELDS:

@@ -18,6 +18,7 @@ from ..sinks.writers import (
     partitioned_scd2_upsert,
     partitioned_upsert,
     prepare_and_load,
+    read_flat,
     read_partitioned,
     replace_partitions,
     scd2_upsert,
@@ -535,7 +536,7 @@ def q_stream_upsert_6h(
     path = stream_upsert_6h(
         spark, sf_dir, base_dir, n_state_partitions=n_state_partitions
     )
-    return spark.read.parquet(path)
+    return read_flat(spark, path)
 
 
 def q_stream_merge_partitioned(
@@ -572,7 +573,7 @@ def q_stream_incremental_dedup(
     pairs_path, _corpus = stream_incremental_dedup(
         spark, sf_dir, base_dir, n_state_partitions=n_state_partitions
     )
-    return spark.read.parquet(pairs_path).select("id_a", "id_b", "jaccard_sim")
+    return read_flat(spark, pairs_path).select("id_a", "id_b", "jaccard_sim")
 
 
 def q_stream_semantic_dedup(
@@ -591,7 +592,7 @@ def q_stream_semantic_dedup(
     verdicts_path, _index = stream_semantic_dedup(
         spark, sf_dir, base_dir, n_state_partitions=n_state_partitions
     )
-    return spark.read.parquet(verdicts_path).select(
+    return read_flat(spark, verdicts_path).select(
         "vec_id", "cluster_id", "centroid_sim", "kept"
     )
 
@@ -624,7 +625,7 @@ def q_stream_media_dedup(
     pairs_path, _index = stream_media_dedup(
         spark, fixture, base_dir, n_state_partitions=n_state_partitions
     )
-    return spark.read.parquet(pairs_path).select(
+    return read_flat(spark, pairs_path).select(
         "id_a", "id_b", F.col("hamming_dist").cast("long").alias("hamming_dist")
     )
 
@@ -676,7 +677,7 @@ def q_stream_scored_ingest(
         tail_nll=_pipe.LM_TAIL_NLL,
         n_state_partitions=n_state_partitions,
     )
-    return spark.read.parquet(pairs_path).select(
+    return read_flat(spark, pairs_path).select(
         "id_a", "id_b", "jaccard_sim"
     )
 
@@ -702,7 +703,7 @@ def q_stream_entity_resolution(
         base_dir,
         n_state_partitions=n_state_partitions,
     )
-    return spark.read.parquet(asg_path).select(
+    return read_flat(spark, asg_path).select(
         "rec_id", "entity_id", "n_records"
     )
 
@@ -797,10 +798,10 @@ def q_stream_gated_ingest(
         [("min", "doc_id", 1), ("not_null", "text")],
         n_state_partitions=n_state_partitions,
     )
-    kept = spark.read.parquet(kept_path).select(
+    kept = read_flat(spark, kept_path).select(
         "doc_id", F.lit("kept").alias("verdict")
     )
-    quar = spark.read.parquet(quarantine_path).select(
+    quar = read_flat(spark, quarantine_path).select(
         "doc_id", F.lit("quarantined").alias("verdict")
     )
     return kept.unionByName(quar)
@@ -825,7 +826,7 @@ def q_stream_hypertable_rollup(
     partials_path = stream_hypertable_rollup(
         spark, sf_dir, base_dir, n_state_partitions=n_state_partitions
     )
-    partials = spark.read.parquet(partials_path)
+    partials = read_flat(spark, partials_path)
     hourly = partials.groupBy("bucket_ts").agg(
         F.sum("n_events").alias("n_events"),
         F.sum("total").alias("__total"),
@@ -852,7 +853,7 @@ def q_stream_ann_ingest(
     index_path, cents = stream_ann_ingest(
         spark, sf_dir, base_dir, n_state_partitions=n_state_partitions
     )
-    index = spark.read.parquet(index_path).withColumnRenamed(
+    index = read_flat(spark, index_path).withColumnRenamed(
         "cv", "embedding"
     )
     queries = (

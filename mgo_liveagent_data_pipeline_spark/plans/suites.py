@@ -1421,235 +1421,144 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts; production streams size ``n_state_partitions`` to their key
     cardinality / cluster as the member docstrings describe."""
     from concurrent.futures import ThreadPoolExecutor
+    from functools import reduce
 
     from pyspark import inheritable_thread_target
 
     from ..streaming.windows import state_partitions
 
-    members = (
-        ("tumbling", persistence.q_stream_tumbling_6h),
-        ("append", persistence.q_stream_append_6h),
-        ("upsert", persistence.q_stream_upsert_6h),
-        ("dedup", persistence.q_stream_dedup_6h),
-        ("merge_part", persistence.q_stream_merge_partitioned),
+    def pair(a: str, b: str):
+        return F.concat_ws("|", F.col(a).cast("string"), F.col(b).cast("string"))
+
+    # one spec per member: (tag, member, then its expression for each of
+    # the output columns below — a column name, a Column, or None for a
+    # typed null). Rows are unioned in six_h, session, ingest order.
+    out_cols = (
+        ("grp", "string"),
+        ("window_start", "timestamp"),
+        ("window_end", "timestamp"),
+        ("n_events", "long"),
+        ("total_value", "double"),
     )
-    # pool sized for EVERY submitted future (10 streaming singles + the
-    # members) so no streaming member queues behind the others —
-    # the fixed-cost fan-out overlap is the point of the pool
-    with state_partitions(spark, 1), ThreadPoolExecutor(len(members) + 10) as ex:
-
-        def submit(fn, *args, **kwargs):
-            # the member's jobs carry the caller's job group/description
-            return ex.submit(
-                inheritable_thread_target(spark)(fn), *args, **kwargs
-            )
-
-        join_fut = submit(
-            persistence.q_stream_join_30m, spark, sf_dir, None
+    six_h = [
+        (tag, fn, None, "window_start", None, "n_events", "total_value")
+        for tag, fn in (
+            ("tumbling", persistence.q_stream_tumbling_6h),
+            ("append", persistence.q_stream_append_6h),
+            ("upsert", persistence.q_stream_upsert_6h),
+            ("dedup", persistence.q_stream_dedup_6h),
+            ("merge_part", persistence.q_stream_merge_partitioned),
         )
+    ]
+    session = (
+        "session", persistence.q_stream_session_windows,
+        F.col("user_id").cast("string"), "session_start", "session_end",
+        "n_events", None,
+    )
+    ingest = [
+        (
+            "join", persistence.q_stream_join_30m,
+            F.col("user_id").cast("string"), None, None,
+            "n_pairs", "total_quote_value",
+        ),
         # incdedup: streaming incremental near-dup MERGE over the
         # documents corpus (batch N deduped vs batches 1..N−1)
-        incdedup_fut = submit(
-            persistence.q_stream_incremental_dedup, spark, sf_dir, None
-        )
+        (
+            "incdedup", persistence.q_stream_incremental_dedup,
+            pair("id_a", "id_b"), None, None, "id_b", "jaccard_sim",
+        ),
         # scored_ingest: the same ingestion loop with the quality + ppl
         # gates applied to each micro-batch BEFORE indexing
-        scored_fut = submit(
-            persistence.q_stream_scored_ingest, spark, sf_dir, None
-        )
+        (
+            "scored_ingest", persistence.q_stream_scored_ingest,
+            pair("id_a", "id_b"), None, None, "id_b", "jaccard_sim",
+        ),
         # incsem: streaming SemDeDup over the embeddings corpus — verdict
         # table maintained by monotone kept-flips; drained == batch
-        incsem_fut = submit(
-            persistence.q_stream_semantic_dedup, spark, sf_dir, None
-        )
+        (
+            "incsem", persistence.q_stream_semantic_dedup,
+            F.col("vec_id").cast("string"), None, None,
+            F.col("cluster_id").cast("long"),
+            # kept*10 + 6dp-rounded sim: exact in IEEE double on both engines
+            F.col("kept").cast("double") * 10 + F.col("centroid_sim"),
+        ),
         # incphash: streaming perceptual MEDIA dedup — decode → dHash →
         # delta-vs-corpus pairs against the stored fingerprint index
-        incphash_fut = submit(
-            persistence.q_stream_media_dedup, spark, sf_dir, None
-        )
+        (
+            "incphash", persistence.q_stream_media_dedup,
+            pair("id_a", "id_b"), None, None,
+            "id_b", F.col("hamming_dist").cast("double"),
+        ),
         # incrollup: continuous aggregate via replay-safe keyed partials
-        incrollup_fut = submit(
-            persistence.q_stream_hypertable_rollup, spark, sf_dir, None
-        )
+        (
+            "incrollup", persistence.q_stream_hypertable_rollup,
+            "level", "bucket_ts", None, "n_events", "total_value",
+        ),
         # incann: IVF index maintained by frozen-centroid assignment
         # MERGEs, queried through the stored posting lists
-        incann_fut = submit(
-            persistence.q_stream_ann_ingest, spark, sf_dir, None
-        )
+        (
+            "incann", persistence.q_stream_ann_ingest,
+            pair("query_id", "corpus_id"), None, None,
+            F.col("rank").cast("long"), "cosine_sim",
+        ),
         # increr: streaming entity resolution — each record batch
         # resolved delta-vs-corpus against the stored assignment;
         # drained table == full-batch resolve_entities
-        increr_fut = submit(
-            persistence.q_stream_entity_resolution, spark, sf_dir, None
-        )
+        (
+            "increr", persistence.q_stream_entity_resolution,
+            F.col("rec_id").cast("string"), None, None,
+            "entity_id", F.col("n_records").cast("double"),
+        ),
         # increridx: the same loop on the fully indexed state layout —
         # ptable record/assignment state + the secondary block index,
         # so per-batch scan I/O tracks the delta's neighborhood
-        increridx_fut = submit(
-            persistence.q_stream_er_indexed, spark, sf_dir, None
-        )
+        (
+            "increridx", persistence.q_stream_er_indexed,
+            F.col("rec_id").cast("string"), None, None,
+            "entity_id", F.col("n_records").cast("double"),
+        ),
         # gated: expectation-gated ingestion with a quarantine table —
         # a batch with any failing check never reaches the kept table
-        gated_fut = submit(
-            persistence.q_stream_gated_ingest, spark, sf_dir, None
-        )
+        (
+            "gated", persistence.q_stream_gated_ingest,
+            "verdict", None, None, "doc_id", None,
+        ),
         # incgold: the golden dimension maintained by streaming ER —
         # touched-entity golden MERGEs + the self-healing stale sweep
-        incgold_fut = submit(
-            persistence.q_stream_er_golden, spark, sf_dir, None
-        )
-        member_futs = [
-            submit(fn, spark, sf_dir, n_state_partitions=None)
-            for _tag, fn in members
-        ]
-        done = [f.result() for f in member_futs]
-        join_df = join_fut.result()
-        incdedup_df = incdedup_fut.result()
-        scored_df = scored_fut.result()
-        incsem_df = incsem_fut.result()
-        incphash_df = incphash_fut.result()
-        incrollup_df = incrollup_fut.result()
-        incann_df = incann_fut.result()
-        increr_df = increr_fut.result()
-        increridx_df = increridx_fut.result()
-        gated_df = gated_fut.result()
-        incgold_df = incgold_fut.result()
-    parts = [
-        df.select(
-            F.lit(tag).alias("mode"),
-            _null("string").alias("grp"),
-            "window_start",
-            _null("timestamp").alias("window_end"),
-            "n_events",
-            "total_value",
-        )
-        for (tag, _fn), df in zip(members, done)
-    ]
-    sess = persistence.q_stream_session_windows(spark, sf_dir).select(
-        F.lit("session").alias("mode"),
-        F.col("user_id").cast("string").alias("grp"),
-        F.col("session_start").alias("window_start"),
-        F.col("session_end").alias("window_end"),
-        "n_events",
-        _null("double").alias("total_value"),
-    )
-    join_part = join_df.select(
-        F.lit("join").alias("mode"),
-        F.col("user_id").cast("string").alias("grp"),
-        _null("timestamp").alias("window_start"),
-        _null("timestamp").alias("window_end"),
-        F.col("n_pairs").alias("n_events"),
-        F.col("total_quote_value").alias("total_value"),
-    )
-    incdedup_part = incdedup_df.select(
-        F.lit("incdedup").alias("mode"),
-        F.concat_ws(
-            "|", F.col("id_a").cast("string"), F.col("id_b").cast("string")
-        ).alias("grp"),
-        _null("timestamp").alias("window_start"),
-        _null("timestamp").alias("window_end"),
-        F.col("id_b").alias("n_events"),
-        F.col("jaccard_sim").alias("total_value"),
-    )
-    scored_part = scored_df.select(
-        F.lit("scored_ingest").alias("mode"),
-        F.concat_ws(
-            "|", F.col("id_a").cast("string"), F.col("id_b").cast("string")
-        ).alias("grp"),
-        _null("timestamp").alias("window_start"),
-        _null("timestamp").alias("window_end"),
-        F.col("id_b").alias("n_events"),
-        F.col("jaccard_sim").alias("total_value"),
-    )
-    incphash_part = incphash_df.select(
-        F.lit("incphash").alias("mode"),
-        F.concat_ws(
-            "|", F.col("id_a").cast("string"), F.col("id_b").cast("string")
-        ).alias("grp"),
-        _null("timestamp").alias("window_start"),
-        _null("timestamp").alias("window_end"),
-        F.col("id_b").alias("n_events"),
-        F.col("hamming_dist").cast("double").alias("total_value"),
-    )
-    incsem_part = incsem_df.select(
-        F.lit("incsem").alias("mode"),
-        F.col("vec_id").cast("string").alias("grp"),
-        _null("timestamp").alias("window_start"),
-        _null("timestamp").alias("window_end"),
-        F.col("cluster_id").cast("long").alias("n_events"),
-        # kept*10 + 6dp-rounded sim: exact in IEEE double on both engines
-        (F.col("kept").cast("double") * 10 + F.col("centroid_sim")).alias(
-            "total_value"
+        (
+            "incgold", persistence.q_stream_er_golden,
+            F.concat_ws("|", "name", "phone", "address"), None, None,
+            "entity_id", F.col("n_records").cast("double"),
         ),
-    )
-    incrollup_part = incrollup_df.select(
-        F.lit("incrollup").alias("mode"),
-        F.col("level").alias("grp"),
-        F.col("bucket_ts").alias("window_start"),
-        _null("timestamp").alias("window_end"),
-        "n_events",
-        "total_value",
-    )
-    incann_part = incann_df.select(
-        F.lit("incann").alias("mode"),
-        F.concat_ws(
-            "|",
-            F.col("query_id").cast("string"),
-            F.col("corpus_id").cast("string"),
-        ).alias("grp"),
-        _null("timestamp").alias("window_start"),
-        _null("timestamp").alias("window_end"),
-        F.col("rank").cast("long").alias("n_events"),
-        F.col("cosine_sim").alias("total_value"),
-    )
-    increr_part = increr_df.select(
-        F.lit("increr").alias("mode"),
-        F.col("rec_id").cast("string").alias("grp"),
-        _null("timestamp").alias("window_start"),
-        _null("timestamp").alias("window_end"),
-        F.col("entity_id").alias("n_events"),
-        F.col("n_records").cast("double").alias("total_value"),
-    )
-    increridx_part = increridx_df.select(
-        F.lit("increridx").alias("mode"),
-        F.col("rec_id").cast("string").alias("grp"),
-        _null("timestamp").alias("window_start"),
-        _null("timestamp").alias("window_end"),
-        F.col("entity_id").alias("n_events"),
-        F.col("n_records").cast("double").alias("total_value"),
-    )
-    gated_part = gated_df.select(
-        F.lit("gated").alias("mode"),
-        F.col("verdict").alias("grp"),
-        _null("timestamp").alias("window_start"),
-        _null("timestamp").alias("window_end"),
-        F.col("doc_id").alias("n_events"),
-        _null("double").alias("total_value"),
-    )
-    incgold_part = incgold_df.select(
-        F.lit("incgold").alias("mode"),
-        F.concat_ws("|", "name", "phone", "address").alias("grp"),
-        _null("timestamp").alias("window_start"),
-        _null("timestamp").alias("window_end"),
-        F.col("entity_id").alias("n_events"),
-        F.col("n_records").cast("double").alias("total_value"),
-    )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return (
-        out.unionByName(sess)
-        .unionByName(join_part)
-        .unionByName(incdedup_part)
-        .unionByName(scored_part)
-        .unionByName(incsem_part)
-        .unionByName(incphash_part)
-        .unionByName(incrollup_part)
-        .unionByName(incann_part)
-        .unionByName(increr_part)
-        .unionByName(increridx_part)
-        .unionByName(gated_part)
-        .unionByName(incgold_part)
+    ]
+    # 15 threads for the 16 streaming members: the last one submitted
+    # (merge_part) starts when the first member finishes
+    with state_partitions(spark, 1), ThreadPoolExecutor(15) as ex:
+        # the member's jobs carry the caller's job group/description
+        futs = {
+            tag: ex.submit(
+                inheritable_thread_target(spark)(fn), spark, sf_dir, None
+            )
+            for tag, fn, *_ in ingest + six_h
+        }
+        dfs = {tag: f.result() for tag, f in futs.items()}
+    # session windows are a batch query over the events table
+    dfs["session"] = session[1](spark, sf_dir)
+    return reduce(
+        DataFrame.unionByName,
+        (
+            dfs[tag].select(
+                F.lit(tag).alias("mode"),
+                *(
+                    (
+                        _null(t) if e is None
+                        else F.col(e) if isinstance(e, str) else e
+                    ).alias(c)
+                    for (c, t), e in zip(out_cols, exprs)
+                ),
+            )
+            for tag, _fn, *exprs in six_h + [session] + ingest
+        ),
     )
 
 

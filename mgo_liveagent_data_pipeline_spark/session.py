@@ -27,6 +27,15 @@ MANILA_TZ = "Asia/Manila"
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def driver_memory(physical_bytes: int) -> str:
+    """The default driver heap: 3/8 of the host's physical memory, capped
+    at 48g (3/8 of a 128 GB host) and at least 1g. A fixed 48g heap can
+    outgrow a small host: on a 16 GB host the JVM was lost mid-run, while
+    6g (3/8 of it) passed the same run."""
+    mb = min(48 * 1024, max(1024, physical_bytes * 3 // 8 // 2**20))
+    return f"{mb}m"
+
+
 def get_spark(
     app_name: str = "mgo_liveagent_data_pipeline_spark",
     master: str | None = None,
@@ -58,7 +67,13 @@ def get_spark(
         # 128 MB input splits: right-sized tasks at any SF.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or driver_memory(
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            ),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -5,11 +5,18 @@ reference's wall-clock scheduling approximates).
 
 The reference reconciles late/changed rows by re-extracting on
 ``date_changed`` and MERGE-upserting; the streaming equivalent is
-``withWatermark`` + windowed aggregation + ``foreachBatch`` upsert. Here
-the sink is a memory table driven by ``Trigger.AvailableNow`` so the result
-is a deterministic, batch-complete relation (oracle-checkable); swapping
-the memory sink for ``foreachBatch(lambda b, _: upsert(...))`` turns it
-into the production incremental pipeline with exactly-once parquet commits.
+``withWatermark`` + windowed aggregation + ``foreachBatch`` upsert.
+
+Every member runs on one micro-batch scaffold:
+
+* ``_drain`` runs a stream to completion under ``Trigger.AvailableNow``,
+  either into a memory table (the windowed and join members: the drained
+  relation is deterministic and batch-complete, so an oracle can check
+  it) or through ``foreachBatch`` (the ingestion members: keyed MERGEs
+  into parquet tables with exactly-once commits);
+* ``_sum_6h`` is the 6-hour window row every windowed member emits;
+* ``stage_doc_batches`` stages a keyed input as one file per micro-batch
+  and opens it as a file stream with the staged files' stored schema.
 """
 from __future__ import annotations
 
@@ -49,26 +56,79 @@ def state_partitions(spark: SparkSession, n: int | None):
         spark.conf.set(key, old)
 
 
-@contextmanager
-def _checkpoint(checkpoint_dir: str | None):
-    """Checkpoint dir for run-to-completion (AvailableNow) queries whose
-    sink cannot resume anyway (memory sink) or whose sink is idempotent
-    (MERGE upsert — reprocessing re-emits the same rows): the offset/commit
-    log has no durability value, so it goes on shared memory when available
-    and skips the per-batch fsync-to-disk cost (~0.13 s/query measured) —
-    and is REMOVED once the query terminates (a RAM-backed dir leaked per
-    query would accumulate across suite/bench runs). Production resumable
+def _drain(
+    spark: SparkSession,
+    stream: DataFrame,
+    n_state_partitions: int | None,
+    checkpoint_dir: str | None,
+    mode: str = "update",
+    foreach_batch=None,
+) -> DataFrame | None:
+    """Run ``stream`` to completion (``Trigger.AvailableNow``) in output
+    ``mode``: through ``foreach_batch(batch_df, batch_id)`` when given
+    (returns ``None``), else into a memory table under a unique query
+    name (returns that table). ``n_state_partitions`` scopes the state
+    store size to the run (``state_partitions``).
+
+    Without ``checkpoint_dir`` the query's sink either cannot resume
+    anyway (memory sink) or is idempotent (MERGE upsert — reprocessing
+    re-emits the same rows): the offset/commit log has no durability
+    value, so it goes on shared memory when available and skips the
+    per-batch fsync-to-disk cost (~0.13 s/query measured) — and is
+    REMOVED once the query terminates (a RAM-backed dir leaked per query
+    would accumulate across suite/bench runs). Production resumable
     streams pass an explicit durable ``checkpoint_dir``, which is left
     untouched."""
-    if checkpoint_dir is not None:
-        yield checkpoint_dir
-        return
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    d = tempfile.mkdtemp(prefix="mgo_ckpt_", dir=base)
+    writer = stream.writeStream.outputMode(mode)
+    name = None
+    if foreach_batch is not None:
+        writer = writer.foreachBatch(foreach_batch)
+    else:
+        name = f"mgo_stream_{os.getpid()}_{next(_MEMSINK_IDS)}"
+        writer = writer.format("memory").queryName(name)
+    ckpt = checkpoint_dir
+    if ckpt is None:
+        base = "/dev/shm" if os.path.isdir("/dev/shm") else None
+        ckpt = tempfile.mkdtemp(prefix="mgo_ckpt_", dir=base)
     try:
-        yield d
+        with state_partitions(spark, n_state_partitions):
+            writer.option("checkpointLocation", ckpt).trigger(
+                availableNow=True
+            ).start().awaitTermination()
     finally:
-        shutil.rmtree(d, ignore_errors=True)
+        if checkpoint_dir is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return None if name is None else spark.table(name)
+
+
+def _sum_6h(ev: DataFrame) -> DataFrame:
+    """The 6-hour window row: event count and decimal-exact value sum per
+    window. Window starts are epoch-aligned, so a drained result equals
+    the batch expression (functions.datetimes.tumbling_6h_bucket). The
+    caller applies its watermark (or dedup) first."""
+    return (
+        ev.groupBy(F.window("ts", "6 hours").alias("w"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.round(F.sum(F.col("value").cast(MONEY)), 2)
+            .cast("double")
+            .alias("total_value"),
+        )
+        .select(
+            F.col("w.start").alias("window_start"), "n_events", "total_value"
+        )
+    )
+
+
+def _write_one_file(df: DataFrame, dest: str) -> None:
+    """Write ``df`` as the single parquet file ``dest``: a one-partition
+    write to a hidden sibling, whose part file is then renamed into
+    place, so a directory listing never shows a partial file."""
+    tmp = os.path.join(os.path.dirname(dest), f".{os.path.basename(dest)}.tmp")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet"))
+    os.replace(os.path.join(tmp, part), dest)
+    shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _as_stream_dir(path: str) -> str:
@@ -132,35 +192,11 @@ def stream_tumbling_6h(
     with AvailableNow. Window starts are epoch-aligned, so results equal
     the batch expression (functions.datetimes.tumbling_6h_bucket) —
     verified by sharing the f8 oracle shape."""
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    ev = _event_stream(spark, path)
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "6 hours").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(MONEY)), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"), "n_events", "total_value"
-        )
+    ev = _event_stream(spark, os.path.join(sf_dir, f"{table}.parquet"))
+    return _drain(
+        spark, _sum_6h(ev.withWatermark("ts", "1 hour")),
+        n_state_partitions, checkpoint_dir, "complete",
     )
-    name = f"mgo_stream_6h_{os.getpid()}_{next(_MEMSINK_IDS)}"
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def stream_append_6h(
@@ -180,35 +216,11 @@ def stream_append_6h(
     state for closed windows is dropped eagerly and the sink receives
     inserts only.
     """
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    ev = _event_stream(spark, path)
-    agg = (
-        ev.withWatermark("ts", delay)
-        .groupBy(F.window("ts", "6 hours").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(MONEY)), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"), "n_events", "total_value"
-        )
+    ev = _event_stream(spark, os.path.join(sf_dir, f"{table}.parquet"))
+    return _drain(
+        spark, _sum_6h(ev.withWatermark("ts", delay)),
+        n_state_partitions, checkpoint_dir, "append",
     )
-    name = f"mgo_stream_append_{os.getpid()}_{next(_MEMSINK_IDS)}"
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def stream_upsert_6h(
@@ -229,36 +241,14 @@ def stream_upsert_6h(
     """
     from ..sinks.writers import table_path, upsert
 
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    ev = _event_stream(spark, path)
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "6 hours").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(MONEY)), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"), "n_events", "total_value"
-        )
+    ev = _event_stream(spark, os.path.join(sf_dir, f"{table}.parquet"))
+    _drain(
+        spark, _sum_6h(ev.withWatermark("ts", "1 hour")),
+        n_state_partitions, checkpoint_dir,
+        foreach_batch=lambda batch_df, _: upsert(
+            spark, batch_df, base_dir, sink_name, "window_start"
+        ),
     )
-
-    def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        upsert(spark, batch_df, base_dir, sink_name, "window_start")
-
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return table_path(base_dir, sink_name)
 
 
@@ -285,75 +275,50 @@ def stream_merge_partitioned(
     Returns the ptable directory (read via ``read_partitioned``)."""
     from ..sinks.writers import _ptable_dir, partitioned_upsert
 
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    ev = _event_stream(spark, path)
-    agg = (
-        ev.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "6 hours").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(MONEY)), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"), "n_events", "total_value"
-        )
-    )
-
-    def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        partitioned_upsert(
+    ev = _event_stream(spark, os.path.join(sf_dir, f"{table}.parquet"))
+    _drain(
+        spark, _sum_6h(ev.withWatermark("ts", "1 hour")),
+        n_state_partitions, checkpoint_dir,
+        foreach_batch=lambda batch_df, _: partitioned_upsert(
             spark, batch_df, base_dir, sink_name, "window_start",
             num_buckets=num_buckets,
-        )
-
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            agg.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        ),
+    )
     return _ptable_dir(base_dir, sink_name)
 
 
 def stage_doc_batches(
-    spark: SparkSession, sf_dir: str, base_dir: str, n_batches: int = 3,
-    table: str = "documents",
-    key_col: str = "doc_id",
-    cols: tuple[str, ...] = ("doc_id", "text"),
-    src_df: DataFrame | None = None,
-) -> str:
-    """Stage a table as ``n_batches`` single parquet files so
-    AvailableNow + maxFilesPerTrigger=1 delivers a deterministic sequence
-    of micro-batches from one immutable source (splits by key mod, so
-    the staging is a pure function of the corpus). Pass ``src_df`` when
-    the table needs a normalized read first (events' nanos timestamps go
-    through sources.tables.load_table, not a raw parquet read)."""
-    src = (
-        src_df
-        if src_df is not None
-        else spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
-    ).select(*cols)
-    stage = os.path.join(base_dir, "ingest")
+    spark: SparkSession,
+    src: DataFrame,
+    base_dir: str,
+    n_batches: int,
+    key_col: str,
+    name: str = "ingest",
+) -> tuple[DataFrame, str]:
+    """Stage ``src`` under ``base_dir/name`` as ``n_batches`` single
+    parquet files so AvailableNow + maxFilesPerTrigger=1 delivers a
+    deterministic sequence of micro-batches from one immutable source
+    (splits by ``key_col`` mod, so the staging is a pure function of the
+    corpus), and open that file stream. Its schema is the one Spark
+    stored in the staged files' footers (``writers.read_flat``): the
+    schema inference would return, without inference's Spark job.
+    Returns (stream, stage dir)."""
+    from ..sinks.writers import read_flat
+
+    stage = os.path.join(base_dir, name)
     os.makedirs(stage, exist_ok=True)
     for b in range(n_batches):
-        tmp = os.path.join(base_dir, f"__stage_{b}")
-        src.where(F.col(key_col) % n_batches == b).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet")
+        _write_one_file(
+            src.where(F.col(key_col) % n_batches == b),
+            os.path.join(stage, f"batch_{b:03d}.parquet"),
         )
-        os.replace(
-            os.path.join(tmp, part), os.path.join(stage, f"batch_{b:03d}.parquet")
-        )
-        shutil.rmtree(tmp, ignore_errors=True)
-    return stage
+    schema = read_flat(spark, stage).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stage)
+    )
+    return stream, stage
 
 
 def stream_incremental_dedup(
@@ -402,14 +367,12 @@ def stream_incremental_dedup(
 
     Returns (pairs_path, corpus_path)."""
     from ..operators.dedup import incremental_minhash_dedup
-    from ..sinks.writers import ensure_table, table_path, upsert
+    from ..sinks.writers import ensure_table, read_flat, table_path, upsert
+    from ..sources.tables import load_table
 
-    stage = stage_doc_batches(spark, sf_dir, base_dir, n_batches, table)
-    src_schema = spark.read.parquet(stage).schema
-    docs_stream = (
-        spark.readStream.schema(src_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    docs_stream, _stage = stage_doc_batches(
+        spark, load_table(spark, sf_dir, table).select("doc_id", "text"),
+        base_dir, n_batches, "doc_id",
     )
     corpus_path = ensure_table(
         spark,
@@ -427,7 +390,7 @@ def stream_incremental_dedup(
         delta = batch_df.select("doc_id", "text")
         if gate_fn is not None:
             delta = gate_fn(delta)
-        corpus = spark.read.parquet(corpus_path)
+        corpus = read_flat(spark, corpus_path)
         pairs = incremental_minhash_dedup(corpus, delta, "text", "doc_id")
         out = pairs.select(
             F.concat_ws(
@@ -442,17 +405,10 @@ def stream_incremental_dedup(
         upsert(spark, out, base_dir, pairs_name, "pk")
         upsert(spark, delta, base_dir, corpus_name, "doc_id")
 
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            docs_stream.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark, docs_stream, n_state_partitions, checkpoint_dir,
+        foreach_batch=merge_batch,
+    )
     return table_path(base_dir, pairs_name), corpus_path
 
 
@@ -555,18 +511,13 @@ def stream_semantic_dedup(
         incremental_semantic_dedup,
         semantic_assign,
     )
-    from ..sinks.writers import ensure_table, table_path, upsert
+    from ..sinks.writers import ensure_table, read_flat, table_path, upsert
+    from ..sources.tables import load_table
 
-    stage = stage_doc_batches(
-        spark, sf_dir, base_dir, n_batches, table,
-        key_col="vec_id", cols=("vec_id", "embedding", "label"),
-        src_df=src_df,
-    )
-    src_schema = spark.read.parquet(stage).schema
-    emb_stream = (
-        spark.readStream.schema(src_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    src = src_df if src_df is not None else load_table(spark, sf_dir, table)
+    emb_stream, stage = stage_doc_batches(
+        spark, src.select("vec_id", "embedding", "label"),
+        base_dir, n_batches, "vec_id",
     )
     # frozen centroid artifact: the full staged corpus's deterministic
     # pick by default; production ingest loops pass the stored
@@ -577,7 +528,7 @@ def stream_semantic_dedup(
     cents = (
         centroids
         if centroids is not None
-        else ivf_centroids(spark.read.parquet(stage))
+        else ivf_centroids(read_flat(spark, stage))
     )
     if "cent_n" not in cents.columns:
         cents = cents.withColumn("cent_n", norm2(F.col("centroid")))
@@ -605,12 +556,12 @@ def stream_semantic_dedup(
     if stream_cluster_cap is not None:
         ensure_table(
             spark, base_dir, refused_name,
-            local_table(spark, [], src_schema),
+            local_table(spark, [], emb_stream.schema),
         )
 
     def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
         delta = batch_df.select("vec_id", "embedding", "label")
-        index = spark.read.parquet(index_path)
+        index = read_flat(spark, index_path)
         if stream_cluster_cap is not None:
             # admission control: clusters already at the cap refuse NEW
             # members. The standing count excludes the delta's own keys
@@ -658,7 +609,7 @@ def stream_semantic_dedup(
         # aggregate over the merged index's (key, cluster_id) columns,
         # replay-invariant because the index MERGE is idempotent
         hot = (
-            spark.read.parquet(index_path)
+            read_flat(spark, index_path)
             .groupBy("cluster_id")
             .agg(F.count(F.lit(1)).alias("n"))
             .orderBy(F.desc("n"), F.asc("cluster_id"))
@@ -671,17 +622,10 @@ def stream_semantic_dedup(
             )
 
     STREAM_SEM_LAST["hot_clusters"] = []
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            emb_stream.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark, emb_stream, n_state_partitions, checkpoint_dir,
+        foreach_batch=merge_batch,
+    )
     cents.unpersist()
     return table_path(base_dir, verdicts_name), index_path
 
@@ -788,28 +732,10 @@ def stream_media_dedup(
     Returns (pairs_path, index_path)."""
     from ..operators.dedup import incremental_hamming_pairs
     from ..operators.multimodal import real_image_dhash
-    from ..sinks.writers import ensure_table, table_path, upsert
+    from ..sinks.writers import ensure_table, read_flat, table_path, upsert
 
-    stage = os.path.join(base_dir, "media_ingest")
-    os.makedirs(stage, exist_ok=True)
-    for b in range(n_batches):
-        tmp = os.path.join(base_dir, f"__mstage_{b}")
-        media_df.where(
-            F.col("doc_id") % n_batches == b
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet")
-        )
-        os.replace(
-            os.path.join(tmp, part),
-            os.path.join(stage, f"batch_{b:03d}.parquet"),
-        )
-        shutil.rmtree(tmp, ignore_errors=True)
-    src_schema = spark.read.parquet(stage).schema
-    media_stream = (
-        spark.readStream.schema(src_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    media_stream, _stage = stage_doc_batches(
+        spark, media_df, base_dir, n_batches, "doc_id", "media_ingest"
     )
     index_path = ensure_table(
         spark,
@@ -834,7 +760,7 @@ def stream_media_dedup(
         delta_fps = real_image_dhash(batch_df).select(
             "key", F.col("dhash").alias("fp")
         )
-        index = spark.read.parquet(index_path)
+        index = read_flat(spark, index_path)
         pairs = incremental_hamming_pairs(
             index, delta_fps, radius=radius, bands=bands
         )
@@ -851,17 +777,10 @@ def stream_media_dedup(
         upsert(spark, out, base_dir, pairs_name, "pk")
         upsert(spark, delta_fps, base_dir, index_name, "key")
 
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            media_stream.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark, media_stream, n_state_partitions, checkpoint_dir,
+        foreach_batch=merge_batch,
+    )
     return table_path(base_dir, pairs_name), index_path
 
 
@@ -905,13 +824,8 @@ def _er_index_tail_write(
     tdir = _er_index_tail_dir(base_dir, name)
     os.makedirs(tdir, exist_ok=True)
     dest = os.path.join(tdir, f"t{token:09d}.parquet")
-    if os.path.exists(dest):
-        return
-    tmp = os.path.join(tdir, f".t{token:09d}.tmp")
-    rows.coalesce(1).write.mode("overwrite").parquet(tmp)
-    part = next(f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet"))
-    os.replace(os.path.join(tmp, part), dest)
-    shutil.rmtree(tmp, ignore_errors=True)
+    if not os.path.exists(dest):
+        _write_one_file(rows, dest)
 
 
 def read_er_block_index(
@@ -1193,6 +1107,7 @@ def stream_entity_resolution(
         ensure_table,
         partitioned_delete_keys,
         partitioned_upsert,
+        read_flat,
         read_partitioned,
         read_partitioned_for_keys,
         table_path,
@@ -1218,27 +1133,10 @@ def stream_entity_resolution(
     def _idx_rows(df: DataFrame) -> DataFrame:
         return _er_block_memberships(df, bcols)
 
-    stage = os.path.join(base_dir, "er_ingest")
-    os.makedirs(stage, exist_ok=True)
-    for b in range(n_batches):
-        tmp = os.path.join(base_dir, f"__erstage_{b}")
-        records_df.where(
-            F.col("rec_id") % n_batches == b
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet")
-        )
-        os.replace(
-            os.path.join(tmp, part),
-            os.path.join(stage, f"batch_{b:03d}.parquet"),
-        )
-        shutil.rmtree(tmp, ignore_errors=True)
-    src_schema = spark.read.parquet(stage).schema
-    rec_stream = (
-        spark.readStream.schema(src_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    rec_stream, _stage = stage_doc_batches(
+        spark, records_df, base_dir, n_batches, "rec_id", "er_ingest"
     )
+    src_schema = rec_stream.schema
     asg_schema = "rec_id long, entity_id long, n_records long"
     # mutable state-layout mode: {"buckets": None} = flat tables,
     # {"buckets": N} = bucketed ptables. Static unless
@@ -1308,8 +1206,8 @@ def stream_entity_resolution(
             return
         if _flat_row_count(_flat_rec) < state_auto_threshold:
             return
-        recs = spark.read.parquet(_flat_rec)
-        asgd = spark.read.parquet(_flat_asg)
+        recs = read_flat(spark, _flat_rec)
+        asgd = read_flat(spark, _flat_asg)
         partitioned_upsert(
             spark, recs, base_dir, rec_name, "rec_id",
             num_buckets=auto_buckets,
@@ -1390,8 +1288,8 @@ def stream_entity_resolution(
     def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
         _maybe_migrate_state()
         if mode["buckets"] is None:
-            corpus = spark.read.parquet(_flat_rec)
-            asg = spark.read.parquet(_flat_asg)
+            corpus = read_flat(spark, _flat_rec)
+            asg = read_flat(spark, _flat_asg)
             corpus_keys = corpus.select("rec_id")
         else:
             # batch boundary: settle a finished background fold (delete
@@ -1524,7 +1422,7 @@ def stream_entity_resolution(
                 # — a pure function of current state, removes any row a
                 # crash-replay window leaked past the delta sweep
                 live_src = (
-                    spark.read.parquet(_flat_asg)
+                    read_flat(spark, _flat_asg)
                     if mode["buckets"] is None
                     else read_partitioned(spark, base_dir, asg_name)
                 )
@@ -1580,17 +1478,10 @@ def stream_entity_resolution(
     # next, and the stream's state must be deterministic at return. A
     # fold error pending behind a stream error is chained onto it.
     try:
-        with state_partitions(spark, n_state_partitions), _checkpoint(
-            checkpoint_dir
-        ) as ckpt:
-            q = (
-                rec_stream.writeStream.outputMode("update")
-                .foreachBatch(merge_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        _drain(
+            spark, rec_stream, n_state_partitions, checkpoint_dir,
+            foreach_batch=merge_batch,
+        )
     except BaseException as stream_err:
         try:
             _reap_compaction(wait=True)
@@ -1653,31 +1544,13 @@ def stream_gated_ingest(
         ensure_partitioned,
         ensure_table,
         partitioned_upsert,
-        table_path,
         upsert,
     )
 
-    stage = os.path.join(base_dir, "gated_ingest")
-    os.makedirs(stage, exist_ok=True)
-    for b in range(n_batches):
-        tmp = os.path.join(base_dir, f"__gstage_{b}")
-        docs_df.where(
-            F.col(key_col) % n_batches == b
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(
-            f for f in sorted(os.listdir(tmp)) if f.endswith(".parquet")
-        )
-        os.replace(
-            os.path.join(tmp, part),
-            os.path.join(stage, f"batch_{b:03d}.parquet"),
-        )
-        shutil.rmtree(tmp, ignore_errors=True)
-    src_schema = spark.read.parquet(stage).schema
-    docs_stream = (
-        spark.readStream.schema(src_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    docs_stream, _stage = stage_doc_batches(
+        spark, docs_df, base_dir, n_batches, key_col, "gated_ingest"
     )
+    src_schema = docs_stream.schema
     if num_buckets is None:
         kept_path = ensure_table(
             spark, base_dir, kept_name, local_table(spark, [], src_schema)
@@ -1715,17 +1588,10 @@ def stream_gated_ingest(
                 num_buckets=num_buckets,
             )
 
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            docs_stream.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark, docs_stream, n_state_partitions, checkpoint_dir,
+        foreach_batch=merge_batch,
+    )
     return kept_path, quarantine_path
 
 
@@ -1765,16 +1631,10 @@ def stream_hypertable_rollup(
     from ..sinks.writers import ensure_table, table_path, upsert
     from ..sources.tables import load_table
 
-    src = load_table(spark, sf_dir, table).select("event_id", "ts", "value")
-    stage = stage_doc_batches(
-        spark, sf_dir, base_dir, n_batches, table,
-        key_col="event_id", cols=("event_id", "ts", "value"), src_df=src,
-    )
-    schema = spark.read.parquet(stage).schema
-    ev_stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    ev_stream, _stage = stage_doc_batches(
+        spark,
+        load_table(spark, sf_dir, table).select("event_id", "ts", "value"),
+        base_dir, n_batches, "event_id",
     )
     partials_path = ensure_table(
         spark,
@@ -1812,17 +1672,10 @@ def stream_hypertable_rollup(
         )
         upsert(spark, part, base_dir, partials_name, "pk")
 
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            ev_stream.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark, ev_stream, n_state_partitions, checkpoint_dir,
+        foreach_batch=merge_batch,
+    )
     return table_path(base_dir, partials_name)
 
 
@@ -1854,22 +1707,18 @@ def stream_ann_ingest(
 
     Returns (index_path, centroids)."""
     from ..operators.annsearch import assign_nearest, ivf_centroids
-    from ..sinks.writers import ensure_table, table_path, upsert
+    from ..sinks.writers import ensure_table, read_flat, table_path, upsert
+    from ..sources.tables import load_table
 
-    stage = stage_doc_batches(
-        spark, sf_dir, base_dir, n_batches, table,
-        key_col="vec_id", cols=("vec_id", "embedding", "label"),
-    )
-    schema = spark.read.parquet(stage).schema
-    emb_stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+    emb_stream, stage = stage_doc_batches(
+        spark,
+        load_table(spark, sf_dir, table).select("vec_id", "embedding", "label"),
+        base_dir, n_batches, "vec_id",
     )
     cents = (
         centroids
         if centroids is not None
-        else ivf_centroids(spark.read.parquet(stage))
+        else ivf_centroids(read_flat(spark, stage))
     )
     cents.persist().count()
     index_path = ensure_table(
@@ -1890,17 +1739,10 @@ def stream_ann_ingest(
         )
         upsert(spark, asg, base_dir, index_name, "vec_id")
 
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            emb_stream.writeStream.outputMode("update")
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(
+        spark, emb_stream, n_state_partitions, checkpoint_dir,
+        foreach_batch=merge_batch,
+    )
     return table_path(base_dir, index_name), cents
 
 
@@ -1929,32 +1771,9 @@ def stream_dedup_6h(
     deduped = ev.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    agg = (
-        deduped.groupBy(F.window("ts", "6 hours").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast(MONEY)), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"), "n_events", "total_value"
-        )
+    return _drain(
+        spark, _sum_6h(deduped), n_state_partitions, checkpoint_dir, "complete"
     )
-    name = f"mgo_stream_dedup_{os.getpid()}_{next(_MEMSINK_IDS)}"
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def session_windows(
@@ -2020,21 +1839,8 @@ def stream_join_30m(
         & (F.col("q_ts") <= F.col("ts")),
         "inner",
     ).select("user_id", "value", "q_value")
-    name = f"mgo_stream_join_{os.getpid()}_{next(_MEMSINK_IDS)}"
-    with state_partitions(spark, n_state_partitions), _checkpoint(
-        checkpoint_dir
-    ) as ckpt:
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(name)
+        _drain(spark, joined, n_state_partitions, checkpoint_dir, "append")
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),

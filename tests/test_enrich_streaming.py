@@ -116,6 +116,40 @@ def test_u1_rating_coercion_edges(spark):
         assert out[uid]["tokens"] == 10
 
 
+def test_u1_non_string_field_or_token_count_is_a_fallback_row(spark):
+    """A non-string value in a string field ("car": 2019, a list
+    summary) or a non-integer token count fails its record into the
+    fallback row instead of killing the task, and the good record is
+    still analysed."""
+    import json as _json
+
+    cases = {
+        1: ({"summary": "ok", "car": "sedan"}, 7),
+        2: ({"summary": "ok", "car": 2019}, 7),
+        3: ({"summary": ["a", "b"]}, 7),
+        4: ({"summary": "ok"}, "n/a"),
+    }
+
+    class OddGateway:
+        model = "odd"
+
+        def __call__(self, prompt):
+            uid = int(prompt.rsplit(": ", 1)[-1].split("#")[0])
+            payload, tokens = cases[uid]
+            return _json.dumps(payload), tokens, self.model
+
+    rows = [(i, dt.datetime(2024, 1, 1), i, str(i)) for i in cases]
+    df = spark.createDataFrame(rows, ["event_id", "ts", "user_id", "event_type"])
+    out = {
+        r["user_id"]: r
+        for r in analyze_conversations(df, OddGateway()).collect()
+    }
+    assert (out[1]["summary"], out[1]["car"], out[1]["tokens"]) == ("ok", "sedan", 7)
+    for uid in (2, 3, 4):
+        assert out[uid]["summary"] == "ANALYSIS_FAILED", uid
+        assert (out[uid]["car"], out[uid]["tokens"]) == (None, 0)
+
+
 def test_session_windows_gap_split(spark):
     out = session_windows(events_df(spark), "ts", "user_id", "30 minutes")
     rows = sorted(

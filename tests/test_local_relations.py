@@ -215,3 +215,61 @@ def test_every_package_definition_is_referenced():
                 elif isinstance(node, ast.alias):
                     used.add(node.name.rsplit(".", 1)[-1])
     assert [f"{loc} {name}" for name, loc in defined if name not in used] == []
+
+
+def _streaming_scaffold_offenders(path: str) -> list[str]:
+    """Sites in ``path`` (streaming/windows.py) that rebuild a piece of
+    the one micro-batch scaffold outside the helper that owns it."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    spans = {
+        node.name: range(node.lineno, node.end_lineno + 1)
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef)
+    }
+    writer = {"writeStream", "trigger", "awaitTermination"}
+    hits = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute):
+            # a writer's .start() sits on a chain through .writeStream or
+            # .trigger(); a thread's t.start() does not
+            starts_writer = node.attr == "start" and any(
+                isinstance(n, ast.Attribute) and n.attr in writer
+                for n in ast.walk(node.value)
+            )
+            if (node.attr in writer or starts_writer) and (
+                node.lineno not in spans["_drain"]
+            ):
+                hits.append(f"{node.lineno} .{node.attr} outside _drain")
+            if node.attr == "window" and node.lineno not in spans["_sum_6h"]:
+                hits.append(f"{node.lineno} F.window outside _sum_6h")
+        if (
+            isinstance(node, ast.Constant)
+            and node.value == "maxFilesPerTrigger"
+            and node.lineno not in spans["stage_doc_batches"]
+        ):
+            hits.append(f"{node.lineno} file stream outside stage_doc_batches")
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "read"
+        ):
+            multi_path = bool(node.args) and all(
+                isinstance(a, ast.Starred) for a in node.args
+            )
+            if not multi_path and node.lineno not in spans["_event_stream"]:
+                hits.append(f"{node.lineno} inferring read.parquet")
+    return hits
+
+
+def test_streaming_members_share_one_scaffold():
+    """Every streaming member runs to completion through ``_drain``, sums
+    its 6-hour windows through ``_sum_6h`` and stages its micro-batches
+    through ``stage_doc_batches``; tables it wrote are read with
+    ``read_flat``. Schema inference (``spark.read.parquet``) is left to
+    the testdata source read in ``_event_stream`` and the block index's
+    multi-path tail reads."""
+    path = os.path.join(PKG, "streaming", "windows.py")
+    assert _streaming_scaffold_offenders(path) == []

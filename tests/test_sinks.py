@@ -125,6 +125,40 @@ def test_flat_reads_take_the_stored_schema_without_a_job(spark, tmp_path):
     assert got.collect() == inferred.collect()
 
 
+def test_streamed_tables_read_with_their_stored_schema(spark, tmp_path):
+    """Staging three micro-batches submits the three writes and no
+    inference job: the file stream opens with the staged files' stored
+    schema. A staged member's input and the table its batches MERGE
+    into read back through ``read_flat`` with the schema inference
+    gives, and no job."""
+    from mgo_liveagent_data_pipeline_spark.streaming.windows import (
+        stage_doc_batches,
+        stream_gated_ingest,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"text {i}") for i in range(6)], "doc_id long, text string"
+    )
+    (stream, stage), jobs = _jobs_in(
+        spark,
+        "stage_batches",
+        lambda: stage_doc_batches(spark, docs, str(tmp_path / "a"), 3, "doc_id"),
+    )
+    assert jobs == 3
+    assert stream.schema == spark.read.parquet(stage).schema
+    base = str(tmp_path / "b")
+    kept, _quarantine = stream_gated_ingest(
+        spark, docs, base, [("not_null", "text")], n_state_partitions=1
+    )
+    for path in (os.path.join(base, "gated_ingest"), kept):
+        got, jobs = _jobs_in(
+            spark, f"read_{path}", lambda p=path: read_flat(spark, p)
+        )
+        assert jobs == 0
+        assert got.schema == spark.read.parquet(path).schema
+    assert sorted(read_flat(spark, kept).collect()) == sorted(docs.collect())
+
+
 def test_flat_read_without_spark_footer_falls_back_to_inference(spark, tmp_path):
     """A table another engine wrote carries no Spark schema key in its
     footers: the reader infers, like ``spark.read.parquet``."""
