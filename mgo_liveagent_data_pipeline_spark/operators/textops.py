@@ -5,6 +5,8 @@ at parquet-scan speed on a 100 TB corpus.
 """
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -567,6 +569,163 @@ def _clean_tokens(text_col: str) -> Column:
     )
 
 
+class BigramLM(NamedTuple):
+    """A hashed bigram LM built by ``lm_reference_model``: per-bigram
+    milli-nat costs ``model`` (__h1, __h2, __m), seen-context
+    unseen-continuation costs ``ctx_unseen`` (__h1, __mu), and the bucket
+    count both were hashed into."""
+
+    model: DataFrame
+    ctx_unseen: DataFrame
+    n_buckets: int
+
+
+def _hashed_bigrams(
+    frame: DataFrame, n_buckets: int, text_col: str, key_col: str
+) -> DataFrame:
+    """(key, __h1, __h2) per token bigram, tokens hashed into ``n_buckets``
+    via first-8-hex-of-md5 (stable across engines)."""
+
+    def bucket(c: Column) -> Column:
+        return (
+            F.conv(F.md5(c).substr(1, 8), 16, 10).cast("long")
+            % F.lit(n_buckets)
+        )
+
+    # tokenize into a REAL column first: element_at inside a
+    # transform lambda re-evaluates captured subtrees per element
+    # (the trap language_id documents), so indexing the split
+    # expression directly would re-tokenize O(T) times per doc
+    base = frame.select(
+        F.col(key_col), _clean_tokens(text_col).alias("__tk")
+    )
+    tk = F.col("__tk")
+    n = F.size(tk)
+    pairs = F.when(
+        n >= 2,
+        F.transform(
+            F.sequence(F.lit(1), n - 1),
+            lambda i: F.struct(
+                F.element_at(tk, i).alias("w1"),
+                F.element_at(tk, i + 1).alias("w2"),
+            ),
+        ),
+    ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
+    return base.select(
+        F.col(key_col), F.explode_outer(pairs).alias("__bg")
+    ).select(
+        key_col,
+        bucket(F.col("__bg.w1")).alias("__h1"),
+        bucket(F.col("__bg.w2")).alias("__h2"),
+    )
+
+
+def lm_reference_model(
+    ref_df: DataFrame,
+    n_buckets: int = 2048,
+    text_col: str = "text",
+    key_col: str = "doc_id",
+) -> BigramLM:
+    """The model half of ``lm_perplexity_score``: the add-one-smoothed
+    hashed bigram LM of the reference corpus, lazy. Build it once and
+    score any number of frames against it with ``lm_score`` (a stream
+    scores every micro-batch against one model)."""
+    from .dedup import _scoped_persist
+
+    # consumed twice (model rows + context totals) — persist the tiny
+    # ≤min(|ref bigrams|, V²)-row aggregate so the reference corpus is
+    # tokenized once (released via dedup.release_intermediates)
+    rb = _scoped_persist(
+        _hashed_bigrams(ref_df, n_buckets, text_col, key_col)
+        .where(F.col("__h1").isNotNull())
+        .groupBy("__h1", "__h2")
+        .agg(F.count(F.lit(1)).alias("__b"))
+    )
+    ctx = rb.groupBy("__h1").agg(F.sum("__b").alias("__u"))
+    model = rb.join(ctx, "__h1").select(
+        "__h1",
+        "__h2",
+        F.round(
+            F.lit(-1000.0)
+            * F.log(
+                (F.col("__b") + 1).cast("double")
+                / (F.col("__u") + F.lit(n_buckets)).cast("double")
+            ),
+            0,
+        )
+        .cast("long")
+        .alias("__m"),
+    )
+    # seen context, unseen continuation: p = 1 / (U + V)
+    ctx_unseen = ctx.select(
+        "__h1",
+        F.round(
+            F.lit(-1000.0)
+            * F.log(
+                F.lit(1.0) / (F.col("__u") + F.lit(n_buckets)).cast("double")
+            ),
+            0,
+        )
+        .cast("long")
+        .alias("__mu"),
+    )
+    return BigramLM(model, ctx_unseen, n_buckets)
+
+
+def lm_score(
+    df: DataFrame,
+    lm: BigramLM,
+    text_col: str = "text",
+    key_col: str = "doc_id",
+    head_nll: float = 6.0,
+    tail_nll: float = 7.0,
+) -> DataFrame:
+    """The scoring half of ``lm_perplexity_score``: ``df`` scored and
+    bucketed against a model built by ``lm_reference_model``."""
+    if head_nll > tail_nll:
+        raise ValueError(
+            f"head_nll ({head_nll}) must be <= tail_nll ({tail_nll}): "
+            "the head-first bucket CASE would otherwise label "
+            "(tail_nll, head_nll] docs 'head' and pass them through a "
+            "!= 'tail' gate"
+        )
+    # unseen context: p = 1 / V — same round(·ln) pipeline as the model
+    # rows so both engines quantize the constant identically
+    oov = F.round(
+        F.lit(1000.0) * F.log(F.lit(float(lm.n_buckets))), 0
+    ).cast("long")
+    scored = (
+        _hashed_bigrams(df, lm.n_buckets, text_col, key_col)
+        .join(F.broadcast(lm.model), ["__h1", "__h2"], "left")
+        .join(F.broadcast(lm.ctx_unseen), ["__h1"], "left")
+        .groupBy(key_col)
+        .agg(
+            F.count("__h1").alias("n_bigrams"),
+            F.sum(
+                F.when(
+                    F.col("__h1").isNotNull(),
+                    F.coalesce(F.col("__m"), F.col("__mu"), oov),
+                )
+            ).alias("__milli"),
+        )
+    )
+    avg_nll = F.when(
+        F.col("n_bigrams") > 0,
+        F.col("__milli").cast("double")
+        / (F.col("n_bigrams") * 1000).cast("double"),
+    )
+    return scored.select(
+        key_col,
+        F.col("n_bigrams").cast("long"),
+        avg_nll.alias("avg_nll"),
+        F.when(avg_nll.isNull(), F.lit("unscored"))
+        .when(avg_nll < F.lit(float(head_nll)), F.lit("head"))
+        .when(avg_nll > F.lit(float(tail_nll)), F.lit("tail"))
+        .otherwise(F.lit("middle"))
+        .alias("ppl_bucket"),
+    )
+
+
 def lm_perplexity_score(
     df: DataFrame,
     ref_df: DataFrame,
@@ -620,120 +779,13 @@ def lm_perplexity_score(
     (key, count, milli-sum) row per doc per partition before the only
     shuffle — document text never shuffles.
     """
-    if head_nll > tail_nll:
-        raise ValueError(
-            f"head_nll ({head_nll}) must be <= tail_nll ({tail_nll}): "
-            "the head-first bucket CASE would otherwise label "
-            "(tail_nll, head_nll] docs 'head' and pass them through a "
-            "!= 'tail' gate"
-        )
-    v = float(n_buckets)
-
-    def bucket(c: Column) -> Column:
-        return (
-            F.conv(F.md5(c).substr(1, 8), 16, 10).cast("long")
-            % F.lit(n_buckets)
-        )
-
-    def bigrams(frame: DataFrame) -> DataFrame:
-        # tokenize into a REAL column first: element_at inside a
-        # transform lambda re-evaluates captured subtrees per element
-        # (the trap language_id documents), so indexing the split
-        # expression directly would re-tokenize O(T) times per doc
-        base = frame.select(
-            F.col(key_col), _clean_tokens(text_col).alias("__tk")
-        )
-        tk = F.col("__tk")
-        n = F.size(tk)
-        pairs = F.when(
-            n >= 2,
-            F.transform(
-                F.sequence(F.lit(1), n - 1),
-                lambda i: F.struct(
-                    F.element_at(tk, i).alias("w1"),
-                    F.element_at(tk, i + 1).alias("w2"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-        return base.select(
-            F.col(key_col), F.explode_outer(pairs).alias("__bg")
-        ).select(
-            key_col,
-            bucket(F.col("__bg.w1")).alias("__h1"),
-            bucket(F.col("__bg.w2")).alias("__h2"),
-        )
-
-    from .dedup import _scoped_persist
-
-    # consumed twice (model rows + context totals) — persist the tiny
-    # ≤min(|ref bigrams|, V²)-row aggregate so the reference corpus is
-    # tokenized once (released via dedup.release_intermediates)
-    rb = _scoped_persist(
-        bigrams(ref_df)
-        .where(F.col("__h1").isNotNull())
-        .groupBy("__h1", "__h2")
-        .agg(F.count(F.lit(1)).alias("__b"))
-    )
-    ctx = rb.groupBy("__h1").agg(F.sum("__b").alias("__u"))
-    model = rb.join(ctx, "__h1").select(
-        "__h1",
-        "__h2",
-        F.round(
-            F.lit(-1000.0)
-            * F.log(
-                (F.col("__b") + 1).cast("double")
-                / (F.col("__u") + F.lit(n_buckets)).cast("double")
-            ),
-            0,
-        )
-        .cast("long")
-        .alias("__m"),
-    )
-    # seen context, unseen continuation: p = 1 / (U + V)
-    ctx_unseen = ctx.select(
-        "__h1",
-        F.round(
-            F.lit(-1000.0)
-            * F.log(
-                F.lit(1.0) / (F.col("__u") + F.lit(n_buckets)).cast("double")
-            ),
-            0,
-        )
-        .cast("long")
-        .alias("__mu"),
-    )
-    # unseen context: p = 1 / V — same round(·ln) pipeline as the model
-    # rows so both engines quantize the constant identically
-    oov = F.round(F.lit(1000.0) * F.log(F.lit(v)), 0).cast("long")
-    scored = (
-        bigrams(df)
-        .join(F.broadcast(model), ["__h1", "__h2"], "left")
-        .join(F.broadcast(ctx_unseen), ["__h1"], "left")
-        .groupBy(key_col)
-        .agg(
-            F.count("__h1").alias("n_bigrams"),
-            F.sum(
-                F.when(
-                    F.col("__h1").isNotNull(),
-                    F.coalesce(F.col("__m"), F.col("__mu"), oov),
-                )
-            ).alias("__milli"),
-        )
-    )
-    avg_nll = F.when(
-        F.col("n_bigrams") > 0,
-        F.col("__milli").cast("double")
-        / (F.col("n_bigrams") * 1000).cast("double"),
-    )
-    return scored.select(
+    return lm_score(
+        df,
+        lm_reference_model(ref_df, n_buckets, text_col, key_col),
+        text_col,
         key_col,
-        F.col("n_bigrams").cast("long"),
-        avg_nll.alias("avg_nll"),
-        F.when(avg_nll.isNull(), F.lit("unscored"))
-        .when(avg_nll < F.lit(float(head_nll)), F.lit("head"))
-        .when(avg_nll > F.lit(float(tail_nll)), F.lit("tail"))
-        .otherwise(F.lit("middle"))
-        .alias("ppl_bucket"),
+        head_nll,
+        tail_nll,
     )
 
 

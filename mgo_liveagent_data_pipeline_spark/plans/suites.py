@@ -10,33 +10,227 @@ and the gate's compare is order-insensitive), so no correctness signal is
 lost by merging — every SURVEY §2 op named in a suite's docstring is
 driver-checked through it.
 
+Each union suite is one spec table (``_Spec``) that both engines read:
+its tag column, its output columns and their types, declared once, and
+one row per union branch. A row gives its tag, its member by registry key
+(the key names both the Spark member ``<module>.QUERIES[key]`` and its
+DuckDB twin ``<module>.ORACLES[key]``, so a branch cannot be paired with
+the wrong oracle) and one entry per output column: a column name both
+engines share, ``None`` for a typed NULL, or a (Spark, SQL) pair where the
+engines spell the value differently. ``_union`` evaluates each member
+once per call and projects and unions the rows in table order;
+``_union_sql`` renders the same rows as the twin's union. A row with no
+registered member, or one that keeps a plan shape the projection cannot
+express, gives its Spark frame and its SQL relation explicitly
+(``_Rel``).
+
 Members stay registered under their original names in the domain modules
 (tests, bench, and plan-shape audits drive them individually via
 ``registry.ALL_QUERIES``).
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
+from typing import Callable, NamedTuple
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import local_table
+from ..operators.multimodal import (
+    audio_features,
+    bmp_fixture_images,
+    gif_fixture_images,
+    jpeg_fixture_images,
+    png_fixture_images,
+    real_audio_features,
+    real_gif_features,
+    real_image_features,
+    real_jpeg_features,
+    real_png_features,
+    resize_image,
+    to_media_column,
+    wav_fixture_clips,
+)
+from ..session import ship_package
+from ..sources.tables import load_table, local_table
+from ..streaming.windows import state_partitions
 from . import connector, enrichment, persistence, pipeline, relational
 
+_MODULES = (relational, pipeline, enrichment, persistence, connector)
+_MEMBERS = {k: fn for m in _MODULES for k, fn in m.QUERIES.items()}
+_TWINS = {k: sql for m in _MODULES for k, sql in m.ORACLES.items()}
 
-def _null(t: str):
-    return F.lit(None).cast(t)
+# DuckDB spelling of the declared column types a typed NULL or a cast uses
+_SQL_TYPES = {
+    "string": "VARCHAR",
+    "bigint": "BIGINT",
+    "double": "DOUBLE",
+    "timestamp": "TIMESTAMP",
+}
+
+
+class _Rel(NamedTuple):
+    """A row source given explicitly: its Spark frame and its SQL relation."""
+
+    frame: Callable[[SparkSession, str], DataFrame]
+    sql: str
+
+
+class _Spec(NamedTuple):
+    """One union suite: the tag column, the output columns as
+    ``"name type, ..."`` (Spark type names), and the rows
+    ``(tag, source, *entries)`` in union order. A tag is a literal or a
+    (Spark, SQL) pair; a source is a registry key or a ``_Rel``. A pair's
+    Spark half is a zero-argument function, because a Column needs a live
+    session and the specs are built at import."""
+
+    tag: str
+    cols: str
+    rows: tuple
+
+
+def _columns(spec: _Spec) -> list[tuple[str, str]]:
+    return [tuple(c.split()) for c in spec.cols.split(",")]
+
+
+def _spark(entry, type_: str | None = None) -> Column:
+    if entry is None:
+        return F.lit(None).cast(type_)
+    return F.col(entry) if isinstance(entry, str) else entry[0]()
+
+
+def _sql(entry, type_: str | None = None) -> str:
+    if entry is None:
+        return f"CAST(NULL AS {_SQL_TYPES[type_]})"
+    return f'"{entry}"' if isinstance(entry, str) else entry[1]
+
+
+def _union(
+    spark: SparkSession,
+    sf_dir: str,
+    spec: _Spec,
+    frames: dict | None = None,
+) -> DataFrame:
+    """The Spark side of ``spec``: every source evaluated once per call
+    (``frames`` holds any the caller already evaluated), every row
+    projected onto the suite's columns, the rows unioned by name in table
+    order."""
+    frames = dict(frames or {})
+    cols = _columns(spec)
+    parts = []
+    for tag, src, *entries in spec.rows:
+        if src not in frames:
+            build = src.frame if isinstance(src, _Rel) else _MEMBERS[src]
+            frames[src] = build(spark, sf_dir)
+        parts.append(
+            frames[src].select(
+                (F.lit(tag) if isinstance(tag, str) else tag[0]()).alias(
+                    spec.tag
+                ),
+                *(
+                    _spark(e, t).alias(c)
+                    for (c, t), e in zip(cols, entries, strict=True)
+                ),
+            )
+        )
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _union_sql(spec: _Spec) -> str:
+    """The DuckDB side of ``spec``: the same rows over the members'
+    twins."""
+    cols = _columns(spec)
+    selects = []
+    for tag, src, *entries in spec.rows:
+        exprs = [
+            f"'{tag}'" if isinstance(tag, str) else tag[1],
+            *(_sql(e, t) for (_c, t), e in zip(cols, entries, strict=True)),
+        ]
+        names = [spec.tag] + [c for c, _t in cols]
+        rel = src.sql if isinstance(src, _Rel) else _TWINS[src]
+        selects.append(
+            "SELECT "
+            + ", ".join(f'{e} AS "{n}"' for e, n in zip(exprs, names))
+            + f" FROM ({rel})"
+        )
+    return " UNION ALL ".join(selects)
+
+
+def _cast(name: str, type_: str):
+    return (
+        lambda: F.col(name).cast(type_),
+        f'CAST("{name}" AS {_SQL_TYPES[type_]})',
+    )
+
+
+def _cents(name: str):
+    """A double ×100, rounded to a long and printed: an exact packing."""
+    return (
+        lambda: F.round(F.col(name) * 100).cast("long").cast("string"),
+        f'CAST(CAST(round("{name}" * 100) AS BIGINT) AS VARCHAR)',
+    )
+
+
+def _packed(sep: str, *parts):
+    """``concat_ws`` of entries: several values hash-checked in one
+    string column."""
+    return (
+        lambda: F.concat_ws(sep, *(_spark(p) for p in parts)),
+        f"concat_ws('{sep}', " + ", ".join(_sql(p) for p in parts) + ")",
+    )
 
 
 # --------------------------------------------------------- relational suites
+_S7_W3 = _Spec("mode", "o_orderkey bigint, o_totalprice double", (
+    ("s7_preview", "s7_preview", "o_orderkey", "o_totalprice"),
+    ("w3_limit", "w3_ordered_limit", "o_orderkey", "o_totalprice"),
+))
+
+
 def q_s7_w3_preview_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7 (preview limit) + W1/W3 (ordered limit) in one row."""
-    s7 = relational.q_s7_preview(spark, sf_dir).select(
-        F.lit("s7_preview").alias("mode"), "o_orderkey", "o_totalprice"
-    )
-    w3 = relational.q_w3_ordered_limit(spark, sf_dir).select(
-        F.lit("w3_limit").alias("mode"), "o_orderkey", "o_totalprice"
-    )
-    return s7.unionByName(w3)
+    return _union(spark, sf_dir, _S7_W3)
+
+
+def _j8_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # both range modes from ONE evaluation of the j8 plan: explode a
+    # two-struct array per result row instead of unioning two branches
+    # that would each re-run the orders top-5 + lineitem range join
+    grp = F.col("o_orderkey").cast("string").alias("grp")
+    return _MEMBERS["j8_range_join"](spark, sf_dir).select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.lit("range").alias("tag"), grp,
+                    F.col("n_items").alias("n"),
+                ),
+                F.struct(
+                    F.lit("range_qty").alias("tag"), grp,
+                    F.round(F.col("sum_qty") * 100).cast("long").alias("n"),
+                ),
+            )
+        ).alias("r")
+    ).select("r.*")
+
+
+_J2_J4 = _Spec("mode", "grp string, n bigint", (
+    ("anti", "j2_anti_join", "segment", "n_customers_without_orders"),
+    ("semi", "j4_semi_join", "status", "n_orders"),
+    (
+        (lambda: F.col("tag"), "tag"),
+        _Rel(
+            _j8_ranges,
+            "SELECT 'range' AS tag, CAST(o_orderkey AS VARCHAR) AS grp, "
+            f"n_items AS n FROM ({_TWINS['j8_range_join']}) UNION ALL "
+            "SELECT 'range_qty' AS tag, CAST(o_orderkey AS VARCHAR) AS grp, "
+            "CAST(round(sum_qty * 100) AS BIGINT) AS n "
+            f"FROM ({_TWINS['j8_range_join']})",
+        ),
+        "grp", "n",
+    ),
+))
 
 
 def q_j2_j4_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,37 +238,28 @@ def q_j2_j4_semi_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``range``/``range_qty`` modes — lineitems inside the top-5 orders'
     30-day promo windows, operators/joins.py:range_join; qty checked in
     cents so the long ``n`` column carries it exactly)."""
-    j2 = relational.q_j2_anti_join(spark, sf_dir).select(
-        F.lit("anti").alias("mode"),
-        F.col("segment").alias("grp"),
-        F.col("n_customers_without_orders").alias("n"),
-    )
-    j4 = relational.q_j4_semi_join(spark, sf_dir).select(
-        F.lit("semi").alias("mode"),
-        F.col("status").alias("grp"),
-        F.col("n_orders").alias("n"),
-    )
-    # both range modes from ONE evaluation of the j8 plan: explode a
-    # two-struct array per result row instead of unioning two branches
-    # that would each re-run the orders top-5 + lineitem range join
-    j8 = relational.q_j8_range_join(spark, sf_dir)
-    rng = j8.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("range").alias("mode"),
-                    F.col("o_orderkey").cast("string").alias("grp"),
-                    F.col("n_items").alias("n"),
-                ),
-                F.struct(
-                    F.lit("range_qty").alias("mode"),
-                    F.col("o_orderkey").cast("string").alias("grp"),
-                    F.round(F.col("sum_qty") * 100).cast("long").alias("n"),
-                ),
-            )
-        ).alias("r")
-    ).select("r.*")
-    return j2.unionByName(j4).unionByName(rng)
+    return _union(spark, sf_dir, _J2_J4)
+
+
+_A2_A3 = _Spec("mode", "k1 string, k2 string", (
+    ("pairs", "a2_distinct", "o_orderstatus", "o_orderpriority"),
+    ("ids", "a3_multi_column_distinct", _cast("id", "string"), None),
+    (
+        "kmv", "kmv_distinct", "o_orderstatus",
+        _packed("|", _cents("est_distinct"), _cast("n_kept", "string")),
+    ),
+    (
+        "bloom", "bloom_membership", "c_mktsegment",
+        _packed(
+            "|", *(_cast(c, "string") for c in ("n_probed", "n_might", "n_members"))
+        ),
+    ),
+    ("hq", "histogram_quantiles", "o_orderstatus", _packed("|", _cents("q"), _cents("est"))),
+    (
+        "pivot", "pivot_unpivot", "o_orderpriority",
+        _packed("|", "status", _cast("n_orders", "string")),
+    ),
+))
 
 
 def q_a2_a3_distinct_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -88,53 +273,53 @@ def q_a2_a3_distinct_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     value, operators/aggregations.py:histogram_quantiles) + the pivot →
     unpivot round trip (``pivot`` mode — priority × status cross-tab
     counts packed as "status|n", plans/relational.py:q_pivot_unpivot)."""
-    hq = relational.q_histogram_quantiles(spark, sf_dir).select(
-        F.lit("hq").alias("mode"),
-        F.col("o_orderstatus").alias("k1"),
-        F.concat_ws(
-            "|",
-            F.round(F.col("q") * 100).cast("long").cast("string"),
-            F.round(F.col("est") * 100).cast("long").cast("string"),
-        ).alias("k2"),
-    )
-    bloom = relational.q_bloom_membership(spark, sf_dir).select(
-        F.lit("bloom").alias("mode"),
-        F.col("c_mktsegment").alias("k1"),
-        F.concat_ws(
-            "|",
-            F.col("n_probed").cast("string"),
-            F.col("n_might").cast("string"),
-            F.col("n_members").cast("string"),
-        ).alias("k2"),
-    )
-    kmv = relational.q_kmv_distinct(spark, sf_dir).select(
-        F.lit("kmv").alias("mode"),
-        F.col("o_orderstatus").alias("k1"),
-        F.concat_ws(
-            "|",
-            F.round(F.col("est_distinct") * 100).cast("long").cast("string"),
-            F.col("n_kept").cast("string"),
-        ).alias("k2"),
-    )
-    a2 = relational.q_a2_distinct(spark, sf_dir).select(
-        F.lit("pairs").alias("mode"),
-        F.col("o_orderstatus").alias("k1"),
-        F.col("o_orderpriority").alias("k2"),
-    )
-    a3 = relational.q_a3_multi_column_distinct(spark, sf_dir).select(
-        F.lit("ids").alias("mode"),
-        F.col("id").cast("string").alias("k1"),
-        _null("string").alias("k2"),
-    )
-    pv = relational.q_pivot_unpivot(spark, sf_dir).select(
-        F.lit("pivot").alias("mode"),
-        F.col("o_orderpriority").alias("k1"),
-        F.concat_ws(
-            "|", F.col("status"), F.col("n_orders").cast("string")
-        ).alias("k2"),
-    )
-    return a2.unionByName(a3).unionByName(kmv).unionByName(bloom)\
-        .unionByName(hq).unionByName(pv)
+    return _union(spark, sf_dir, _A2_A3)
+
+
+_ER_CONTACT = _packed("|", "phone", "address")
+_METRICS = _Spec(
+    "mode", "key_s string, n1 bigint, n2 bigint, n3 bigint, top_s string", (
+        ("counts", "metrics_counts", None, "n_new", "n_existing", "n_total", None),
+        (
+            "profile", "profile_columns",
+            "column", "n_null", "n_distinct", "top_n", "top_value",
+        ),
+        ("diff", "table_diff", "diff_status", "n_keys", "n_changed_cols", None, None),
+        ("funnel", "funnel", "step", _cast("step_no", "bigint"), "n_users", None, None),
+        (
+            "cohort", "retention_cohorts",
+            _cast("cohort_week", "string"), "week_no", "n_users", None, None,
+        ),
+        # er: entity-resolution golden records — name survives in key_s,
+        # phone|address in top_s, entity id + cluster size hash-checked
+        ("er", "entity_resolution", "name", "entity_id", "n_records", None, _ER_CONTACT),
+        # er_name: the scale-cardinality blocking key (lowercased first name
+        # token — one block per customer family, pairs linear in N); the
+        # round-11 headline bench member's correctness twin
+        (
+            "er_name", "entity_resolution_name",
+            "name", "entity_id", "n_records", None, _ER_CONTACT,
+        ),
+        # er_multi: multi-pass blocking — the corrupted-block v4 variant is
+        # reachable only through the phone-prefix pass
+        (
+            "er_multi", "entity_resolution_multi",
+            "name", "entity_id", "n_records", None, _ER_CONTACT,
+        ),
+        # er_inc: the incremental (delta-vs-corpus) assignment — must equal
+        # the full-batch assignment verbatim, merges included
+        (
+            "er_inc", "entity_resolution_inc",
+            None, "rec_id", "entity_id", "n_records", None,
+        ),
+        # expect: the declarative data-quality gate — one fused-agg scan,
+        # pass/fail + violation counts per check
+        (
+            "expect", "validate_expectations", _packed("|", "check", "column"),
+            "violations", "n_rows", _cast("passed", "bigint"), None,
+        ),
+    ),
+)
 
 
 def q_metrics_new_vs_existing(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -161,108 +346,28 @@ def q_metrics_new_vs_existing(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta-involved pairs, exactly the full-batch components) and the
     declarative data-quality gate (``expect`` mode — every check fused
     into one scan, operators/aggregations.py:validate_expectations)."""
-    counts = relational.q_metrics_new_vs_existing(spark, sf_dir).select(
-        F.lit("counts").alias("mode"),
-        _null("string").alias("key_s"),
-        F.col("n_new").alias("n1"),
-        F.col("n_existing").alias("n2"),
-        F.col("n_total").alias("n3"),
-        _null("string").alias("top_s"),
-    )
-    prof = relational.q_profile_columns(spark, sf_dir).select(
-        F.lit("profile").alias("mode"),
-        F.col("column").alias("key_s"),
-        F.col("n_null").alias("n1"),
-        F.col("n_distinct").alias("n2"),
-        F.col("top_n").alias("n3"),
-        F.col("top_value").alias("top_s"),
-    )
-    diff = relational.q_table_diff(spark, sf_dir).select(
-        F.lit("diff").alias("mode"),
-        F.col("diff_status").alias("key_s"),
-        F.col("n_keys").alias("n1"),
-        F.col("n_changed_cols").alias("n2"),
-        _null("long").alias("n3"),
-        _null("string").alias("top_s"),
-    )
-    fun = relational.q_funnel(spark, sf_dir).select(
-        F.lit("funnel").alias("mode"),
-        F.col("step").alias("key_s"),
-        F.col("step_no").cast("long").alias("n1"),
-        F.col("n_users").alias("n2"),
-        _null("long").alias("n3"),
-        _null("string").alias("top_s"),
-    )
-    coh = relational.q_retention_cohorts(spark, sf_dir).select(
-        F.lit("cohort").alias("mode"),
-        F.col("cohort_week").cast("string").alias("key_s"),
-        F.col("week_no").alias("n1"),
-        F.col("n_users").alias("n2"),
-        _null("long").alias("n3"),
-        _null("string").alias("top_s"),
-    )
-    # er: entity-resolution golden records — name survives in key_s,
-    # phone|address in top_s, entity id + cluster size hash-checked
-    er = relational.q_entity_resolution(spark, sf_dir).select(
-        F.lit("er").alias("mode"),
-        F.col("name").alias("key_s"),
-        F.col("entity_id").alias("n1"),
-        F.col("n_records").alias("n2"),
-        _null("long").alias("n3"),
-        F.concat_ws("|", "phone", "address").alias("top_s"),
-    )
-    # expect: the declarative data-quality gate — one fused-agg scan,
-    # pass/fail + violation counts per check
-    expect = relational.q_validate_expectations(spark, sf_dir).select(
-        F.lit("expect").alias("mode"),
-        F.concat_ws("|", "check", "column").alias("key_s"),
-        F.col("violations").alias("n1"),
-        F.col("n_rows").alias("n2"),
-        F.col("passed").cast("long").alias("n3"),
-        _null("string").alias("top_s"),
-    )
-    # er_name: the scale-cardinality blocking key (lowercased first name
-    # token — one block per customer family, pairs linear in N); the
-    # round-11 headline bench member's correctness twin
-    er_name = relational.q_entity_resolution_name(spark, sf_dir).select(
-        F.lit("er_name").alias("mode"),
-        F.col("name").alias("key_s"),
-        F.col("entity_id").alias("n1"),
-        F.col("n_records").alias("n2"),
-        _null("long").alias("n3"),
-        F.concat_ws("|", "phone", "address").alias("top_s"),
-    )
-    # er_multi: multi-pass blocking — the corrupted-block v4 variant is
-    # reachable only through the phone-prefix pass
-    er_multi = relational.q_entity_resolution_multi(spark, sf_dir).select(
-        F.lit("er_multi").alias("mode"),
-        F.col("name").alias("key_s"),
-        F.col("entity_id").alias("n1"),
-        F.col("n_records").alias("n2"),
-        _null("long").alias("n3"),
-        F.concat_ws("|", "phone", "address").alias("top_s"),
-    )
-    # er_inc: the incremental (delta-vs-corpus) assignment — must equal
-    # the full-batch assignment verbatim, merges included
-    er_inc = relational.q_entity_resolution_inc(spark, sf_dir).select(
-        F.lit("er_inc").alias("mode"),
-        _null("string").alias("key_s"),
-        F.col("rec_id").alias("n1"),
-        F.col("entity_id").alias("n2"),
-        F.col("n_records").alias("n3"),
-        _null("string").alias("top_s"),
-    )
-    return (
-        counts.unionByName(prof)
-        .unionByName(diff)
-        .unionByName(fun)
-        .unionByName(coh)
-        .unionByName(er)
-        .unionByName(er_name)
-        .unionByName(er_multi)
-        .unionByName(er_inc)
-        .unionByName(expect)
-    )
+    return _union(spark, sf_dir, _METRICS)
+
+
+_W4_W5 = _Spec(
+    "mode", "key_s string, key_n bigint, metric double, extra_n bigint", (
+        (
+            "lag_lead", "w4_lag_lead", _cast("event_id", "string"),
+            "user_id", "value_delta", "gap_seconds",
+        ),
+        ("rolling", "w5_rolling_window", "priority", "day_no", "rolling_7d", None),
+        (
+            "asof", "w6_asof_join", _cast("event_id", "string"),
+            "user_id", "quote_value", "quote_event_id",
+        ),
+        (
+            "session", "w7_sessionize",
+            _packed("|", _cast("session_no", "string"), _cast("duration_s", "string")),
+            "user_id", "total_value", "n_events",
+        ),
+        ("zscore", "zscore", "event_type", "event_id", "zscore", None),
+    ),
+)
 
 
 def q_w4_w5_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,89 +378,31 @@ def q_w4_w5_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats, operators/windows.py:sessionize) + per-group z-score
     standardization (``zscore`` mode,
     operators/aggregations.py:standardize)."""
-    w4 = relational.q_w4_lag_lead(spark, sf_dir).select(
-        F.lit("lag_lead").alias("mode"),
-        F.col("event_id").cast("string").alias("key_s"),
-        F.col("user_id").alias("key_n"),
-        F.col("value_delta").alias("metric"),
-        F.col("gap_seconds").alias("extra_n"),
-    )
-    w5 = relational.q_w5_rolling_window(spark, sf_dir).select(
-        F.lit("rolling").alias("mode"),
-        F.col("priority").alias("key_s"),
-        F.col("day_no").alias("key_n"),
-        F.col("rolling_7d").alias("metric"),
-        _null("long").alias("extra_n"),
-    )
-    w6 = relational.q_w6_asof_join(spark, sf_dir).select(
-        F.lit("asof").alias("mode"),
-        F.col("event_id").cast("string").alias("key_s"),
-        F.col("user_id").alias("key_n"),
-        F.col("quote_value").alias("metric"),
-        F.col("quote_event_id").alias("extra_n"),
-    )
-    zs = relational.q_zscore(spark, sf_dir).select(
-        F.lit("zscore").alias("mode"),
-        F.col("event_type").alias("key_s"),
-        F.col("event_id").alias("key_n"),
-        F.col("zscore").alias("metric"),
-        _null("long").alias("extra_n"),
-    )
-    w7 = relational.q_w7_sessionize(spark, sf_dir).select(
-        F.lit("session").alias("mode"),
-        F.concat_ws(
-            "|",
-            F.col("session_no").cast("string"),
-            F.col("duration_s").cast("string"),
-        ).alias("key_s"),
-        F.col("user_id").alias("key_n"),
-        F.col("total_value").alias("metric"),
-        F.col("n_events").alias("extra_n"),
-    )
-    return (
-        w4.unionByName(w5)
-        .unionByName(w6)
-        .unionByName(w7)
-        .unionByName(zs)
-    )
+    return _union(spark, sf_dir, _W4_W5)
+
+
+_SKEW = _Spec("mode", "grp string, total double, n bigint", (
+    ("agg", "skew_salted_sum", "l_returnflag", "sum_qty", "n_rows"),
+    ("join", "skew_salted_join", "o_orderstatus", "total_price", "n_items"),
+))
 
 
 def q_skew_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew handling: salted two-stage aggregation + salted replicated
     join, both hash-checked against the unsalted algebra."""
-    s = relational.q_skew_salted_sum(spark, sf_dir).select(
-        F.lit("agg").alias("mode"),
-        F.col("l_returnflag").alias("grp"),
-        F.col("sum_qty").alias("total"),
-        F.col("n_rows").alias("n"),
-    )
-    j = relational.q_skew_salted_join(spark, sf_dir).select(
-        F.lit("join").alias("mode"),
-        F.col("o_orderstatus").alias("grp"),
-        F.col("total_price").alias("total"),
-        F.col("n_items").alias("n"),
-    )
-    return s.unionByName(j)
+    return _union(spark, sf_dir, _SKEW)
+
+
+_SETOPS = _Spec("mode", "key bigint, tag string", (
+    ("except", "e1_except_keys", "o_custkey", None),
+    ("intersect", "e2_intersect_keys", "o_custkey", None),
+    ("union", "e3_union_all", "o_orderkey", "bucket"),
+))
 
 
 def q_setops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 except + E2 intersect + E3 union-all in one row."""
-    e1 = relational.q_e1_except_keys(spark, sf_dir).select(
-        F.lit("except").alias("mode"),
-        F.col("o_custkey").alias("key"),
-        _null("string").alias("tag"),
-    )
-    e2 = relational.q_e2_intersect_keys(spark, sf_dir).select(
-        F.lit("intersect").alias("mode"),
-        F.col("o_custkey").alias("key"),
-        _null("string").alias("tag"),
-    )
-    e3 = relational.q_e3_union_all(spark, sf_dir).select(
-        F.lit("union").alias("mode"),
-        F.col("o_orderkey").alias("key"),
-        F.col("bucket").alias("tag"),
-    )
-    return e1.unionByName(e2).unionByName(e3)
+    return _union(spark, sf_dir, _SETOPS)
 
 
 def q_f1_f6_string_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -376,6 +423,31 @@ def q_f1_f6_string_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_F7_F9 = _Spec("mode", "bucket_ts timestamp, n_events bigint, total_value double", (
+    (
+        "manila_daily", "f7_tz_manila",
+        _cast("manila_date", "timestamp"), "n_events", None,
+    ),
+    ("utc_6h", "f8_tumbling_6h", "window_start", "n_events", "total_value"),
+    (
+        "month_start", "f9_month_bounds",
+        _cast("month_start", "timestamp"), "n_orders", None,
+    ),
+    (
+        "month_end", "f9_month_bounds",
+        _cast("month_end_day", "timestamp"), "n_orders", None,
+    ),
+    (
+        (lambda: F.concat(F.lit("ht_"), F.col("level")), "'ht_' || level"),
+        "ht_rollup", "bucket_ts", "n_events", "total_value",
+    ),
+    (
+        (lambda: F.concat(F.lit("gf_"), F.col("event_type")), "'gf_' || event_type"),
+        "gap_fill", "bucket_ts", _cast("is_gap", "bigint"), "total_value",
+    ),
+))
+
+
 def q_f7_f9_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F7 Manila-tz daily buckets + F8 6-hour tumbling buckets + F9 month
     window bounds. F9 contributes two tagged rows per month — start and
@@ -384,50 +456,7 @@ def q_f7_f9_time_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plus the hypertable rollup (``ht_*`` modes) and hourly LOCF gap fill
     (``gf_<event_type>`` modes, n_events carries the is_gap flag,
     operators/aggregations.py:gap_fill_locf)."""
-    f7 = relational.q_f7_tz_manila(spark, sf_dir).select(
-        F.lit("manila_daily").alias("mode"),
-        F.col("manila_date").cast("timestamp").alias("bucket_ts"),
-        "n_events",
-        _null("double").alias("total_value"),
-    )
-    f8 = relational.q_f8_tumbling_6h(spark, sf_dir).select(
-        F.lit("utc_6h").alias("mode"),
-        F.col("window_start").alias("bucket_ts"),
-        "n_events",
-        "total_value",
-    )
-    f9 = relational.q_f9_month_bounds(spark, sf_dir)
-    f9_start = f9.select(
-        F.lit("month_start").alias("mode"),
-        F.col("month_start").cast("timestamp").alias("bucket_ts"),
-        F.col("n_orders").alias("n_events"),
-        _null("double").alias("total_value"),
-    )
-    f9_end = f9.select(
-        F.lit("month_end").alias("mode"),
-        F.col("month_end_day").cast("timestamp").alias("bucket_ts"),
-        F.col("n_orders").alias("n_events"),
-        _null("double").alias("total_value"),
-    )
-    ht = relational.q_ht_rollup(spark, sf_dir).select(
-        F.concat(F.lit("ht_"), F.col("level")).alias("mode"),
-        "bucket_ts",
-        "n_events",
-        "total_value",
-    )
-    gf = relational.q_gap_fill(spark, sf_dir).select(
-        F.concat(F.lit("gf_"), F.col("event_type")).alias("mode"),
-        "bucket_ts",
-        F.col("is_gap").cast("long").alias("n_events"),
-        "total_value",
-    )
-    return (
-        f7.unionByName(f8)
-        .unionByName(f9_start)
-        .unionByName(f9_end)
-        .unionByName(ht)
-        .unionByName(gf)
-    )
+    return _union(spark, sf_dir, _F7_F9)
 
 
 def q_f11_f12_schedule_safecast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -457,6 +486,99 @@ def q_f11_f12_schedule_safecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------- pipeline suites
+def _shard_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (
+        _MEMBERS["text_shard_pack"](spark, sf_dir)
+        .groupBy("shard_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_tokens").cast("double").alias("total_tokens"),
+        )
+    )
+
+
+# pr*: n packs both degrees
+_DEGREES = (
+    lambda: F.col("out_deg") * 1000 + F.col("in_deg"),
+    "out_deg * 1000 + in_deg",
+)
+_COMMUNITY = _packed(">", "domain", "community")
+_TEXT = _Spec("mode", "key_s string, key_n bigint, metric double, n bigint", (
+    ("tfidf", "text_tfidf_top_terms", "term", "doc_id", "tfidf", _cast("rank", "bigint")),
+    ("sample", "text_stratified_sample", "lang", None, None, "n_kept"),
+    ("rep_token", "text_repetition", None, "doc_id", "dup_token_frac", "n_tokens"),
+    ("rep_shingle", "text_repetition", None, "doc_id", "dup_shingle_frac", "n_shingles"),
+    (
+        "pii", "text_pii_scrub",
+        (lambda: F.md5(F.col("text_redacted")), "md5(text_redacted)"),
+        "c_custkey", None,
+        (
+            lambda: F.col("n_email") * 10000 + F.col("n_phone") * 100 + F.col("n_ipv4"),
+            "n_email * 10000 + n_phone * 100 + n_ipv4",
+        ),
+    ),
+    ("cms", "text_heavy_hitters", "token", "est_count", None, "n_true"),
+    ("ksample", "text_group_sample", "lang", "doc_id", None, "sample_rank"),
+    ("url", "text_url_domains", "registered_domain", "n_docs", None, "n_urls"),
+    (
+        "qfilter", "text_quality_filter", "reasons", "doc_id", None,
+        (
+            lambda: F.col("keep").cast("long") * 100000 + F.col("n_tokens"),
+            "CAST(keep AS BIGINT) * 100000 + n_tokens",
+        ),
+    ),
+    ("bm25", "text_bm25_search", None, "doc_id", "score", "n_matched"),
+    ("decontam", "text_decontaminate", None, "key", "hit_frac", "n_hit_grams"),
+    (
+        "shard",
+        _Rel(
+            _shard_totals,
+            "SELECT shard_id, count(*) AS n_docs, "
+            "CAST(sum(n_tokens) AS DOUBLE) AS total_tokens "
+            f"FROM ({_TWINS['text_shard_pack']}) GROUP BY shard_id",
+        ),
+        None, "shard_id", "total_tokens", "n_docs",
+    ),
+    ("mixture", "text_mixture_sample", "lang", "n_docs", "accept_rate", "n_tokens_kept"),
+    ("qmodel", "text_quality_model", None, "doc_id", "score", "n_tokens"),
+    ("tsample", "text_temperature_sample", "lang", "n_docs", "accept_rate", "n_tokens_kept"),
+    (
+        "fdecontam", "text_fuzzy_decontaminate",
+        None, "doc_id", "max_jaccard", "n_eval_matches",
+    ),
+    ("ppl", "text_lm_perplexity", "ppl_bucket", "doc_id", "avg_nll", "n_bigrams"),
+    (
+        "dsir", "text_dsir_weight",
+        _cast("milli_weight", "string"), "doc_id", "avg_log_ratio", "n_feats",
+    ),
+    (
+        "dsirsel", "text_dsir_resample",
+        _cast("sel_milli", "string"), "doc_id", None, "sel_rank",
+    ),
+    ("bpe", "text_bpe_encode", _cast("n_words", "string"), "doc_id", None, "n_bpe_tokens"),
+    # pr: integer domain PageRank over the web-text link graph — rank
+    # rides key_n (hash-checked to the unit) and n packs both degrees
+    ("pr", "text_pagerank", "domain", "rank", None, _DEGREES),
+    # pr2: dangling-mass-redistributing PageRank — mass-conserving ranks
+    ("pr2", "text_pagerank_rd", "domain", "rank", None, _DEGREES),
+    # pres: deterministic early-stop PageRank over the sink-only DAG —
+    # Spark stops at the round-3 fixed point, the oracle unrolls 12
+    ("pres", "text_pagerank_es", "domain", "rank", None, _DEGREES),
+    # truss: triangle-supported communities — planted link-farm rings
+    # found, the bipartite organic graph left singleton;
+    # domain>community rides key_s, community size in n
+    ("truss", "text_communities", _COMMUNITY, None, None, "community_size"),
+    # cap: hub graph unblocked by cap_degree, then the same truss
+    ("cap", "text_communities_capped", _COMMUNITY, None, None, "community_size"),
+    # trussinc: the chords arrive as a delta against the stored support
+    # relation; drained == the batch truss result verbatim
+    ("trussinc", "text_communities_inc", _COMMUNITY, None, None, "community_size"),
+    # trussmrg: the MERGE shape — changed rows over the stored
+    # assignment reproduce the batch truss with no full-corpus carry
+    ("trussmrg", "text_communities_merge", _COMMUNITY, None, None, "community_size"),
+))
+
+
 def q_text_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-statistics text ops under one driver row: per-doc top-5
     tf-idf terms (operators/textops.py:tfidf_top_terms), deterministic
@@ -523,247 +645,46 @@ def q_text_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic early-stop PageRank over the sink-only DAG subset —
     Spark stops at the round-3 integer fixed point while the oracle
     unrolls all 12 rounds, so the hash-match proves the stop exact)."""
-    tfidf = pipeline.q_text_tfidf_top_terms(spark, sf_dir).select(
-        F.lit("tfidf").alias("mode"),
-        F.col("term").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        F.col("tfidf").alias("metric"),
-        F.col("rank").cast("long").alias("n"),
-    )
-    sample = pipeline.q_text_stratified_sample(spark, sf_dir).select(
-        F.lit("sample").alias("mode"),
-        F.col("lang").alias("key_s"),
-        _null("long").alias("key_n"),
-        _null("double").alias("metric"),
-        F.col("n_kept").alias("n"),
-    )
-    rep = pipeline.q_text_repetition(spark, sf_dir)
-    rep_tok = rep.select(
-        F.lit("rep_token").alias("mode"),
-        _null("string").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        F.col("dup_token_frac").alias("metric"),
-        F.col("n_tokens").alias("n"),
-    )
-    rep_sh = rep.select(
-        F.lit("rep_shingle").alias("mode"),
-        _null("string").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        F.col("dup_shingle_frac").alias("metric"),
-        F.col("n_shingles").alias("n"),
-    )
-    pii = pipeline.q_text_pii_scrub(spark, sf_dir).select(
-        F.lit("pii").alias("mode"),
-        F.md5(F.col("text_redacted")).alias("key_s"),
-        F.col("c_custkey").alias("key_n"),
-        _null("double").alias("metric"),
+    return _union(spark, sf_dir, _TEXT)
+
+
+# curation*: the per-stage ledger, all counts packed into h so one branch
+# (one evaluation of the chain) hash-checks the full row
+_LEDGER = _packed(
+    "|", "stage",
+    *(_cast(c, "string") for c in ("rows_in", "rows_out", "tokens_out", "bpe_tokens_out")),
+)
+_DEDUP_EXACT = _Spec("mode", "h string, key_id bigint, n bigint", (
+    ("doc", "dedup_exact", "content_hash", "keep_id", "n_copies"),
+    (
+        "para", "text_paragraph_dedup", "dedup_hash", "key",
         (
-            F.col("n_email") * 10000 + F.col("n_phone") * 100 + F.col("n_ipv4")
-        ).alias("n"),
-    )
-    cms = pipeline.q_text_heavy_hitters(spark, sf_dir).select(
-        F.lit("cms").alias("mode"),
-        F.col("token").alias("key_s"),
-        F.col("est_count").alias("key_n"),
-        _null("double").alias("metric"),
-        F.col("n_true").alias("n"),
-    )
-    ksample = pipeline.q_text_group_sample(spark, sf_dir).select(
-        F.lit("ksample").alias("mode"),
-        F.col("lang").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        _null("double").alias("metric"),
-        F.col("sample_rank").alias("n"),
-    )
-    url = pipeline.q_text_url_domains(spark, sf_dir).select(
-        F.lit("url").alias("mode"),
-        F.col("registered_domain").alias("key_s"),
-        F.col("n_docs").alias("key_n"),
-        _null("double").alias("metric"),
-        F.col("n_urls").alias("n"),
-    )
-    qf = pipeline.q_text_quality_filter(spark, sf_dir).select(
-        F.lit("qfilter").alias("mode"),
-        F.col("reasons").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        _null("double").alias("metric"),
-        (F.col("keep").cast("long") * 100000 + F.col("n_tokens")).alias("n"),
-    )
-    bm25 = pipeline.q_text_bm25_search(spark, sf_dir).select(
-        F.lit("bm25").alias("mode"),
-        _null("string").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        F.col("score").alias("metric"),
-        F.col("n_matched").alias("n"),
-    )
-    decon = pipeline.q_text_decontaminate(spark, sf_dir).select(
-        F.lit("decontam").alias("mode"),
-        _null("string").alias("key_s"),
-        F.col("key").alias("key_n"),
-        F.col("hit_frac").alias("metric"),
-        F.col("n_hit_grams").alias("n"),
-    )
-    shard = (
-        pipeline.q_text_shard_pack(spark, sf_dir)
-        .groupBy("shard_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").cast("double").alias("total_tokens"),
-        )
-        .select(
-            F.lit("shard").alias("mode"),
-            _null("string").alias("key_s"),
-            F.col("shard_id").alias("key_n"),
-            F.col("total_tokens").alias("metric"),
-            F.col("n_docs").alias("n"),
-        )
-    )
-    mixture = pipeline.q_text_mixture_sample(spark, sf_dir).select(
-        F.lit("mixture").alias("mode"),
-        F.col("lang").alias("key_s"),
-        F.col("n_docs").alias("key_n"),
-        F.col("accept_rate").alias("metric"),
-        F.col("n_tokens_kept").alias("n"),
-    )
-    qmodel = pipeline.q_text_quality_model(spark, sf_dir).select(
-        F.lit("qmodel").alias("mode"),
-        _null("string").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        F.col("score").alias("metric"),
-        F.col("n_tokens").alias("n"),
-    )
-    tsample = pipeline.q_text_temperature_sample(spark, sf_dir).select(
-        F.lit("tsample").alias("mode"),
-        F.col("lang").alias("key_s"),
-        F.col("n_docs").alias("key_n"),
-        F.col("accept_rate").alias("metric"),
-        F.col("n_tokens_kept").alias("n"),
-    )
-    fdecon = pipeline.q_text_fuzzy_decontaminate(spark, sf_dir).select(
-        F.lit("fdecontam").alias("mode"),
-        _null("string").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        F.col("max_jaccard").alias("metric"),
-        F.col("n_eval_matches").alias("n"),
-    )
-    ppl = pipeline.q_text_lm_perplexity(spark, sf_dir).select(
-        F.lit("ppl").alias("mode"),
-        F.col("ppl_bucket").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        F.col("avg_nll").alias("metric"),
-        F.col("n_bigrams").alias("n"),
-    )
-    dsir = pipeline.q_text_dsir_weight(spark, sf_dir).select(
-        F.lit("dsir").alias("mode"),
-        F.col("milli_weight").cast("string").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        F.col("avg_log_ratio").alias("metric"),
-        F.col("n_feats").alias("n"),
-    )
-    dsirsel = pipeline.q_text_dsir_resample(spark, sf_dir).select(
-        F.lit("dsirsel").alias("mode"),
-        F.col("sel_milli").cast("string").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        _null("double").alias("metric"),
-        F.col("sel_rank").alias("n"),
-    )
-    bpe = pipeline.q_text_bpe_encode(spark, sf_dir).select(
-        F.lit("bpe").alias("mode"),
-        F.col("n_words").cast("string").alias("key_s"),
-        F.col("doc_id").alias("key_n"),
-        _null("double").alias("metric"),
-        F.col("n_bpe_tokens").alias("n"),
-    )
-    # pr: integer domain PageRank over the web-text link graph — rank
-    # rides key_n (hash-checked to the unit) and n packs both degrees
-    pr = pipeline.q_text_pagerank(spark, sf_dir).select(
-        F.lit("pr").alias("mode"),
-        F.col("domain").alias("key_s"),
-        F.col("rank").alias("key_n"),
-        _null("double").alias("metric"),
-        (F.col("out_deg") * 1000 + F.col("in_deg")).alias("n"),
-    )
-    # pr2: dangling-mass-redistributing PageRank — mass-conserving ranks
-    pr2 = pipeline.q_text_pagerank_rd(spark, sf_dir).select(
-        F.lit("pr2").alias("mode"),
-        F.col("domain").alias("key_s"),
-        F.col("rank").alias("key_n"),
-        _null("double").alias("metric"),
-        (F.col("out_deg") * 1000 + F.col("in_deg")).alias("n"),
-    )
-    # pres: deterministic early-stop PageRank over the sink-only DAG —
-    # Spark stops at the round-3 fixed point, the oracle unrolls 12
-    pres = pipeline.q_text_pagerank_es(spark, sf_dir).select(
-        F.lit("pres").alias("mode"),
-        F.col("domain").alias("key_s"),
-        F.col("rank").alias("key_n"),
-        _null("double").alias("metric"),
-        (F.col("out_deg") * 1000 + F.col("in_deg")).alias("n"),
-    )
-    # truss: triangle-supported communities — planted link-farm rings
-    # found, the bipartite organic graph left singleton;
-    # domain>community rides key_s, community size in n
-    truss = pipeline.q_text_communities(spark, sf_dir).select(
-        F.lit("truss").alias("mode"),
-        F.concat_ws(">", "domain", "community").alias("key_s"),
-        _null("long").alias("key_n"),
-        _null("double").alias("metric"),
-        F.col("community_size").alias("n"),
-    )
-    # cap: hub graph unblocked by cap_degree, then the same truss
-    cap = pipeline.q_text_communities_capped(spark, sf_dir).select(
-        F.lit("cap").alias("mode"),
-        F.concat_ws(">", "domain", "community").alias("key_s"),
-        _null("long").alias("key_n"),
-        _null("double").alias("metric"),
-        F.col("community_size").alias("n"),
-    )
-    # trussinc: the chords arrive as a delta against the stored support
-    # relation; drained == the batch truss result verbatim
-    trussinc = pipeline.q_text_communities_inc(spark, sf_dir).select(
-        F.lit("trussinc").alias("mode"),
-        F.concat_ws(">", "domain", "community").alias("key_s"),
-        _null("long").alias("key_n"),
-        _null("double").alias("metric"),
-        F.col("community_size").alias("n"),
-    )
-    # trussmrg: the MERGE shape — changed rows over the stored
-    # assignment reproduce the batch truss with no full-corpus carry
-    trussmrg = pipeline.q_text_communities_merge(spark, sf_dir).select(
-        F.lit("trussmrg").alias("mode"),
-        F.concat_ws(">", "domain", "community").alias("key_s"),
-        _null("long").alias("key_n"),
-        _null("double").alias("metric"),
-        F.col("community_size").alias("n"),
-    )
-    return (
-        tfidf.unionByName(sample)
-        .unionByName(rep_tok)
-        .unionByName(rep_sh)
-        .unionByName(pii)
-        .unionByName(cms)
-        .unionByName(ksample)
-        .unionByName(url)
-        .unionByName(qf)
-        .unionByName(bm25)
-        .unionByName(decon)
-        .unionByName(shard)
-        .unionByName(mixture)
-        .unionByName(qmodel)
-        .unionByName(tsample)
-        .unionByName(fdecon)
-        .unionByName(ppl)
-        .unionByName(dsir)
-        .unionByName(dsirsel)
-        .unionByName(bpe)
-        .unionByName(pr)
-        .unionByName(pr2)
-        .unionByName(pres)
-        .unionByName(truss)
-        .unionByName(cap)
-        .unionByName(trussinc)
-        .unionByName(trussmrg)
-    )
+            lambda: F.col("n_segments") * 100 + F.col("n_dropped"),
+            "n_segments * 100 + n_dropped",
+        ),
+    ),
+    # apply: pairs → CC clusters → keep-one-per-cluster → partitioned-
+    # MERGE corpus rewrite, read back (the canonicalization APPLY step)
+    ("apply", "dedup_apply", "content_hash", "keep_id", "n_merged"),
+    # curation: the COMPOSED six-stage pipeline's per-stage ledger
+    # (pipeline.q_curation_pipeline)
+    ("curation", "curation_pipeline", _LEDGER, "stage_no", "rows_out"),
+    # curation_scored: the nine-stage SCORED chain (model gates composed
+    # in, BPE-token budgets) — same packed-ledger shape
+    ("curation_scored", "curation_scored_pipeline", _LEDGER, "stage_no", "rows_out"),
+    # curation_sem: the chain with SEMANTIC dedup composed in (gate →
+    # para → LSH neardup → SemDeDup-over-encoding → shard)
+    ("curation_sem", "curation_semantic_pipeline", _LEDGER, "stage_no", "rows_out"),
+    # substr: ExactSubstr span dedup (Lee et al. 2021) — n packs
+    # (n_tokens, n_removed) so the span-surgery counts hash-check
+    (
+        "substr", "text_substring_dedup", "dedup_hash", "doc_id",
+        (
+            lambda: F.col("n_tokens") * 100000 + F.col("n_removed"),
+            "n_tokens * 100000 + n_removed",
+        ),
+    ),
+))
 
 
 def q_dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -772,90 +693,59 @@ def q_dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/dedup.py:exact_dedup) and CCNet-style segment-level dedup
     (``para`` mode — operators/textops.py:paragraph_dedup; n packs
     ``n_segments*100 + n_dropped`` so both counts are hash-checked)."""
-    doc = pipeline.q_dedup_exact(spark, sf_dir).select(
-        F.lit("doc").alias("mode"),
-        F.col("content_hash").alias("h"),
-        F.col("keep_id").alias("key_id"),
-        F.col("n_copies").alias("n"),
-    )
-    para = pipeline.q_text_paragraph_dedup(spark, sf_dir).select(
-        F.lit("para").alias("mode"),
-        F.col("dedup_hash").alias("h"),
-        F.col("key").alias("key_id"),
-        (F.col("n_segments") * 100 + F.col("n_dropped")).alias("n"),
-    )
-    # apply: pairs → CC clusters → keep-one-per-cluster → partitioned-
-    # MERGE corpus rewrite, read back (the canonicalization APPLY step)
-    ap = pipeline.q_dedup_apply(spark, sf_dir).select(
-        F.lit("apply").alias("mode"),
-        F.col("content_hash").alias("h"),
-        F.col("keep_id").alias("key_id"),
-        F.col("n_merged").alias("n"),
-    )
-    # (the curation_sem mode adds the chain variant with SEMANTIC dedup
-    # composed in — gate → para → LSH → SemDeDup-over-encoding → shard)
-    # curation: the COMPOSED six-stage pipeline's per-stage ledger
-    # (pipeline.q_curation_pipeline) — all three counts packed into h so
-    # one branch (one evaluation of the chain) hash-checks the full row
-    cu = pipeline.q_curation_pipeline(spark, sf_dir).select(
-        F.lit("curation").alias("mode"),
-        F.concat_ws(
-            "|",
-            F.col("stage"),
-            F.col("rows_in").cast("string"),
-            F.col("rows_out").cast("string"),
-            F.col("tokens_out").cast("string"),
-            F.col("bpe_tokens_out").cast("string"),
-        ).alias("h"),
-        F.col("stage_no").alias("key_id"),
-        F.col("rows_out").alias("n"),
-    )
-    # curation_scored: the nine-stage SCORED chain (model gates composed
-    # in, BPE-token budgets) — same packed-ledger shape
-    cs = pipeline.q_curation_scored_pipeline(spark, sf_dir).select(
-        F.lit("curation_scored").alias("mode"),
-        F.concat_ws(
-            "|",
-            F.col("stage"),
-            F.col("rows_in").cast("string"),
-            F.col("rows_out").cast("string"),
-            F.col("tokens_out").cast("string"),
-            F.col("bpe_tokens_out").cast("string"),
-        ).alias("h"),
-        F.col("stage_no").alias("key_id"),
-        F.col("rows_out").alias("n"),
-    )
-    # curation_sem: the chain with SEMANTIC dedup composed in (gate →
-    # para → LSH neardup → SemDeDup-over-encoding → shard)
-    cse = pipeline.q_curation_semantic_pipeline(spark, sf_dir).select(
-        F.lit("curation_sem").alias("mode"),
-        F.concat_ws(
-            "|",
-            F.col("stage"),
-            F.col("rows_in").cast("string"),
-            F.col("rows_out").cast("string"),
-            F.col("tokens_out").cast("string"),
-            F.col("bpe_tokens_out").cast("string"),
-        ).alias("h"),
-        F.col("stage_no").alias("key_id"),
-        F.col("rows_out").alias("n"),
-    )
-    # substr: ExactSubstr span dedup (Lee et al. 2021) — n packs
-    # (n_tokens, n_removed) so the span-surgery counts hash-check
-    sub = pipeline.q_text_substring_dedup(spark, sf_dir).select(
-        F.lit("substr").alias("mode"),
-        F.col("dedup_hash").alias("h"),
-        F.col("doc_id").alias("key_id"),
-        (F.col("n_tokens") * 100000 + F.col("n_removed")).alias("n"),
-    )
-    return (
-        doc.unionByName(para)
-        .unionByName(ap)
-        .unionByName(cu)
-        .unionByName(cs)
-        .unionByName(cse)
-        .unionByName(sub)
-    )
+    return _union(spark, sf_dir, _DEDUP_EXACT)
+
+
+# semdedup*: pack (kept, centroid_sim): sim is 6dp-rounded so ×1e6 is
+# integral; +1e6 keeps the term non-negative for any cosine
+_SEM_PACK = (
+    lambda: F.col("kept").cast("long") * F.lit(10_000_000).cast("long")
+    + F.round(F.col("centroid_sim") * 1e6, 0).cast("long")
+    + F.lit(1_000_000).cast("long"),
+    "CAST(kept AS BIGINT) * 10000000 "
+    "+ CAST(round(centroid_sim * 1e6) AS BIGINT) + 1000000",
+)
+_SIMHASH = _Spec("mode", "a string, b string, n bigint", (
+    ("cluster", "dedup_simhash", "simhash", _cast("keep_id", "string"), _cast("n_docs", "bigint")),
+    (
+        "near", "dedup_simhash_near", _cast("id_a", "string"),
+        _cast("id_b", "string"), _cast("hamming_dist", "bigint"),
+    ),
+    (
+        "mh_salvage", "dedup_minhash_salvage",
+        _cast("id_a", "string"), _cast("id_b", "string"),
+        (
+            lambda: F.round(F.col("jaccard_sim") * 1e6, 0).cast("long"),
+            "CAST(round(jaccard_sim * 1e6) AS BIGINT)",
+        ),
+    ),
+    (
+        "semdedup", "dedup_semantic",
+        _cast("vec_id", "string"), _cast("cluster_id", "string"), _SEM_PACK,
+    ),
+    (
+        "semdedup_inc", "dedup_semantic_inc",
+        _cast("vec_id", "string"), _cast("cluster_id", "string"), _SEM_PACK,
+    ),
+    # routed mode: NULL cluster/sim (unrouted vectors) coalesce into the
+    # packing so the degrade path hash-checks too
+    (
+        "semdedup_routed", "dedup_semantic_routed", _cast("vec_id", "string"),
+        (
+            lambda: F.coalesce(F.col("cluster_id").cast("string"), F.lit("-")),
+            "coalesce(CAST(cluster_id AS VARCHAR), '-')",
+        ),
+        (
+            lambda: F.col("kept").cast("long") * F.lit(10_000_000).cast("long")
+            + F.round(F.coalesce(F.col("centroid_sim"), F.lit(-2.0)) * 1e6, 0)
+            .cast("long")
+            + F.lit(2_000_000).cast("long"),
+            "CAST(kept AS BIGINT) * 10000000 "
+            "+ CAST(round(coalesce(centroid_sim, -2.0) * 1e6) AS BIGINT) "
+            "+ 2000000",
+        ),
+    ),
+))
 
 
 def q_dedup_simhash_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -867,62 +757,7 @@ def q_dedup_simhash_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     SemDeDup semantic-dedup verdicts (``semdedup`` mode —
     pipeline.q_dedup_semantic; n packs kept-flag and centroid-sim ×10⁶
     so both hash-check)."""
-    cl = pipeline.q_dedup_simhash(spark, sf_dir).select(
-        F.lit("cluster").alias("mode"),
-        F.col("simhash").alias("a"),
-        F.col("keep_id").cast("string").alias("b"),
-        F.col("n_docs").cast("long").alias("n"),
-    )
-    near = pipeline.q_dedup_simhash_near(spark, sf_dir).select(
-        F.lit("near").alias("mode"),
-        F.col("id_a").cast("string").alias("a"),
-        F.col("id_b").cast("string").alias("b"),
-        F.col("hamming_dist").cast("long").alias("n"),
-    )
-    sal = pipeline.q_dedup_minhash_salvage(spark, sf_dir).select(
-        F.lit("mh_salvage").alias("mode"),
-        F.col("id_a").cast("string").alias("a"),
-        F.col("id_b").cast("string").alias("b"),
-        F.round(F.col("jaccard_sim") * 1e6, 0).cast("long").alias("n"),
-    )
-    def _sem_pack(df, tag):
-        return df.select(
-            F.lit(tag).alias("mode"),
-            F.col("vec_id").cast("string").alias("a"),
-            F.col("cluster_id").cast("string").alias("b"),
-            # pack (kept, centroid_sim): sim is 6dp-rounded so ×1e6 is
-            # integral; +1e6 keeps the term non-negative for any cosine
-            (
-                F.col("kept").cast("long") * F.lit(10_000_000).cast("long")
-                + F.round(F.col("centroid_sim") * 1e6, 0).cast("long")
-                + F.lit(1_000_000).cast("long")
-            ).alias("n"),
-        )
-
-    sd = _sem_pack(pipeline.q_dedup_semantic(spark, sf_dir), "semdedup")
-    sdi = _sem_pack(
-        pipeline.q_dedup_semantic_inc(spark, sf_dir), "semdedup_inc"
-    )
-    # routed mode: NULL cluster/sim (unrouted vectors) coalesce into the
-    # packing so the degrade path hash-checks too
-    sdr = pipeline.q_dedup_semantic_routed(spark, sf_dir).select(
-        F.lit("semdedup_routed").alias("mode"),
-        F.col("vec_id").cast("string").alias("a"),
-        F.coalesce(F.col("cluster_id").cast("string"), F.lit("-")).alias("b"),
-        (
-            F.col("kept").cast("long") * F.lit(10_000_000).cast("long")
-            + F.round(F.coalesce(F.col("centroid_sim"), F.lit(-2.0)) * 1e6, 0)
-            .cast("long")
-            + F.lit(2_000_000).cast("long")
-        ).alias("n"),
-    )
-    return (
-        cl.unionByName(near)
-        .unionByName(sal)
-        .unionByName(sd)
-        .unionByName(sdi)
-        .unionByName(sdr)
-    )
+    return _union(spark, sf_dir, _SIMHASH)
 
 
 def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -932,6 +767,31 @@ def q_text_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.tables import load_table
 
     return text_metrics(load_table(spark, sf_dir, "documents"))
+
+
+_ANN = _Spec("variant", "query_id bigint, corpus_id bigint, cosine_sim double, rank int", (
+    ("cosine", "ann_cosine_topk", "query_id", "corpus_id", "cosine_sim", "rank"),
+    ("project", "ann_project_topk", "query_id", "corpus_id", "cosine_sim", "rank"),
+    ("sq", "ann_sq_topk", "query_id", "corpus_id", "cosine_sim", "rank"),
+    ("ivfsq", "ann_ivfsq_topk", "query_id", "corpus_id", "cosine_sim", "rank"),
+    ("ivf", "ann_ivf_topk", "query_id", "corpus_id", "cosine_sim", "rank"),
+    ("filtered", "ann_filtered_topk", "query_id", "corpus_id", "cosine_sim", "rank"),
+    (
+        "ivf_multiprobe", "ann_ivf_multiprobe_topk",
+        "query_id", "corpus_id", "cosine_sim", "rank",
+    ),
+    ("rh_lsh", "ann_rh_lsh_topk", "query_id", "corpus_id", "cosine_sim", "rank"),
+    (
+        "rh_multiprobe", "ann_rh_multiprobe_topk",
+        "query_id", "corpus_id", "cosine_sim", "rank",
+    ),
+    ("pq", "ann_pq_topk", "query_id", "corpus_id", "approx_dist", "rank"),
+    # ivfpq: the composed production index (2-probe routing × ADC codes)
+    ("ivfpq", "ann_ivfpq_topk", "query_id", "corpus_id", "approx_dist", "rank"),
+    # encode: corpus → hash-projection vectors → cosine top-k, the full
+    # embedding-GENERATION path (documents in, neighbors out)
+    ("encode", "ann_encode_topk", "query_id", "corpus_id", "cosine_sim", "rank"),
+))
 
 
 def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -946,85 +806,185 @@ def q_ann_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     RH-LSH (exact-bucket and Hamming-1 multi-probe), and PQ
     asymmetric-distance top-k (``pq`` mode — its metric is the L2² ADC
     distance, carried in the shared metric column)."""
-    members = [
-        ("cosine", pipeline.q_ann_cosine_topk),
-        ("project", pipeline.q_ann_project_topk),
-        ("sq", pipeline.q_ann_sq_topk),
-        ("ivfsq", pipeline.q_ann_ivfsq_topk),
-        ("ivf", pipeline.q_ann_ivf_topk),
-        ("filtered", pipeline.q_ann_filtered_topk),
-        ("ivf_multiprobe", pipeline.q_ann_ivf_multiprobe_topk),
-        ("rh_lsh", pipeline.q_ann_rh_lsh_topk),
-        ("rh_multiprobe", pipeline.q_ann_rh_multiprobe_topk),
-    ]
-    out = None
-    for tag, fn in members:
-        part = fn(spark, sf_dir).select(
-            F.lit(tag).alias("variant"),
-            "query_id",
-            "corpus_id",
-            "cosine_sim",
-            "rank",
-        )
-        out = part if out is None else out.unionByName(part)
-    pq = pipeline.q_ann_pq_topk(spark, sf_dir).select(
-        F.lit("pq").alias("variant"),
-        "query_id",
-        "corpus_id",
-        F.col("approx_dist").alias("cosine_sim"),
-        "rank",
-    )
-    # ivfpq: the composed production index (2-probe routing × ADC codes)
-    ivfpq = pipeline.q_ann_ivfpq_topk(spark, sf_dir).select(
-        F.lit("ivfpq").alias("variant"),
-        "query_id",
-        "corpus_id",
-        F.col("approx_dist").alias("cosine_sim"),
-        "rank",
-    )
-    # encode: corpus → hash-projection vectors → cosine top-k, the full
-    # embedding-GENERATION path (documents in, neighbors out)
-    enc = pipeline.q_ann_encode_topk(spark, sf_dir).select(
-        F.lit("encode").alias("variant"),
-        "query_id",
-        "corpus_id",
-        "cosine_sim",
-        "rank",
-    )
-    return out.unionByName(pq).unionByName(ivfpq).unionByName(enc)
+    return _union(spark, sf_dir, _ANN)
 
 
 # --------------------------------------------------------- enrichment suites
+_GEOCODE = _Spec(
+    "mode",
+    "address string, matched_address string, info string, "
+    "latitude double, longitude double, score double",
+    (
+        (
+            "two_phase", "u2_geocode_two_phase",
+            "address", "matched_address", "geo_level", None, None, "score",
+        ),
+        (
+            "fallback", "u2_geocode_fallback",
+            "address", "matched_address", "source", "latitude", "longitude", None,
+        ),
+    ),
+)
+
+
 def q_u2_geocode_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U2 both halves: the two-phase gazetteer similarity join and the
     full wrapper with rate-limited external fallback."""
-    tp = enrichment.q_u2_geocode_two_phase(spark, sf_dir).select(
-        F.lit("two_phase").alias("mode"),
-        "address",
-        "matched_address",
-        F.col("geo_level").alias("info"),
-        _null("double").alias("latitude"),
-        _null("double").alias("longitude"),
-        F.col("score"),
-    )
-    fb = enrichment.q_u2_geocode_fallback(spark, sf_dir).select(
-        F.lit("fallback").alias("mode"),
-        "address",
-        "matched_address",
-        F.col("source").alias("info"),
-        "latitude",
-        "longitude",
-        _null("double").alias("score"),
-    )
-    return tp.unionByName(fb)
+    return _union(spark, sf_dir, _GEOCODE)
 
 
 # Number of q_multimodal_suite union branches whose subtree crosses Python
 # via one Arrow-batched MapInPandas node (uncached stages referenced by two
 # branches count twice — the plan prints a node per reference). Update this
-# alongside the unionByName chain when adding a mode; tests/
+# alongside the suite's spec rows when adding a mode; tests/
 # test_plan_shapes.py derives its expected MapInPandas count from it.
 MULTIMODAL_PYTHON_BRANCHES = 18  # decode resize audio ra ral ri rirgb rp rprgb rj rjrgb rg rgrgb + img_dedup dhash + audio_dedup fp + video_dedup frames + img_dedup_inc corpus/delta hashes
+
+
+def _media(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return to_media_column(load_table(spark, sf_dir, "documents"))
+
+
+def _fixture(items: list[dict], features, id_key: str) -> _Rel:
+    """A hand-packed media fixture: Spark decodes the payloads with
+    ``features``; the SQL relation is the fixtures' EXPECTED features,
+    computed from the raw sample/pixel arrays by an independent reference
+    (pure integer math), so a hash match certifies a real decode."""
+    names = [k for k in items[0] if k != "payload"]
+    rows = ", ".join(
+        "(" + ", ".join(repr(c[k]) for k in names) + ")" for c in items
+    )
+    kind = {int: "BIGINT", str: "VARCHAR"}
+    return _Rel(
+        lambda spark, sf_dir: features(
+            local_table(
+                spark,
+                [(c[id_key], bytearray(c["payload"])) for c in items],
+                "doc_id bigint, media binary",
+            )
+        ),
+        "SELECT "
+        + ", ".join(
+            f"CAST({k} AS {kind[type(items[0][k])]}) AS "
+            + ("doc_id" if k == id_key else k)
+            for k in names
+        )
+        + f" FROM (VALUES {rows}) AS t({', '.join(names)})",
+    )
+
+
+# real_audio: GENUINE WAV decode (stdlib wave) over hand-packed PCM
+# fixtures — duration/RMS/peak come from the actual samples, and the
+# oracle pins them to expectations computed from the raw sample
+# arrays by an independent reference (operators/multimodal.py:
+# wav_fixture_clips)
+_WAV = _fixture(wav_fixture_clips(), real_audio_features, "clip_id")
+# real_image: GENUINE uncompressed-BMP decode (stdlib struct) over
+# hand-packed pixel fixtures — dims and channel means from actual
+# pixels, pinned by independently-computed expected values
+_BMP = _fixture(bmp_fixture_images(), real_image_features, "img_id")
+# real_png: GENUINE PNG decode (stdlib zlib inflate + five-filter
+# scanline defiltering, CRC-verified chunk walk) over hand-packed
+# fixtures whose expected features come straight from the pixel arrays
+_PNG = _fixture(png_fixture_images(), real_png_features, "img_id")
+# real_jpeg: GENUINE baseline JPEG decode (canonical Huffman entropy
+# decode + dequant + full IDCT + YCbCr→RGB) over hand-packed fixtures
+# built exact-by-construction (block-constant DC-only components)
+_JPEG = _fixture(jpeg_fixture_images(), real_jpeg_features, "img_id")
+# real_gif: GENUINE single-frame GIF decode (variable-width LZW,
+# extension skipping, global/local color tables) over hand-packed
+# fixtures whose LZW data comes from an independent encoder
+_GIF = _fixture(gif_fixture_images(), real_gif_features, "img_id")
+
+_MULTIMODAL = _Spec(
+    "mode",
+    "doc_id bigint, seq bigint, digest string, n_bytes bigint, m1 bigint, m2 bigint",
+    (
+        (
+            "decode", "multimodal_decode",
+            "doc_id", None, "content_md5", "n_bytes", "fake_width", "fake_height",
+        ),
+        (
+            "frames", "multimodal_frames", "doc_id",
+            _cast("frame_no", "bigint"), "frame_md5", "frame_bytes", None, None,
+        ),
+        (
+            "resize",
+            _Rel(
+                lambda spark, sf_dir: resize_image(_media(spark, sf_dir)),
+                "SELECT doc_id, md5(text || '640x480') AS resized_md5, "
+                "CAST(strlen(text) AS BIGINT) AS n_bytes, "
+                "CAST(640 AS BIGINT) AS width, CAST(480 AS BIGINT) AS height "
+                "FROM documents",
+            ),
+            "doc_id", None, "resized_md5", "n_bytes", "width", "height",
+        ),
+        (
+            "audio",
+            _Rel(
+                lambda spark, sf_dir: audio_features(_media(spark, sf_dir)),
+                "SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes, "
+                "CAST(16000 AS BIGINT) AS sample_rate, "
+                "CAST(strlen(text) AS BIGINT) * 1000 // 16000 AS duration_ms "
+                "FROM documents",
+            ),
+            "doc_id", None, None, "n_bytes", "sample_rate", "duration_ms",
+        ),
+        (
+            "real_audio", _WAV,
+            "doc_id", "n_frames", "content_md5", "n_bytes", "sample_rate", "duration_ms",
+        ),
+        (
+            "real_audio_level", _WAV,
+            "doc_id", "n_channels", None, "n_bytes", "rms", "peak",
+        ),
+        *(
+            row
+            for tag, fixture in (
+                ("real_image", _BMP),
+                ("real_png", _PNG),
+                ("real_jpeg", _JPEG),
+                ("real_gif", _GIF),
+            )
+            for row in (
+                (
+                    tag, fixture,
+                    "doc_id", "n_pixels", "content_md5", "n_bytes", "width", "height",
+                ),
+                (
+                    f"{tag}_rgb", fixture,
+                    "doc_id", "n_pixels", None, "n_bytes", "mean_rgb", "n_pixels",
+                ),
+            )
+        ),
+        # img_dedup: perceptual-hash (dHash) image near-dup over the decoded
+        # pixels — re-encoded / brightness-shifted / cropped copies cluster
+        # with their originals and the minimum id survives (keep-one)
+        (
+            "img_dedup", "dedup_image_phash",
+            "img_id", "keep_id", "dhash", None, _cast("is_dup", "bigint"), None,
+        ),
+        # audio_dedup: temporal-energy dHash near-dup over decoded PCM —
+        # volume-scaled / re-headered / stereo-duplicated copies cluster
+        # with their originals (the audio member of the perceptual family)
+        (
+            "audio_dedup", "dedup_audio_fp",
+            "clip_id", "keep_id", "fp", None, _cast("is_dup", "bigint"), None,
+        ),
+        # video_dedup: sampled-frame pHash matching over animated GIFs — a
+        # re-encode and a head-trimmed copy cluster with their originals
+        (
+            "video_dedup", "dedup_video_phash",
+            "video_id", "keep_id", None, "n_frames", _cast("is_dup", "bigint"), None,
+        ),
+        # img_dedup_inc: the delta-vs-corpus ingest path — the perturbed
+        # copies arrive as a delta; corpus-corpus pairs are provably absent
+        (
+            "img_dedup_inc", "dedup_image_phash_inc",
+            "id_a", "id_b", None, "hamming_dist", None, None,
+        ),
+    ),
+)
 
 
 def q_multimodal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1034,330 +994,135 @@ def q_multimodal_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric columns per mode: decode m1/m2 = fake width/height; resize
     m1/m2 = target width/height; audio m1/m2 = sample_rate/duration_ms;
     frames use seq = frame_no."""
-    from ..operators.multimodal import audio_features, resize_image, to_media_column
-    from ..sources.tables import load_table
-
-    dec = enrichment.q_multimodal_decode(spark, sf_dir).select(
-        F.lit("decode").alias("mode"),
-        "doc_id",
-        _null("long").alias("seq"),
-        F.col("content_md5").alias("digest"),
-        "n_bytes",
-        F.col("fake_width").alias("m1"),
-        F.col("fake_height").alias("m2"),
-    )
-    fr = pipeline.q_multimodal_frames(spark, sf_dir).select(
-        F.lit("frames").alias("mode"),
-        "doc_id",
-        F.col("frame_no").cast("long").alias("seq"),
-        F.col("frame_md5").alias("digest"),
-        F.col("frame_bytes").alias("n_bytes"),
-        _null("long").alias("m1"),
-        _null("long").alias("m2"),
-    )
-    from ..session import ship_package
-
     ship_package(spark)
-    media = to_media_column(load_table(spark, sf_dir, "documents"))
-    rs = resize_image(media).select(
-        F.lit("resize").alias("mode"),
-        "doc_id",
-        _null("long").alias("seq"),
-        F.col("resized_md5").alias("digest"),
-        "n_bytes",
-        F.col("width").alias("m1"),
-        F.col("height").alias("m2"),
-    )
-    au = audio_features(media).select(
-        F.lit("audio").alias("mode"),
-        "doc_id",
-        _null("long").alias("seq"),
-        _null("string").alias("digest"),
-        "n_bytes",
-        F.col("sample_rate").alias("m1"),
-        F.col("duration_ms").alias("m2"),
-    )
-    # real_audio: GENUINE WAV decode (stdlib wave) over hand-packed PCM
-    # fixtures — duration/RMS/peak come from the actual samples, and the
-    # oracle pins them to expectations computed from the raw sample
-    # arrays by an independent reference (operators/multimodal.py:
-    # wav_fixture_clips)
-    from pyspark.sql import types as T
-
-    from ..operators.multimodal import real_audio_features, wav_fixture_clips
-
-    clips = wav_fixture_clips()
-    fixture = local_table(
-        spark,
-        [(c["clip_id"], bytearray(c["payload"])) for c in clips],
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("media", T.BinaryType()),
-            ]
-        ),
-    )
-    ra_feats = real_audio_features(fixture)
-    ra = ra_feats.select(
-        F.lit("real_audio").alias("mode"),
-        "doc_id",
-        F.col("n_frames").alias("seq"),
-        F.col("content_md5").alias("digest"),
-        "n_bytes",
-        F.col("sample_rate").alias("m1"),
-        F.col("duration_ms").alias("m2"),
-    )
-    ral = ra_feats.select(
-        F.lit("real_audio_level").alias("mode"),
-        "doc_id",
-        F.col("n_channels").alias("seq"),
-        _null("string").alias("digest"),
-        "n_bytes",
-        F.col("rms").alias("m1"),
-        F.col("peak").alias("m2"),
-    )
-    # real_image: GENUINE uncompressed-BMP decode (stdlib struct) over
-    # hand-packed pixel fixtures — dims and channel means from actual
-    # pixels, pinned by independently-computed expected values
-    from ..operators.multimodal import bmp_fixture_images, real_image_features
-
-    imgs = bmp_fixture_images()
-    ifixture = local_table(
-        spark,
-        [(c["img_id"], bytearray(c["payload"])) for c in imgs],
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("media", T.BinaryType()),
-            ]
-        ),
-    )
-    ri_feats = real_image_features(ifixture)
-    ri = ri_feats.select(
-        F.lit("real_image").alias("mode"),
-        "doc_id",
-        F.col("n_pixels").alias("seq"),
-        F.col("content_md5").alias("digest"),
-        "n_bytes",
-        F.col("width").alias("m1"),
-        F.col("height").alias("m2"),
-    )
-    rirgb = ri_feats.select(
-        F.lit("real_image_rgb").alias("mode"),
-        "doc_id",
-        F.col("n_pixels").alias("seq"),
-        _null("string").alias("digest"),
-        "n_bytes",
-        F.col("mean_rgb").alias("m1"),
-        F.col("n_pixels").alias("m2"),
-    )
-    # real_png: GENUINE PNG decode (stdlib zlib inflate + five-filter
-    # scanline defiltering, CRC-verified chunk walk) over hand-packed
-    # fixtures whose expected features come straight from the pixel arrays
-    from ..operators.multimodal import png_fixture_images, real_png_features
-
-    pngs = png_fixture_images()
-    pfixture = local_table(
-        spark,
-        [(c["img_id"], bytearray(c["payload"])) for c in pngs],
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("media", T.BinaryType()),
-            ]
-        ),
-    )
-    rp_feats = real_png_features(pfixture)
-    rp = rp_feats.select(
-        F.lit("real_png").alias("mode"),
-        "doc_id",
-        F.col("n_pixels").alias("seq"),
-        F.col("content_md5").alias("digest"),
-        "n_bytes",
-        F.col("width").alias("m1"),
-        F.col("height").alias("m2"),
-    )
-    rprgb = rp_feats.select(
-        F.lit("real_png_rgb").alias("mode"),
-        "doc_id",
-        F.col("n_pixels").alias("seq"),
-        _null("string").alias("digest"),
-        "n_bytes",
-        F.col("mean_rgb").alias("m1"),
-        F.col("n_pixels").alias("m2"),
-    )
-    # real_jpeg: GENUINE baseline JPEG decode (canonical Huffman entropy
-    # decode + dequant + full IDCT + YCbCr→RGB) over hand-packed fixtures
-    # built exact-by-construction (block-constant DC-only components)
-    from ..operators.multimodal import jpeg_fixture_images, real_jpeg_features
-
-    jpgs = jpeg_fixture_images()
-    jfixture = local_table(
-        spark,
-        [(c["img_id"], bytearray(c["payload"])) for c in jpgs],
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("media", T.BinaryType()),
-            ]
-        ),
-    )
-    rj_feats = real_jpeg_features(jfixture)
-    rj = rj_feats.select(
-        F.lit("real_jpeg").alias("mode"),
-        "doc_id",
-        F.col("n_pixels").alias("seq"),
-        F.col("content_md5").alias("digest"),
-        "n_bytes",
-        F.col("width").alias("m1"),
-        F.col("height").alias("m2"),
-    )
-    rjrgb = rj_feats.select(
-        F.lit("real_jpeg_rgb").alias("mode"),
-        "doc_id",
-        F.col("n_pixels").alias("seq"),
-        _null("string").alias("digest"),
-        "n_bytes",
-        F.col("mean_rgb").alias("m1"),
-        F.col("n_pixels").alias("m2"),
-    )
-    # real_gif: GENUINE single-frame GIF decode (variable-width LZW,
-    # extension skipping, global/local color tables) over hand-packed
-    # fixtures whose LZW data comes from an independent encoder
-    from ..operators.multimodal import gif_fixture_images, real_gif_features
-
-    gifs = gif_fixture_images()
-    gfixture = local_table(
-        spark,
-        [(c["img_id"], bytearray(c["payload"])) for c in gifs],
-        T.StructType(
-            [
-                T.StructField("doc_id", T.LongType()),
-                T.StructField("media", T.BinaryType()),
-            ]
-        ),
-    )
-    rg_feats = real_gif_features(gfixture)
-    rg = rg_feats.select(
-        F.lit("real_gif").alias("mode"),
-        "doc_id",
-        F.col("n_pixels").alias("seq"),
-        F.col("content_md5").alias("digest"),
-        "n_bytes",
-        F.col("width").alias("m1"),
-        F.col("height").alias("m2"),
-    )
-    rgrgb = rg_feats.select(
-        F.lit("real_gif_rgb").alias("mode"),
-        "doc_id",
-        F.col("n_pixels").alias("seq"),
-        _null("string").alias("digest"),
-        "n_bytes",
-        F.col("mean_rgb").alias("m1"),
-        F.col("n_pixels").alias("m2"),
-    )
-    # img_dedup: perceptual-hash (dHash) image near-dup over the decoded
-    # pixels — re-encoded / brightness-shifted / cropped copies cluster
-    # with their originals and the minimum id survives (keep-one)
-    pd_ = pipeline.q_dedup_image_phash(spark, sf_dir).select(
-        F.lit("img_dedup").alias("mode"),
-        F.col("img_id").alias("doc_id"),
-        F.col("keep_id").alias("seq"),
-        F.col("dhash").alias("digest"),
-        _null("long").alias("n_bytes"),
-        F.col("is_dup").cast("long").alias("m1"),
-        _null("long").alias("m2"),
-    )
-    # audio_dedup: temporal-energy dHash near-dup over decoded PCM —
-    # volume-scaled / re-headered / stereo-duplicated copies cluster
-    # with their originals (the audio member of the perceptual family)
-    ad = pipeline.q_dedup_audio_fp(spark, sf_dir).select(
-        F.lit("audio_dedup").alias("mode"),
-        F.col("clip_id").alias("doc_id"),
-        F.col("keep_id").alias("seq"),
-        F.col("fp").alias("digest"),
-        _null("long").alias("n_bytes"),
-        F.col("is_dup").cast("long").alias("m1"),
-        _null("long").alias("m2"),
-    )
-    # video_dedup: sampled-frame pHash matching over animated GIFs — a
-    # re-encode and a head-trimmed copy cluster with their originals
-    vd = pipeline.q_dedup_video_phash(spark, sf_dir).select(
-        F.lit("video_dedup").alias("mode"),
-        F.col("video_id").alias("doc_id"),
-        F.col("keep_id").alias("seq"),
-        _null("string").alias("digest"),
-        F.col("n_frames").alias("n_bytes"),
-        F.col("is_dup").cast("long").alias("m1"),
-        _null("long").alias("m2"),
-    )
-    # img_dedup_inc: the delta-vs-corpus ingest path — the perturbed
-    # copies arrive as a delta; corpus-corpus pairs are provably absent
-    pin = pipeline.q_dedup_image_phash_inc(spark, sf_dir).select(
-        F.lit("img_dedup_inc").alias("mode"),
-        F.col("id_a").alias("doc_id"),
-        F.col("id_b").alias("seq"),
-        _null("string").alias("digest"),
-        F.col("hamming_dist").alias("n_bytes"),
-        _null("long").alias("m1"),
-        _null("long").alias("m2"),
-    )
-    return (
-        dec.unionByName(fr).unionByName(rs).unionByName(au)
-        .unionByName(ra).unionByName(ral)
-        .unionByName(ri).unionByName(rirgb)
-        .unionByName(rp).unionByName(rprgb)
-        .unionByName(rj).unionByName(rjrgb)
-        .unionByName(rg).unionByName(rgrgb)
-        .unionByName(pd_).unionByName(ad).unionByName(vd)
-        .unionByName(pin)
-    )
+    return _union(spark, sf_dir, _MULTIMODAL)
 
 
 # ---------------------------------------------------------- connector suites
+_REST = _Spec("src", "c1 string, c2 string, c3 string", (
+    ("tickets", "s1_rest_connector", "id", "status", "owner_name"),
+    ("messages", "s3_correlated_fetch", "ticket_id", "message", None),
+    ("users", "s4_point_lookup", "id", "name", "role"),
+))
+
+
 def q_s_rest_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REST connector end-to-end: S1/S2/S5 paginated scan, S3 correlated
     sub-entity fetch, S4 throttled point lookups behind a cache
     anti-join."""
-    s1 = connector.q_s1_rest_connector(spark, sf_dir).select(
-        F.lit("tickets").alias("src"),
-        F.col("id").alias("c1"),
-        F.col("status").alias("c2"),
-        F.col("owner_name").alias("c3"),
-    )
-    s3 = connector.q_s3_correlated_fetch(spark, sf_dir).select(
-        F.lit("messages").alias("src"),
-        F.col("ticket_id").alias("c1"),
-        F.col("message").alias("c2"),
-        _null("string").alias("c3"),
-    )
-    s4 = connector.q_s4_point_lookup(spark, sf_dir).select(
-        F.lit("users").alias("src"),
-        F.col("id").alias("c1"),
-        F.col("name").alias("c2"),
-        F.col("role").alias("c3"),
-    )
-    return s1.unionByName(s3).unionByName(s4)
+    return _union(spark, sf_dir, _REST)
+
+
+_CSV_GAZ = _Spec("src", "k string, name string, extra string", (
+    (
+        "csv", "s8_csv_scan",
+        _cast("n_nationkey", "string"), "n_name", _cast("n_regionkey", "string"),
+    ),
+    ("gaz", "s9_gazetteer_cached", _cast("gaz_id", "string"), "address", "address_cleaned"),
+))
 
 
 def q_s8_s9_csv_gazetteer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8 CSV scan + S9 gazetteer scan/normalize/cache."""
-    s8 = connector.q_s8_csv_scan(spark, sf_dir).select(
-        F.lit("csv").alias("src"),
-        F.col("n_nationkey").cast("string").alias("k"),
-        F.col("n_name").alias("name"),
-        F.col("n_regionkey").cast("string").alias("extra"),
-    )
-    s9 = connector.q_s9_gazetteer_cached(spark, sf_dir).select(
-        F.lit("gaz").alias("src"),
-        F.col("gaz_id").cast("string").alias("k"),
-        F.col("address").alias("name"),
-        F.col("address_cleaned").alias("extra"),
-    )
-    return s8.unionByName(s9)
+    return _union(spark, sf_dir, _CSV_GAZ)
 
 
 # --------------------------------------------------------- streaming suite
+def _id_pair(a: str, b: str):
+    return _packed("|", _cast(a, "string"), _cast(b, "string"))
+
+
+_STREAM = _Spec(
+    "mode",
+    "grp string, window_start timestamp, window_end timestamp, "
+    "n_events bigint, total_value double",
+    (
+        *(
+            (tag, key, None, "window_start", None, "n_events", "total_value")
+            for tag, key in (
+                ("tumbling", "stream_tumbling_6h"),
+                ("append", "stream_append_6h"),
+                ("upsert", "stream_upsert_6h"),
+                ("dedup", "stream_dedup_6h"),
+                ("merge_part", "stream_merge_partitioned"),
+            )
+        ),
+        # session windows are a batch query over the events table
+        (
+            "session", "stream_session_windows", _cast("user_id", "string"),
+            "session_start", "session_end", "n_events", None,
+        ),
+        (
+            "join", "stream_join_30m", _cast("user_id", "string"),
+            None, None, "n_pairs", "total_quote_value",
+        ),
+        # incdedup: streaming incremental near-dup MERGE over the
+        # documents corpus (batch N deduped vs batches 1..N−1)
+        (
+            "incdedup", "stream_incremental_dedup",
+            _id_pair("id_a", "id_b"), None, None, "id_b", "jaccard_sim",
+        ),
+        # scored_ingest: the same ingestion loop with the quality + ppl
+        # gates applied to each micro-batch BEFORE indexing
+        (
+            "scored_ingest", "stream_scored_ingest",
+            _id_pair("id_a", "id_b"), None, None, "id_b", "jaccard_sim",
+        ),
+        # incsem: streaming SemDeDup over the embeddings corpus — verdict
+        # table maintained by monotone kept-flips; drained == batch
+        (
+            "incsem", "stream_semantic_dedup",
+            _cast("vec_id", "string"), None, None, _cast("cluster_id", "bigint"),
+            # kept*10 + 6dp-rounded sim: exact in IEEE double on both engines
+            (
+                lambda: F.col("kept").cast("double") * 10 + F.col("centroid_sim"),
+                "CAST(kept AS DOUBLE) * 10 + centroid_sim",
+            ),
+        ),
+        # incphash: streaming perceptual MEDIA dedup — decode → dHash →
+        # delta-vs-corpus pairs against the stored fingerprint index
+        (
+            "incphash", "stream_media_dedup", _id_pair("id_a", "id_b"),
+            None, None, "id_b", _cast("hamming_dist", "double"),
+        ),
+        # incrollup: continuous aggregate via replay-safe keyed partials
+        (
+            "incrollup", "stream_hypertable_rollup",
+            "level", "bucket_ts", None, "n_events", "total_value",
+        ),
+        # incann: IVF index maintained by frozen-centroid assignment
+        # MERGEs, queried through the stored posting lists
+        (
+            "incann", "stream_ann_ingest", _id_pair("query_id", "corpus_id"),
+            None, None, _cast("rank", "bigint"), "cosine_sim",
+        ),
+        # increr: streaming entity resolution — each record batch
+        # resolved delta-vs-corpus against the stored assignment;
+        # drained table == full-batch resolve_entities
+        (
+            "increr", "stream_entity_resolution", _cast("rec_id", "string"),
+            None, None, "entity_id", _cast("n_records", "double"),
+        ),
+        # increridx: the same loop on the fully indexed state layout —
+        # ptable record/assignment state + the secondary block index,
+        # so per-batch scan I/O tracks the delta's neighborhood
+        (
+            "increridx", "stream_er_indexed", _cast("rec_id", "string"),
+            None, None, "entity_id", _cast("n_records", "double"),
+        ),
+        # gated: expectation-gated ingestion with a quarantine table —
+        # a batch with any failing check never reaches the kept table
+        ("gated", "stream_gated_ingest", "verdict", None, None, "doc_id", None),
+        # incgold: the golden dimension maintained by streaming ER —
+        # touched-entity golden MERGEs + the self-healing stale sweep
+        (
+            "incgold", "stream_er_golden", _packed("|", "name", "phone", "address"),
+            None, None, "entity_id", _cast("n_records", "double"),
+        ),
+    ),
+)
+
+
 def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.8 Structured Streaming, all modes under one row: tumbling 6-h
     windows (update), append-mode watermark finalization, foreachBatch
@@ -1420,425 +1185,31 @@ def q_stream_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-store instances per query are pure setup cost at gate-scale key
     counts; production streams size ``n_state_partitions`` to their key
     cardinality / cluster as the member docstrings describe."""
-    from concurrent.futures import ThreadPoolExecutor
-    from functools import reduce
-
-    from pyspark import inheritable_thread_target
-
-    from ..streaming.windows import state_partitions
-
-    def pair(a: str, b: str):
-        return F.concat_ws("|", F.col(a).cast("string"), F.col(b).cast("string"))
-
-    # one spec per member: (tag, member, then its expression for each of
-    # the output columns below — a column name, a Column, or None for a
-    # typed null). Rows are unioned in six_h, session, ingest order.
-    out_cols = (
-        ("grp", "string"),
-        ("window_start", "timestamp"),
-        ("window_end", "timestamp"),
-        ("n_events", "long"),
-        ("total_value", "double"),
-    )
-    six_h = [
-        (tag, fn, None, "window_start", None, "n_events", "total_value")
-        for tag, fn in (
-            ("tumbling", persistence.q_stream_tumbling_6h),
-            ("append", persistence.q_stream_append_6h),
-            ("upsert", persistence.q_stream_upsert_6h),
-            ("dedup", persistence.q_stream_dedup_6h),
-            ("merge_part", persistence.q_stream_merge_partitioned),
-        )
+    streamed = [
+        key for _tag, key, *_ in _STREAM.rows if key != "stream_session_windows"
     ]
-    session = (
-        "session", persistence.q_stream_session_windows,
-        F.col("user_id").cast("string"), "session_start", "session_end",
-        "n_events", None,
-    )
-    ingest = [
-        (
-            "join", persistence.q_stream_join_30m,
-            F.col("user_id").cast("string"), None, None,
-            "n_pairs", "total_quote_value",
-        ),
-        # incdedup: streaming incremental near-dup MERGE over the
-        # documents corpus (batch N deduped vs batches 1..N−1)
-        (
-            "incdedup", persistence.q_stream_incremental_dedup,
-            pair("id_a", "id_b"), None, None, "id_b", "jaccard_sim",
-        ),
-        # scored_ingest: the same ingestion loop with the quality + ppl
-        # gates applied to each micro-batch BEFORE indexing
-        (
-            "scored_ingest", persistence.q_stream_scored_ingest,
-            pair("id_a", "id_b"), None, None, "id_b", "jaccard_sim",
-        ),
-        # incsem: streaming SemDeDup over the embeddings corpus — verdict
-        # table maintained by monotone kept-flips; drained == batch
-        (
-            "incsem", persistence.q_stream_semantic_dedup,
-            F.col("vec_id").cast("string"), None, None,
-            F.col("cluster_id").cast("long"),
-            # kept*10 + 6dp-rounded sim: exact in IEEE double on both engines
-            F.col("kept").cast("double") * 10 + F.col("centroid_sim"),
-        ),
-        # incphash: streaming perceptual MEDIA dedup — decode → dHash →
-        # delta-vs-corpus pairs against the stored fingerprint index
-        (
-            "incphash", persistence.q_stream_media_dedup,
-            pair("id_a", "id_b"), None, None,
-            "id_b", F.col("hamming_dist").cast("double"),
-        ),
-        # incrollup: continuous aggregate via replay-safe keyed partials
-        (
-            "incrollup", persistence.q_stream_hypertable_rollup,
-            "level", "bucket_ts", None, "n_events", "total_value",
-        ),
-        # incann: IVF index maintained by frozen-centroid assignment
-        # MERGEs, queried through the stored posting lists
-        (
-            "incann", persistence.q_stream_ann_ingest,
-            pair("query_id", "corpus_id"), None, None,
-            F.col("rank").cast("long"), "cosine_sim",
-        ),
-        # increr: streaming entity resolution — each record batch
-        # resolved delta-vs-corpus against the stored assignment;
-        # drained table == full-batch resolve_entities
-        (
-            "increr", persistence.q_stream_entity_resolution,
-            F.col("rec_id").cast("string"), None, None,
-            "entity_id", F.col("n_records").cast("double"),
-        ),
-        # increridx: the same loop on the fully indexed state layout —
-        # ptable record/assignment state + the secondary block index,
-        # so per-batch scan I/O tracks the delta's neighborhood
-        (
-            "increridx", persistence.q_stream_er_indexed,
-            F.col("rec_id").cast("string"), None, None,
-            "entity_id", F.col("n_records").cast("double"),
-        ),
-        # gated: expectation-gated ingestion with a quarantine table —
-        # a batch with any failing check never reaches the kept table
-        (
-            "gated", persistence.q_stream_gated_ingest,
-            "verdict", None, None, "doc_id", None,
-        ),
-        # incgold: the golden dimension maintained by streaming ER —
-        # touched-entity golden MERGEs + the self-healing stale sweep
-        (
-            "incgold", persistence.q_stream_er_golden,
-            F.concat_ws("|", "name", "phone", "address"), None, None,
-            "entity_id", F.col("n_records").cast("double"),
-        ),
-    ]
-    # 15 threads for the 16 streaming members: the last one submitted
-    # (merge_part) starts when the first member finishes
-    with state_partitions(spark, 1), ThreadPoolExecutor(15) as ex:
+    # one thread per streaming member, so every member starts at once
+    with state_partitions(spark, 1), ThreadPoolExecutor(len(streamed)) as ex:
         # the member's jobs carry the caller's job group/description
         futs = {
-            tag: ex.submit(
-                inheritable_thread_target(spark)(fn), spark, sf_dir, None
+            key: ex.submit(
+                inheritable_thread_target(spark)(_MEMBERS[key]), spark, sf_dir, None
             )
-            for tag, fn, *_ in ingest + six_h
+            for key in streamed
         }
-        dfs = {tag: f.result() for tag, f in futs.items()}
-    # session windows are a batch query over the events table
-    dfs["session"] = session[1](spark, sf_dir)
-    return reduce(
-        DataFrame.unionByName,
-        (
-            dfs[tag].select(
-                F.lit(tag).alias("mode"),
-                *(
-                    (
-                        _null(t) if e is None
-                        else F.col(e) if isinstance(e, str) else e
-                    ).alias(c)
-                    for (c, t), e in zip(out_cols, exprs)
-                ),
-            )
-            for tag, _fn, *exprs in six_h + [session] + ingest
-        ),
-    )
+        frames = {key: f.result() for key, f in futs.items()}
+    return _union(spark, sf_dir, _STREAM, frames)
 
 
 # ------------------------------------------------------------------ oracles
-def _tagged(sql: str, cols: str) -> str:
-    return f"SELECT {cols} FROM ({sql})"
-
-
-_R = relational.ORACLES
-_P = pipeline.ORACLES
-_E = enrichment.ORACLES
-
-
-def _wav_expected_sql() -> str:
-    """Inline VALUES relation of the WAV fixtures' EXPECTED features —
-    computed from the raw sample arrays (pure integer math), independent
-    of the ``wave``-module decode the Spark side performs, so a hash
-    match here certifies a real decode."""
-    from ..operators.multimodal import wav_fixture_clips
-
-    from ..operators.multimodal import bmp_fixture_images
-
-    rows = []
-    for c in wav_fixture_clips():
-        rows.append(
-            f"('real_audio', {c['clip_id']}, {c['n_frames']}, "
-            f"'{c['content_md5']}', {c['n_bytes']}, "
-            f"{c['sample_rate']}, {c['duration_ms']})"
-        )
-        rows.append(
-            f"('real_audio_level', {c['clip_id']}, {c['n_channels']}, "
-            f"NULL, {c['n_bytes']}, {c['rms']}, {c['peak']})"
-        )
-    for c in bmp_fixture_images():
-        rows.append(
-            f"('real_image', {c['img_id']}, {c['n_pixels']}, "
-            f"'{c['content_md5']}', {c['n_bytes']}, "
-            f"{c['width']}, {c['height']})"
-        )
-        rows.append(
-            f"('real_image_rgb', {c['img_id']}, {c['n_pixels']}, "
-            f"NULL, {c['n_bytes']}, {c['mean_rgb']}, {c['n_pixels']})"
-        )
-    from ..operators.multimodal import jpeg_fixture_images, png_fixture_images
-
-    for c in png_fixture_images():
-        rows.append(
-            f"('real_png', {c['img_id']}, {c['n_pixels']}, "
-            f"'{c['content_md5']}', {c['n_bytes']}, "
-            f"{c['width']}, {c['height']})"
-        )
-        rows.append(
-            f"('real_png_rgb', {c['img_id']}, {c['n_pixels']}, "
-            f"NULL, {c['n_bytes']}, {c['mean_rgb']}, {c['n_pixels']})"
-        )
-    for c in jpeg_fixture_images():
-        rows.append(
-            f"('real_jpeg', {c['img_id']}, {c['n_pixels']}, "
-            f"'{c['content_md5']}', {c['n_bytes']}, "
-            f"{c['width']}, {c['height']})"
-        )
-        rows.append(
-            f"('real_jpeg_rgb', {c['img_id']}, {c['n_pixels']}, "
-            f"NULL, {c['n_bytes']}, {c['mean_rgb']}, {c['n_pixels']})"
-        )
-    from ..operators.multimodal import gif_fixture_images
-
-    for c in gif_fixture_images():
-        rows.append(
-            f"('real_gif', {c['img_id']}, {c['n_pixels']}, "
-            f"'{c['content_md5']}', {c['n_bytes']}, "
-            f"{c['width']}, {c['height']})"
-        )
-        rows.append(
-            f"('real_gif_rgb', {c['img_id']}, {c['n_pixels']}, "
-            f"NULL, {c['n_bytes']}, {c['mean_rgb']}, {c['n_pixels']})"
-        )
-    return (
-        "SELECT mode, CAST(doc_id AS BIGINT) AS doc_id, "
-        "CAST(seq AS BIGINT) AS seq, CAST(digest AS VARCHAR) AS digest, "
-        "CAST(n_bytes AS BIGINT) AS n_bytes, CAST(m1 AS BIGINT) AS m1, "
-        "CAST(m2 AS BIGINT) AS m2 FROM (VALUES "
-        + ", ".join(rows)
-        + ") AS t(mode, doc_id, seq, digest, n_bytes, m1, m2)"
-    )
-_K = persistence.ORACLES
-_C = connector.ORACLES
-
 ORACLES: dict[str, str] = {
-    "s7_w3_preview_limit": (
-        _tagged(_R["s7_preview"], "'s7_preview' AS mode, o_orderkey, o_totalprice")
-        + " UNION ALL "
-        + _tagged(_R["w3_ordered_limit"], "'w3_limit' AS mode, o_orderkey, o_totalprice")
-    ),
-    "j2_j4_semi_anti": (
-        _tagged(
-            _R["j2_anti_join"],
-            "'anti' AS mode, segment AS grp, n_customers_without_orders AS n",
-        )
-        + " UNION ALL "
-        + _tagged(_R["j4_semi_join"], "'semi' AS mode, status AS grp, n_orders AS n")
-        + " UNION ALL "
-        + _tagged(
-            _R["j8_range_join"],
-            "'range' AS mode, CAST(o_orderkey AS VARCHAR) AS grp, n_items AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["j8_range_join"],
-            "'range_qty' AS mode, CAST(o_orderkey AS VARCHAR) AS grp, "
-            "CAST(round(sum_qty * 100) AS BIGINT) AS n",
-        )
-    ),
-    "metrics_new_vs_existing": (
-        _tagged(
-            _R["metrics_counts"],
-            "'counts' AS mode, CAST(NULL AS VARCHAR) AS key_s, "
-            "n_new AS n1, n_existing AS n2, n_total AS n3, "
-            "CAST(NULL AS VARCHAR) AS top_s",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["profile_columns"],
-            "'profile' AS mode, \"column\" AS key_s, n_null AS n1, "
-            "n_distinct AS n2, top_n AS n3, top_value AS top_s",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["table_diff"],
-            "'diff' AS mode, diff_status AS key_s, n_keys AS n1, "
-            "n_changed_cols AS n2, CAST(NULL AS BIGINT) AS n3, "
-            "CAST(NULL AS VARCHAR) AS top_s",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["funnel"],
-            "'funnel' AS mode, step AS key_s, CAST(step_no AS BIGINT) AS n1, "
-            "n_users AS n2, CAST(NULL AS BIGINT) AS n3, "
-            "CAST(NULL AS VARCHAR) AS top_s",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["retention_cohorts"],
-            "'cohort' AS mode, CAST(cohort_week AS VARCHAR) AS key_s, "
-            "week_no AS n1, n_users AS n2, CAST(NULL AS BIGINT) AS n3, "
-            "CAST(NULL AS VARCHAR) AS top_s",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["entity_resolution"],
-            "'er' AS mode, name AS key_s, entity_id AS n1, "
-            "n_records AS n2, CAST(NULL AS BIGINT) AS n3, "
-            "concat_ws('|', phone, address) AS top_s",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["entity_resolution_multi"],
-            "'er_multi' AS mode, name AS key_s, entity_id AS n1, "
-            "n_records AS n2, CAST(NULL AS BIGINT) AS n3, "
-            "concat_ws('|', phone, address) AS top_s",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["entity_resolution_name"],
-            "'er_name' AS mode, name AS key_s, entity_id AS n1, "
-            "n_records AS n2, CAST(NULL AS BIGINT) AS n3, "
-            "concat_ws('|', phone, address) AS top_s",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["entity_resolution_inc"],
-            "'er_inc' AS mode, CAST(NULL AS VARCHAR) AS key_s, "
-            "rec_id AS n1, entity_id AS n2, n_records AS n3, "
-            "CAST(NULL AS VARCHAR) AS top_s",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["validate_expectations"],
-            "'expect' AS mode, \"check\" || '|' || \"column\" AS key_s, "
-            "violations AS n1, n_rows AS n2, "
-            "CAST(passed AS BIGINT) AS n3, CAST(NULL AS VARCHAR) AS top_s",
-        )
-    ),
-    "a2_a3_distinct_suite": (
-        _tagged(
-            _R["a2_distinct"],
-            "'pairs' AS mode, o_orderstatus AS k1, o_orderpriority AS k2",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["a3_multi_column_distinct"],
-            "'ids' AS mode, CAST(id AS VARCHAR) AS k1, CAST(NULL AS VARCHAR) AS k2",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["kmv_distinct"],
-            "'kmv' AS mode, o_orderstatus AS k1, "
-            "CAST(CAST(round(est_distinct * 100) AS BIGINT) AS VARCHAR) "
-            "|| '|' || CAST(n_kept AS VARCHAR) AS k2",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["bloom_membership"],
-            "'bloom' AS mode, c_mktsegment AS k1, "
-            "CAST(n_probed AS VARCHAR) || '|' || CAST(n_might AS VARCHAR) "
-            "|| '|' || CAST(n_members AS VARCHAR) AS k2",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["histogram_quantiles"],
-            "'hq' AS mode, o_orderstatus AS k1, "
-            "CAST(CAST(round(q * 100) AS BIGINT) AS VARCHAR) || '|' || "
-            "CAST(CAST(round(est * 100) AS BIGINT) AS VARCHAR) AS k2",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["pivot_unpivot"],
-            "'pivot' AS mode, o_orderpriority AS k1, "
-            "status || '|' || CAST(n_orders AS VARCHAR) AS k2",
-        )
-    ),
-    "w4_w5_window_sweep": (
-        _tagged(
-            _R["w4_lag_lead"],
-            "'lag_lead' AS mode, CAST(event_id AS VARCHAR) AS key_s, "
-            "user_id AS key_n, value_delta AS metric, gap_seconds AS extra_n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["w5_rolling_window"],
-            "'rolling' AS mode, priority AS key_s, day_no AS key_n, "
-            "rolling_7d AS metric, CAST(NULL AS BIGINT) AS extra_n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["w6_asof_join"],
-            "'asof' AS mode, CAST(event_id AS VARCHAR) AS key_s, "
-            "user_id AS key_n, quote_value AS metric, "
-            "quote_event_id AS extra_n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["w7_sessionize"],
-            "'session' AS mode, CAST(session_no AS VARCHAR) || '|' || "
-            "CAST(duration_s AS VARCHAR) AS key_s, user_id AS key_n, "
-            "total_value AS metric, n_events AS extra_n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["zscore"],
-            "'zscore' AS mode, event_type AS key_s, event_id AS key_n, "
-            "zscore AS metric, CAST(NULL AS BIGINT) AS extra_n",
-        )
-    ),
-    "skew_suite": (
-        _tagged(
-            _R["skew_salted_sum"],
-            "'agg' AS mode, l_returnflag AS grp, sum_qty AS total, n_rows AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["skew_salted_join"],
-            "'join' AS mode, o_orderstatus AS grp, total_price AS total, n_items AS n",
-        )
-    ),
-    "setops_suite": (
-        _tagged(
-            _R["e1_except_keys"],
-            "'except' AS mode, o_custkey AS key, CAST(NULL AS VARCHAR) AS tag",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["e2_intersect_keys"],
-            "'intersect' AS mode, o_custkey AS key, CAST(NULL AS VARCHAR) AS tag",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["e3_union_all"], "'union' AS mode, o_orderkey AS key, bucket AS tag"
-        )
-    ),
+    "s7_w3_preview_limit": _union_sql(_S7_W3),
+    "j2_j4_semi_anti": _union_sql(_J2_J4),
+    "metrics_new_vs_existing": _union_sql(_METRICS),
+    "a2_a3_distinct_suite": _union_sql(_A2_A3),
+    "w4_w5_window_sweep": _union_sql(_W4_W5),
+    "skew_suite": _union_sql(_SKEW),
+    "setops_suite": _union_sql(_SETOPS),
     "f1_f6_string_ops": r"""
         SELECT doc_id,
                coalesce(nullif(regexp_extract(text, '\b(spark|hash|merge)\b', 1), ''),
@@ -1846,214 +1217,8 @@ ORACLES: dict[str, str] = {
                array_to_string(string_split_regex(trim(text), '\s+')[1:5], ',') AS first_tokens
         FROM documents
     """,
-    "f7_f9_time_buckets": (
-        _tagged(
-            _R["f7_tz_manila"],
-            "'manila_daily' AS mode, CAST(manila_date AS TIMESTAMP) AS bucket_ts, "
-            "n_events, CAST(NULL AS DOUBLE) AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["f8_tumbling_6h"],
-            "'utc_6h' AS mode, window_start AS bucket_ts, n_events, total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["f9_month_bounds"],
-            "'month_start' AS mode, month_start AS bucket_ts, "
-            "n_orders AS n_events, CAST(NULL AS DOUBLE) AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["f9_month_bounds"],
-            "'month_end' AS mode, CAST(month_end_day AS TIMESTAMP) AS bucket_ts, "
-            "n_orders AS n_events, CAST(NULL AS DOUBLE) AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["ht_rollup"],
-            "'ht_' || level AS mode, bucket_ts, n_events, total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _R["gap_fill"],
-            "'gf_' || event_type AS mode, bucket_ts, "
-            "CAST(is_gap AS BIGINT) AS n_events, total_value",
-        )
-    ),
-    "text_corpus_stats": (
-        _tagged(
-            _P["text_tfidf_top_terms"],
-            "'tfidf' AS mode, term AS key_s, doc_id AS key_n, "
-            'tfidf AS metric, CAST("rank" AS BIGINT) AS n',
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_stratified_sample"],
-            "'sample' AS mode, lang AS key_s, CAST(NULL AS BIGINT) AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, n_kept AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_repetition"],
-            "'rep_token' AS mode, CAST(NULL AS VARCHAR) AS key_s, "
-            "doc_id AS key_n, dup_token_frac AS metric, n_tokens AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_repetition"],
-            "'rep_shingle' AS mode, CAST(NULL AS VARCHAR) AS key_s, "
-            "doc_id AS key_n, dup_shingle_frac AS metric, n_shingles AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_pii_scrub"],
-            "'pii' AS mode, md5(text_redacted) AS key_s, c_custkey AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, "
-            "n_email * 10000 + n_phone * 100 + n_ipv4 AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_heavy_hitters"],
-            "'cms' AS mode, token AS key_s, est_count AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, n_true AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_group_sample"],
-            "'ksample' AS mode, lang AS key_s, doc_id AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, sample_rank AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_url_domains"],
-            "'url' AS mode, registered_domain AS key_s, n_docs AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, n_urls AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_quality_filter"],
-            "'qfilter' AS mode, reasons AS key_s, doc_id AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, "
-            "CAST(keep AS BIGINT) * 100000 + n_tokens AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_bm25_search"],
-            "'bm25' AS mode, CAST(NULL AS VARCHAR) AS key_s, doc_id AS key_n, "
-            "score AS metric, n_matched AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_decontaminate"],
-            "'decontam' AS mode, CAST(NULL AS VARCHAR) AS key_s, key AS key_n, "
-            "hit_frac AS metric, n_hit_grams AS n",
-        )
-        + " UNION ALL SELECT 'shard' AS mode, CAST(NULL AS VARCHAR) AS key_s, "
-        "shard_id AS key_n, CAST(sum(n_tokens) AS DOUBLE) AS metric, "
-        "count(*) AS n FROM ("
-        + _P["text_shard_pack"]
-        + ") GROUP BY shard_id"
-        + " UNION ALL "
-        + _tagged(
-            _P["text_mixture_sample"],
-            "'mixture' AS mode, lang AS key_s, n_docs AS key_n, "
-            "accept_rate AS metric, n_tokens_kept AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_quality_model"],
-            "'qmodel' AS mode, CAST(NULL AS VARCHAR) AS key_s, "
-            "doc_id AS key_n, score AS metric, n_tokens AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_temperature_sample"],
-            "'tsample' AS mode, lang AS key_s, n_docs AS key_n, "
-            "accept_rate AS metric, n_tokens_kept AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_fuzzy_decontaminate"],
-            "'fdecontam' AS mode, CAST(NULL AS VARCHAR) AS key_s, "
-            "doc_id AS key_n, max_jaccard AS metric, n_eval_matches AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_lm_perplexity"],
-            "'ppl' AS mode, ppl_bucket AS key_s, doc_id AS key_n, "
-            "avg_nll AS metric, n_bigrams AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_dsir_weight"],
-            "'dsir' AS mode, CAST(milli_weight AS VARCHAR) AS key_s, "
-            "doc_id AS key_n, avg_log_ratio AS metric, n_feats AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_dsir_resample"],
-            "'dsirsel' AS mode, CAST(sel_milli AS VARCHAR) AS key_s, "
-            "doc_id AS key_n, CAST(NULL AS DOUBLE) AS metric, "
-            "sel_rank AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_bpe_encode"],
-            "'bpe' AS mode, CAST(n_words AS VARCHAR) AS key_s, "
-            "doc_id AS key_n, CAST(NULL AS DOUBLE) AS metric, "
-            "n_bpe_tokens AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_pagerank"],
-            "'pr' AS mode, domain AS key_s, \"rank\" AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, "
-            "out_deg * 1000 + in_deg AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_pagerank_rd"],
-            "'pr2' AS mode, domain AS key_s, \"rank\" AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, "
-            "out_deg * 1000 + in_deg AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_pagerank_es"],
-            "'pres' AS mode, domain AS key_s, \"rank\" AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, "
-            "out_deg * 1000 + in_deg AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_communities"],
-            "'truss' AS mode, domain || '>' || community AS key_s, "
-            "CAST(NULL AS BIGINT) AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, community_size AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_communities_capped"],
-            "'cap' AS mode, domain || '>' || community AS key_s, "
-            "CAST(NULL AS BIGINT) AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, community_size AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_communities_inc"],
-            "'trussinc' AS mode, domain || '>' || community AS key_s, "
-            "CAST(NULL AS BIGINT) AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, community_size AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_communities_merge"],
-            "'trussmrg' AS mode, domain || '>' || community AS key_s, "
-            "CAST(NULL AS BIGINT) AS key_n, "
-            "CAST(NULL AS DOUBLE) AS metric, community_size AS n",
-        )
-    ),
+    "f7_f9_time_buckets": _union_sql(_F7_F9),
+    "text_corpus_stats": _union_sql(_TEXT),
     "f11_f12_schedule_safecast": """
         SELECT event_id,
                make_timestamp(epoch_us(CAST(CAST(ts AS DATE) AS TIMESTAMP))
@@ -2064,353 +1229,19 @@ ORACLES: dict[str, str] = {
                CAST(NULL AS TIMESTAMP) AS safe_ts
         FROM events
     """,
-    "dedup_exact_suite": (
-        _tagged(
-            _P["dedup_exact"],
-            "'doc' AS mode, content_hash AS h, keep_id AS key_id, n_copies AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_paragraph_dedup"],
-            "'para' AS mode, dedup_hash AS h, key AS key_id, "
-            "n_segments * 100 + n_dropped AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["dedup_apply"],
-            "'apply' AS mode, content_hash AS h, keep_id AS key_id, "
-            "n_merged AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["curation_pipeline"],
-            "'curation' AS mode, stage || '|' || rows_in || '|' || rows_out"
-            " || '|' || tokens_out || '|' || bpe_tokens_out AS h, "
-            "stage_no AS key_id, rows_out AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["curation_scored_pipeline"],
-            "'curation_scored' AS mode, stage || '|' || rows_in || '|' || "
-            "rows_out || '|' || tokens_out || '|' || bpe_tokens_out AS h, "
-            "stage_no AS key_id, rows_out AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["curation_semantic_pipeline"],
-            "'curation_sem' AS mode, stage || '|' || rows_in || '|' || "
-            "rows_out || '|' || tokens_out || '|' || bpe_tokens_out AS h, "
-            "stage_no AS key_id, rows_out AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["text_substring_dedup"],
-            "'substr' AS mode, dedup_hash AS h, doc_id AS key_id, "
-            "n_tokens * 100000 + n_removed AS n",
-        )
-    ),
-    "dedup_simhash_suite": (
-        _tagged(
-            _P["dedup_simhash"],
-            "'cluster' AS mode, simhash AS a, CAST(keep_id AS VARCHAR) AS b, "
-            "CAST(n_docs AS BIGINT) AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["dedup_simhash_near"],
-            "'near' AS mode, CAST(id_a AS VARCHAR) AS a, CAST(id_b AS VARCHAR) AS b, "
-            "CAST(hamming_dist AS BIGINT) AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["dedup_minhash_salvage"],
-            "'mh_salvage' AS mode, CAST(id_a AS VARCHAR) AS a, "
-            "CAST(id_b AS VARCHAR) AS b, "
-            "CAST(round(jaccard_sim * 1e6) AS BIGINT) AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["dedup_semantic"],
-            "'semdedup' AS mode, CAST(vec_id AS VARCHAR) AS a, "
-            "CAST(cluster_id AS VARCHAR) AS b, "
-            "CAST(kept AS BIGINT) * 10000000 "
-            "+ CAST(round(centroid_sim * 1e6) AS BIGINT) + 1000000 AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["dedup_semantic_inc"],
-            "'semdedup_inc' AS mode, CAST(vec_id AS VARCHAR) AS a, "
-            "CAST(cluster_id AS VARCHAR) AS b, "
-            "CAST(kept AS BIGINT) * 10000000 "
-            "+ CAST(round(centroid_sim * 1e6) AS BIGINT) + 1000000 AS n",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["dedup_semantic_routed"],
-            "'semdedup_routed' AS mode, CAST(vec_id AS VARCHAR) AS a, "
-            "coalesce(CAST(cluster_id AS VARCHAR), '-') AS b, "
-            "CAST(kept AS BIGINT) * 10000000 "
-            "+ CAST(round(coalesce(centroid_sim, -2.0) * 1e6) AS BIGINT) "
-            "+ 2000000 AS n",
-        )
-    ),
-    "text_metrics": (
-        "SELECT q.*, t.ws_tokens, t.bpe_tokens, t.approx_llm_tokens FROM ("
-        + _P["text_quality_score"]
+    "dedup_exact_suite": _union_sql(_DEDUP_EXACT),
+    "dedup_simhash_suite": _union_sql(_SIMHASH),
+    "text_metrics": "SELECT q.*, t.ws_tokens, t.bpe_tokens, t.approx_llm_tokens FROM ("
+        + _TWINS["text_quality_score"]
         + ") q JOIN ("
-        + _P["text_token_counts"]
-        + ") t USING (doc_id)"
-    ),
-    "ann_suite": " UNION ALL ".join(
-        _tagged(sql, f"'{tag}' AS variant, query_id, corpus_id, cosine_sim, \"rank\"")
-        for tag, sql in (
-            ("cosine", _P["ann_cosine_topk"]),
-            ("project", _P["ann_project_topk"]),
-            ("sq", _P["ann_sq_topk"]),
-            ("ivfsq", _P["ann_ivfsq_topk"]),
-            ("ivf", _P["ann_ivf_topk"]),
-            ("filtered", _P["ann_filtered_topk"]),
-            ("ivf_multiprobe", _P["ann_ivf_multiprobe_topk"]),
-            ("rh_lsh", _P["ann_rh_lsh_topk"]),
-            ("rh_multiprobe", _P["ann_rh_multiprobe_topk"]),
-        )
-    )
-    + " UNION ALL "
-    + _tagged(
-        _P["ann_pq_topk"],
-        "'pq' AS variant, query_id, corpus_id, approx_dist AS cosine_sim, \"rank\"",
-    )
-    + " UNION ALL "
-    + _tagged(
-        _P["ann_ivfpq_topk"],
-        "'ivfpq' AS variant, query_id, corpus_id, "
-        "approx_dist AS cosine_sim, \"rank\"",
-    )
-    + " UNION ALL "
-    + _tagged(
-        _P["ann_encode_topk"],
-        "'encode' AS variant, query_id, corpus_id, cosine_sim, \"rank\"",
-    ),
-    "u2_geocode_suite": (
-        _tagged(
-            _E["u2_geocode_two_phase"],
-            "'two_phase' AS mode, address, matched_address, geo_level AS info, "
-            "CAST(NULL AS DOUBLE) AS latitude, CAST(NULL AS DOUBLE) AS longitude, score",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _E["u2_geocode_fallback"],
-            "'fallback' AS mode, address, matched_address, source AS info, "
-            "latitude, longitude, CAST(NULL AS DOUBLE) AS score",
-        )
-    ),
-    "multimodal_suite": (
-        _tagged(
-            _E["multimodal_decode"],
-            "'decode' AS mode, doc_id, CAST(NULL AS BIGINT) AS seq, "
-            "content_md5 AS digest, n_bytes, fake_width AS m1, fake_height AS m2",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["multimodal_frames"],
-            "'frames' AS mode, doc_id, CAST(frame_no AS BIGINT) AS seq, "
-            "frame_md5 AS digest, frame_bytes AS n_bytes, "
-            "CAST(NULL AS BIGINT) AS m1, CAST(NULL AS BIGINT) AS m2",
-        )
-        + """ UNION ALL
-        SELECT 'resize' AS mode, doc_id, CAST(NULL AS BIGINT) AS seq,
-               md5(text || '640x480') AS digest,
-               CAST(strlen(text) AS BIGINT) AS n_bytes,
-               CAST(640 AS BIGINT) AS m1, CAST(480 AS BIGINT) AS m2
-        FROM documents
-        UNION ALL
-        SELECT 'audio' AS mode, doc_id, CAST(NULL AS BIGINT) AS seq,
-               CAST(NULL AS VARCHAR) AS digest,
-               CAST(strlen(text) AS BIGINT) AS n_bytes,
-               CAST(16000 AS BIGINT) AS m1,
-               CAST(strlen(text) AS BIGINT) * 1000 // 16000 AS m2
-        FROM documents
-        UNION ALL
-        """
-        + _wav_expected_sql()
-        + " UNION ALL "
-        + _tagged(
-            _P["dedup_image_phash"],
-            "'img_dedup' AS mode, img_id AS doc_id, keep_id AS seq, "
-            "dhash AS digest, CAST(NULL AS BIGINT) AS n_bytes, "
-            "is_dup AS m1, CAST(NULL AS BIGINT) AS m2",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["dedup_audio_fp"],
-            "'audio_dedup' AS mode, clip_id AS doc_id, keep_id AS seq, "
-            "fp AS digest, CAST(NULL AS BIGINT) AS n_bytes, "
-            "is_dup AS m1, CAST(NULL AS BIGINT) AS m2",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["dedup_video_phash"],
-            "'video_dedup' AS mode, video_id AS doc_id, keep_id AS seq, "
-            "CAST(NULL AS VARCHAR) AS digest, n_frames AS n_bytes, "
-            "is_dup AS m1, CAST(NULL AS BIGINT) AS m2",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _P["dedup_image_phash_inc"],
-            "'img_dedup_inc' AS mode, id_a AS doc_id, id_b AS seq, "
-            "CAST(NULL AS VARCHAR) AS digest, hamming_dist AS n_bytes, "
-            "CAST(NULL AS BIGINT) AS m1, CAST(NULL AS BIGINT) AS m2",
-        )
-    ),
-    "s_rest_suite": (
-        _tagged(
-            _C["s1_rest_connector"],
-            "'tickets' AS src, id AS c1, status AS c2, owner_name AS c3",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _C["s3_correlated_fetch"],
-            "'messages' AS src, ticket_id AS c1, message AS c2, CAST(NULL AS VARCHAR) AS c3",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _C["s4_point_lookup"], "'users' AS src, id AS c1, name AS c2, role AS c3"
-        )
-    ),
-    "s8_s9_csv_gazetteer": (
-        _tagged(
-            _C["s8_csv_scan"],
-            "'csv' AS src, CAST(n_nationkey AS VARCHAR) AS k, n_name AS name, "
-            "CAST(n_regionkey AS VARCHAR) AS extra",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _C["s9_gazetteer_cached"],
-            "'gaz' AS src, CAST(gaz_id AS VARCHAR) AS k, address AS name, "
-            "address_cleaned AS extra",
-        )
-    ),
-    "stream_suite": (
-        " UNION ALL ".join(
-            _tagged(
-                _K[name],
-                f"'{tag}' AS mode, CAST(NULL AS VARCHAR) AS grp, window_start, "
-                "CAST(NULL AS TIMESTAMP) AS window_end, n_events, total_value",
-            )
-            for tag, name in (
-                ("tumbling", "stream_tumbling_6h"),
-                ("append", "stream_append_6h"),
-                ("upsert", "stream_upsert_6h"),
-                ("dedup", "stream_dedup_6h"),
-                ("merge_part", "stream_merge_partitioned"),
-            )
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_session_windows"],
-            "'session' AS mode, CAST(user_id AS VARCHAR) AS grp, "
-            "session_start AS window_start, session_end AS window_end, "
-            "n_events, CAST(NULL AS DOUBLE) AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_join_30m"],
-            "'join' AS mode, CAST(user_id AS VARCHAR) AS grp, "
-            "CAST(NULL AS TIMESTAMP) AS window_start, "
-            "CAST(NULL AS TIMESTAMP) AS window_end, "
-            "n_pairs AS n_events, total_quote_value AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_incremental_dedup"],
-            "'incdedup' AS mode, "
-            "CAST(id_a AS VARCHAR) || '|' || CAST(id_b AS VARCHAR) AS grp, "
-            "CAST(NULL AS TIMESTAMP) AS window_start, "
-            "CAST(NULL AS TIMESTAMP) AS window_end, "
-            "id_b AS n_events, jaccard_sim AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_scored_ingest"],
-            "'scored_ingest' AS mode, "
-            "CAST(id_a AS VARCHAR) || '|' || CAST(id_b AS VARCHAR) AS grp, "
-            "CAST(NULL AS TIMESTAMP) AS window_start, "
-            "CAST(NULL AS TIMESTAMP) AS window_end, "
-            "id_b AS n_events, jaccard_sim AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_semantic_dedup"],
-            "'incsem' AS mode, CAST(vec_id AS VARCHAR) AS grp, "
-            "CAST(NULL AS TIMESTAMP) AS window_start, "
-            "CAST(NULL AS TIMESTAMP) AS window_end, "
-            "CAST(cluster_id AS BIGINT) AS n_events, "
-            "CAST(kept AS DOUBLE) * 10 + centroid_sim AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_media_dedup"],
-            "'incphash' AS mode, "
-            "CAST(id_a AS VARCHAR) || '|' || CAST(id_b AS VARCHAR) AS grp, "
-            "CAST(NULL AS TIMESTAMP) AS window_start, "
-            "CAST(NULL AS TIMESTAMP) AS window_end, "
-            "id_b AS n_events, CAST(hamming_dist AS DOUBLE) AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_hypertable_rollup"],
-            "'incrollup' AS mode, level AS grp, "
-            "bucket_ts AS window_start, "
-            "CAST(NULL AS TIMESTAMP) AS window_end, "
-            "n_events, total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_ann_ingest"],
-            "'incann' AS mode, "
-            "CAST(query_id AS VARCHAR) || '|' || CAST(corpus_id AS VARCHAR)"
-            " AS grp, "
-            "CAST(NULL AS TIMESTAMP) AS window_start, "
-            "CAST(NULL AS TIMESTAMP) AS window_end, "
-            "CAST(\"rank\" AS BIGINT) AS n_events, "
-            "cosine_sim AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_entity_resolution"],
-            "'increr' AS mode, CAST(rec_id AS VARCHAR) AS grp, "
-            "CAST(NULL AS TIMESTAMP) AS window_start, "
-            "CAST(NULL AS TIMESTAMP) AS window_end, "
-            "entity_id AS n_events, "
-            "CAST(n_records AS DOUBLE) AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_er_indexed"],
-            "'increridx' AS mode, CAST(rec_id AS VARCHAR) AS grp, "
-            "CAST(NULL AS TIMESTAMP) AS window_start, "
-            "CAST(NULL AS TIMESTAMP) AS window_end, "
-            "entity_id AS n_events, "
-            "CAST(n_records AS DOUBLE) AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_gated_ingest"],
-            "'gated' AS mode, verdict AS grp, "
-            "CAST(NULL AS TIMESTAMP) AS window_start, "
-            "CAST(NULL AS TIMESTAMP) AS window_end, "
-            "doc_id AS n_events, CAST(NULL AS DOUBLE) AS total_value",
-        )
-        + " UNION ALL "
-        + _tagged(
-            _K["stream_er_golden"],
-            "'incgold' AS mode, concat_ws('|', name, phone, address) AS grp, "
-            "CAST(NULL AS TIMESTAMP) AS window_start, "
-            "CAST(NULL AS TIMESTAMP) AS window_end, "
-            "entity_id AS n_events, "
-            "CAST(n_records AS DOUBLE) AS total_value",
-        )
-    ),
+        + _TWINS["text_token_counts"]
+        + ") t USING (doc_id)",
+    "ann_suite": _union_sql(_ANN),
+    "u2_geocode_suite": _union_sql(_GEOCODE),
+    "multimodal_suite": _union_sql(_MULTIMODAL),
+    "s_rest_suite": _union_sql(_REST),
+    "s8_s9_csv_gazetteer": _union_sql(_CSV_GAZ),
+    "stream_suite": _union_sql(_STREAM),
 }
 
 QUERIES = {

@@ -654,21 +654,23 @@ def stream_scored_ingest(
     (no batch- or order-dependence; the reference model is built from
     the STATIC English subset, not the stream), so a crash-replayed
     batch gates identically and the two idempotent keyed MERGEs behave
-    exactly as in the ungated operator. A production pass would persist
-    the tiny LM relations instead of re-aggregating the reference per
-    batch — the scoring plan is unchanged; only the model build is
-    amortized.
+    exactly as in the ungated operator. The reference model is built
+    once per call (``lm_reference_model``) and every batch is scored
+    against it (``lm_score``) — the scoring plan is the batch scorer's.
 
     Drained-output contract (the oracle): accepted docs = the batch
     gate→ppl composition over the whole table, and the pair table = the
     full-corpus batch LSH over exactly those docs, independent of the
     batch split."""
-    from ..operators.textops import lm_perplexity_score, quality_filter
+    from ..operators.textops import lm_reference_model, lm_score, quality_filter
     from ..sources.tables import load_table
 
     en_ref = load_table(spark, sf_dir, table).where(
         F.col("lang") == "en"
     ).select("doc_id", "text")
+    # one reference model per stream: every micro-batch is scored
+    # against it and reads its persisted reference aggregate
+    lm = lm_reference_model(en_ref, lm_buckets)
 
     def gate(delta: DataFrame) -> DataFrame:
         qf = quality_filter(delta)
@@ -678,9 +680,7 @@ def stream_scored_ingest(
         # head_nll must sit at or below tail_nll: the bucket CASE tests
         # head first, so a head cut above the tail cut would relabel
         # (tail_nll, head_nll) docs 'head' and sneak them past the gate
-        ppl = lm_perplexity_score(
-            kept, en_ref, lm_buckets, head_nll=head_nll, tail_nll=tail_nll
-        )
+        ppl = lm_score(kept, lm, head_nll=head_nll, tail_nll=tail_nll)
         return kept.join(
             ppl.where(F.col("ppl_bucket") != "tail").select("doc_id"),
             "doc_id",

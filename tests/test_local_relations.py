@@ -9,6 +9,7 @@ from __future__ import annotations
 import ast
 import decimal
 import os
+import re
 
 import pytest
 from pyspark.sql import types as T
@@ -273,3 +274,70 @@ def test_streaming_members_share_one_scaffold():
     multi-path tail reads."""
     path = os.path.join(PKG, "streaming", "windows.py")
     assert _streaming_scaffold_offenders(path) == []
+
+
+_TAG_ALIASES = {"mode", "variant", "src"}
+_TAG_SQL = re.compile(r'\bAS\s+"?(mode|variant|src)\b|\bUNION\s+ALL\b', re.I)
+
+
+def _suite_layer_offenders(path: str) -> list[str]:
+    """Sites in ``path`` (plans/suites.py) that hand-write a union branch
+    instead of a spec row: a tag-column alias outside ``_union``, a
+    ``UNION ALL`` or tag-column ``AS`` outside ``_union_sql`` and the
+    explicit ``_Rel`` relations, and any ``_tagged``."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    spans = {
+        node.name: range(node.lineno, node.end_lineno + 1)
+        for node in tree.body
+        if isinstance(node, ast.FunctionDef)
+    }
+    docstrings, rels = set(), set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.FunctionDef, ast.ClassDef)) and (
+            ast.get_docstring(node) is not None
+        ):
+            docstrings.add(id(node.body[0].value))
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Name)
+            and node.func.id == "_Rel"
+        ):
+            rels.update(range(node.lineno, node.end_lineno + 1))
+    hits = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "alias"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value in _TAG_ALIASES
+            and node.lineno not in spans.get("_union", ())
+        ):
+            hits.append(f"{node.lineno} tag alias outside _union")
+        if (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docstrings
+            and _TAG_SQL.search(node.value)
+            and node.lineno not in spans.get("_union_sql", ())
+            and node.lineno not in rels
+        ):
+            hits.append(f"{node.lineno} hand-written SQL branch")
+        if (isinstance(node, ast.Name) and node.id == "_tagged") or (
+            isinstance(node, ast.FunctionDef) and node.name == "_tagged"
+        ):
+            hits.append(f"{node.lineno} _tagged")
+    return hits
+
+
+def test_suites_are_spec_tables():
+    """Every union suite in plans/suites.py is one spec table read by both
+    engines: only ``_union`` aliases the tag column on Spark, and only
+    ``_union_sql`` (plus the explicit ``_Rel`` relations, which keep a
+    plan shape a projection cannot express) writes a ``UNION ALL`` or a
+    tag-column ``AS``. ``_tagged``, the old per-branch SQL wrapper, is
+    gone."""
+    path = os.path.join(PKG, "plans", "suites.py")
+    assert _suite_layer_offenders(path) == []

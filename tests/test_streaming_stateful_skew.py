@@ -495,15 +495,19 @@ def test_stream_media_dedup_restart_exactly_once(spark, tmp_path):
     assert len(idx) == len(imgs) == len({r["key"] for r in idx})
 
 
-def test_stream_scored_ingest_equals_batch_composition(spark):
+def test_stream_scored_ingest_equals_batch_composition(spark, monkeypatch):
     """Scored continuous ingestion (gate → ppl → incremental dedup per
     micro-batch) drains to exactly the batch composition: quality+ppl
     gates over the whole table, then full-corpus LSH pairs. Gates are
     pure per-doc maps, so the result is independent of the batch split —
     and the crash-replay argument of
     test_stream_incremental_dedup_restart_exactly_once carries over
-    unchanged (the gate adds no batch- or order-dependence)."""
+    unchanged (the gate adds no batch- or order-dependence). The
+    reference LM is built once for the whole 3-batch stream, not once
+    per micro-batch."""
     from pyspark.sql import functions as F
+
+    from mgo_liveagent_data_pipeline_spark.operators import textops
 
     from mgo_liveagent_data_pipeline_spark.operators.dedup import (
         minhash_lsh_dedup,
@@ -524,6 +528,14 @@ def test_stream_scored_ingest_equals_batch_composition(spark):
         stream_scored_ingest,
     )
 
+    builds = []
+
+    def counting_build(*args, **kwargs):
+        builds.append(args)
+        return build(*args, **kwargs)
+
+    build = textops.lm_reference_model
+    monkeypatch.setattr(textops, "lm_reference_model", counting_build)
     sf = "/root/testdata/sf0.001"
     base = scratch_dir("mgo_test_scored_ingest_")
     pairs_path, corpus_path = stream_scored_ingest(
@@ -531,6 +543,8 @@ def test_stream_scored_ingest_equals_batch_composition(spark):
         lm_buckets=LM_BUCKETS, head_nll=LM_HEAD_NLL, tail_nll=LM_TAIL_NLL,
         n_state_partitions=1,
     )
+    assert len(builds) == 1, "one reference-model build per stream"
+    monkeypatch.undo()
     streamed = {
         (r["id_a"], r["id_b"], r["jaccard_sim"])
         for r in spark.read.parquet(pairs_path).collect()

@@ -31,7 +31,8 @@ ones; no name runs every case.
 Environment: ``SPARK_GRAFT_SF_DIR`` (base data, as for ``bench.py``),
 ``SPARK_GRAFT_CPUS`` (local cores), ``SCALE_PROBE_REPS`` (scale: timed
 runs per side, fastest kept; 2), ``PROFILE_REPS`` (profile: 3),
-``PLANS_DIR`` (profile: plans/r12).
+``PLANS_DIR`` (profile: where the plans go; unset, a fresh temporary
+directory whose path the header line prints).
 
 Every 1×-vs-N× figure comes from :meth:`Harness.pair`: warm at 1×, time
 1×, time N×, each run in its own job group so its job count is reported
@@ -507,10 +508,10 @@ def profile(tag: str, names: list[str]) -> None:
     column pruning; ``.count()`` keeps continuity with ``bench.py``."""
     _known(names, ALL_QUERIES)
     reps = int(os.environ.get("PROFILE_REPS", "3"))
-    plans = os.environ.get("PLANS_DIR", "plans/r12")
+    plans = os.environ.get("PLANS_DIR") or tempfile.mkdtemp(prefix="mgo_plans_")
     os.makedirs(plans, exist_ok=True)
     with Harness("measure_profile") as h:
-        print(f"# sf_dir={SF_DIR} reps={reps} tag={tag}")
+        print(f"# sf_dir={SF_DIR} reps={reps} tag={tag} plans={plans}")
         print(f"{'query':32s} {'noop_s':>8s} {'count_s':>8s} {'exch':>5s} {'jobs':>5s}")
         for name in names or HEADLINE:
             fn = ALL_QUERIES[name]

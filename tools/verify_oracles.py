@@ -1,8 +1,9 @@
 """Local stand-in for the driver's correctness gate.
 
 Runs every QUERIES entry at sf0.01 on Spark, runs the matching ORACLES SQL
-on DuckDB over the same parquet, and compares row count + schema-width +
-order-insensitive values (columns sorted by name, rows sorted, exact match
+on DuckDB over the same parquet, and compares column names (the oracle's
+from its result schema, so an empty result is checked too), row count +
+schema-width + order-insensitive values (columns sorted by name, rows sorted, exact match
 for ints/strings, near-exact for doubles after the queries' own rounding).
 
 Usage: python tools/verify_oracles.py [query ...]
@@ -110,14 +111,15 @@ def main():
             n_noracle += 1
             continue
         try:
-            ddf = con.execute(sql).fetch_arrow_table().to_pylist()
-            drows = [tuple(r[c] for c in sorted(ddf[0].keys())) for r in ddf] if ddf else []
-            dcols = sorted(ddf[0].keys()) if ddf else []
+            dtab = con.execute(sql).fetch_arrow_table()
+            # names from the schema, so an empty result is checked too
+            dcols = sorted(dtab.column_names)
+            drows = [tuple(r[c] for c in dcols) for r in dtab.to_pylist()]
         except Exception as e:
             print(f"FAIL  {name}: DUCKDB ERROR {str(e)[:300]}")
             n_fail += 1
             continue
-        if drows and dcols != cols:
+        if dcols != cols:
             print(f"FAIL  {name}: COLS spark={cols} duck={dcols}")
             n_fail += 1
             continue
