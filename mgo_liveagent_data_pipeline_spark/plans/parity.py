@@ -48,6 +48,7 @@ from ..pipelines import overlap
 from ..scratch import scratch_dir
 from ..sources.tables import load_table, local_table
 from .enrichment import _GRAMS3, _JAC3, _hexn
+from .pipeline import _ledger
 
 # fixed extraction clocks (UTC instants; +8h Manila after normalization)
 _NOW1 = "2024-02-01 12:00:00"
@@ -457,25 +458,7 @@ def q_elt_parity_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("history_merge", s6, s7),
         ("logs_metrics", s_in8, s8),
     ]
-    ledger = None
-    for i, (name, prev, curstats) in enumerate(stages, start=1):
-        row = (
-            prev.select(F.col("n").alias("rows_in"))
-            .crossJoin(
-                curstats.select(
-                    F.col("n").alias("rows_out"), F.col("ck").alias("checksum")
-                )
-            )
-            .select(
-                F.lit(i).cast("long").alias("stage_no"),
-                F.lit(name).alias("stage"),
-                "rows_in",
-                "rows_out",
-                "checksum",
-            )
-        )
-        ledger = row if ledger is None else ledger.unionByName(row)
-    return ledger
+    return _ledger(stages, rows_out="n", checksum="ck")
 
 
 def _elt_parity_sql() -> str:

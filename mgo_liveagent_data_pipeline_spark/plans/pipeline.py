@@ -20,6 +20,9 @@ from pyspark.sql import functions as F
 from ..operators.annsearch import cosine_topk, ivf_topk
 from ..scratch import scratch_dir
 from ..operators.dedup import (
+    _scoped_persist,
+    connected_components,
+    dedup_apply,
     embedding_near_dup,
     exact_dedup,
     minhash_lsh_dedup,
@@ -28,8 +31,11 @@ from ..operators.dedup import (
     simhash_dedup,
 )
 from ..operators.textops import (
+    bpe_encode,
     fingerprint,
     language_id,
+    paragraph_dedup,
+    quality_filter,
     quality_score,
     token_counts,
 )
@@ -719,6 +725,140 @@ CURATION_SEG_WORDS = 10
 CURATION_MIN_SEG_DOCS = 2
 
 
+# The stages the three curation chains share, one implementation each.
+# Every intermediate they return carries (doc_id, text, source, __lt,
+# __bt): the whitespace and subword token counts of its CURRENT text, so
+# no later stage re-tokenizes for the ledger.
+
+
+def _ntok():
+    """Whitespace-token count of ``text`` (empty pieces dropped) — the
+    count the operators themselves publish, reported as ``tokens_out``."""
+    return F.size(
+        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != F.lit(""))
+    ).cast("long")
+
+
+def _gate(train: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Stage ``gate`` — Gopher-style quality filter
+    (operators/textops.py:quality_filter). Returns the stage's rows_in
+    aggregate and the kept corpus.
+
+    The filter verdicts (doc_id, n_tokens, keep) are persisted: both the
+    ledger count and the kept-key semi-join read them, so the rule
+    expressions evaluate once. The kept corpus rides ONE bpe_encode
+    crossing (text/source carried through the Arrow batch — no join
+    back) so the ledger reports real subword counts (__bt) beside the
+    whitespace counts (__lt) budgets historically used."""
+    qf = _scoped_persist(quality_filter(train))
+    kept = _scoped_persist(
+        bpe_encode(
+            train.join(
+                qf.where("keep").select("doc_id"), "doc_id", "left_semi"
+            ),
+            carry_cols=("text", "source"),
+        )
+        .withColumnRenamed("n_bpe_tokens", "__bt")
+        .drop("n_words")
+        .withColumn("__lt", _ntok())
+    )
+    return qf.agg(F.count(F.lit(1)).cast("long").alias("n")), kept
+
+
+def _para(c: DataFrame, cut) -> DataFrame:
+    """Stage ``para`` — CCNet segment dedup, REWRITING each doc of ``c``
+    to its surviving text (operators/textops.py:paragraph_dedup
+    emit_text; all-boilerplate docs drop out). Both units are recounted
+    on the rewritten text once: whitespace inline, subword via a second
+    bpe_encode crossing. ``cut`` materializes the result: a scoped
+    persist, or a lineage cut where the chain is deep enough for
+    Catalyst's analysis cost to matter."""
+    para = paragraph_dedup(
+        c, "text", "doc_id", CURATION_SEG_WORDS, CURATION_MIN_SEG_DOCS,
+        emit_text=True,
+    )
+    return cut(
+        bpe_encode(
+            para.where(F.col("text") != "")
+            .select(F.col("key").alias("doc_id"), "text")
+            .join(c.select("doc_id", "source"), "doc_id")
+            .withColumn("__lt", _ntok()),
+            carry_cols=("text", "source", "__lt"),
+        )
+        .withColumnRenamed("n_bpe_tokens", "__bt")
+        .drop("n_words")
+    )
+
+
+def _neardup(c: DataFrame, checkpoint_dir: str | None) -> DataFrame:
+    """Stage ``neardup`` — MinHash-LSH pairs → connected components →
+    keep-one-per-cluster over ``c`` (operators/dedup.py:
+    minhash_lsh_dedup / connected_components / dedup_apply), persisted."""
+    pairs = minhash_lsh_dedup(
+        c, "text", "doc_id", NUM_HASHES, BANDS, SHINGLE_K,
+        LSH_THRESHOLD, LSH_MAX_BUCKET,
+    )
+    clusters = connected_components(
+        pairs.select("id_a", "id_b"), checkpoint_dir=checkpoint_dir
+    )
+    return _scoped_persist(dedup_apply(c, clusters, "doc_id"))
+
+
+def _stats(c: DataFrame) -> DataFrame:
+    """A stage's 1-row output aggregate: rows, whitespace and subword
+    tokens."""
+    return c.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.coalesce(F.sum("__lt"), F.lit(0)).cast("long").alias("tok"),
+        F.coalesce(F.sum("__bt"), F.lit(0)).cast("long").alias("bpe"),
+    )
+
+
+def _ledger(stages, **out_cols: str) -> DataFrame:
+    """The run ledger of a composed chain: one row per ``(name, prev,
+    cur)`` stage, numbered from 1, with ``rows_in`` = ``prev``'s ``n``
+    and each ``out_cols`` key taken from the ``cur`` column it names.
+    ``prev`` and ``cur`` are 1-row aggregates, so each crossJoin is a
+    trivial pairing."""
+    ledger = None
+    for i, (name, prev, cur) in enumerate(stages, start=1):
+        row = (
+            prev.select(F.col("n").alias("rows_in"))
+            .crossJoin(
+                cur.select(
+                    *(F.col(src).alias(out) for out, src in out_cols.items())
+                )
+            )
+            .select(
+                F.lit(i).cast("long").alias("stage_no"),
+                F.lit(name).alias("stage"),
+                "rows_in",
+                *out_cols,
+            )
+        )
+        ledger = row if ledger is None else ledger.unionByName(row)
+    return ledger
+
+
+def _ledger_round_trip(spark: SparkSession, stages, table: str) -> DataFrame:
+    """Observability round trip of a curation chain's ledger: it is
+    APPENDED to a K5 history table and read back — the run log the
+    reference writes per extraction (core/extract/ExtractionLogger.py:
+    134-176), unified with this engine's history-sink machinery. The
+    returned relation is the round-tripped table, so the oracle
+    certifies the ledger write too."""
+    from ..sinks.writers import history_append, table_path
+
+    ledger = _ledger(
+        stages, rows_out="n", tokens_out="tok", bpe_tokens_out="bpe"
+    )
+    base_dir = scratch_dir(f"mgo_{table}_ledger_")
+    history_append(spark, ledger, base_dir, table)
+    return spark.read.parquet(table_path(base_dir, f"{table}_history")).select(
+        *ledger.columns
+    )
+
+
 def q_curation_pipeline(
     spark: SparkSession, sf_dir: str, checkpoint_dir: str | None = None
 ) -> DataFrame:
@@ -768,19 +908,7 @@ def q_curation_pipeline(
     eval/rate relations; stage 6 is the two-phase prefix sum. The ledger
     rows are 1-row aggregates over persisted intermediates — the only
     driver-side data is the 6-row ledger itself."""
-    from ..operators.dedup import (
-        _scoped_persist,
-        connected_components,
-        dedup_apply,
-        minhash_lsh_dedup,
-    )
-    from ..operators.textops import (
-        decontaminate,
-        mixture_sample,
-        pack_shards,
-        paragraph_dedup,
-        quality_filter,
-    )
+    from ..operators.textops import decontaminate, mixture_sample, pack_shards
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
@@ -790,58 +918,11 @@ def q_curation_pipeline(
     )
     train = docs.where(F.col("doc_id") % DECONTAM_MODULUS != 0)
 
-    # stage 1 — quality gate. qf carries (doc_id, n_tokens, keep): both
-    # the ledger aggregates and the kept-key semi-join read it, so the
-    # rule expressions evaluate once. The kept corpus additionally rides
-    # ONE bpe_encode crossing (text/source carried through the Arrow
-    # batch — no join back) so the ledger reports real subword counts
-    # (__bt) beside the whitespace counts budgets historically used.
-    from ..operators.textops import bpe_encode
-
-    qf = _scoped_persist(quality_filter(train))
-    c1 = _scoped_persist(
-        bpe_encode(
-            train.join(
-                qf.where("keep").select("doc_id"), "doc_id", "left_semi"
-            ),
-            carry_cols=("text", "source"),
-        )
-        .withColumnRenamed("n_bpe_tokens", "__bt")
-        .drop("n_words")
-    )
-
-    # stage 2 — paragraph dedup, rewritten text forward; recount both
-    # units on the REWRITTEN text once (whitespace inline, subword via a
-    # second bpe_encode crossing) and carry (__lt, __bt) through stages
-    # 3-5 so no later stage re-tokenizes for the ledger
-    para = paragraph_dedup(
-        c1, "text", "doc_id", CURATION_SEG_WORDS, CURATION_MIN_SEG_DOCS,
-        emit_text=True,
-    )
-    ntok = F.size(
-        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != F.lit(""))
-    ).cast("long")
-    c2 = _scoped_persist(
-        bpe_encode(
-            para.where(F.col("text") != "")
-            .select(F.col("key").alias("doc_id"), "text")
-            .join(c1.select("doc_id", "source"), "doc_id")
-            .withColumn("__lt", ntok),
-            carry_cols=("text", "source", "__lt"),
-        )
-        .withColumnRenamed("n_bpe_tokens", "__bt")
-        .drop("n_words")
-    )
-
-    # stage 3 — near-dup canonicalization on the rewritten corpus
-    pairs = minhash_lsh_dedup(
-        c2, "text", "doc_id", NUM_HASHES, BANDS, SHINGLE_K,
-        LSH_THRESHOLD, LSH_MAX_BUCKET,
-    )
-    clusters = connected_components(
-        pairs.select("id_a", "id_b"), checkpoint_dir=checkpoint_dir
-    )
-    c3 = _scoped_persist(dedup_apply(c2, clusters, "doc_id"))
+    # stages 1-3 — quality gate, paragraph rewrite, near-dup
+    # canonicalization on the rewritten corpus
+    s_in, c1 = _gate(train)
+    c2 = _para(c1, _scoped_persist)
+    c3 = _neardup(c2, checkpoint_dir)
 
     # stage 4 — benchmark decontamination against the ORIGINAL eval text
     hits = decontaminate(c3, ev, "text", "doc_id", DECONTAM_NGRAM_K).select(
@@ -863,21 +944,7 @@ def q_curation_pipeline(
         shard_tokens=CURATION_SHARD_TOKENS, block_size=100,
     )
 
-    def stats(df: DataFrame, tok_col: str, bpe_col: str) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.coalesce(F.sum(tok_col), F.lit(0)).cast("long").alias("tok"),
-            F.coalesce(F.sum(bpe_col), F.lit(0)).cast("long").alias("bpe"),
-        )
-
-    s_in = qf.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    s1 = stats(
-        c1.withColumn("__lt", ntok), "__lt", "__bt"
-    )
-    s2 = stats(c2, "__lt", "__bt")
-    s3 = stats(c3, "__lt", "__bt")
-    s4 = stats(c4, "__lt", "__bt")
-    s5 = stats(c5, "__lt", "__bt")
+    s1, s2, s3, s4, s5 = (_stats(c) for c in (c1, c2, c3, c4, c5))
     # packing drops no documents, so the shard stage's token sums equal
     # stage 5's — recomputed from packed/c5 as written (1-row aggs)
     s6 = packed.agg(
@@ -892,43 +959,7 @@ def q_curation_pipeline(
         ("gate", s_in, s1), ("para", s1, s2), ("neardup", s2, s3),
         ("decontam", s3, s4), ("mixture", s4, s5), ("shard", s5, s6),
     ]
-    ledger = None
-    for i, (name, prev, cur) in enumerate(stages, start=1):
-        # two 1-row aggregates — the crossJoin is a trivial pairing
-        row = (
-            prev.select(F.col("n").alias("rows_in"))
-            .crossJoin(
-                cur.select(
-                    F.col("n").alias("rows_out"),
-                    F.col("tok").alias("tokens_out"),
-                    F.col("bpe").alias("bpe_tokens_out"),
-                )
-            )
-            .select(
-                F.lit(i).cast("long").alias("stage_no"),
-                F.lit(name).alias("stage"),
-                "rows_in",
-                "rows_out",
-                "tokens_out",
-                "bpe_tokens_out",
-            )
-        )
-        ledger = row if ledger is None else ledger.unionByName(row)
-    # Observability round trip: the ledger is APPENDED to a K5 history
-    # table and read back — the run log the reference writes per
-    # extraction (core/extract/ExtractionLogger.py:134-176), unified with
-    # this engine's history-sink machinery. The returned relation is the
-    # round-tripped table, so the oracle certifies the ledger write too.
-    from ..sinks.writers import history_append, table_path
-
-    base_dir = scratch_dir("mgo_curation_ledger_")
-    history_append(spark, ledger, base_dir, "curation_run")
-    return spark.read.parquet(
-        table_path(base_dir, "curation_run_history")
-    ).select(
-        "stage_no", "stage", "rows_in", "rows_out", "tokens_out",
-        "bpe_tokens_out",
-    )
+    return _ledger_round_trip(spark, stages, "curation_run")
 
 
 CURATION_SEM_BITS = 6
@@ -966,72 +997,26 @@ def q_curation_semantic_pipeline(
     round-6 double-encode lesson applied at composition time (the
     operator cannot know its input is a Python crossing). Ledger shape
     and BPE accounting identical to ``q_curation_pipeline``; oracle =
-    the full five-stage DuckDB twin (stages 1-3 shared with
-    _curation_sql; stage 4 from sparse ±1 integer vector math, exact in
-    both engines). Driver-visible via the ``curation_sem`` mode of
-    ``dedup_exact_suite``."""
+    the full five-stage DuckDB twin (stages 1-3 from the same CTE
+    fragments as _curation_sql; stage 4 from sparse ±1 integer vector
+    math, exact in both engines). Driver-visible via the
+    ``curation_sem`` mode of ``dedup_exact_suite``."""
     from ..operators.annsearch import (
         encode_documents,
         rh_planes,
         rh_signature,
     )
-    from ..operators.dedup import (
-        _scoped_persist,
-        connected_components,
-        dedup_apply,
-        minhash_lsh_dedup,
-        semantic_dedup,
-    )
-    from ..operators.textops import (
-        bpe_encode,
-        pack_shards,
-        paragraph_dedup,
-        quality_filter,
-    )
+    from ..operators.textops import pack_shards
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
     train = docs.where(F.col("doc_id") % DECONTAM_MODULUS != 0)
 
-    # stages 1-3: identical composition to q_curation_pipeline
-    qf = _scoped_persist(quality_filter(train))
-    c1 = _scoped_persist(
-        bpe_encode(
-            train.join(
-                qf.where("keep").select("doc_id"), "doc_id", "left_semi"
-            ),
-            carry_cols=("text", "source"),
-        )
-        .withColumnRenamed("n_bpe_tokens", "__bt")
-        .drop("n_words")
-    )
-    para = paragraph_dedup(
-        c1, "text", "doc_id", CURATION_SEG_WORDS, CURATION_MIN_SEG_DOCS,
-        emit_text=True,
-    )
-    ntok = F.size(
-        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != F.lit(""))
-    ).cast("long")
-    c2 = _scoped_persist(
-        bpe_encode(
-            para.where(F.col("text") != "")
-            .select(F.col("key").alias("doc_id"), "text")
-            .join(c1.select("doc_id", "source"), "doc_id")
-            .withColumn("__lt", ntok),
-            carry_cols=("text", "source", "__lt"),
-        )
-        .withColumnRenamed("n_bpe_tokens", "__bt")
-        .drop("n_words")
-    )
-    pairs = minhash_lsh_dedup(
-        c2, "text", "doc_id", NUM_HASHES, BANDS, SHINGLE_K,
-        LSH_THRESHOLD, LSH_MAX_BUCKET,
-    )
-    clusters = connected_components(
-        pairs.select("id_a", "id_b"), checkpoint_dir=checkpoint_dir
-    )
-    c3 = _scoped_persist(dedup_apply(c2, clusters, "doc_id"))
+    # stages 1-3: the same shared stages as q_curation_pipeline
+    s_in, c1 = _gate(train)
+    c2 = _para(c1, _scoped_persist)
+    c3 = _neardup(c2, checkpoint_dir)
 
     # stage 4 — SemDeDup over the encoded survivors
     blocked = _scoped_persist(
@@ -1063,20 +1048,7 @@ def q_curation_semantic_pipeline(
         shard_tokens=CURATION_SHARD_TOKENS, block_size=100,
     )
 
-    def stats(df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.coalesce(F.sum("__lt"), F.lit(0)).cast("long").alias("tok"),
-            F.coalesce(F.sum("__bt"), F.lit(0)).cast("long").alias("bpe"),
-        )
-
-    s_in = qf.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    s1 = c1.withColumn("__lt", ntok).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.coalesce(F.sum(ntok), F.lit(0)).cast("long").alias("tok"),
-        F.coalesce(F.sum("__bt"), F.lit(0)).cast("long").alias("bpe"),
-    )
-    s2, s3, s4 = stats(c2), stats(c3), stats(c4)
+    s1, s2, s3, s4 = (_stats(c) for c in (c1, c2, c3, c4))
     s5 = packed.agg(
         F.countDistinct("shard_id").cast("long").alias("n"),
         F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long").alias("tok"),
@@ -1087,40 +1059,7 @@ def q_curation_semantic_pipeline(
         ("gate", s_in, s1), ("para", s1, s2), ("neardup", s2, s3),
         ("semdedup", s3, s4), ("shard", s4, s5),
     ]
-    ledger = None
-    for i, (name, prev, cur) in enumerate(stages, start=1):
-        row = (
-            prev.select(F.col("n").alias("rows_in"))
-            .crossJoin(
-                cur.select(
-                    F.col("n").alias("rows_out"),
-                    F.col("tok").alias("tokens_out"),
-                    F.col("bpe").alias("bpe_tokens_out"),
-                )
-            )
-            .select(
-                F.lit(i).cast("long").alias("stage_no"),
-                F.lit(name).alias("stage"),
-                "rows_in",
-                "rows_out",
-                "tokens_out",
-                "bpe_tokens_out",
-            )
-        )
-        ledger = row if ledger is None else ledger.unionByName(row)
-    # same observability round trip as the sibling chains: the ledger is
-    # APPENDED to a K5 history table and read back, so the oracle
-    # certifies the ledger write too
-    from ..sinks.writers import history_append, table_path
-
-    base_dir = scratch_dir("mgo_curation_sem_ledger_")
-    history_append(spark, ledger, base_dir, "curation_sem_run")
-    return spark.read.parquet(
-        table_path(base_dir, "curation_sem_run_history")
-    ).select(
-        "stage_no", "stage", "rows_in", "rows_out", "tokens_out",
-        "bpe_tokens_out",
-    )
+    return _ledger_round_trip(spark, stages, "curation_sem_run")
 
 
 # scored curation: the model gates slot between the rule gate and the
@@ -1193,15 +1132,8 @@ def q_curation_scored_pipeline(
     None → localCheckpoint (executor-resident, the local default); a
     durable path → reliable checkpoint() whose blocks survive executor
     loss on a real cluster (operators/dedup.py:lineage_cut)."""
-    from ..operators.dedup import (
-        _scoped_persist,
-        connected_components,
-        dedup_apply,
-        lineage_cut,
-        minhash_lsh_dedup,
-    )
+    from ..operators.dedup import lineage_cut
     from ..operators.textops import (
-        bpe_encode,
         decontaminate,
         dsir_gumbel_topk,
         dsir_importance_weight,
@@ -1209,8 +1141,6 @@ def q_curation_scored_pipeline(
         lm_perplexity_score,
         mixture_sample,
         pack_shards,
-        paragraph_dedup,
-        quality_filter,
     )
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1226,24 +1156,8 @@ def q_curation_scored_pipeline(
     # subset (identical to the standalone ppl/dsir members' reference)
     en_ref = docs.where(F.col("lang") == "en").select("doc_id", "text")
 
-    ntok = F.size(
-        F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda x: x != F.lit(""))
-    ).cast("long")
-
-    # stage 1 — quality gate; kept corpus rides one bpe_encode crossing
-    # for (__bt), whitespace count (__lt) inline
-    qf = _scoped_persist(quality_filter(train))
-    c1 = _scoped_persist(
-        bpe_encode(
-            train.join(
-                qf.where("keep").select("doc_id"), "doc_id", "left_semi"
-            ),
-            carry_cols=("text", "source"),
-        )
-        .withColumnRenamed("n_bpe_tokens", "__bt")
-        .drop("n_words")
-        .withColumn("__lt", ntok)
-    )
+    # stage 1 — quality gate
+    s_in, c1 = _gate(train)
 
     # stage 2 — perplexity gate: drop the tail bucket
     ppl = lm_perplexity_score(
@@ -1270,33 +1184,12 @@ def q_curation_scored_pipeline(
         checkpoint_dir,
     )
 
-    # stage 4 — paragraph dedup, rewritten text + recounted (__lt, __bt)
-    para = paragraph_dedup(
-        c3, "text", "doc_id", CURATION_SEG_WORDS, CURATION_MIN_SEG_DOCS,
-        emit_text=True,
-    )
-    c4 = lineage_cut(
-        bpe_encode(
-            para.where(F.col("text") != "")
-            .select(F.col("key").alias("doc_id"), "text")
-            .join(c3.select("doc_id", "source"), "doc_id")
-            .withColumn("__lt", ntok),
-            carry_cols=("text", "source", "__lt"),
-        )
-        .withColumnRenamed("n_bpe_tokens", "__bt")
-        .drop("n_words"),
-        checkpoint_dir,
-    )
+    # stage 4 — paragraph dedup, rewritten text + recounted (__lt, __bt);
+    # second plan-depth cut
+    c4 = _para(c3, lambda df: lineage_cut(df, checkpoint_dir))
 
     # stage 5 — near-dup canonicalization on the rewritten corpus
-    pairs = minhash_lsh_dedup(
-        c4, "text", "doc_id", NUM_HASHES, BANDS, SHINGLE_K,
-        LSH_THRESHOLD, LSH_MAX_BUCKET,
-    )
-    clusters = connected_components(
-        pairs.select("id_a", "id_b"), checkpoint_dir=checkpoint_dir
-    )
-    c5 = _scoped_persist(dedup_apply(c4, clusters, "doc_id"))
+    c5 = _neardup(c4, checkpoint_dir)
 
     # stage 6 — exact n-gram decontamination vs the ORIGINAL eval text
     xhits = decontaminate(c5, ev, "text", "doc_id", DECONTAM_NGRAM_K).select(
@@ -1328,16 +1221,8 @@ def q_curation_scored_pipeline(
         token_count_col="__bt",
     )
 
-    def stats(df: DataFrame) -> DataFrame:
-        return df.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.coalesce(F.sum("__lt"), F.lit(0)).cast("long").alias("tok"),
-            F.coalesce(F.sum("__bt"), F.lit(0)).cast("long").alias("bpe"),
-        )
-
-    s_in = qf.agg(F.count(F.lit(1)).cast("long").alias("n"))
     s1, s2, s3, s4, s5, s6, s7, s8 = (
-        stats(c) for c in (c1, c2, c3, c4, c5, c6, c7, c8)
+        _stats(c) for c in (c1, c2, c3, c4, c5, c6, c7, c8)
     )
     s9 = packed.agg(
         F.countDistinct("shard_id").cast("long").alias("n"),
@@ -1352,37 +1237,7 @@ def q_curation_scored_pipeline(
         ("para", s3, s4), ("neardup", s4, s5), ("decontam", s5, s6),
         ("fdecontam", s6, s7), ("mixture", s7, s8), ("shard", s8, s9),
     ]
-    ledger = None
-    for i, (name, prev, cur) in enumerate(stages, start=1):
-        row = (
-            prev.select(F.col("n").alias("rows_in"))
-            .crossJoin(
-                cur.select(
-                    F.col("n").alias("rows_out"),
-                    F.col("tok").alias("tokens_out"),
-                    F.col("bpe").alias("bpe_tokens_out"),
-                )
-            )
-            .select(
-                F.lit(i).cast("long").alias("stage_no"),
-                F.lit(name).alias("stage"),
-                "rows_in",
-                "rows_out",
-                "tokens_out",
-                "bpe_tokens_out",
-            )
-        )
-        ledger = row if ledger is None else ledger.unionByName(row)
-    from ..sinks.writers import history_append, table_path
-
-    base_dir = scratch_dir("mgo_curation_scored_ledger_")
-    history_append(spark, ledger, base_dir, "curation_scored_run")
-    return spark.read.parquet(
-        table_path(base_dir, "curation_scored_run_history")
-    ).select(
-        "stage_no", "stage", "rows_in", "rows_out", "tokens_out",
-        "bpe_tokens_out",
-    )
+    return _ledger_round_trip(spark, stages, "curation_scored_run")
 
 
 def q_text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2682,29 +2537,32 @@ _SIG = """
 _A = "CAST(('0x' || substring(md5(s), 1, 12)) AS BIGINT)"
 _B = "CAST(('0x' || substring(md5(s), 13, 12)) AS BIGINT)"
 
+# the NUM_HASHES signature entries, as the list body of ``sig``
+_SIG_MINS = ", ".join(
+    f"list_min(list_transform(sh, s -> {_A} + {i} * {_B}))"
+    for i in range(NUM_HASHES)
+)
+# one 'b|v1|v2|..' key per band over ``sig`` (DuckDB lists are 1-based:
+# Spark sig[b*rows+r] → sig[b*rows+r+1]), as the list body of band_key
+_BAND_KEYS = ", ".join(
+    f"'{b}|' || "
+    + " || '|' || ".join(
+        f"sig[{b * (NUM_HASHES // BANDS) + r + 1}]"
+        for r in range(NUM_HASHES // BANDS)
+    )
+    for b in range(BANDS)
+)
+
 
 def _minhash_oracle() -> str:
     max_bucket = LSH_MAX_BUCKET
-    rows = NUM_HASHES // BANDS
-    mins = ", ".join(
-        f"list_min(list_transform(sh, s -> {_A} + {i} * {_B}))"
-        for i in range(NUM_HASHES)
-    )
-    # DuckDB lists are 1-based: Spark sig[b*rows+r] → sig[b*rows+r+1]
-    bands = ", ".join(
-        "'"
-        + str(b)
-        + "|' || "
-        + " || '|' || ".join(f"sig[{b * rows + r + 1}]" for r in range(rows))
-        for b in range(BANDS)
-    )
     shingled = _SHINGLES.format(km1=SHINGLE_K - 1)
-    sig = _SIG.format(mins=mins)
+    sig = _SIG.format(mins=_SIG_MINS)
     return f"""
         WITH shingled AS ({shingled}),
         sigs AS ({sig}),
         banded0 AS (
-          SELECT doc_id AS key, unnest([{bands}]) AS band_key FROM sigs),
+          SELECT doc_id AS key, unnest([{_BAND_KEYS}]) AS band_key FROM sigs),
         banded AS (
           -- mega-bucket cap (operators/dedup.py:minhash_lsh_dedup step 3)
           SELECT key, band_key FROM banded0
@@ -2731,18 +2589,6 @@ def _scored_ingest_oracle() -> str:
     tail dropped) over the WHOLE documents table, then the standard
     capped MinHash-LSH pair set over exactly the surviving docs — what
     the gated micro-batch ingestion converges to for any batch split."""
-    rows = NUM_HASHES // BANDS
-    mins = ", ".join(
-        f"list_min(list_transform(sh, s -> {_A} + {i} * {_B}))"
-        for i in range(NUM_HASHES)
-    )
-    bands = ", ".join(
-        "'"
-        + str(b)
-        + "|' || "
-        + " || '|' || ".join(f"sig[{b * rows + r + 1}]" for r in range(rows))
-        for b in range(BANDS)
-    )
     jac = _JACCARD.format(a="sh_a", b="sh_b")
     km1 = SHINGLE_K - 1
     return f"""
@@ -2864,9 +2710,9 @@ def _scored_ingest_oracle() -> str:
                    i -> array_to_string(string_split_regex(trim(text), '\\s+')[i:i+{km1}], ' ')
                  )) AS sh
           FROM sv),
-        sigs AS (SELECT doc_id, sh, [{mins}] AS sig FROM shingled),
+        sigs AS (SELECT doc_id, sh, [{_SIG_MINS}] AS sig FROM shingled),
         banded0 AS (
-          SELECT doc_id AS key, unnest([{bands}]) AS band_key FROM sigs),
+          SELECT doc_id AS key, unnest([{_BAND_KEYS}]) AS band_key FROM sigs),
         banded AS (
           SELECT key, band_key FROM banded0
           QUALIFY count(*) OVER (PARTITION BY band_key) <= {LSH_MAX_BUCKET}),
@@ -2896,10 +2742,6 @@ def _minhash_salvage_oracle() -> str:
     _banded_signatures)."""
     cap = SALVAGE_MAX_BUCKET
     rows = NUM_HASHES // BANDS
-    mins = ", ".join(
-        f"list_min(list_transform(sh, s -> {_A} + {i} * {_B}))"
-        for i in range(NUM_HASHES)
-    )
     entries = []
     for b in range(BANDS):
         base = [f"sig[{b * rows + r + 1}]" for r in range(rows)]
@@ -2913,7 +2755,7 @@ def _minhash_salvage_oracle() -> str:
                 f"struct_pack(b := {b}, d := {d}, k := {key})"
             )
     shingled = _SHINGLES.format(km1=SHINGLE_K - 1)
-    sig = _SIG.format(mins=mins)
+    sig = _SIG.format(mins=_SIG_MINS)
     return f"""
         WITH shingled AS ({shingled}),
         sigs AS ({sig}),
@@ -2950,18 +2792,6 @@ def _fuzzy_decontam_oracle() -> str:
     operator's delta-vs-corpus run equals that set restricted to pairs
     involving a delta doc — eval keys are all negative, so a train×eval
     pair always orders (eval, train)), grouped per train doc."""
-    rows = NUM_HASHES // BANDS
-    mins = ", ".join(
-        f"list_min(list_transform(sh, s -> {_A} + {i} * {_B}))"
-        for i in range(NUM_HASHES)
-    )
-    bands = ", ".join(
-        "'"
-        + str(b)
-        + "|' || "
-        + " || '|' || ".join(f"sig[{b * rows + r + 1}]" for r in range(rows))
-        for b in range(BANDS)
-    )
     jac = _JACCARD.format(a="sh_a", b="sh_b")
     km1 = SHINGLE_K - 1
     return f"""
@@ -2976,9 +2806,9 @@ def _fuzzy_decontam_oracle() -> str:
                    i -> array_to_string(string_split_regex(trim(text), '\\s+')[i:i+{km1}], ' ')
                  )) AS sh
           FROM src),
-        sigs AS (SELECT doc_id, sh, [{mins}] AS sig FROM shingled),
+        sigs AS (SELECT doc_id, sh, [{_SIG_MINS}] AS sig FROM shingled),
         banded0 AS (
-          SELECT doc_id AS key, unnest([{bands}]) AS band_key FROM sigs),
+          SELECT doc_id AS key, unnest([{_BAND_KEYS}]) AS band_key FROM sigs),
         banded AS (
           SELECT key, band_key FROM banded0
           QUALIFY count(*) OVER (PARTITION BY band_key) <= {LSH_MAX_BUCKET}),
@@ -3542,29 +3372,20 @@ _SPLIT_SQL = f"""
 """
 
 
-def _curation_stage123_ctes() -> str:
-    """The gate -> para -> LSH-neardup CTE prefix (tr..c3 plus the BPE
-    count relations bpe1/bpe2) shared VERBATIM by _curation_sql and
-    _curation_semantic_sql — one mirror of stages 1-3, two chains."""
-    rows = NUM_HASHES // BANDS
-    mins = ", ".join(
-        f"list_min(list_transform(sh, s -> {_A} + {i} * {_B}))"
-        for i in range(NUM_HASHES)
-    )
-    bands = ", ".join(
-        "'"
-        + str(b)
-        + "|' || "
-        + " || '|' || ".join(f"sig[{b * rows + r + 1}]" for r in range(rows))
-        for b in range(BANDS)
-    )
-    jac = _JACCARD.format(a="sh_a", b="sh_b")
-    sw = CURATION_SEG_WORDS
-    bpe_ctes = _bpe_seg_ctes("bv", "b")
-    return f"""        tr AS MATERIALIZED (
-          SELECT doc_id, text, source FROM documents
-          WHERE doc_id % {DECONTAM_MODULUS} <> 0),
-        -- stage 1: quality gate (mirror of text_quality_filter)
+# DuckDB twins of the shared curation stages (_gate, _para, _neardup):
+# CTE fragments from an input relation to an output relation, spliced
+# into one ``WITH RECURSIVE`` statement per chain. Every stage output
+# carries (doc_id, text, source, nt) — nt the whitespace-token count of
+# its current text — and is MATERIALIZED, because _ledger_sql's scalar
+# subqueries would otherwise re-inline it once per ledger cell.
+
+
+def _gate_ctes(src: str, out: str) -> str:
+    """Stage ``gate`` (mirror of text_quality_filter) over ``src``,
+    kept docs in ``out``, plus the BPE count relations: ``bfin`` (the
+    segmentation of ``out``'s lowercased vocabulary) and ``bpe1``
+    (doc_id → subword count of ``out``)."""
+    return f"""        -- stage gate: quality filter (mirror of text_quality_filter)
         qt AS (
           SELECT doc_id,
                  text IS NULL AS is_null,
@@ -3575,7 +3396,7 @@ def _curation_stage123_ctes() -> str:
                    AS DOUBLE) AS punct,
                  CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
                    AS DOUBLE) AS upper_c
-          FROM tr),
+          FROM {src}),
         qs AS (
           SELECT doc_id, is_null, tk, n_chars,
                  CAST(length(tk) AS BIGINT) AS n_tok,
@@ -3625,26 +3446,34 @@ def _curation_stage123_ctes() -> str:
                    CASE WHEN stop_ratio < 0.01 THEN 'stopword' END
                  ) END AS reasons
           FROM qr),
-        c1 AS MATERIALIZED (
+        {out} AS MATERIALIZED (
           SELECT t.doc_id, t.text, t.source, q.n_tok AS nt
-          FROM tr t JOIN qd q USING (doc_id) WHERE q.reasons = ''),
+          FROM {src} t JOIN qd q USING (doc_id) WHERE q.reasons = ''),
         -- BPE subword counts (ledger bpe_tokens_out): segmentation over
-        -- c1's lowercased vocabulary — rewritten text (stage 2+) only
-        -- removes whole segments, so its words are a subset of c1's
+        -- the kept docs' lowercased vocabulary — rewritten text (stage
+        -- para onward) only removes whole segments, so its words are a
+        -- subset of these
         occ1 AS MATERIALIZED (
           SELECT doc_id, unnest(list_filter(
             string_split_regex(trim(lower(text)), '\\s+'),
             x -> x <> '')) AS word
-          FROM c1),
+          FROM {out}),
         bv AS (SELECT DISTINCT word FROM occ1),
-        {bpe_ctes},
+        {_bpe_seg_ctes("bv", "b")},
         bpe1 AS MATERIALIZED (
           SELECT doc_id, sum(nseg) AS bt
-          FROM occ1 JOIN bfin USING (word) GROUP BY doc_id),
-        -- stage 2: paragraph dedup, rewritten text (text_paragraph_dedup)
+          FROM occ1 JOIN bfin USING (word) GROUP BY doc_id),"""
+
+
+def _para_ctes(src: str, out: str) -> str:
+    """Stage ``para`` (mirror of text_paragraph_dedup) over ``src``: each
+    doc rewritten to its surviving segments in ``out`` (empty rewrites
+    dropped), ``bpe2`` its subword counts from _gate_ctes' ``bfin``."""
+    sw = CURATION_SEG_WORDS
+    return f"""        -- stage para: paragraph dedup, rewritten text
         pt AS (
           SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-          FROM c1),
+          FROM {src}),
         sp AS (
           SELECT doc_id, tk,
                  unnest(range(0, greatest(
@@ -3661,38 +3490,46 @@ def _curation_stage123_ctes() -> str:
         fl AS (
           SELECT s.doc_id, s.pos, s.seg, (d.h IS NOT NULL) AS is_dup
           FROM segd s LEFT JOIN dup d ON md5(s.seg) = d.h),
-        c2t AS (
+        prw AS (
           SELECT doc_id,
                  string_agg(CASE WHEN NOT is_dup THEN seg END,
                             ' ' ORDER BY pos) AS text
           FROM fl GROUP BY doc_id),
-        c2x AS MATERIALIZED (
+        {out} AS MATERIALIZED (
           SELECT t.doc_id, t.text, c.source,
                  CAST(length(list_filter(
                    string_split_regex(trim(t.text), '\\s+'),
                    x -> x <> '')) AS BIGINT) AS nt
-          FROM c2t t JOIN c1 c USING (doc_id)
+          FROM prw t JOIN {src} c USING (doc_id)
           WHERE t.text IS NOT NULL AND t.text <> ''),
         bpe2 AS MATERIALIZED (
           SELECT doc_id, sum(nseg) AS bt
           FROM (SELECT doc_id, unnest(list_filter(
                   string_split_regex(trim(lower(text)), '\\s+'),
                   x -> x <> '')) AS word
-                FROM c2x) o2
-          JOIN bfin USING (word) GROUP BY doc_id),
-        -- stage 3: MinHash-LSH pairs over the REWRITTEN text (mirror of
-        -- dedup_minhash_lsh), CC label walk, keep-one-per-cluster
+                FROM {out}) o2
+          JOIN bfin USING (word) GROUP BY doc_id),"""
+
+
+def _neardup_ctes(src: str, out: str) -> str:
+    """Stage ``neardup`` over ``src``: MinHash-LSH pairs (mirror of
+    dedup_minhash_lsh), the CC label walk, keep-one-per-cluster into
+    ``out``. Needs the statement to be ``WITH RECURSIVE``."""
+    km1 = SHINGLE_K - 1
+    jac = _JACCARD.format(a="sh_a", b="sh_b")
+    return f"""        -- stage neardup: MinHash-LSH pairs, CC label walk,
+        -- keep-one-per-cluster
         shingled AS (
           SELECT doc_id,
                  list_distinct(list_transform(
-                   range(1, greatest(length(string_split_regex(trim(text), '\\s+')) - {SHINGLE_K - 1}, 1) + 1),
-                   i -> array_to_string(string_split_regex(trim(text), '\\s+')[i:i+{SHINGLE_K - 1}], ' ')
+                   range(1, greatest(length(string_split_regex(trim(text), '\\s+')) - {km1}, 1) + 1),
+                   i -> array_to_string(string_split_regex(trim(text), '\\s+')[i:i+{km1}], ' ')
                  )) AS sh
-          FROM c2x),
+          FROM {src}),
         sigs AS (
-          SELECT doc_id, sh, [{mins}] AS sig FROM shingled),
+          SELECT doc_id, sh, [{_SIG_MINS}] AS sig FROM shingled),
         banded0 AS (
-          SELECT doc_id AS key, unnest([{bands}]) AS band_key FROM sigs),
+          SELECT doc_id AS key, unnest([{_BAND_KEYS}]) AS band_key FROM sigs),
         banded AS (
           SELECT key, band_key FROM banded0
           QUALIFY count(*) OVER (PARTITION BY band_key) <= {LSH_MAX_BUCKET}),
@@ -3716,10 +3553,31 @@ def _curation_stage123_ctes() -> str:
           UNION
           SELECT e.dst, w.lbl FROM walk w JOIN edges e ON e.src = w.node),
         comp AS (SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY node),
-        c3 AS MATERIALIZED (
+        {out} AS MATERIALIZED (
           SELECT c.doc_id, c.text, c.source, c.nt
-          FROM c2x c LEFT JOIN comp ON comp.node = c.doc_id
+          FROM {src} c LEFT JOIN comp ON comp.node = c.doc_id
           WHERE comp.node IS NULL OR c.doc_id = comp.cluster_id),"""
+
+
+def _bt_of(rel: str, counts: str = "bpe2") -> str:
+    """A bpe_tokens_out cell body: the subword tokens of ``rel``'s docs."""
+    return f"sum(bt) FROM {counts} WHERE doc_id IN (SELECT doc_id FROM {rel})"
+
+
+def _ledger_sql(rows) -> str:
+    """The curation twins' ledger: one ``UNION ALL`` branch per ``(stage,
+    rel_in, n_out, tok, bpe)`` row, numbered from 1 — rows_in counts
+    ``rel_in``; ``n_out``, ``tok`` and ``bpe`` are the scalar-subquery
+    bodies of rows_out, tokens_out and bpe_tokens_out (token sums read 0
+    on an empty stage)."""
+    return "\n        UNION ALL\n".join(
+        f"""        SELECT CAST({i} AS BIGINT) AS stage_no, '{stage}' AS stage,
+               (SELECT count(*) FROM {rel_in}) AS rows_in,
+               (SELECT {n_out}) AS rows_out,
+               CAST(coalesce((SELECT {tok}), 0) AS BIGINT) AS tokens_out,
+               CAST(coalesce((SELECT {bpe}), 0) AS BIGINT) AS bpe_tokens_out"""
+        for i, (stage, rel_in, n_out, tok, bpe) in enumerate(rows, start=1)
+    )
 
 
 def _curation_sql() -> str:
@@ -3730,18 +3588,6 @@ def _curation_sql() -> str:
     wrong intermediate, double-applying a filter, or recounting tokens
     on the wrong text shows up as a ledger mismatch even when every
     member oracle stays green."""
-    rows = NUM_HASHES // BANDS
-    mins = ", ".join(
-        f"list_min(list_transform(sh, s -> {_A} + {i} * {_B}))"
-        for i in range(NUM_HASHES)
-    )
-    bands = ", ".join(
-        "'"
-        + str(b)
-        + "|' || "
-        + " || '|' || ".join(f"sig[{b * rows + r + 1}]" for r in range(rows))
-        for b in range(BANDS)
-    )
     # per-source token target computed in PYTHON exactly as mixture_sample
     # builds its literal (float(budget) * (w / total_w)) — recomputing the
     # product in SQL could differ by one ulp and flip a boundary accept
@@ -3751,18 +3597,34 @@ def _curation_sql() -> str:
         for k, v in sorted(CURATION_MIX_WEIGHTS.items())
     )
     in_list = ", ".join(f"'{k}'" for k in sorted(CURATION_MIX_WEIGHTS))
-    jac = _JACCARD.format(a="sh_a", b="sh_b")
-    sw = CURATION_SEG_WORDS
     dk = DECONTAM_NGRAM_K - 1
-    bpe_ctes = _bpe_seg_ctes("bv", "b")
     grams5 = (
         "list_distinct(list_transform("
         f"range(1, greatest(length(tk) - {dk}, 1) + 1),"
         f" i -> array_to_string(tk[CAST(i AS INT):CAST(i + {dk} AS INT)], ' ')))"
     )
+    ledger = _ledger_sql([
+        ("gate", "tr", "count(*) FROM c1", "sum(nt) FROM c1",
+         "sum(bt) FROM bpe1"),
+        ("para", "c1", "count(*) FROM c2x", "sum(nt) FROM c2x",
+         "sum(bt) FROM bpe2"),
+        ("neardup", "c2x", "count(*) FROM c3", "sum(nt) FROM c3",
+         _bt_of("c3")),
+        ("decontam", "c3", "count(*) FROM c4", "sum(nt) FROM c4",
+         _bt_of("c4")),
+        ("mixture", "c4", "count(*) FROM c5", "sum(nt) FROM c5",
+         _bt_of("c5")),
+        ("shard", "c5", "count(DISTINCT shard_id) FROM packed",
+         "sum(n_tokens) FROM packed", _bt_of("c5")),
+    ])
     return f"""
         WITH RECURSIVE
-{_curation_stage123_ctes()}
+        tr AS MATERIALIZED (
+          SELECT doc_id, text, source FROM documents
+          WHERE doc_id % {DECONTAM_MODULUS} <> 0),
+{_gate_ctes("tr", "c1")}
+{_para_ctes("c1", "c2x")}
+{_neardup_ctes("c2x", "c3")}
         -- stage 4: decontaminate vs the ORIGINAL eval split (5-grams)
         evg AS (
           SELECT DISTINCT md5(g) AS h FROM (
@@ -3807,51 +3669,15 @@ def _curation_sql() -> str:
                       - n_tokens) / {CURATION_SHARD_TOKENS}.0) AS BIGINT)
                    AS shard_id
           FROM p6)
-        SELECT CAST(1 AS BIGINT) AS stage_no, 'gate' AS stage,
-               (SELECT count(*) FROM tr) AS rows_in,
-               (SELECT count(*) FROM c1) AS rows_out,
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c1)
-                 AS tokens_out,
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe1)
-                 AS bpe_tokens_out
-        UNION ALL
-        SELECT 2, 'para', (SELECT count(*) FROM c1),
-               (SELECT count(*) FROM c2x),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c2x),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2)
-        UNION ALL
-        SELECT 3, 'neardup', (SELECT count(*) FROM c2x),
-               (SELECT count(*) FROM c3),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c3),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2
-                WHERE doc_id IN (SELECT doc_id FROM c3))
-        UNION ALL
-        SELECT 4, 'decontam', (SELECT count(*) FROM c3),
-               (SELECT count(*) FROM c4),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c4),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2
-                WHERE doc_id IN (SELECT doc_id FROM c4))
-        UNION ALL
-        SELECT 5, 'mixture', (SELECT count(*) FROM c4),
-               (SELECT count(*) FROM c5),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c5),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2
-                WHERE doc_id IN (SELECT doc_id FROM c5))
-        UNION ALL
-        SELECT 6, 'shard', (SELECT count(*) FROM c5),
-               (SELECT count(DISTINCT shard_id) FROM packed),
-               (SELECT CAST(coalesce(sum(n_tokens), 0) AS BIGINT)
-                FROM packed),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2
-                WHERE doc_id IN (SELECT doc_id FROM c5))
+{ledger}
     """
 
 
 def _curation_semantic_sql() -> str:
     """DuckDB twin of q_curation_semantic_pipeline — gate → para → LSH
-    neardup (CTE prefix shared verbatim with _curation_sql) → SemDeDup
-    over the hash-projection encoding → shard, as one statement emitting
-    the 5-row ledger. Stage 4 mirrors encode_documents + rh_signature +
+    neardup (the _gate_ctes/_para_ctes/_neardup_ctes fragments
+    _curation_sql splices too) → SemDeDup over the hash-projection
+    encoding → shard, as one statement emitting the 5-row ledger. Stage 4 mirrors encode_documents + rh_signature +
     semantic_dedup in sparse ±1 integer vector math (dot products and
     norms are exact integers → identical doubles in any engine; the
     6-decimal rounds land on the same values the dense Spark side
@@ -3861,9 +3687,26 @@ def _curation_semantic_sql() -> str:
     bits = CURATION_SEM_BITS
     thr = CURATION_SEM_THRESHOLD
     zeros = "0" * bits
+    ledger = _ledger_sql([
+        ("gate", "tr", "count(*) FROM c1", "sum(nt) FROM c1",
+         "sum(bt) FROM bpe1"),
+        ("para", "c1", "count(*) FROM c2x", "sum(nt) FROM c2x",
+         "sum(bt) FROM bpe2"),
+        ("neardup", "c2x", "count(*) FROM c3", "sum(nt) FROM c3",
+         _bt_of("c3")),
+        ("semdedup", "c3", "count(*) FROM c4s", "sum(nt) FROM c4s",
+         _bt_of("c4s")),
+        ("shard", "c4s", "count(DISTINCT shard_id) FROM packed5",
+         "sum(n_tokens) FROM packed5", _bt_of("c4s")),
+    ])
     return f"""
         WITH RECURSIVE
-{_curation_stage123_ctes()}
+        tr AS MATERIALIZED (
+          SELECT doc_id, text, source FROM documents
+          WHERE doc_id % {DECONTAM_MODULUS} <> 0),
+{_gate_ctes("tr", "c1")}
+{_para_ctes("c1", "c2x")}
+{_neardup_ctes("c2x", "c3")}
         -- stage 4: SemDeDup over the encoded survivors (mirror of
         -- encode_documents + rh_signature + semantic_dedup)
         tok4 AS (
@@ -3952,65 +3795,23 @@ def _curation_semantic_sql() -> str:
                       - n_tokens) / {CURATION_SHARD_TOKENS}.0) AS BIGINT)
                    AS shard_id
           FROM p5)
-        SELECT CAST(1 AS BIGINT) AS stage_no, 'gate' AS stage,
-               (SELECT count(*) FROM tr) AS rows_in,
-               (SELECT count(*) FROM c1) AS rows_out,
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c1)
-                 AS tokens_out,
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe1)
-                 AS bpe_tokens_out
-        UNION ALL
-        SELECT 2, 'para', (SELECT count(*) FROM c1),
-               (SELECT count(*) FROM c2x),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c2x),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2)
-        UNION ALL
-        SELECT 3, 'neardup', (SELECT count(*) FROM c2x),
-               (SELECT count(*) FROM c3),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c3),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2
-                WHERE doc_id IN (SELECT doc_id FROM c3))
-        UNION ALL
-        SELECT 4, 'semdedup', (SELECT count(*) FROM c3),
-               (SELECT count(*) FROM c4s),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c4s),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2
-                WHERE doc_id IN (SELECT doc_id FROM c4s))
-        UNION ALL
-        SELECT 5, 'shard', (SELECT count(*) FROM c4s),
-               (SELECT count(DISTINCT shard_id) FROM packed5),
-               (SELECT CAST(coalesce(sum(n_tokens), 0) AS BIGINT)
-                FROM packed5),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2
-                WHERE doc_id IN (SELECT doc_id FROM c4s))
+{ledger}
     """
 
 
 def _curation_scored_sql() -> str:
     """DuckDB twin of q_curation_scored_pipeline — the nine-stage SCORED
     chain in one statement. Each stage mirrors its operator's member
-    oracle expression-for-expression (gate/para/LSH/decontam fragments
-    shared with _curation_sql; the ppl model, DSIR λ table, Gumbel
-    perturbation and fuzzy-LSH fragments shared with their standalone
-    member oracles), with the raw-side model relations re-pointed at the
+    oracle expression-for-expression (gate, para and LSH near-dup are
+    the CTE fragments the other two curation twins splice; decontam,
+    the ppl model, DSIR λ table, Gumbel perturbation and fuzzy-LSH CTEs
+    restate their standalone member oracles), with the raw-side model relations re-pointed at the
     chain's intermediates (DSIR's raw distribution is the ppl-surviving
     corpus, not the full table) and the mixture/shard budgets computed
     over BPE subword counts. The value is the COMPOSITION: a scorer
     reading the wrong intermediate or a budget still summing whitespace
     counts shows up as a ledger mismatch while every member oracle stays
     green."""
-    rows = NUM_HASHES // BANDS
-    mins = ", ".join(
-        f"list_min(list_transform(sh, s -> {_A} + {i} * {_B}))"
-        for i in range(NUM_HASHES)
-    )
-    bands = ", ".join(
-        "'"
-        + str(b)
-        + "|' || "
-        + " || '|' || ".join(f"sig[{b * rows + r + 1}]" for r in range(rows))
-        for b in range(BANDS)
-    )
     total_w = sum(CURATION_MIX_WEIGHTS.values())
     w_case = " ".join(
         f"WHEN '{k}' THEN "
@@ -4019,10 +3820,8 @@ def _curation_scored_sql() -> str:
     )
     in_list = ", ".join(f"'{k}'" for k in sorted(CURATION_MIX_WEIGHTS))
     jac = _JACCARD.format(a="sh_a", b="sh_b")
-    sw = CURATION_SEG_WORDS
     dk = DECONTAM_NGRAM_K - 1
     km1 = SHINGLE_K - 1
-    bpe_ctes = _bpe_seg_ctes("bv", "b")
     grams5 = (
         "list_distinct(list_transform("
         f"range(1, greatest(length(tk) - {dk}, 1) + 1),"
@@ -4033,87 +3832,32 @@ def _curation_scored_sql() -> str:
         f"range(1, greatest(length(string_split_regex(trim(text), '\\s+')) - {km1}, 1) + 1),"
         f" i -> array_to_string(string_split_regex(trim(text), '\\s+')[i:i+{km1}], ' ')))"
     )
+    ledger = _ledger_sql([
+        ("gate", "tr", "count(*) FROM c1", "sum(nt) FROM c1",
+         "sum(bt) FROM bpe1"),
+        ("ppl", "c1", "count(*) FROM c2", "sum(nt) FROM c2",
+         _bt_of("c2", "bpe1")),
+        ("dsirsel", "c2", "count(*) FROM c3", "sum(nt) FROM c3",
+         _bt_of("c3", "bpe1")),
+        ("para", "c3", "count(*) FROM c4x", "sum(nt) FROM c4x",
+         "sum(bt) FROM bpe2"),
+        ("neardup", "c4x", "count(*) FROM c5", "sum(nt) FROM c5",
+         _bt_of("c5")),
+        ("decontam", "c5", "count(*) FROM c6", "sum(nt) FROM c6",
+         _bt_of("c6")),
+        ("fdecontam", "c6", "count(*) FROM c7", "sum(nt) FROM c7",
+         _bt_of("c7")),
+        ("mixture", "c7", "count(*) FROM c8", "sum(nt) FROM c8",
+         "sum(bt) FROM c8"),
+        ("shard", "c8", "count(DISTINCT shard_id) FROM packed",
+         "sum(nt) FROM c8", "sum(bt) FROM packed"),
+    ])
     return f"""
         WITH RECURSIVE
         tr AS MATERIALIZED (
           SELECT doc_id, text, source FROM documents
           WHERE doc_id % {DECONTAM_MODULUS} <> 0),
-        -- stage 1: quality gate (shared fragment with _curation_sql)
-        qt AS (
-          SELECT doc_id,
-                 text IS NULL AS is_null,
-                 list_filter(string_split_regex(trim(text), '\\s+'),
-                             x -> x <> '') AS tk,
-                 CAST(length(text) AS DOUBLE) AS n_chars,
-                 CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-                   AS DOUBLE) AS punct,
-                 CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-                   AS DOUBLE) AS upper_c
-          FROM tr),
-        qs AS (
-          SELECT doc_id, is_null, tk, n_chars,
-                 CAST(length(tk) AS BIGINT) AS n_tok,
-                 CAST(length(tk) AS DOUBLE) AS n_tok_d,
-                 CASE WHEN length(tk) >= 3
-                      THEN list_transform(range(1, length(tk) - 1),
-                             i -> array_to_string(tk[i:i+2], ' '))
-                      ELSE [] END AS sh,
-                 punct, upper_c
-          FROM qt),
-        qr AS (
-          SELECT doc_id, is_null, n_tok,
-                 CASE WHEN n_tok > 0
-                      THEN round(CAST(list_sum(list_transform(tk,
-                             x -> length(x))) AS DOUBLE) / n_tok_d, 6)
-                      ELSE 0.0 END AS mean_word_len,
-                 CASE WHEN n_chars > 0 THEN round(punct / n_chars, 6)
-                      ELSE 0.0 END AS punct_ratio,
-                 CASE WHEN n_chars > 0 THEN round(upper_c / n_chars, 6)
-                      ELSE 0.0 END AS upper_ratio,
-                 CASE WHEN n_tok > 0
-                      THEN round((n_tok - length(list_distinct(tk)))
-                                 / n_tok_d, 6)
-                      ELSE 0.0 END AS dup_tok,
-                 CASE WHEN length(sh) > 0
-                      THEN round(CAST(length(sh) - length(list_distinct(sh))
-                                 AS DOUBLE) / CAST(length(sh) AS DOUBLE), 6)
-                      ELSE 0.0 END AS dup_sh,
-                 CASE WHEN n_tok > 0
-                      THEN round(CAST(length(list_filter(tk, x -> lower(x) IN
-                             ('the','a','and','of','to','in','is','it')))
-                             AS DOUBLE) / n_tok_d, 6)
-                      ELSE 0.0 END AS stop_ratio
-          FROM qs),
-        qd AS (
-          SELECT doc_id, n_tok,
-                 CASE WHEN is_null THEN 'null_text' ELSE
-                 concat_ws(',',
-                   CASE WHEN n_tok < 30 THEN 'too_short' END,
-                   CASE WHEN n_tok > 100000 THEN 'too_long' END,
-                   CASE WHEN mean_word_len < 2.0 OR mean_word_len > 12.0
-                        THEN 'word_len' END,
-                   CASE WHEN punct_ratio > 0.2 THEN 'punct' END,
-                   CASE WHEN upper_ratio > 0.3 THEN 'upper' END,
-                   CASE WHEN dup_tok > 0.65 THEN 'rep_token' END,
-                   CASE WHEN dup_sh > 0.35 THEN 'rep_shingle' END,
-                   CASE WHEN stop_ratio < 0.01 THEN 'stopword' END
-                 ) END AS reasons
-          FROM qr),
-        c1 AS MATERIALIZED (
-          SELECT t.doc_id, t.text, t.source, q.n_tok AS nt
-          FROM tr t JOIN qd q USING (doc_id) WHERE q.reasons = ''),
-        -- BPE subword counts over c1's lowercased vocabulary (covers the
-        -- rewritten text too: stage 4 only removes whole segments)
-        occ1 AS MATERIALIZED (
-          SELECT doc_id, unnest(list_filter(
-            string_split_regex(trim(lower(text)), '\\s+'),
-            x -> x <> '')) AS word
-          FROM c1),
-        bv AS (SELECT DISTINCT word FROM occ1),
-        {bpe_ctes},
-        bpe1 AS MATERIALIZED (
-          SELECT doc_id, sum(nseg) AS bt
-          FROM occ1 JOIN bfin USING (word) GROUP BY doc_id),
+{_gate_ctes("tr", "c1")}
         -- stage 2: CCNet perplexity gate — hashed-bigram LM trained on
         -- the FULL-table English subset (the standalone ppl member's
         -- reference model), c1 docs scored, tail bucket dropped
@@ -4228,79 +3972,8 @@ def _curation_scored_sql() -> str:
           WHERE rk <= {CURATION_SCORED_DSIR_K}),
         c3 AS MATERIALIZED (
           SELECT c2.* FROM c2 JOIN dsel USING (doc_id)),
-        -- stage 4: paragraph dedup over c3, rewritten text forward
-        pt AS (
-          SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
-          FROM c3),
-        sp AS (
-          SELECT doc_id, tk,
-                 unnest(range(0, greatest(
-                   CAST(ceil(length(tk) / {sw}.0) AS INT), 1))) AS pos
-          FROM pt),
-        segd AS (
-          SELECT doc_id, CAST(pos AS INT) AS pos,
-                 array_to_string(tk[CAST(pos * {sw} + 1 AS INT):
-                                    CAST(pos * {sw} + {sw} AS INT)], ' ') AS seg
-          FROM sp),
-        dup AS (
-          SELECT md5(seg) AS h FROM segd
-          GROUP BY md5(seg) HAVING count(DISTINCT doc_id) >= 2),
-        fl AS (
-          SELECT s.doc_id, s.pos, s.seg, (d.h IS NOT NULL) AS is_dup
-          FROM segd s LEFT JOIN dup d ON md5(s.seg) = d.h),
-        c4t AS (
-          SELECT doc_id,
-                 string_agg(CASE WHEN NOT is_dup THEN seg END,
-                            ' ' ORDER BY pos) AS text
-          FROM fl GROUP BY doc_id),
-        c4x AS MATERIALIZED (
-          SELECT t.doc_id, t.text, c.source,
-                 CAST(length(list_filter(
-                   string_split_regex(trim(t.text), '\\s+'),
-                   x -> x <> '')) AS BIGINT) AS nt
-          FROM c4t t JOIN c3 c USING (doc_id)
-          WHERE t.text IS NOT NULL AND t.text <> ''),
-        bpe2 AS MATERIALIZED (
-          SELECT doc_id, sum(nseg) AS bt
-          FROM (SELECT doc_id, unnest(list_filter(
-                  string_split_regex(trim(lower(text)), '\\s+'),
-                  x -> x <> '')) AS word
-                FROM c4x) o2
-          JOIN bfin USING (word) GROUP BY doc_id),
-        -- stage 5: MinHash-LSH near-dup over the REWRITTEN text
-        shingled AS (
-          SELECT doc_id, {shingle_expr} AS sh FROM c4x),
-        sigs AS (
-          SELECT doc_id, sh, [{mins}] AS sig FROM shingled),
-        banded0 AS (
-          SELECT doc_id AS key, unnest([{bands}]) AS band_key FROM sigs),
-        banded AS (
-          SELECT key, band_key FROM banded0
-          QUALIFY count(*) OVER (PARTITION BY band_key) <= {LSH_MAX_BUCKET}),
-        mcand AS (
-          SELECT DISTINCT a.key AS id_a, b.key AS id_b
-          FROM banded a JOIN banded b USING (band_key)
-          WHERE a.key < b.key),
-        mpairs AS (
-          SELECT id_a, id_b
-          FROM (SELECT c.id_a, c.id_b, sa.sh AS sh_a, sb.sh AS sh_b
-                FROM mcand c
-                JOIN sigs sa ON sa.doc_id = c.id_a
-                JOIN sigs sb ON sb.doc_id = c.id_b)
-          WHERE round({jac}, 6) >= {LSH_THRESHOLD}),
-        edges AS (
-          SELECT id_a AS src, id_b AS dst FROM mpairs
-          UNION
-          SELECT id_b AS src, id_a AS dst FROM mpairs),
-        walk(node, lbl) AS (
-          SELECT src, src FROM edges
-          UNION
-          SELECT e.dst, w.lbl FROM walk w JOIN edges e ON e.src = w.node),
-        comp AS (SELECT node, min(lbl) AS cluster_id FROM walk GROUP BY node),
-        c5 AS MATERIALIZED (
-          SELECT c.doc_id, c.text, c.source, c.nt
-          FROM c4x c LEFT JOIN comp ON comp.node = c.doc_id
-          WHERE comp.node IS NULL OR c.doc_id = comp.cluster_id),
+{_para_ctes("c3", "c4x")}
+{_neardup_ctes("c4x", "c5")}
         -- stage 6: exact 5-gram decontamination vs the ORIGINAL eval text
         evg AS (
           SELECT DISTINCT md5(g) AS h FROM (
@@ -4325,9 +3998,9 @@ def _curation_scored_sql() -> str:
           SELECT -doc_id - 1 AS doc_id, text FROM documents
           WHERE doc_id % {DECONTAM_MODULUS} = 0),
         fsh AS (SELECT doc_id, {shingle_expr} AS sh FROM fsrc),
-        fsig AS (SELECT doc_id, sh, [{mins}] AS sig FROM fsh),
+        fsig AS (SELECT doc_id, sh, [{_SIG_MINS}] AS sig FROM fsh),
         fband0 AS (
-          SELECT doc_id AS key, unnest([{bands}]) AS band_key FROM fsig),
+          SELECT doc_id AS key, unnest([{_BAND_KEYS}]) AS band_key FROM fsig),
         fband AS (
           SELECT key, band_key FROM fband0
           QUALIFY count(*) OVER (PARTITION BY band_key) <= {LSH_MAX_BUCKET}),
@@ -4370,58 +4043,7 @@ def _curation_scored_sql() -> str:
                       - bt) / {CURATION_SCORED_SHARD_TOKENS}.0) AS BIGINT)
                    AS shard_id
           FROM c8)
-        SELECT CAST(1 AS BIGINT) AS stage_no, 'gate' AS stage,
-               (SELECT count(*) FROM tr) AS rows_in,
-               (SELECT count(*) FROM c1) AS rows_out,
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c1)
-                 AS tokens_out,
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe1)
-                 AS bpe_tokens_out
-        UNION ALL
-        SELECT 2, 'ppl', (SELECT count(*) FROM c1),
-               (SELECT count(*) FROM c2),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c2),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe1
-                WHERE doc_id IN (SELECT doc_id FROM c2))
-        UNION ALL
-        SELECT 3, 'dsirsel', (SELECT count(*) FROM c2),
-               (SELECT count(*) FROM c3),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c3),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe1
-                WHERE doc_id IN (SELECT doc_id FROM c3))
-        UNION ALL
-        SELECT 4, 'para', (SELECT count(*) FROM c3),
-               (SELECT count(*) FROM c4x),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c4x),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2)
-        UNION ALL
-        SELECT 5, 'neardup', (SELECT count(*) FROM c4x),
-               (SELECT count(*) FROM c5),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c5),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2
-                WHERE doc_id IN (SELECT doc_id FROM c5))
-        UNION ALL
-        SELECT 6, 'decontam', (SELECT count(*) FROM c5),
-               (SELECT count(*) FROM c6),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c6),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2
-                WHERE doc_id IN (SELECT doc_id FROM c6))
-        UNION ALL
-        SELECT 7, 'fdecontam', (SELECT count(*) FROM c6),
-               (SELECT count(*) FROM c7),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c7),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM bpe2
-                WHERE doc_id IN (SELECT doc_id FROM c7))
-        UNION ALL
-        SELECT 8, 'mixture', (SELECT count(*) FROM c7),
-               (SELECT count(*) FROM c8),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c8),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM c8)
-        UNION ALL
-        SELECT 9, 'shard', (SELECT count(*) FROM c8),
-               (SELECT count(DISTINCT shard_id) FROM packed),
-               (SELECT CAST(coalesce(sum(nt), 0) AS BIGINT) FROM c8),
-               (SELECT CAST(coalesce(sum(bt), 0) AS BIGINT) FROM packed)
+{ledger}
     """
 
 

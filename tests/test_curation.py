@@ -9,9 +9,37 @@ plans/pipeline.py:_curation_sql.
 """
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from mgo_liveagent_data_pipeline_spark.plans.pipeline import (
+    CURATION_SCORED_DSIR_K,
+    q_curation_pipeline,
+    q_curation_scored_pipeline,
+    q_curation_semantic_pipeline,
+)
+
 SF_DIR = "/root/testdata/sf0.001"
+
+
+# each chain runs once per module; its tests share the collected ledger
+def _ledger(spark, chain) -> dict:
+    return {r["stage"]: r for r in chain(spark, SF_DIR).collect()}
+
+
+@pytest.fixture(scope="module")
+def curation_ledger(spark):
+    return _ledger(spark, q_curation_pipeline)
+
+
+@pytest.fixture(scope="module")
+def semantic_ledger(spark):
+    return _ledger(spark, q_curation_semantic_pipeline)
+
+
+@pytest.fixture(scope="module")
+def scored_ledger(spark):
+    return _ledger(spark, q_curation_scored_pipeline)
 
 
 def test_paragraph_dedup_emit_text_matches_hash(spark):
@@ -30,12 +58,8 @@ def test_paragraph_dedup_emit_text_matches_hash(spark):
     assert base.columns == ["key", "n_segments", "n_dropped", "dedup_hash"]
 
 
-def test_curation_ledger_invariants(spark):
-    from mgo_liveagent_data_pipeline_spark.plans.pipeline import (
-        q_curation_pipeline,
-    )
-
-    rows = {r["stage"]: r for r in q_curation_pipeline(spark, SF_DIR).collect()}
+def test_curation_ledger_invariants(curation_ledger):
+    rows = curation_ledger
     order = ["gate", "para", "neardup", "decontam", "mixture", "shard"]
     assert [s for s in sorted(rows.values(), key=lambda r: r["stage_no"])] == [
         rows[s] for s in order
@@ -56,35 +80,23 @@ def test_curation_ledger_invariants(spark):
     assert rows["shard"]["rows_out"] >= 1 or rows["mixture"]["rows_out"] == 0
 
 
-def test_curation_ledger_bpe_column(spark):
+def test_curation_ledger_bpe_column(curation_ledger):
     """bpe_tokens_out rides every ledger row: a word is ≥1 subword, so
     the real subword count dominates the whitespace count stage-for-
     stage — the systematic under-count that motivated budgeting on BPE."""
-    from mgo_liveagent_data_pipeline_spark.plans.pipeline import (
-        q_curation_pipeline,
-    )
-
-    rows = {r["stage"]: r for r in q_curation_pipeline(spark, SF_DIR).collect()}
+    rows = curation_ledger
     for s, r in rows.items():
         assert r["bpe_tokens_out"] >= r["tokens_out"], s
     # packing drops no documents: shard/mixture agree in BOTH units
     assert rows["shard"]["bpe_tokens_out"] == rows["mixture"]["bpe_tokens_out"]
 
 
-def test_curation_scored_ledger_invariants(spark):
+def test_curation_scored_ledger_invariants(scored_ledger):
     """The nine-stage SCORED chain: same flow invariants as the rule-based
     chain, plus the model-gate stages (ppl/dsirsel) and the fuzzy
     decontamination pass slotting in without breaking the relation flow,
     and every budget column carried in both token units."""
-    from mgo_liveagent_data_pipeline_spark.plans.pipeline import (
-        CURATION_SCORED_DSIR_K,
-        q_curation_scored_pipeline,
-    )
-
-    rows = {
-        r["stage"]: r
-        for r in q_curation_scored_pipeline(spark, SF_DIR).collect()
-    }
+    rows = scored_ledger
     order = [
         "gate", "ppl", "dsirsel", "para", "neardup", "decontam",
         "fdecontam", "mixture", "shard",
@@ -110,21 +122,14 @@ def test_curation_scored_ledger_invariants(spark):
     assert rows["shard"]["bpe_tokens_out"] == rows["mixture"]["bpe_tokens_out"]
 
 
-def test_curation_semantic_ledger_invariants(spark):
+def test_curation_semantic_ledger_invariants(semantic_ledger):
     """The semantic-chain ledger: one relation flows through (rows_in
     chaining), every filtering stage shrinks or holds, tokens are
     monotone non-increasing, the SEMANTIC stage is genuinely load-bearing
     (drops at least one doc on this corpus — a no-op stage would verify
     nothing), and its survivors are a subset of stage 3's output
     re-derived through the standalone operators."""
-    from mgo_liveagent_data_pipeline_spark.plans.pipeline import (
-        q_curation_semantic_pipeline,
-    )
-
-    rows = {
-        r["stage"]: r
-        for r in q_curation_semantic_pipeline(spark, SF_DIR).collect()
-    }
+    rows = semantic_ledger
     order = ["gate", "para", "neardup", "semdedup", "shard"]
     assert sorted(rows, key=lambda s: rows[s]["stage_no"]) == order
     for prev, cur in zip(order, order[1:]):
@@ -138,3 +143,14 @@ def test_curation_semantic_ledger_invariants(spark):
     # shard packs exactly the semantic survivors' tokens
     assert rows["shard"]["rows_in"] == rows["semdedup"]["rows_out"]
     assert rows["shard"]["tokens_out"] == rows["semdedup"]["tokens_out"]
+
+
+def test_plain_and_semantic_chains_share_stages(
+    curation_ledger, semantic_ledger
+):
+    """Both chains run the same gate, para and near-dup stages over the
+    same training split, so their first three ledger rows agree cell for
+    cell — a stage that drifted in one chain shows up here even when
+    each chain's own oracle is green."""
+    for s in ("gate", "para", "neardup"):
+        assert curation_ledger[s].asDict() == semantic_ledger[s].asDict(), s

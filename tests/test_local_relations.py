@@ -341,3 +341,95 @@ def test_suites_are_spec_tables():
     gone."""
     path = os.path.join(PKG, "plans", "suites.py")
     assert _suite_layer_offenders(path) == []
+
+
+_CHAIN_STAGE_CALLS = {
+    "quality_filter", "bpe_encode", "paragraph_dedup", "minhash_lsh_dedup",
+    "connected_components", "dedup_apply", "history_append",
+}
+_CHAIN_CTE_HEADS = ("qt AS", "segd AS", "mcand AS")
+
+
+def _composed_chain_offenders(plans_dir: str) -> list[str]:
+    """Sites under ``plans_dir`` that rebuild a shared curation stage or
+    the ledger instead of calling the function that owns it: a
+    ``q_curation_*`` chain calling a stage operator or the history sink
+    itself, a ``rows_in`` alias outside ``_ledger``, an ``AS
+    bpe_tokens_out`` outside ``_ledger_sql``, and a gate, para or
+    near-dup CTE head (``qt``, ``segd``, ``mcand``) not written exactly
+    once in the SQL the curation twins (``_curation*_sql``) build."""
+    hits = []
+    for fn in sorted(f for f in os.listdir(plans_dir) if f.endswith(".py")):
+        path = os.path.join(plans_dir, fn)
+        with open(path) as f:
+            tree = ast.parse(f.read(), path)
+        funcs = {n.name: n for n in tree.body if isinstance(n, ast.FunctionDef)}
+        strings = {}  # top-level owner -> its non-docstring string parts
+        for top in tree.body:
+            owner = getattr(top, "name", "<module>")
+            docs = {
+                id(n.body[0].value)
+                for n in ast.walk(top)
+                if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+                and ast.get_docstring(n) is not None
+            }
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    name = getattr(f, "id", getattr(f, "attr", None))
+                    if owner.startswith("q_curation_") and (
+                        name in _CHAIN_STAGE_CALLS
+                    ):
+                        hits.append(f"{fn}:{node.lineno} {owner} calls {name}")
+                    if (
+                        name == "alias"
+                        and node.args
+                        and isinstance(node.args[0], ast.Constant)
+                        and node.args[0].value == "rows_in"
+                        and owner != "_ledger"
+                    ):
+                        hits.append(f"{fn}:{node.lineno} rows_in alias in {owner}")
+                if (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and id(node) not in docs
+                ):
+                    strings.setdefault(owner, []).append(node.value)
+        for owner, parts in strings.items():
+            if owner != "_ledger_sql" and any(
+                "AS bpe_tokens_out" in p for p in parts
+            ):
+                hits.append(f"{fn} AS bpe_tokens_out in {owner}")
+        # the curation twins and every module function they reach
+        todo = [n for n in funcs if n.startswith("_curation") and n.endswith("_sql")]
+        reach = set()
+        while todo:
+            name = todo.pop()
+            if name not in reach:
+                reach.add(name)
+                todo += [
+                    n.id
+                    for n in ast.walk(funcs[name])
+                    if isinstance(n, ast.Name) and n.id in funcs
+                ]
+        heads = {head: [] for head in _CHAIN_CTE_HEADS} if reach else {}
+        for owner in sorted(reach):
+            for p in strings.get(owner, ()):
+                for m in re.finditer(r"\b(qt|segd|mcand) AS\b", p):
+                    heads[m.group(0)].append(owner)
+        hits += [
+            f"{fn} {head} written {len(owners)}x: {', '.join(owners)}"
+            for head, owners in heads.items()
+            if len(owners) != 1
+        ]
+    return hits
+
+
+def test_composed_chains_share_their_stages():
+    """The three curation chains call the one implementation of each
+    shared stage (``_gate``, ``_para``, ``_neardup``) instead of the
+    operators, and the four ledgered members build their ledger through
+    ``_ledger`` (the curation chains through its one history round
+    trip). Their DuckDB twins splice the one CTE fragment per shared
+    stage and render their ledger through ``_ledger_sql``."""
+    assert _composed_chain_offenders(os.path.join(PKG, "plans")) == []

@@ -347,7 +347,10 @@ def test_overlap_jobs_keep_the_callers_job_group(spark):
         df.count()
 
     assert len(jobs_in("overlap_probe_chain", chain)) == 4 * per_count
-    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    # no job of the chain is ungrouped. Compared as "no new ungrouped id":
+    # past spark.ui.retainedJobs the tracker drops its oldest 10% of jobs,
+    # so an old ungrouped id may vanish while the chain runs
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
 
 
 def test_logs_pipeline_metrics_row(spark, tmp_path, agents, raw_messages):
