@@ -13,6 +13,21 @@ by ``cluster_id`` so a probe is a partition-pruned scan, not a full pass.
 Centroid choice here is deterministic (lowest-id vector per label) so the
 DuckDB oracle reproduces the exact same clustering without shared RNG state;
 swap in k-means centroids in production — the plan shape is identical.
+
+Every search operator is one pipeline — route, candidate set, score,
+top-k — composed from private kernels written once each: ``_route``
+(the IVF router: a broadcast centroid cross join, then each query's
+``n_probes`` best centroids), ``_pairs`` (the candidate join — cross,
+or equi on ``sig`` / ``cluster_id`` — minus self-matches, plus one
+score), the scorers ``_cosine_sim`` (pre-normed float cosine over
+``_float_side`` projections, which also carry the RH-LSH signature)
+and ``_sq_cosine`` (SQ8 integer dot over ``_sq_side`` codes), the PQ
+distance table and ADC fold (``_pq_topk``), ``_top_k`` (per-query
+``windows.top_k_per_group``, ties → lowest corpus id), and ``_scope``
+/ ``_post_filter`` (the ``filter_mode`` check and post-filter
+semi-join). ``cosine_topk`` and ``sq_topk`` are cross ``_pairs``; the
+RH-LSH operators join on ``sig``; ``ivf_topk``, ``ivfsq_topk`` and
+``ivfpq_topk`` route first and join on ``cluster_id``.
 """
 from __future__ import annotations
 
@@ -21,12 +36,141 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.similarity import cosine, cosine_prenorm, norm2
+from .windows import top_k_per_group
 
 
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda v: v.cast("double"))
 
 
+# ------------------------------------------------------------- kernels
+def _top_k(
+    scored: DataFrame, query_key: str, k: int, score_col: str = "cosine_sim",
+    ascending: bool = False,
+) -> DataFrame:
+    """Per-query top-k by ``score_col`` (ties → lowest corpus id), as
+    (query, corpus_id, score, rank)."""
+    order = F.asc(score_col) if ascending else F.desc(score_col)
+    return top_k_per_group(
+        scored, [query_key], [order, F.asc("corpus_id")], k, rank_col="rank"
+    ).select(query_key, "corpus_id", score_col, "rank")
+
+
+def _float_side(
+    df: DataFrame, key: Column | str, vec_col: str, side: str,
+    planes: list[list[int]] | None = None,
+) -> DataFrame:
+    """(key, ``{side}v``, [sig], ``{side}n``): the double vector, its RH-LSH
+    signature when ``planes`` are given, and its hoisted norm."""
+    v = F.col(side + "v")
+    out = df.select(key, _as_double(F.col(vec_col)).alias(side + "v"))
+    if planes is not None:
+        out = out.withColumn("sig", rh_signature(v, planes))
+    return out.withColumn(side + "n", norm2(v))
+
+
+def _cosine_sim() -> Column:
+    """Pre-normed float cosine of a (cv, cn) × (qv, qn) pair, rounded."""
+    return F.round(
+        cosine_prenorm(F.col("cv"), F.col("qv"), F.col("cn"), F.col("qn")), 6
+    )
+
+
+def _pairs(
+    c: DataFrame, q: DataFrame, query_key: str, score: Column,
+    on: str | None = None,
+) -> DataFrame:
+    """Candidate pairs: the corpus side × the broadcast query side — a
+    cross join (brute force) or an equi-join on the bucket key ``on`` —
+    self-matches excluded by key, scored into ``cosine_sim``."""
+    joined = (
+        c.crossJoin(F.broadcast(q)) if on is None
+        else c.join(F.broadcast(q), on=on)
+    )
+    return joined.where(F.col("corpus_id") != F.col(query_key)).withColumn(
+        "cosine_sim", score
+    )
+
+
+def _route(
+    q: DataFrame, cents: DataFrame, query_key: str, n_probes: int,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """IVF router: each query's ``n_probes`` most cosine-similar centroids
+    (tiny cross join — both sides small), as (query, *keep, cluster_id)."""
+    routed = q.crossJoin(F.broadcast(cents)).withColumn(
+        "csim", F.round(cosine(F.col("qv"), F.col("centroid")), 6)
+    )
+    return top_k_per_group(
+        routed, [query_key], [F.desc("csim"), F.asc("cluster_id")], n_probes,
+        rank_col="__rn",
+    ).select(query_key, *keep, "cluster_id")
+
+
+def _scope(
+    corpus: DataFrame, predicate: Column | str | None, filter_mode: str
+) -> tuple[Column | None, DataFrame]:
+    """The ``filter_mode`` check: (the predicate as a Column, the corpus
+    the posting lists are scanned from — pruned to eligible members for
+    ``'pre'``)."""
+    if filter_mode not in ("pre", "post"):
+        raise ValueError(f"filter_mode must be 'pre' or 'post', got {filter_mode!r}")
+    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    if pred is not None and filter_mode == "pre":
+        return pred, corpus.where(pred)
+    return pred, corpus
+
+
+def _post_filter(
+    ranked: DataFrame, corpus: DataFrame, pred: Column | None,
+    filter_mode: str, key_col: str,
+) -> DataFrame:
+    """``filter_mode='post'``: drop ineligible rows AFTER ranking."""
+    if pred is None or filter_mode != "post":
+        return ranked
+    # ranks keep their unfiltered positions (gaps = the visible
+    # under-fill artifact); keys-only semi join; AQE broadcasts it when
+    # the eligible set is small (no forced hint — post-filter is the
+    # documented-bad path and must not assume selectivity)
+    return ranked.join(
+        corpus.where(pred).select(F.col(key_col).alias("corpus_id")),
+        "corpus_id",
+        "left_semi",
+    )
+
+
+def _sq_side(
+    df: DataFrame, vec_col: str, key_col: str, key_alias: str, side: str,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """(key_alias, *keep, ``{side}c`` codes, ``{side}n2`` Σcode²) — one
+    side of an SQ8 search (``sq_encode``)."""
+    return sq_encode(df, vec_col, key_col, keep_cols=keep).select(
+        F.col("key").alias(key_alias),
+        *keep,
+        F.col("codes").alias(side + "c"),
+        F.col("sq_norm2").alias(side + "n2"),
+    )
+
+
+def _sq_cosine() -> Column:
+    """Quantized cosine of a (cc, cn2) × (qc, qn2) pair: integer dot
+    products, one final division (the per-vector scales cancel)."""
+    dot = F.aggregate(
+        F.zip_with(F.col("cc"), F.col("qc"), lambda x, y: (x * y).cast("long")),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+    return F.when(
+        (F.col("cn2") > 0) & (F.col("qn2") > 0),
+        F.round(
+            dot / F.sqrt(F.col("cn2").cast("double") * F.col("qn2").cast("double")),
+            6,
+        ),
+    ).otherwise(F.lit(0.0))
+
+
+# ----------------------------------------------------------- operators
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -39,30 +183,9 @@ def cosine_topk(
     similar corpus vectors (self-matches excluded by key). Norms are
     hoisted into the per-side projections (computed once per vector, not
     per pair — see ``similarity.norm2``)."""
-    c = corpus.select(
-        F.col(key_col).alias("corpus_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", norm2(F.col("cv")))
-    q = queries.select(
-        F.col(query_key), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", norm2(F.col("qv")))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("corpus_id") != F.col(query_key))
-        .withColumn(
-            "cosine_sim",
-            F.round(
-                cosine_prenorm(F.col("cv"), F.col("qv"), F.col("cn"), F.col("qn")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy(query_key).orderBy(
-        F.desc("cosine_sim"), F.asc("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_key, "corpus_id", "cosine_sim", "rank")
-    )
+    c = _float_side(corpus, F.col(key_col).alias("corpus_id"), vec_col, "c")
+    q = _float_side(queries, F.col(query_key), vec_col, "q")
+    return _top_k(_pairs(c, q, query_key, _cosine_sim()), query_key, k)
 
 
 def ivf_centroids(
@@ -194,22 +317,17 @@ def jl_project(vec: Column, planes: list[list[int]]) -> Column:
 
     Each component is one JVM-side zip_with/aggregate dot against a
     literal plane — no shuffle, no Python."""
-    return F.array(
-        *[
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        vec,
-                        F.array(*[F.lit(float(w)) for w in plane]),
-                        lambda x, y: x * y,
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ),
-                6,
-            )
-            for plane in planes
-        ]
+    return F.array(*[F.round(_plane_dot(vec, plane), 6) for plane in planes])
+
+
+def _plane_dot(vec: Column, plane: list[int]) -> Column:
+    """vec · plane for a literal ±1 plane: one JVM-side zip_with dot."""
+    return F.aggregate(
+        F.zip_with(
+            vec, F.array(*[F.lit(float(w)) for w in plane]), lambda x, y: x * y
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
     )
 
 
@@ -246,23 +364,12 @@ def random_project(
 def rh_signature(vec: Column, planes: list[list[int]]) -> Column:
     """Sign-bit signature string: bit p = 1 iff vec · plane_p > 0. The
     planes are tiny literals, so each bit is one JVM-side zip_with dot."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    F.array(*[F.lit(float(w)) for w in plane]),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            > 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0"))
-        for plane in planes
-    ]
-    return F.concat(*bits)
+    return F.concat(
+        *[
+            F.when(_plane_dot(vec, plane) > 0, F.lit("1")).otherwise(F.lit("0"))
+            for plane in planes
+        ]
+    )
 
 
 def rh_lsh_topk(
@@ -292,38 +399,9 @@ def rh_lsh_topk(
     reaches the usual 0.8+ on real clustered embeddings.
     """
     planes = rh_planes(num_planes, dim)
-    c = (
-        corpus.select(
-            F.col(key_col).alias("corpus_id"),
-            _as_double(F.col(vec_col)).alias("cv"),
-        )
-        .withColumn("sig", rh_signature(F.col("cv"), planes))
-        .withColumn("cn", norm2(F.col("cv")))
-    )
-    q = (
-        queries.select(F.col(query_key), _as_double(F.col(vec_col)).alias("qv"))
-        .withColumn("sig", rh_signature(F.col("qv"), planes))
-        .withColumn("qn", norm2(F.col("qv")))
-    )
-
-    scored = (
-        c.join(F.broadcast(q), on="sig")
-        .where(F.col("corpus_id") != F.col(query_key))
-        .withColumn(
-            "cosine_sim",
-            F.round(
-                cosine_prenorm(F.col("cv"), F.col("qv"), F.col("cn"), F.col("qn")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy(query_key).orderBy(
-        F.desc("cosine_sim"), F.asc("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_key, "corpus_id", "cosine_sim", "rank")
-    )
+    c = _float_side(corpus, F.col(key_col).alias("corpus_id"), vec_col, "c", planes)
+    q = _float_side(queries, F.col(query_key), vec_col, "q", planes)
+    return _top_k(_pairs(c, q, query_key, _cosine_sim(), on="sig"), query_key, k)
 
 
 def rh_multiprobe_topk(
@@ -352,19 +430,8 @@ def rh_multiprobe_topk(
     corpus vector has a single signature), so no dedup is needed.
     """
     planes = rh_planes(num_planes, dim)
-    c = (
-        corpus.select(
-            F.col(key_col).alias("corpus_id"),
-            _as_double(F.col(vec_col)).alias("cv"),
-        )
-        .withColumn("sig", rh_signature(F.col("cv"), planes))
-        .withColumn("cn", norm2(F.col("cv")))
-    )
-    q = (
-        queries.select(F.col(query_key), _as_double(F.col(vec_col)).alias("qv"))
-        .withColumn("sig", rh_signature(F.col("qv"), planes))
-        .withColumn("qn", norm2(F.col("qv")))
-    )
+    c = _float_side(corpus, F.col(key_col).alias("corpus_id"), vec_col, "c", planes)
+    q = _float_side(queries, F.col(query_key), vec_col, "q", planes)
 
     def flip(j: int) -> Column:
         """sig with bit j toggled (1-indexed substr arithmetic)."""
@@ -378,25 +445,7 @@ def rh_multiprobe_topk(
 
     probes = F.array(F.col("sig"), *[flip(j) for j in range(num_planes)])
     qp = q.select(query_key, "qv", "qn", F.explode(probes).alias("sig"))
-
-    scored = (
-        c.join(F.broadcast(qp), on="sig")
-        .where(F.col("corpus_id") != F.col(query_key))
-        .withColumn(
-            "cosine_sim",
-            F.round(
-                cosine_prenorm(F.col("cv"), F.col("qv"), F.col("cn"), F.col("qn")), 6
-            ),
-        )
-    )
-    w = Window.partitionBy(query_key).orderBy(
-        F.desc("cosine_sim"), F.asc("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_key, "corpus_id", "cosine_sim", "rank")
-    )
+    return _top_k(_pairs(c, qp, query_key, _cosine_sim(), on="sig"), query_key, k)
 
 
 def ivf_topk(
@@ -468,85 +517,93 @@ def ivf_topk(
       measurable against 'pre' (tests pin under-fill vs full-k on the
       same fixture); never the production path.
     """
-    if filter_mode not in ("pre", "post"):
-        raise ValueError(f"filter_mode must be 'pre' or 'post', got {filter_mode!r}")
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(corpus, vec_col, key_col, label_col)
-    )
     # centroid artifact derived BEFORE any predicate: routing uses the
     # shared full-corpus index, the filter scopes only list members
-    if pred is not None and filter_mode == "pre":
-        corpus = corpus.where(pred)
-    q = queries.select(
-        query_key, _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", norm2(F.col("qv")))
-
-    # route: argmax centroid per query (tiny cross join — both sides small)
-    routed = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("csim", F.round(cosine(F.col("qv"), F.col("centroid")), 6))
-    )
-    wq = Window.partitionBy(query_key).orderBy(F.desc("csim"), F.asc("cluster_id"))
-    probe = (
-        routed.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= n_probes)
-        .select(query_key, "qv", "qn", "cluster_id")
-    )
+    pred, members = _scope(corpus, predicate, filter_mode)
+    cents = centroids
+    if cents is None:
+        cents = ivf_centroids(corpus, vec_col, key_col, label_col)
+    q = _float_side(queries, query_key, vec_col, "q")
+    probe = _route(q, cents, query_key, n_probes, keep=("qv", "qn"))
 
     # scan only the probed cluster's posting list (partition-pruned at scale)
-    if corpus_preassigned:
-        if centroids is None:
-            raise ValueError(
-                "corpus_preassigned requires the centroid artifact the "
-                "stored assignments were built with"
-            )
-        c = corpus.select(
-            F.col(key_col).alias("corpus_id"),
-            "cluster_id",
-            _as_double(F.col(vec_col)).alias("cv"),
+    if corpus_preassigned and centroids is None:
+        raise ValueError(
+            "corpus_preassigned requires the centroid artifact the "
+            "stored assignments were built with"
         )
-    elif centroids is None:
-        c = corpus.select(
+    if corpus_preassigned or centroids is None:
+        # the stored index's cluster_id, else the label posting lists
+        cluster = "cluster_id" if corpus_preassigned else label_col
+        c = members.select(
             F.col(key_col).alias("corpus_id"),
-            F.col(label_col).alias("cluster_id"),
+            F.col(cluster).alias("cluster_id"),
             _as_double(F.col(vec_col)).alias("cv"),
         )
     else:
-        c = assign_nearest(corpus, cents, vec_col, key_col).select(
+        c = assign_nearest(members, cents, vec_col, key_col).select(
             F.col(key_col).alias("corpus_id"), "cluster_id", "cv"
         )
     c = c.withColumn("cn", norm2(F.col("cv")))
-    scored = (
-        c.join(F.broadcast(probe), on="cluster_id")
-        .where(F.col("corpus_id") != F.col(query_key))
-        .withColumn(
-            "cosine_sim",
-            F.round(
-                cosine_prenorm(F.col("cv"), F.col("qv"), F.col("cn"), F.col("qn")), 6
-            ),
-        )
+    scored = _pairs(c, probe, query_key, _cosine_sim(), on="cluster_id")
+    return _post_filter(
+        _top_k(scored, query_key, k), corpus, pred, filter_mode, key_col
     )
-    w = Window.partitionBy(query_key).orderBy(F.desc("cosine_sim"), F.asc("corpus_id"))
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_key, "corpus_id", "cosine_sim", "rank")
+
+
+def ivfsq_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    vec_col: str = "embedding",
+    key_col: str = "vec_id",
+    label_col: str = "label",
+    query_key: str = "query_id",
+    n_probes: int = 2,
+    centroids: DataFrame | None = None,
+    predicate: Column | str | None = None,
+    filter_mode: str = "pre",
+) -> DataFrame:
+    """IVF routing × SQ8 scoring — the composed index whose posting
+    lists store int8 CODES instead of floats (FAISS's IVF-SQ8): queries
+    route to their ``n_probes`` nearest centroids exactly as
+    ``ivf_topk`` (the centroid artifact is tiny and stays full-dim
+    float), and within the probed lists the metric is the SQ8 quantized
+    cosine — integer dot products, 8× fewer posting-list bytes. Where
+    IVF-PQ compresses harder and loses more metric, IVF-SQ8 is the
+    near-lossless middle rung: same routing recall curve as plain IVF
+    (the candidate sets are identical), scoring within lists measured
+    at 0.96 recall vs float on the worst-case fixture (``sq_topk``).
+
+    Centroid modes mirror ``ivf_topk``: default = deterministic
+    lowest-key centroids with ``label_col`` posting lists (the
+    oracle-exact mode); pass k-means centroids for production.
+    ``predicate``/``filter_mode`` carry the metadata-filtered-search
+    contract, same semantics as ``ivf_topk`` (see its docstring):
+    'pre' prunes posting-list members before the int8 scoring — the
+    centroid artifact still derives from the full corpus — and 'post'
+    exposes the under-fill trade."""
+    pred, members = _scope(corpus, predicate, filter_mode)
+    cents = centroids
+    if cents is None:
+        cents = ivf_centroids(corpus, vec_col, key_col, label_col)
+    q = _float_side(queries, query_key, vec_col, "q")
+    probe = _route(q, cents, query_key, n_probes).join(
+        _sq_side(queries, vec_col, query_key, query_key, "q"), query_key
     )
-    if pred is not None and filter_mode == "post":
-        # drop ineligible rows AFTER ranking: ranks keep their
-        # unfiltered positions (gaps = the visible under-fill artifact)
-        # keys-only semi join; AQE broadcasts it when the eligible set
-        # is small (no forced hint — post-filter is the documented-bad
-        # path and must not assume selectivity)
-        ranked = ranked.join(
-            corpus.where(pred).select(F.col(key_col).alias("corpus_id")),
-            "corpus_id",
-            "left_semi",
+    if centroids is None:
+        assigned = members.select(
+            F.col(key_col), F.col(label_col).alias("cluster_id"), vec_col
         )
-    return ranked
+    else:
+        assigned = assign_nearest(members, cents, vec_col, key_col).select(
+            F.col(key_col), "cluster_id", F.col("cv").alias(vec_col)
+        )
+    c = _sq_side(assigned, vec_col, key_col, "corpus_id", "c", ("cluster_id",))
+    scored = _pairs(c, probe, query_key, _sq_cosine(), on="cluster_id")
+    return _post_filter(
+        _top_k(scored, query_key, k), corpus, pred, filter_mode, key_col
+    )
 
 
 # ----------------------------------------------------- product quantization
@@ -610,165 +667,9 @@ def sq_topk(
     the near-isotropic fixture; tests/test_ann_recall.py pins the
     recall). Same shape as the float baseline: corpus scan ×
     broadcast(queries), window top-k, ties broken by corpus id."""
-    c = sq_encode(corpus, vec_col, key_col).select(
-        F.col("key").alias("corpus_id"),
-        F.col("codes").alias("cc"),
-        F.col("sq_norm2").alias("cn2"),
-    )
-    q = sq_encode(queries, vec_col, query_key).select(
-        F.col("key").alias(query_key),
-        F.col("codes").alias("qc"),
-        F.col("sq_norm2").alias("qn2"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("cc"), F.col("qc"), lambda x, y: (x * y).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("corpus_id") != F.col(query_key))
-        .withColumn(
-            "cosine_sim",
-            F.when(
-                (F.col("cn2") > 0) & (F.col("qn2") > 0),
-                F.round(
-                    dot
-                    / F.sqrt(
-                        F.col("cn2").cast("double") * F.col("qn2").cast("double")
-                    ),
-                    6,
-                ),
-            ).otherwise(F.lit(0.0)),
-        )
-    )
-    w = Window.partitionBy(query_key).orderBy(
-        F.desc("cosine_sim"), F.asc("corpus_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_key, "corpus_id", "cosine_sim", "rank")
-    )
-
-
-def ivfsq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    key_col: str = "vec_id",
-    label_col: str = "label",
-    query_key: str = "query_id",
-    n_probes: int = 2,
-    centroids: DataFrame | None = None,
-    predicate: Column | str | None = None,
-    filter_mode: str = "pre",
-) -> DataFrame:
-    """IVF routing × SQ8 scoring — the composed index whose posting
-    lists store int8 CODES instead of floats (FAISS's IVF-SQ8): queries
-    route to their ``n_probes`` nearest centroids exactly as
-    ``ivf_topk`` (the centroid artifact is tiny and stays full-dim
-    float), and within the probed lists the metric is the SQ8 quantized
-    cosine — integer dot products, 8× fewer posting-list bytes. Where
-    IVF-PQ compresses harder and loses more metric, IVF-SQ8 is the
-    near-lossless middle rung: same routing recall curve as plain IVF
-    (the candidate sets are identical), scoring within lists measured
-    at 0.96 recall vs float on the worst-case fixture (``sq_topk``).
-
-    Centroid modes mirror ``ivf_topk``: default = deterministic
-    lowest-key centroids with ``label_col`` posting lists (the
-    oracle-exact mode); pass k-means centroids for production.
-    ``predicate``/``filter_mode`` carry the metadata-filtered-search
-    contract, same semantics as ``ivf_topk`` (see its docstring):
-    'pre' prunes posting-list members before the int8 scoring — the
-    centroid artifact still derives from the full corpus — and 'post'
-    exposes the under-fill trade."""
-    if filter_mode not in ("pre", "post"):
-        raise ValueError(f"filter_mode must be 'pre' or 'post', got {filter_mode!r}")
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    cents = (
-        centroids
-        if centroids is not None
-        else ivf_centroids(corpus, vec_col, key_col, label_col)
-    )
-    full_corpus = corpus
-    if pred is not None and filter_mode == "pre":
-        corpus = corpus.where(pred)
-    q = queries.select(
-        query_key, _as_double(F.col(vec_col)).alias("qv")
-    )
-    routed = q.crossJoin(F.broadcast(cents)).withColumn(
-        "csim", F.round(cosine(F.col("qv"), F.col("centroid")), 6)
-    )
-    wq = Window.partitionBy(query_key).orderBy(
-        F.desc("csim"), F.asc("cluster_id")
-    )
-    probe = (
-        routed.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= n_probes)
-        .select(query_key, "cluster_id")
-    )
-    qc = sq_encode(queries, vec_col, query_key).select(
-        F.col("key").alias(query_key),
-        F.col("codes").alias("qc"),
-        F.col("sq_norm2").alias("qn2"),
-    )
-    probe = probe.join(qc, query_key)
-    if centroids is None:
-        assigned = corpus.select(
-            F.col(key_col), F.col(label_col).alias("cluster_id"), vec_col
-        )
-    else:
-        assigned = assign_nearest(corpus, cents, vec_col, key_col).select(
-            F.col(key_col), "cluster_id", F.col("cv").alias(vec_col)
-        )
-    c = sq_encode(
-        assigned, vec_col, key_col, keep_cols=("cluster_id",)
-    ).select(
-        F.col("key").alias("corpus_id"),
-        "cluster_id",
-        F.col("codes").alias("cc"),
-        F.col("sq_norm2").alias("cn2"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("cc"), F.col("qc"), lambda x, y: (x * y).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    scored = (
-        c.join(F.broadcast(probe), on="cluster_id")
-        .where(F.col("corpus_id") != F.col(query_key))
-        .withColumn(
-            "cosine_sim",
-            F.when(
-                (F.col("cn2") > 0) & (F.col("qn2") > 0),
-                F.round(
-                    dot
-                    / F.sqrt(
-                        F.col("cn2").cast("double")
-                        * F.col("qn2").cast("double")
-                    ),
-                    6,
-                ),
-            ).otherwise(F.lit(0.0)),
-        )
-    )
-    w = Window.partitionBy(query_key).orderBy(
-        F.desc("cosine_sim"), F.asc("corpus_id")
-    )
-    ranked = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_key, "corpus_id", "cosine_sim", "rank")
-    )
-    if pred is not None and filter_mode == "post":
-        ranked = ranked.join(
-            full_corpus.where(pred).select(F.col(key_col).alias("corpus_id")),
-            "corpus_id",
-            "left_semi",
-        )
-    return ranked
+    c = _sq_side(corpus, vec_col, key_col, "corpus_id", "c")
+    q = _sq_side(queries, vec_col, query_key, query_key, "q")
+    return _top_k(_pairs(c, q, query_key, _sq_cosine()), query_key, k)
 
 
 def _l2sq(a: Column, b: Column) -> Column:
@@ -783,6 +684,10 @@ def _l2sq(a: Column, b: Column) -> Column:
 
 def _subspaces(vec: Column, num_subspaces: int, dim: int) -> Column:
     """Array of (m, subvec) structs — vector split into equal slices."""
+    if dim % num_subspaces:
+        raise ValueError(
+            f"num_subspaces ({num_subspaces}) must divide dim ({dim})"
+        )
     sub = dim // num_subspaces
     return F.array(
         *[
@@ -884,45 +789,9 @@ def pq_topk(
     assignment); the query-time joins move only (key, m, code) rows and
     the broadcast table. Compose with IVF routing (encode per posting
     list) for IVF-PQ. Returns (query, corpus_id, approx_dist, rank)."""
-    cb = pq_codebooks(corpus, num_subspaces, num_codes, dim, vec_col, key_col)
-    enc = pq_encode(corpus, cb, num_subspaces, dim, vec_col, key_col)
-    qsub = queries.select(
-        F.col(query_key),
-        F.explode(
-            _subspaces(_as_double(F.col(vec_col)), num_subspaces, dim)
-        ).alias("s"),
-    ).select(query_key, F.col("s.m").alias("m"), F.col("s.sv").alias("qv"))
-    dtable = qsub.join(F.broadcast(cb), on="m").select(
-        query_key, "m", "code", _l2sq(F.col("qv"), F.col("sv")).alias("d")
-    )
-    pairs = (
-        enc.select(
-            F.col(key_col).alias("corpus_id"),
-            F.posexplode("codes").alias("m", "code"),
-        )
-        .join(F.broadcast(dtable), on=["m", "code"])
-        .where(F.col("corpus_id") != F.col(query_key))
-    )
-    approx = pairs.groupBy(query_key, "corpus_id").agg(
-        F.round(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("m", "d"))),
-                    lambda s: s["d"],
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            6,
-        ).alias("approx_dist")
-    )
-    w = Window.partitionBy(query_key).orderBy(
-        F.asc("approx_dist"), F.asc("corpus_id")
-    )
-    return (
-        approx.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_key, "corpus_id", "approx_dist", "rank")
+    return _pq_topk(
+        corpus, queries, k, num_subspaces, num_codes, dim, vec_col, key_col,
+        query_key,
     )
 
 
@@ -948,26 +817,35 @@ def ivfpq_topk(
     asserts the result equals ``pq_topk`` restricted to the probed
     posting lists — routing changes candidate sets, never scores."""
     cents = ivf_centroids(corpus, vec_col, key_col, label_col)
-    q = queries.select(
-        query_key, _as_double(F.col(vec_col)).alias("qv")
+    probe = _route(
+        _float_side(queries, query_key, vec_col, "q"), cents, query_key, n_probes
     )
-    routed = q.crossJoin(F.broadcast(cents)).withColumn(
-        "csim", F.round(cosine(F.col("qv"), F.col("centroid")), 6)
-    )
-    wq = Window.partitionBy(query_key).orderBy(F.desc("csim"), F.asc("cluster_id"))
-    probe = (
-        routed.withColumn("__rn", F.row_number().over(wq))
-        .where(F.col("__rn") <= n_probes)
-        .select(query_key, "cluster_id")
+    return _pq_topk(
+        corpus, queries, k, num_subspaces, num_codes, dim, vec_col, key_col,
+        query_key, probe, label_col,
     )
 
+
+def _pq_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    num_subspaces: int,
+    num_codes: int,
+    dim: int,
+    vec_col: str,
+    key_col: str,
+    query_key: str,
+    probe: DataFrame | None = None,
+    label_col: str = "label",
+) -> DataFrame:
+    """Both PQ operators: encode the corpus, build each query's M×K
+    distance table against the broadcast codebook, join the codes to it
+    — through the routed (query, cluster_id) ``probe`` over the
+    ``label_col`` posting lists when IVF-PQ passes one — and fold the
+    ADC sum."""
     cb = pq_codebooks(corpus, num_subspaces, num_codes, dim, vec_col, key_col)
-    enc = pq_encode(corpus, cb, num_subspaces, dim, vec_col, key_col).join(
-        corpus.select(
-            F.col(key_col), F.col(label_col).alias("cluster_id")
-        ),
-        on=key_col,
-    )
+    enc = pq_encode(corpus, cb, num_subspaces, dim, vec_col, key_col)
     qsub = queries.select(
         F.col(query_key),
         F.explode(
@@ -977,16 +855,24 @@ def ivfpq_topk(
     dtable = qsub.join(F.broadcast(cb), on="m").select(
         query_key, "m", "code", _l2sq(F.col("qv"), F.col("sv")).alias("d")
     )
+    keys = []
+    if probe is not None:
+        enc = enc.join(
+            corpus.select(F.col(key_col), F.col(label_col).alias("cluster_id")),
+            on=key_col,
+        ).join(F.broadcast(probe), on="cluster_id")
+        keys = [query_key]
     pairs = (
-        enc.join(F.broadcast(probe), on="cluster_id")
-        .select(
+        enc.select(
             F.col(key_col).alias("corpus_id"),
-            query_key,
+            *keys,
             F.posexplode("codes").alias("m", "code"),
         )
-        .join(F.broadcast(dtable), on=[query_key, "m", "code"])
+        .join(F.broadcast(dtable), on=[*keys, "m", "code"])
         .where(F.col("corpus_id") != F.col(query_key))
     )
+    # ADC: the M looked-up partial distances folded in m-order, so both
+    # engines add the same doubles in the same order
     approx = pairs.groupBy(query_key, "corpus_id").agg(
         F.round(
             F.aggregate(
@@ -1000,14 +886,7 @@ def ivfpq_topk(
             6,
         ).alias("approx_dist")
     )
-    w = Window.partitionBy(query_key).orderBy(
-        F.asc("approx_dist"), F.asc("corpus_id")
-    )
-    return (
-        approx.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(query_key, "corpus_id", "approx_dist", "rank")
-    )
+    return _top_k(approx, query_key, k, "approx_dist", ascending=True)
 
 
 # ------------------------------------------------- embedding generation

@@ -877,53 +877,25 @@ def _ivf_ingest_oracle(n_probes: int = 2, k: int = 5) -> str:
     assignment of EVERY corpus vector (ties → highest cluster_id, as
     operators/annsearch.py:assign_nearest), then the standard IVF probe
     (ties → lowest cluster_id) over the assigned posting lists."""
-    cos_qc = _pipe._COSINE.format(a="q.qv", b="c.centroid")
     cos_vc = _pipe._COSINE.format(a="v.cv", b="c.centroid")
-    cos_vq = _pipe._COSINE.format(a="a.cv", b="p.qv")
     return f"""
-        WITH cents AS (
-          SELECT label AS cluster_id,
-                 arg_min(list_transform(embedding, x -> CAST(x AS DOUBLE)),
-                         vec_id) AS centroid
-          FROM embeddings GROUP BY label),
+        WITH q AS (
+          SELECT vec_id AS query_id,
+                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
+          FROM embeddings WHERE vec_id < 5),{_pipe._ivf_route_ctes(n_probes, ("qv",))}
         v AS (
           SELECT vec_id,
                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
           FROM embeddings),
         assigned AS (
-          SELECT vec_id, cv, cluster_id FROM (
+          SELECT vec_id AS corpus_id, cv, cluster_id FROM (
             SELECT v.vec_id, v.cv, c.cluster_id,
                    row_number() OVER (
                      PARTITION BY v.vec_id
                      ORDER BY round({cos_vc}, 6) DESC,
                               c.cluster_id DESC) AS rn
-            FROM v CROSS JOIN cents c) WHERE rn = 1),
-        q AS (
-          SELECT vec_id AS query_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-          FROM embeddings WHERE vec_id < 5),
-        probe AS (
-          SELECT query_id, qv, cluster_id FROM (
-            SELECT q.query_id, q.qv, c.cluster_id,
-                   row_number() OVER (
-                     PARTITION BY q.query_id
-                     ORDER BY round({cos_qc}, 6) DESC,
-                              c.cluster_id ASC) AS rn
-            FROM q CROSS JOIN cents c) WHERE rn <= {n_probes}),
-        scored AS (
-          SELECT p.query_id, a.vec_id AS corpus_id,
-                 round({cos_vq}, 6) AS cosine_sim
-          FROM assigned a JOIN probe p ON a.cluster_id = p.cluster_id
-          WHERE a.vec_id <> p.query_id),
-        ranked AS (
-          SELECT query_id, corpus_id, cosine_sim,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine_sim DESC,
-                                             corpus_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, corpus_id, cosine_sim, CAST(rn AS INT) AS "rank"
-        FROM ranked WHERE rn <= {k}
-    """
+            FROM v CROSS JOIN cents c) WHERE rn = 1),{
+            _pipe._pairs_sql("assigned c JOIN probe q USING (cluster_id)", k=k)}"""
 
 
 def q_stream_join_30m(

@@ -2592,117 +2592,10 @@ def _scored_ingest_oracle() -> str:
     jac = _JACCARD.format(a="sh_a", b="sh_b")
     km1 = SHINGLE_K - 1
     return f"""
-        WITH qt AS (
-          SELECT doc_id,
-                 text IS NULL AS is_null,
-                 list_filter(string_split_regex(trim(text), '\\s+'),
-                             x -> x <> '') AS tk,
-                 CAST(length(text) AS DOUBLE) AS n_chars,
-                 CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-                   AS DOUBLE) AS punct,
-                 CAST(length(regexp_replace(text, '[^A-Z]', '', 'g'))
-                   AS DOUBLE) AS upper_c
-          FROM documents),
-        qs AS (
-          SELECT doc_id, is_null, tk, n_chars,
-                 CAST(length(tk) AS BIGINT) AS n_tok,
-                 CAST(length(tk) AS DOUBLE) AS n_tok_d,
-                 CASE WHEN length(tk) >= 3
-                      THEN list_transform(range(1, length(tk) - 1),
-                             i -> array_to_string(tk[i:i+2], ' '))
-                      ELSE [] END AS sh,
-                 punct, upper_c
-          FROM qt),
-        qr AS (
-          SELECT doc_id, is_null, n_tok,
-                 CASE WHEN n_tok > 0
-                      THEN round(CAST(list_sum(list_transform(tk,
-                             x -> length(x))) AS DOUBLE) / n_tok_d, 6)
-                      ELSE 0.0 END AS mean_word_len,
-                 CASE WHEN n_chars > 0 THEN round(punct / n_chars, 6)
-                      ELSE 0.0 END AS punct_ratio,
-                 CASE WHEN n_chars > 0 THEN round(upper_c / n_chars, 6)
-                      ELSE 0.0 END AS upper_ratio,
-                 CASE WHEN n_tok > 0
-                      THEN round((n_tok - length(list_distinct(tk)))
-                                 / n_tok_d, 6)
-                      ELSE 0.0 END AS dup_tok,
-                 CASE WHEN length(sh) > 0
-                      THEN round(CAST(length(sh) - length(list_distinct(sh))
-                                 AS DOUBLE) / CAST(length(sh) AS DOUBLE), 6)
-                      ELSE 0.0 END AS dup_sh,
-                 CASE WHEN n_tok > 0
-                      THEN round(CAST(length(list_filter(tk, x -> lower(x) IN
-                             ('the','a','and','of','to','in','is','it')))
-                             AS DOUBLE) / n_tok_d, 6)
-                      ELSE 0.0 END AS stop_ratio
-          FROM qs),
-        qd AS (
-          SELECT doc_id,
-                 CASE WHEN is_null THEN 'null_text' ELSE
-                 concat_ws(',',
-                   CASE WHEN n_tok < 30 THEN 'too_short' END,
-                   CASE WHEN n_tok > 100000 THEN 'too_long' END,
-                   CASE WHEN mean_word_len < 2.0 OR mean_word_len > 12.0
-                        THEN 'word_len' END,
-                   CASE WHEN punct_ratio > 0.2 THEN 'punct' END,
-                   CASE WHEN upper_ratio > 0.3 THEN 'upper' END,
-                   CASE WHEN dup_tok > 0.65 THEN 'rep_token' END,
-                   CASE WHEN dup_sh > 0.35 THEN 'rep_shingle' END,
-                   CASE WHEN stop_ratio < 0.01 THEN 'stopword' END
-                 ) END AS reasons
-          FROM qr),
+        WITH{_quality_ctes("documents")}
         g1 AS MATERIALIZED (
           SELECT d.doc_id, d.text FROM documents d
-          JOIN qd USING (doc_id) WHERE qd.reasons = ''),
-        etoks AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                             x -> x <> '') AS tk
-          FROM documents WHERE lang = 'en'),
-        ebg AS (
-          SELECT CAST(('0x' || substring(md5(unnest(tk[1:len(tk)-1])), 1, 8))
-                      AS BIGINT) % {LM_BUCKETS} AS h1,
-                 CAST(('0x' || substring(md5(unnest(tk[2:len(tk)])), 1, 8))
-                      AS BIGINT) % {LM_BUCKETS} AS h2
-          FROM etoks),
-        prb AS (SELECT h1, h2, count(*) AS b FROM ebg GROUP BY h1, h2),
-        pctx AS (SELECT h1, sum(b) AS u FROM prb GROUP BY h1),
-        pmodel AS (
-          SELECT prb.h1, prb.h2,
-                 CAST(round(-1000 * ln((b + 1.0) / (u + {LM_BUCKETS}.0)))
-                      AS BIGINT) AS m
-          FROM prb JOIN pctx USING (h1)),
-        pctxu AS (
-          SELECT h1,
-                 CAST(round(-1000 * ln(1.0 / (u + {LM_BUCKETS}.0)))
-                      AS BIGINT) AS mu
-          FROM pctx),
-        g1bg AS (
-          SELECT doc_id,
-                 CAST(('0x' || substring(md5(unnest(tk[1:len(tk)-1])), 1, 8))
-                      AS BIGINT) % {LM_BUCKETS} AS h1,
-                 CAST(('0x' || substring(md5(unnest(tk[2:len(tk)])), 1, 8))
-                      AS BIGINT) % {LM_BUCKETS} AS h2
-          FROM (SELECT doc_id,
-                       list_filter(
-                         string_split_regex(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS tk
-                FROM g1)),
-        psc AS (
-          SELECT g1bg.doc_id, count(*) AS nb,
-                 sum(COALESCE(m, mu,
-                     CAST(round(1000 * ln({LM_BUCKETS}.0)) AS BIGINT)))
-                   AS milli
-          FROM g1bg
-          LEFT JOIN pmodel USING (h1, h2)
-          LEFT JOIN pctxu USING (h1)
-          GROUP BY g1bg.doc_id),
-        sv AS MATERIALIZED (
-          SELECT g1.doc_id, g1.text FROM g1 LEFT JOIN psc USING (doc_id)
-          WHERE psc.nb IS NULL OR psc.nb = 0
-             OR CAST(psc.milli AS DOUBLE) / CAST(psc.nb * 1000 AS DOUBLE)
-                <= {LM_TAIL_NLL}),
+          JOIN qd USING (doc_id) WHERE qd.reasons = ''),{_ppl_gate_ctes("g1", "sv")}
         shingled AS (
           SELECT doc_id,
                  list_distinct(list_transform(
@@ -2900,111 +2793,164 @@ _COSINE = """
 """
 
 
-def _jl_project_oracle(out_dim: int = 16, dim: int = 64, k: int = 5) -> str:
+def _rank_sql(
+    src: str, score: str = "cosine_sim", order: str = "DESC", k: int = 5
+) -> str:
+    """The rank tail every ANN twin ends with (mirror of
+    annsearch._top_k): per query, the top ``k`` rows of ``src`` by
+    ``score`` in ``order``, ties → lowest corpus id, ``rank`` as INT."""
+    return f"""
+        ranked AS (
+          SELECT query_id, corpus_id, {score},
+                 row_number() OVER (PARTITION BY query_id
+                                    ORDER BY {score} {order}, corpus_id ASC) AS rn
+          FROM {src})
+        SELECT query_id, corpus_id, {score}, CAST(rn AS INT) AS "rank"
+        FROM ranked WHERE rn <= {k}
+    """
+
+
+def _pairs_sql(frm: str, score: str | None = None, k: int = 5) -> str:
+    """Candidate pairs, then the rank tail (mirror of annsearch._pairs):
+    the corpus side ``c`` (corpus_id, …) and the query side ``q``
+    (query_id, …) joined as ``frm``, self-matches dropped, scored by
+    ``score`` — by default the rounded float cosine of ``c.cv`` and
+    ``q.qv``."""
+    if score is None:
+        score = f"round({_COSINE.format(a='c.cv', b='q.qv')}, 6)"
+    return f"""
+        scored AS (
+          SELECT q.query_id, c.corpus_id, {score} AS cosine_sim
+          FROM {frm}
+          WHERE c.corpus_id <> q.query_id),{_rank_sql("scored", k=k)}"""
+
+
+def _float_sides_sql(eligible: str = "") -> str:
+    """Float sides: corpus ``c`` (corpus_id, label, cv) — restricted by
+    the ``eligible`` join when given — and the five queries ``q``
+    (query_id, qv)."""
+    return f"""
+        c AS (
+          SELECT e.vec_id AS corpus_id, e.label,
+                 list_transform(e.embedding, x -> CAST(x AS DOUBLE)) AS cv
+          FROM embeddings e {eligible}),
+        q AS (
+          SELECT vec_id AS query_id,
+                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
+          FROM embeddings WHERE vec_id < 5),"""
+
+
+def _ivf_route_ctes(n_probes: int, keep: tuple[str, ...] = ()) -> str:
+    """The IVF router over the query CTE ``q`` (mirror of
+    annsearch._route): deterministic lowest-key centroids ``cents``; in
+    ``probe``, each query's ``n_probes`` most cosine-similar (rounded)
+    centroids, ties → lowest cluster_id, carrying ``keep``."""
+    return f"""
+        cents AS (
+          SELECT label AS cluster_id,
+                 arg_min(list_transform(embedding, x -> CAST(x AS DOUBLE)), vec_id) AS centroid
+          FROM embeddings GROUP BY label),
+        routed AS (
+          SELECT q.query_id{"".join(f", q.{c}" for c in keep)}, c.cluster_id,
+                 row_number() OVER (PARTITION BY q.query_id
+                                    ORDER BY round({_COSINE.format(a="q.qv", b="c.centroid")}, 6) DESC,
+                                             c.cluster_id ASC) AS rn
+          FROM q CROSS JOIN cents c),
+        probe AS (
+          SELECT query_id{"".join(f", {c}" for c in keep)}, cluster_id
+          FROM routed WHERE rn <= {n_probes}),"""
+
+
+def _plane_dot_sql(v: str, plane: list[int]) -> str:
+    """``v`` · a literal ±1 plane (mirror of annsearch._plane_dot)."""
+    lit = ", ".join(f"{float(w):.1f}" for w in plane)
+    return (
+        f"list_sum(list_transform(range(1, {len(plane) + 1}),"
+        f" i -> {v}[i] * ([{lit}])[i]))"
+    )
+
+
+def _rh_sig_sql(v: str, planes: list[list[int]]) -> str:
+    """Sign-bit signature of ``v`` (mirror of annsearch.rh_signature)."""
+    return " || ".join(
+        f"CASE WHEN {_plane_dot_sql(v, p)} > 0 THEN '1' ELSE '0' END"
+        for p in planes
+    )
+
+
+def _rh_flips_sql(bits: int) -> str:
+    """``sig``'s ``bits`` Hamming-1 neighbours, one bit flipped each."""
+    return ", ".join(
+        f"substr(sig, 1, {j}) || (CASE WHEN substr(sig, {j + 1}, 1) = '1'"
+        f" THEN '0' ELSE '1' END) || substr(sig, {j + 2})"
+        for j in range(bits)
+    )
+
+
+def _jl_project_oracle(out_dim: int = 16, dim: int = 64) -> str:
     """Mirror of q_ann_project_topk: the identical ±1 planes as literal
     arrays, per-component round(·, 6), exact cosine in projected space."""
     from ..operators.annsearch import rh_planes
 
-    planes = rh_planes(out_dim, dim)
-
-    def proj(v: str) -> str:
-        comps = []
-        for plane in planes:
-            lit = "[" + ", ".join(f"{float(w):.1f}" for w in plane) + "]"
-            comps.append(
-                f"round(list_sum(list_transform(range(1, {dim + 1}),"
-                f" i -> {v}[i] * ({lit})[i])), 6)"
-            )
-        return "[" + ", ".join(comps) + "]"
-
+    comps = ", ".join(
+        f"round({_plane_dot_sql('v', p)}, 6)" for p in rh_planes(out_dim, dim)
+    )
     return f"""
         WITH c0 AS (
           SELECT vec_id,
                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           FROM embeddings),
-        c AS (SELECT vec_id AS corpus_id, {proj("v")} AS cv FROM c0),
+        c AS (SELECT vec_id AS corpus_id, [{comps}] AS cv FROM c0),
         q AS (SELECT corpus_id AS query_id, cv AS qv FROM c
-              WHERE corpus_id < 5),
-        scored AS (
-          SELECT q.query_id, c.corpus_id,
-                 round({_COSINE.format(a="c.cv", b="q.qv")}, 6) AS cosine_sim
-          FROM c CROSS JOIN q
-          WHERE c.corpus_id <> q.query_id),
-        ranked AS (
-          SELECT query_id, corpus_id, cosine_sim,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine_sim DESC, corpus_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, corpus_id, cosine_sim, CAST(rn AS INT) AS "rank"
-        FROM ranked WHERE rn <= {k}
-    """
+              WHERE corpus_id < 5),{_pairs_sql("c CROSS JOIN q")}"""
 
 
-def _sq_topk_oracle(dim: int = 64, k: int = 5) -> str:
-    """Mirror of q_ann_sq_topk: identical floor-half-up int8 codes,
-    integer dot products, one final division."""
-    code = (
-        "CASE WHEN s > 0 THEN list_transform(v, x -> "
-        "CAST(floor(x / s * 127 + 0.5) AS INT)) "
-        "ELSE list_transform(v, x -> 0) END"
-    )
-    n2 = "list_sum(list_transform(codes, c -> CAST(c * c AS BIGINT)))"
-    dot = (
-        f"list_sum(list_transform(range(1, {dim + 1}),"
-        " i -> CAST(c.cc[i] * q.qc[i] AS BIGINT)))"
+def _rh_oracle(multiprobe: bool, num_planes: int = 8, dim: int = 64) -> str:
+    """Mirror of q_ann_rh_lsh_topk / q_ann_rh_multiprobe_topk: the same
+    md5-derived planes; each query probes its own signature bucket and,
+    multi-probe, every Hamming-1 bucket."""
+    from ..operators.annsearch import rh_planes
+
+    planes = rh_planes(num_planes, dim)
+    probes = f"sig, {_rh_flips_sql(num_planes)}" if multiprobe else "sig"
+    return f"""
+        WITH{_float_sides_sql()}
+        cs AS (SELECT corpus_id, cv, {_rh_sig_sql("cv", planes)} AS sig FROM c),
+        qs AS (SELECT query_id, qv, {_rh_sig_sql("qv", planes)} AS sig FROM q),
+        qp AS (SELECT query_id, qv, unnest([{probes}]) AS sig FROM qs),{
+            _pairs_sql("cs c JOIN qp q USING (sig)")}"""
+
+
+def _ivf_oracle(n_probes: int = 1, lang: str | None = None) -> str:
+    """Mirror of q_ann_ivf_topk / q_ann_ivf_multiprobe_topk and, with
+    ``lang``, q_ann_filtered_topk: the eligibility join keeps only
+    ``lang`` posting-list members BEFORE the rank window, while the
+    centroids still derive from the FULL corpus (shared-index routing)."""
+    eligible = (
+        f"JOIN documents d ON d.doc_id = e.vec_id AND d.lang = '{lang}'"
+        if lang else ""
     )
     return f"""
-        WITH raw AS (
-          SELECT vec_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-          FROM embeddings),
-        sc AS (
-          SELECT vec_id, v,
-                 list_max(list_transform(v, x -> abs(x))) AS s
-          FROM raw),
-        enc AS (SELECT vec_id, {code} AS codes FROM sc),
-        e AS (SELECT vec_id, codes, {n2} AS n2 FROM enc),
-        c AS (SELECT vec_id AS corpus_id, codes AS cc, n2 AS cn2 FROM e),
-        q AS (SELECT vec_id AS query_id, codes AS qc, n2 AS qn2 FROM e
-              WHERE vec_id < 5),
-        scored AS (
-          SELECT q.query_id, c.corpus_id,
-                 CASE WHEN c.cn2 > 0 AND q.qn2 > 0
-                      THEN round({dot}
+        WITH{_float_sides_sql(eligible)}{_ivf_route_ctes(n_probes, ("qv",))}{
+            _pairs_sql("c JOIN probe q ON c.label = q.cluster_id")}"""
+
+
+def _sq_oracle(n_probes: int | None = None, dim: int = 64) -> str:
+    """Mirror of q_ann_sq_topk and, with ``n_probes``, q_ann_ivfsq_topk
+    (the IVF router with SQ8 scoring inside the probed lists): identical
+    floor-half-up int8 codes, integer dot products, one final division."""
+    score = f"""CASE WHEN c.cn2 > 0 AND q.qn2 > 0
+                      THEN round(list_sum(list_transform(range(1, {dim + 1}),
+                                   i -> CAST(c.cc[i] * q.qc[i] AS BIGINT)))
                            / sqrt(CAST(c.cn2 AS DOUBLE)
                                   * CAST(q.qn2 AS DOUBLE)), 6)
-                      ELSE 0.0 END AS cosine_sim
-          FROM c CROSS JOIN q
-          WHERE c.corpus_id <> q.query_id),
-        ranked AS (
-          SELECT query_id, corpus_id, cosine_sim,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine_sim DESC, corpus_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, corpus_id, cosine_sim, CAST(rn AS INT) AS "rank"
-        FROM ranked WHERE rn <= {k}
-    """
-
-
-def _ivfsq_oracle(n_probes: int = 2, dim: int = 64, k: int = 5) -> str:
-    """Mirror of q_ann_ivfsq_topk: the IVF routing CTEs with SQ8
-    integer-dot scoring inside the probed lists."""
-    code = (
-        "CASE WHEN s > 0 THEN list_transform(v, x -> "
-        "CAST(floor(x / s * 127 + 0.5) AS INT)) "
-        "ELSE list_transform(v, x -> 0) END"
-    )
-    n2 = "list_sum(list_transform(codes, c -> CAST(c * c AS BIGINT)))"
-    dot = (
-        f"list_sum(list_transform(range(1, {dim + 1}),"
-        " i -> CAST(c.codes[i] * p.qc[i] AS BIGINT)))"
-    )
+                      ELSE 0.0 END"""
+    route, frm = "", "c CROSS JOIN q"
+    if n_probes:
+        route = _ivf_route_ctes(n_probes, ("qc", "qn2"))
+        frm = "c JOIN probe q ON c.label = q.cluster_id"
     return f"""
-        WITH cents AS (
-          SELECT label AS cluster_id,
-                 arg_min(list_transform(embedding, x -> CAST(x AS DOUBLE)), vec_id) AS centroid
-          FROM embeddings GROUP BY label),
-        raw AS (
+        WITH raw AS (
           SELECT vec_id, label,
                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           FROM embeddings),
@@ -3012,201 +2958,70 @@ def _ivfsq_oracle(n_probes: int = 2, dim: int = 64, k: int = 5) -> str:
           SELECT vec_id, label, v,
                  list_max(list_transform(v, x -> abs(x))) AS s
           FROM raw),
-        enc AS (SELECT vec_id, label, v, {code} AS codes FROM sc),
-        e AS (SELECT vec_id, label, v, codes, {n2} AS n2 FROM enc),
-        q AS (SELECT vec_id AS query_id, v AS qv, codes AS qc, n2 AS qn2
-              FROM e WHERE vec_id < 5),
-        routed AS (
-          SELECT q.query_id, q.qc, q.qn2, c.cluster_id,
-                 row_number() OVER (PARTITION BY q.query_id
-                                    ORDER BY round({_COSINE.format(a="q.qv", b="c.centroid")}, 6) DESC,
-                                             c.cluster_id ASC) AS rn
-          FROM q CROSS JOIN cents c),
-        probe AS (
-          SELECT query_id, qc, qn2, cluster_id FROM routed
-          WHERE rn <= {n_probes}),
-        scored AS (
-          SELECT p.query_id, c.vec_id AS corpus_id,
-                 CASE WHEN c.n2 > 0 AND p.qn2 > 0
-                      THEN round({dot}
-                           / sqrt(CAST(c.n2 AS DOUBLE)
-                                  * CAST(p.qn2 AS DOUBLE)), 6)
-                      ELSE 0.0 END AS cosine_sim
-          FROM e c JOIN probe p ON c.label = p.cluster_id
-          WHERE c.vec_id <> p.query_id),
-        ranked AS (
-          SELECT query_id, corpus_id, cosine_sim,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine_sim DESC, corpus_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, corpus_id, cosine_sim, CAST(rn AS INT) AS "rank"
-        FROM ranked WHERE rn <= {k}
-    """
+        enc AS (
+          SELECT vec_id, label, v,
+                 CASE WHEN s > 0 THEN list_transform(v, x ->
+                        CAST(floor(x / s * 127 + 0.5) AS INT))
+                      ELSE list_transform(v, x -> 0) END AS codes
+          FROM sc),
+        e AS (
+          SELECT vec_id, label, v, codes,
+                 list_sum(list_transform(codes, c -> CAST(c * c AS BIGINT))) AS n2
+          FROM enc),
+        c AS (SELECT vec_id AS corpus_id, label, codes AS cc, n2 AS cn2 FROM e),
+        q AS (SELECT vec_id AS query_id, v AS qv, codes AS qc, n2 AS qn2 FROM e
+              WHERE vec_id < 5),{route}{_pairs_sql(frm, score)}"""
 
 
-def _rh_lsh_oracle(num_planes: int = 8, dim: int = 64, k: int = 5) -> str:
-    from ..operators.annsearch import rh_planes
-
-    planes = rh_planes(num_planes, dim)
-
-    def sig(v: str) -> str:
-        bits = []
-        for plane in planes:
-            lit = "[" + ", ".join(f"{float(w):.1f}" for w in plane) + "]"
-            bits.append(
-                f"CASE WHEN list_sum(list_transform(range(1, {dim + 1}),"
-                f" i -> {v}[i] * ({lit})[i])) > 0 THEN '1' ELSE '0' END"
-            )
-        return " || ".join(bits)
-
-    return f"""
-        WITH c AS (
-          SELECT vec_id AS corpus_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-          FROM embeddings),
-        cs AS (SELECT corpus_id, cv, {sig("cv")} AS sig FROM c),
-        q AS (
-          SELECT vec_id AS query_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-          FROM embeddings WHERE vec_id < 5),
-        qs AS (SELECT query_id, qv, {sig("qv")} AS sig FROM q),
-        scored AS (
-          SELECT qs.query_id, cs.corpus_id,
-                 round({_COSINE.format(a="cs.cv", b="qs.qv")}, 6) AS cosine_sim
-          FROM cs JOIN qs USING (sig)
-          WHERE cs.corpus_id <> qs.query_id),
-        ranked AS (
-          SELECT query_id, corpus_id, cosine_sim,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine_sim DESC, corpus_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, corpus_id, cosine_sim, CAST(rn AS INT) AS "rank"
-        FROM ranked WHERE rn <= {k}
-    """
-
-
-def _rh_multiprobe_oracle(num_planes: int = 8, dim: int = 64, k: int = 5) -> str:
-    from ..operators.annsearch import rh_planes
-
-    planes = rh_planes(num_planes, dim)
-
-    def sig(v: str) -> str:
-        bits = []
-        for plane in planes:
-            lit = "[" + ", ".join(f"{float(w):.1f}" for w in plane) + "]"
-            bits.append(
-                f"CASE WHEN list_sum(list_transform(range(1, {dim + 1}),"
-                f" i -> {v}[i] * ({lit})[i])) > 0 THEN '1' ELSE '0' END"
-            )
-        return " || ".join(bits)
-
-    # probe list: the signature itself plus each one-bit flip
-    flips = ", ".join(
-        f"substr(sig, 1, {j}) || (CASE WHEN substr(sig, {j + 1}, 1) = '1'"
-        f" THEN '0' ELSE '1' END) || substr(sig, {j + 2})"
-        for j in range(num_planes)
+def _pq_oracle(
+    n_probes: int | None = None, m: int = 8, codes: int = 16, dim: int = 64
+) -> str:
+    """Mirror of q_ann_pq_topk and, with ``n_probes``, q_ann_ivfpq_topk —
+    the PQ ADC pipeline restricted to the IVF-probed posting lists
+    (routing changes candidate sets, never distances). Same seeds (the
+    ``codes`` lowest keys), same per-subspace argmin via a (d, code)
+    struct-min, same m-ordered fold of the partial distances — every
+    double is produced by the identical expression in the identical
+    order."""
+    sub = dim // m
+    l2 = (
+        f"list_sum(list_transform(range(1, {sub + 1}),"
+        " i -> (xv[i] - sv[i]) * (xv[i] - sv[i])))"
     )
-
+    route, via, on_query = "", "", ""
+    if n_probes:
+        route = _ivf_route_ctes(n_probes)
+        via = "JOIN c USING (vec_id) JOIN probe p ON p.cluster_id = c.label"
+        on_query = "dt.query_id = p.query_id AND "
     return f"""
         WITH c AS (
-          SELECT vec_id AS corpus_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
+          SELECT vec_id, label,
+                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           FROM embeddings),
-        cs AS (SELECT corpus_id, cv, {sig("cv")} AS sig FROM c),
-        q AS (
-          SELECT vec_id AS query_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-          FROM embeddings WHERE vec_id < 5),
-        qs AS (SELECT query_id, qv, {sig("qv")} AS sig FROM q),
-        qp AS (
-          SELECT query_id, qv, unnest([sig, {flips}]) AS sig FROM qs),
-        scored AS (
-          SELECT qp.query_id, cs.corpus_id,
-                 round({_COSINE.format(a="cs.cv", b="qp.qv")}, 6) AS cosine_sim
-          FROM cs JOIN qp USING (sig)
-          WHERE cs.corpus_id <> qp.query_id),
-        ranked AS (
-          SELECT query_id, corpus_id, cosine_sim,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine_sim DESC, corpus_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, corpus_id, cosine_sim, CAST(rn AS INT) AS "rank"
-        FROM ranked WHERE rn <= {k}
-    """
-
-
-def _ivf_filtered_oracle(n_probes: int = 2, lang: str = "de") -> str:
-    """Mirror of q_ann_filtered_topk: identical to _ivf_oracle except
-    the scored CTE joins the documents dimension and keeps only
-    eligible posting-list members BEFORE the rank window — centroids
-    still derive from the FULL corpus (shared-index routing)."""
-    return f"""
-        WITH cents AS (
-          SELECT label AS cluster_id,
-                 arg_min(list_transform(embedding, x -> CAST(x AS DOUBLE)), vec_id) AS centroid
-          FROM embeddings GROUP BY label),
-        q AS (
-          SELECT vec_id AS query_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-          FROM embeddings WHERE vec_id < 5),
-        routed AS (
-          SELECT q.query_id, q.qv, c.cluster_id,
-                 round({_COSINE.format(a="q.qv", b="c.centroid")}, 6) AS csim,
-                 row_number() OVER (PARTITION BY q.query_id
-                                    ORDER BY round({_COSINE.format(a="q.qv", b="c.centroid")}, 6) DESC,
-                                             c.cluster_id ASC) AS rn
-          FROM q CROSS JOIN cents c),
-        probe AS (
-          SELECT query_id, qv, cluster_id FROM routed WHERE rn <= {n_probes}),
-        scored AS (
-          SELECT p.query_id, e.vec_id AS corpus_id,
-                 round({_COSINE.format(a="list_transform(e.embedding, x -> CAST(x AS DOUBLE))", b="p.qv")}, 6) AS cosine_sim
-          FROM embeddings e
-          JOIN documents d ON d.doc_id = e.vec_id AND d.lang = '{lang}'
-          JOIN probe p ON e.label = p.cluster_id
-          WHERE e.vec_id <> p.query_id),
-        ranked AS (
-          SELECT query_id, corpus_id, cosine_sim,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine_sim DESC, corpus_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, corpus_id, cosine_sim, CAST(rn AS INT) AS "rank"
-        FROM ranked WHERE rn <= 5
-    """
-
-
-def _ivf_oracle(n_probes: int = 1) -> str:
-    return f"""
-        WITH cents AS (
-          SELECT label AS cluster_id,
-                 arg_min(list_transform(embedding, x -> CAST(x AS DOUBLE)), vec_id) AS centroid
-          FROM embeddings GROUP BY label),
-        q AS (
-          SELECT vec_id AS query_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-          FROM embeddings WHERE vec_id < 5),
-        routed AS (
-          SELECT q.query_id, q.qv, c.cluster_id,
-                 round({_COSINE.format(a="q.qv", b="c.centroid")}, 6) AS csim,
-                 row_number() OVER (PARTITION BY q.query_id
-                                    ORDER BY round({_COSINE.format(a="q.qv", b="c.centroid")}, 6) DESC,
-                                             c.cluster_id ASC) AS rn
-          FROM q CROSS JOIN cents c),
-        probe AS (
-          SELECT query_id, qv, cluster_id FROM routed WHERE rn <= {n_probes}),
-        scored AS (
-          SELECT p.query_id, e.vec_id AS corpus_id,
-                 round({_COSINE.format(a="list_transform(e.embedding, x -> CAST(x AS DOUBLE))", b="p.qv")}, 6) AS cosine_sim
-          FROM embeddings e JOIN probe p ON e.label = p.cluster_id
-          WHERE e.vec_id <> p.query_id),
-        ranked AS (
-          SELECT query_id, corpus_id, cosine_sim,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine_sim DESC, corpus_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, corpus_id, cosine_sim, CAST(rn AS INT) AS "rank"
-        FROM ranked WHERE rn <= 5
-    """
+        q AS (SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id < 5),{route}
+        seeds AS (
+          SELECT v, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code
+          FROM c ORDER BY vec_id LIMIT {codes}),
+        ms AS (SELECT CAST(unnest(range({m})) AS INT) AS m),
+        cb AS (SELECT m, code, v[m*{sub}+1 : m*{sub}+{sub}] AS sv FROM seeds, ms),
+        csub AS (SELECT vec_id, m, v[m*{sub}+1 : m*{sub}+{sub}] AS xv FROM c, ms),
+        cenc AS (
+          SELECT vec_id, m, (min(struct_pack(d := {l2}, c := code))).c AS code
+          FROM csub JOIN cb USING (m) GROUP BY vec_id, m),
+        qsub AS (SELECT query_id, m, qv[m*{sub}+1 : m*{sub}+{sub}] AS xv FROM q, ms),
+        dt AS (SELECT query_id, m, code, {l2} AS d FROM qsub JOIN cb USING (m)),
+        pairs AS (
+          SELECT dt.query_id, cenc.vec_id AS corpus_id, dt.m, d
+          FROM cenc {via}
+          JOIN dt ON {on_query}dt.m = cenc.m AND dt.code = cenc.code
+          WHERE cenc.vec_id <> dt.query_id),
+        approx AS (
+          SELECT query_id, corpus_id,
+                 round(list_sum(list_transform(
+                     list_sort(list(struct_pack(m := m, d := d))),
+                     s -> s.d)), 6) AS approx_dist
+          FROM pairs GROUP BY query_id, corpus_id),{
+            _rank_sql("approx", "approx_dist", "ASC")}"""
 
 
 # SemDeDup verdict SQL (mirrors operators/dedup.py:semantic_dedup):
@@ -3251,29 +3066,13 @@ _SEMANTIC_SQL = f"""
 
 def _semantic_routed_oracle(bits: int = 4, dim: int = 64) -> str:
     """DuckDB twin of the LSH-routed SemDeDup member: the same md5-derived
-    hyperplanes regenerate the sign buckets (the _rh_lsh_oracle trick),
+    hyperplanes regenerate the sign buckets (``_rh_sig_sql``, as _rh_oracle),
     the centroid side expands to own-signature + every one-bit flip, and
     verdict semantics run within the routed clustering. Unrouted vectors
     (no candidate centroid) carry NULL cluster and kept=1."""
     from ..operators.annsearch import rh_planes
 
     planes = rh_planes(bits, dim)
-
-    def sig(v: str) -> str:
-        bits_sql = []
-        for plane in planes:
-            lit = "[" + ", ".join(f"{float(w):.1f}" for w in plane) + "]"
-            bits_sql.append(
-                f"CASE WHEN list_sum(list_transform(range(1, {dim + 1}),"
-                f" i -> {v}[i] * ({lit})[i])) > 0 THEN '1' ELSE '0' END"
-            )
-        return " || ".join(bits_sql)
-
-    flips = ", ".join(
-        f"substr(sig, 1, {j}) || (CASE WHEN substr(sig, {j + 1}, 1) = '1'"
-        f" THEN '0' ELSE '1' END) || substr(sig, {j + 2})"
-        for j in range(bits)
-    )
     return f"""
         WITH cents AS (
           SELECT label AS cluster_id,
@@ -3281,16 +3080,16 @@ def _semantic_routed_oracle(bits: int = 4, dim: int = 64) -> str:
                          vec_id) AS centroid
           FROM embeddings GROUP BY label),
         cs AS (
-          SELECT cluster_id, centroid, {sig("centroid")} AS sig FROM cents),
+          SELECT cluster_id, centroid, {_rh_sig_sql("centroid", planes)} AS sig FROM cents),
         cp AS (
           SELECT cluster_id, centroid,
-                 unnest(list_value(sig, {flips})) AS psig
+                 unnest(list_value(sig, {_rh_flips_sql(bits)})) AS psig
           FROM cs),
         v AS (
           SELECT vec_id AS key,
                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
           FROM embeddings),
-        vs AS (SELECT key, cv, {sig("cv")} AS sig FROM v),
+        vs AS (SELECT key, cv, {_rh_sig_sql("cv", planes)} AS sig FROM v),
         best AS (
           SELECT vs.key, cp.cluster_id,
                  round({_COSINE.format(a="vs.cv", b="cp.centroid")}, 6)
@@ -3380,12 +3179,11 @@ _SPLIT_SQL = f"""
 # subqueries would otherwise re-inline it once per ledger cell.
 
 
-def _gate_ctes(src: str, out: str) -> str:
-    """Stage ``gate`` (mirror of text_quality_filter) over ``src``,
-    kept docs in ``out``, plus the BPE count relations: ``bfin`` (the
-    segmentation of ``out``'s lowercased vocabulary) and ``bpe1``
-    (doc_id → subword count of ``out``)."""
-    return f"""        -- stage gate: quality filter (mirror of text_quality_filter)
+def _quality_ctes(src: str) -> str:
+    """The quality gate's verdict over ``src`` (mirror of
+    text_quality_filter): ``qd`` (doc_id, n_tok, reasons), ``reasons``
+    empty for a kept doc."""
+    return f"""
         qt AS (
           SELECT doc_id,
                  text IS NULL AS is_null,
@@ -3445,7 +3243,16 @@ def _gate_ctes(src: str, out: str) -> str:
                    CASE WHEN dup_sh > 0.35 THEN 'rep_shingle' END,
                    CASE WHEN stop_ratio < 0.01 THEN 'stopword' END
                  ) END AS reasons
-          FROM qr),
+          FROM qr),"""
+
+
+def _gate_ctes(src: str, out: str) -> str:
+    """Stage ``gate`` (mirror of text_quality_filter) over ``src``,
+    kept docs in ``out``, plus the BPE count relations: ``bfin`` (the
+    segmentation of ``out``'s lowercased vocabulary) and ``bpe1``
+    (doc_id → subword count of ``out``)."""
+    return f"""        -- stage gate: quality filter (mirror of text_quality_filter){
+            _quality_ctes(src)}
         {out} AS MATERIALIZED (
           SELECT t.doc_id, t.text, t.source, q.n_tok AS nt
           FROM {src} t JOIN qd q USING (doc_id) WHERE q.reasons = ''),
@@ -3799,6 +3606,62 @@ def _curation_semantic_sql() -> str:
     """
 
 
+def _ppl_gate_ctes(src: str, out: str) -> str:
+    """Perplexity gate (mirror of text_lm_perplexity's reference model):
+    the hashed-bigram LM trained on the FULL-table English subset
+    (``etoks``, …, ``pctxu``), ``src``'s docs scored in ``psc``, and
+    ``src`` minus the tail bucket in ``out``."""
+    return f"""
+        etoks AS (
+          SELECT doc_id,
+                 list_filter(string_split_regex(trim(lower(text)), '\\s+'),
+                             x -> x <> '') AS tk
+          FROM documents WHERE lang = 'en'),
+        ebg AS (
+          SELECT CAST(('0x' || substring(md5(unnest(tk[1:len(tk)-1])), 1, 8))
+                      AS BIGINT) % {LM_BUCKETS} AS h1,
+                 CAST(('0x' || substring(md5(unnest(tk[2:len(tk)])), 1, 8))
+                      AS BIGINT) % {LM_BUCKETS} AS h2
+          FROM etoks),
+        prb AS (SELECT h1, h2, count(*) AS b FROM ebg GROUP BY h1, h2),
+        pctx AS (SELECT h1, sum(b) AS u FROM prb GROUP BY h1),
+        pmodel AS (
+          SELECT prb.h1, prb.h2,
+                 CAST(round(-1000 * ln((b + 1.0) / (u + {LM_BUCKETS}.0)))
+                      AS BIGINT) AS m
+          FROM prb JOIN pctx USING (h1)),
+        pctxu AS (
+          SELECT h1,
+                 CAST(round(-1000 * ln(1.0 / (u + {LM_BUCKETS}.0)))
+                      AS BIGINT) AS mu
+          FROM pctx),
+        {src}bg AS (
+          SELECT doc_id,
+                 CAST(('0x' || substring(md5(unnest(tk[1:len(tk)-1])), 1, 8))
+                      AS BIGINT) % {LM_BUCKETS} AS h1,
+                 CAST(('0x' || substring(md5(unnest(tk[2:len(tk)])), 1, 8))
+                      AS BIGINT) % {LM_BUCKETS} AS h2
+          FROM (SELECT doc_id,
+                       list_filter(
+                         string_split_regex(trim(lower(text)), '\\s+'),
+                         x -> x <> '') AS tk
+                FROM {src})),
+        psc AS (
+          SELECT {src}bg.doc_id, count(*) AS nb,
+                 sum(COALESCE(m, mu,
+                     CAST(round(1000 * ln({LM_BUCKETS}.0)) AS BIGINT)))
+                   AS milli
+          FROM {src}bg
+          LEFT JOIN pmodel USING (h1, h2)
+          LEFT JOIN pctxu USING (h1)
+          GROUP BY {src}bg.doc_id),
+        {out} AS MATERIALIZED (
+          SELECT {src}.* FROM {src} LEFT JOIN psc USING (doc_id)
+          WHERE psc.nb IS NULL OR psc.nb = 0
+             OR CAST(psc.milli AS DOUBLE) / CAST(psc.nb * 1000 AS DOUBLE)
+                <= {LM_TAIL_NLL}),"""
+
+
 def _curation_scored_sql() -> str:
     """DuckDB twin of q_curation_scored_pipeline — the nine-stage SCORED
     chain in one statement. Each stage mirrors its operator's member
@@ -3860,55 +3723,8 @@ def _curation_scored_sql() -> str:
 {_gate_ctes("tr", "c1")}
         -- stage 2: CCNet perplexity gate — hashed-bigram LM trained on
         -- the FULL-table English subset (the standalone ppl member's
-        -- reference model), c1 docs scored, tail bucket dropped
-        etoks AS (
-          SELECT doc_id,
-                 list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                             x -> x <> '') AS tk
-          FROM documents WHERE lang = 'en'),
-        ebg AS (
-          SELECT CAST(('0x' || substring(md5(unnest(tk[1:len(tk)-1])), 1, 8))
-                      AS BIGINT) % {LM_BUCKETS} AS h1,
-                 CAST(('0x' || substring(md5(unnest(tk[2:len(tk)])), 1, 8))
-                      AS BIGINT) % {LM_BUCKETS} AS h2
-          FROM etoks),
-        prb AS (SELECT h1, h2, count(*) AS b FROM ebg GROUP BY h1, h2),
-        pctx AS (SELECT h1, sum(b) AS u FROM prb GROUP BY h1),
-        pmodel AS (
-          SELECT prb.h1, prb.h2,
-                 CAST(round(-1000 * ln((b + 1.0) / (u + {LM_BUCKETS}.0)))
-                      AS BIGINT) AS m
-          FROM prb JOIN pctx USING (h1)),
-        pctxu AS (
-          SELECT h1,
-                 CAST(round(-1000 * ln(1.0 / (u + {LM_BUCKETS}.0)))
-                      AS BIGINT) AS mu
-          FROM pctx),
-        c1bg AS (
-          SELECT doc_id,
-                 CAST(('0x' || substring(md5(unnest(tk[1:len(tk)-1])), 1, 8))
-                      AS BIGINT) % {LM_BUCKETS} AS h1,
-                 CAST(('0x' || substring(md5(unnest(tk[2:len(tk)])), 1, 8))
-                      AS BIGINT) % {LM_BUCKETS} AS h2
-          FROM (SELECT doc_id,
-                       list_filter(
-                         string_split_regex(trim(lower(text)), '\\s+'),
-                         x -> x <> '') AS tk
-                FROM c1)),
-        psc AS (
-          SELECT c1bg.doc_id, count(*) AS nb,
-                 sum(COALESCE(m, mu,
-                     CAST(round(1000 * ln({LM_BUCKETS}.0)) AS BIGINT)))
-                   AS milli
-          FROM c1bg
-          LEFT JOIN pmodel USING (h1, h2)
-          LEFT JOIN pctxu USING (h1)
-          GROUP BY c1bg.doc_id),
-        c2 AS MATERIALIZED (
-          SELECT c1.* FROM c1 LEFT JOIN psc USING (doc_id)
-          WHERE psc.nb IS NULL OR psc.nb = 0
-             OR CAST(psc.milli AS DOUBLE) / CAST(psc.nb * 1000 AS DOUBLE)
-                <= {LM_TAIL_NLL}),
+        -- reference model), c1 docs scored, tail bucket dropped{
+            _ppl_gate_ctes("c1", "c2")}
         -- stage 3: DSIR Gumbel-top-k — target features from the English
         -- subset, RAW features from THIS corpus (c2), λ in milli-nats,
         -- deterministic md5 Gumbel, top-{CURATION_SCORED_DSIR_K}
@@ -4160,112 +3976,10 @@ _DSIR_SQL = r"""
 
 
 ORACLES: dict[str, str] = {
-    "ann_rh_lsh_topk": _rh_lsh_oracle(),
-    "ann_rh_multiprobe_topk": _rh_multiprobe_oracle(),
-    # same seeds (16 lowest keys), same per-subspace argmin via a (d, code)
-    # struct-min, same m-ordered fold of the 8 partial distances — every
-    # double is produced by the identical expression in the identical order
-    "ann_pq_topk": """
-        WITH c AS (
-          SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-          FROM embeddings),
-        seeds AS (
-          SELECT v, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code
-          FROM c ORDER BY vec_id LIMIT 16),
-        ms AS (SELECT CAST(unnest(range(8)) AS INT) AS m),
-        cb AS (SELECT m, code, v[m*8+1 : m*8+8] AS sv FROM seeds, ms),
-        csub AS (SELECT vec_id, m, v[m*8+1 : m*8+8] AS xv FROM c, ms),
-        cenc AS (
-          SELECT vec_id, m,
-                 (min(struct_pack(d := list_sum(list_transform(range(1, 9),
-                      i -> (xv[i] - sv[i]) * (xv[i] - sv[i]))),
-                      c := code))).c AS code
-          FROM csub JOIN cb USING (m) GROUP BY vec_id, m),
-        q AS (SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id < 5),
-        qsub AS (SELECT query_id, m, qv[m*8+1 : m*8+8] AS xv FROM q, ms),
-        dt AS (
-          SELECT query_id, m, code,
-                 list_sum(list_transform(range(1, 9),
-                     i -> (xv[i] - sv[i]) * (xv[i] - sv[i]))) AS d
-          FROM qsub JOIN cb USING (m)),
-        pairs AS (
-          SELECT query_id, vec_id AS corpus_id, dt.m, d
-          FROM cenc JOIN dt ON cenc.m = dt.m AND cenc.code = dt.code
-          WHERE vec_id <> query_id),
-        approx AS (
-          SELECT query_id, corpus_id,
-                 round(list_sum(list_transform(
-                     list_sort(list(struct_pack(m := m, d := d))),
-                     s -> s.d)), 6) AS approx_dist
-          FROM pairs GROUP BY query_id, corpus_id),
-        ranked AS (
-          SELECT query_id, corpus_id, approx_dist,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY approx_dist ASC, corpus_id ASC) AS rn
-          FROM approx)
-        SELECT query_id, corpus_id, approx_dist, CAST(rn AS INT) AS "rank"
-        FROM ranked WHERE rn <= 5
-    """,
-    # IVF-PQ: the PQ ADC pipeline above restricted to the 2-probe IVF
-    # posting lists (mirrors annsearch.py:ivfpq_topk — routing changes
-    # candidate sets, never distances)
-    "ann_ivfpq_topk": f"""
-        WITH c AS (
-          SELECT vec_id, label,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-          FROM embeddings),
-        cents AS (
-          SELECT label AS cluster_id, arg_min(v, vec_id) AS centroid
-          FROM c GROUP BY label),
-        q0 AS (SELECT vec_id AS query_id, v AS qv FROM c WHERE vec_id < 5),
-        routed AS (
-          SELECT q0.query_id, ct.cluster_id,
-                 row_number() OVER (PARTITION BY q0.query_id
-                   ORDER BY round({_COSINE.format(a="q0.qv", b="ct.centroid")}, 6) DESC,
-                            ct.cluster_id ASC) AS rn
-          FROM q0 CROSS JOIN cents ct),
-        probe AS (SELECT query_id, cluster_id FROM routed WHERE rn <= 2),
-        seeds AS (
-          SELECT v, CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INT) AS code
-          FROM c ORDER BY vec_id LIMIT 16),
-        ms AS (SELECT CAST(unnest(range(8)) AS INT) AS m),
-        cb AS (SELECT m, code, v[m*8+1 : m*8+8] AS sv FROM seeds, ms),
-        csub AS (SELECT vec_id, m, v[m*8+1 : m*8+8] AS xv FROM c, ms),
-        cenc AS (
-          SELECT vec_id, m,
-                 (min(struct_pack(d := list_sum(list_transform(range(1, 9),
-                      i -> (xv[i] - sv[i]) * (xv[i] - sv[i]))),
-                      c := code))).c AS code
-          FROM csub JOIN cb USING (m) GROUP BY vec_id, m),
-        qsub AS (SELECT query_id, m, qv[m*8+1 : m*8+8] AS xv FROM q0, ms),
-        dt AS (
-          SELECT query_id, m, code,
-                 list_sum(list_transform(range(1, 9),
-                     i -> (xv[i] - sv[i]) * (xv[i] - sv[i]))) AS d
-          FROM qsub JOIN cb USING (m)),
-        lab AS (SELECT vec_id, label AS cluster_id FROM c),
-        pairs AS (
-          SELECT p.query_id, cenc.vec_id AS corpus_id, dt.m, d
-          FROM cenc
-          JOIN lab USING (vec_id)
-          JOIN probe p USING (cluster_id)
-          JOIN dt ON dt.query_id = p.query_id
-                 AND dt.m = cenc.m AND dt.code = cenc.code
-          WHERE cenc.vec_id <> p.query_id),
-        approx AS (
-          SELECT query_id, corpus_id,
-                 round(list_sum(list_transform(
-                     list_sort(list(struct_pack(m := m, d := d))),
-                     s -> s.d)), 6) AS approx_dist
-          FROM pairs GROUP BY query_id, corpus_id),
-        ranked AS (
-          SELECT query_id, corpus_id, approx_dist,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY approx_dist ASC, corpus_id ASC) AS rn
-          FROM approx)
-        SELECT query_id, corpus_id, approx_dist, CAST(rn AS INT) AS "rank"
-        FROM ranked WHERE rn <= 5
-    """,
+    "ann_rh_lsh_topk": _rh_oracle(multiprobe=False),
+    "ann_rh_multiprobe_topk": _rh_oracle(multiprobe=True),
+    "ann_pq_topk": _pq_oracle(),
+    "ann_ivfpq_topk": _pq_oracle(n_probes=2),
     # mirrors annsearch.py:hash_projection_encoder + cosine_topk: sparse
     # (doc, bucket) ±1 sums — exact integers, so dot/norm math is IEEE-
     # deterministic across engines — then the standard rounded-cosine rank
@@ -4691,34 +4405,14 @@ ORACLES: dict[str, str] = {
         FROM documents
     """,
     "ann_cosine_topk": f"""
-        WITH c AS (
-          SELECT vec_id AS corpus_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cv
-          FROM embeddings),
-        q AS (
-          SELECT vec_id AS query_id,
-                 list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qv
-          FROM embeddings WHERE vec_id < 5),
-        scored AS (
-          SELECT q.query_id, c.corpus_id,
-                 round({_COSINE.format(a="c.cv", b="q.qv")}, 6) AS cosine_sim
-          FROM c CROSS JOIN q
-          WHERE c.corpus_id <> q.query_id),
-        ranked AS (
-          SELECT query_id, corpus_id, cosine_sim,
-                 row_number() OVER (PARTITION BY query_id
-                                    ORDER BY cosine_sim DESC, corpus_id ASC) AS rn
-          FROM scored)
-        SELECT query_id, corpus_id, cosine_sim, CAST(rn AS INT) AS "rank"
-        FROM ranked WHERE rn <= 5
-    """,
+        WITH{_float_sides_sql()}{_pairs_sql("c CROSS JOIN q")}""",
     "ann_project_topk": _jl_project_oracle(),
-    "ann_sq_topk": _sq_topk_oracle(),
-    "ann_ivfsq_topk": _ivfsq_oracle(),
+    "ann_sq_topk": _sq_oracle(),
+    "ann_ivfsq_topk": _sq_oracle(n_probes=2),
     "ann_ivf_topk": _ivf_oracle(1),
     # pre-filter: eligibility applied before the rank window, routing
     # over the full-corpus centroid artifact
-    "ann_filtered_topk": _ivf_filtered_oracle(2),
+    "ann_filtered_topk": _ivf_oracle(2, lang="de"),
     "ann_ivf_multiprobe_topk": _ivf_oracle(2),
     # md5-bucket stratified sample: en kept iff first-8-hex bucket < 0.3·16^8
     "text_stratified_sample": """

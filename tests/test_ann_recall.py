@@ -150,6 +150,36 @@ def test_pq_topk_recovers_clustered_neighbors(spark):
         assert r["corpus_id"] % 16 == r["query_id"] % 16, r
 
 
+def test_pq_rejects_subspaces_that_do_not_divide_dim(spark):
+    """dim=64 over 6 subspaces would slice 10 dims per subspace and drop
+    dims 61-64 from every codebook, code and distance; every PQ entry
+    point refuses it instead."""
+    import pytest
+
+    from mgo_liveagent_data_pipeline_spark.operators.annsearch import (
+        ivfpq_topk,
+        pq_codebooks,
+        pq_encode,
+        pq_topk,
+    )
+
+    emb = spark.createDataFrame(
+        [(i, [float(i + d) for d in range(64)], i % 2) for i in range(20)],
+        "vec_id long, embedding array<double>, label int",
+    )
+    queries = emb.where("vec_id < 2").selectExpr(
+        "vec_id AS query_id", "embedding"
+    )
+    with pytest.raises(ValueError, match="must divide dim"):
+        pq_codebooks(emb, num_subspaces=6, dim=64)
+    with pytest.raises(ValueError, match="must divide dim"):
+        pq_encode(emb, pq_codebooks(emb, 8, 4, 64), num_subspaces=6, dim=64)
+    with pytest.raises(ValueError, match="must divide dim"):
+        pq_topk(emb, queries, num_subspaces=6, num_codes=4, dim=64)
+    with pytest.raises(ValueError, match="must divide dim"):
+        ivfpq_topk(emb, queries, num_subspaces=6, num_codes=4, dim=64)
+
+
 def test_ivfpq_equals_pq_restricted_to_probed_lists(spark):
     """Routing changes candidate sets, never scores: IVF-PQ top-k equals
     plain PQ top-k computed over only the probed posting lists."""

@@ -8,8 +8,10 @@ from __future__ import annotations
 
 import ast
 import decimal
+import io
 import os
 import re
+import tokenize
 
 import pytest
 from pyspark.sql import types as T
@@ -348,6 +350,8 @@ _CHAIN_STAGE_CALLS = {
     "connected_components", "dedup_apply", "history_append",
 }
 _CHAIN_CTE_HEADS = ("qt AS", "segd AS", "mcand AS")
+# heads whose fragment every twin in the file splices, chain or not
+_FILE_CTE_HEADS = ("qt AS", "etoks AS")
 
 
 def _composed_chain_offenders(plans_dir: str) -> list[str]:
@@ -355,9 +359,11 @@ def _composed_chain_offenders(plans_dir: str) -> list[str]:
     the ledger instead of calling the function that owns it: a
     ``q_curation_*`` chain calling a stage operator or the history sink
     itself, a ``rows_in`` alias outside ``_ledger``, an ``AS
-    bpe_tokens_out`` outside ``_ledger_sql``, and a gate, para or
-    near-dup CTE head (``qt``, ``segd``, ``mcand``) not written exactly
-    once in the SQL the curation twins (``_curation*_sql``) build."""
+    bpe_tokens_out`` outside ``_ledger_sql``, a gate, para or near-dup
+    CTE head (``qt``, ``segd``, ``mcand``) not written exactly once in
+    the SQL the curation twins (``_curation*_sql``) build, and a
+    quality-gate or perplexity-model head (``qt``, ``etoks``) written
+    more than once anywhere in the file."""
     hits = []
     for fn in sorted(f for f in os.listdir(plans_dir) if f.endswith(".py")):
         path = os.path.join(plans_dir, fn)
@@ -422,6 +428,16 @@ def _composed_chain_offenders(plans_dir: str) -> list[str]:
             for head, owners in heads.items()
             if len(owners) != 1
         ]
+        everywhere = {head: [] for head in _FILE_CTE_HEADS}
+        for owner, parts in sorted(strings.items()):
+            for p in parts:
+                for m in re.finditer(r"\b(qt|etoks) AS\b", p):
+                    everywhere[m.group(0)].append(owner)
+        hits += [
+            f"{fn} {head} written {len(owners)}x in the file: {', '.join(owners)}"
+            for head, owners in everywhere.items()
+            if len(owners) > 1
+        ]
     return hits
 
 
@@ -431,5 +447,108 @@ def test_composed_chains_share_their_stages():
     operators, and the four ledgered members build their ledger through
     ``_ledger`` (the curation chains through its one history round
     trip). Their DuckDB twins splice the one CTE fragment per shared
-    stage and render their ledger through ``_ledger_sql``."""
+    stage and render their ledger through ``_ledger_sql``; the
+    ``stream_scored_ingest`` twin splices the same quality-gate
+    (``_quality_ctes``) and perplexity-gate (``_ppl_gate_ctes``)
+    fragments."""
     assert _composed_chain_offenders(os.path.join(PKG, "plans")) == []
+
+
+# Spark-side kernel signatures in operators/annsearch.py (code only —
+# docstrings and comments do not count): each written exactly once
+_ANN_SPARK_KERNELS = {
+    "centroid cross join": ".crossJoin(F.broadcast(cents))",
+    "pre-normed cosine": "cosine_prenorm(",
+    "SQ8 integer dot": 'F.zip_with(F.col("cc"), F.col("qc")',
+    "PQ ADC fold": 'F.collect_list(F.struct("m", "d"))',
+    "filter_mode check": "filter_mode not in",
+}
+# DuckDB-side fragment signatures in plans/pipeline.py, counted over the
+# non-docstring string parts (an f-string fragment counts once however
+# it is parameterized)
+_ANN_SQL_KERNELS = {
+    "rank tail": ", corpus_id ASC) AS rn",
+    "IVF route": "routed AS (",
+    "literal-plane dot (sig builder)": "[i] * (",
+    "sig flips": " THEN '0' ELSE '1' END) || substr(sig, ",
+    "SQ8 codes": "floor(x / s * 127 + 0.5)",
+    "PQ ADC fold": "struct_pack(m := m, d := d)",
+}
+# the two row_number windows in annsearch.py that are not a top-k pick
+_ANN_OWN_WINDOWS = {"ivf_centroids", "pq_codebooks"}
+
+
+def _docstring_ids(tree: ast.AST) -> set[int]:
+    return {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.Module, ast.FunctionDef, ast.ClassDef))
+        and ast.get_docstring(n) is not None
+    }
+
+
+def _ann_kernel_offenders(ann_path: str, pipeline_path: str) -> list[str]:
+    """Kernels of the similarity-search family not written exactly once:
+    the Spark signatures in ``ann_path``, a ``row_number`` window there
+    outside the two that are not a top-k pick, and the DuckDB fragment
+    signatures in ``pipeline_path``."""
+    with open(ann_path) as f:
+        src = f.read()
+    tree = ast.parse(src, ann_path)
+    lines = src.splitlines(keepends=True)
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.COMMENT:
+            row, col = tok.start
+            lines[row - 1] = lines[row - 1][:col] + "\n"
+    docs = _docstring_ids(tree)
+    drop = {
+        i
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Expr) and id(n.value) in docs
+        for i in range(n.lineno - 1, n.end_lineno)
+    }
+    code = "".join(line for i, line in enumerate(lines) if i not in drop)
+    hits = [
+        f"annsearch.py {name} written {code.count(sig)}x"
+        for name, sig in _ANN_SPARK_KERNELS.items()
+        if code.count(sig) != 1
+    ]
+    for top in tree.body:
+        for node in ast.walk(top):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "attr", None) == "row_number"
+                and getattr(top, "name", None) not in _ANN_OWN_WINDOWS
+            ):
+                hits.append(f"annsearch.py:{node.lineno} row_number window")
+    with open(pipeline_path) as f:
+        tree = ast.parse(f.read(), pipeline_path)
+    docs = _docstring_ids(tree)
+    parts = [
+        n.value
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and id(n) not in docs
+    ]
+    for name, sig in _ANN_SQL_KERNELS.items():
+        n = sum(p.count(sig) for p in parts)
+        if n != 1:
+            hits.append(f"pipeline.py {name} written {n}x")
+    return hits
+
+
+def test_ann_family_shares_its_kernels():
+    """The eight search operators in operators/annsearch.py compose one
+    implementation each of the IVF router, the cosine and SQ8 scorers,
+    the PQ ADC fold and the filter check, and rank through
+    ``windows.top_k_per_group``; their DuckDB twins in plans/pipeline.py
+    splice one rank tail (``_rank_sql``), one IVF route
+    (``_ivf_route_ctes``), one sign-bit builder and flip list
+    (``_rh_sig_sql`` over ``_plane_dot_sql``, ``_rh_flips_sql``), one
+    SQ8 code block and one PQ ADC fold. ``ann_encode_topk``'s sparse
+    twin keeps its own BIGINT ``rank`` column and is not counted."""
+    assert _ann_kernel_offenders(
+        os.path.join(PKG, "operators", "annsearch.py"),
+        os.path.join(PKG, "plans", "pipeline.py"),
+    ) == []

@@ -147,3 +147,29 @@ def test_ngram_block_join_is_narrow(spark):
     ]
     assert not wide
     assert "CartesianProduct" not in s
+
+
+_ANN_GATE = sorted(n for n in QUERIES if n.startswith("ann_"))
+
+
+def test_ann_plans_match_plans_txt(spark):
+    """Plan gate for the similarity-search family: every ``ann_*`` member
+    and ``ann_suite`` audits (tools/audit_plans.py:audit_line, at its
+    sf0.01) to exactly its ``PLANS.txt`` line — exchange, broadcast and
+    sort-merge counts, scan widths, pushed filters and flags. A change
+    that moves one of these plans must regenerate PLANS.txt."""
+    import importlib.util
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "audit_plans", os.path.join(repo, "tools", "audit_plans.py")
+    )
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+    with open(os.path.join(repo, "PLANS.txt")) as f:
+        want = {line.split(" ", 1)[0]: line.rstrip("\n") for line in f}
+    assert len(_ANN_GATE) == 13
+    sf = os.path.join(os.path.dirname(SF), "sf0.01")
+    got = {n: audit.audit_line(spark, n, QUERIES[n], sf) for n in _ANN_GATE}
+    assert got == {n: want[n] for n in _ANN_GATE}

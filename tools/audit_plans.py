@@ -43,14 +43,80 @@ def _executed_exchange_count(plan: str) -> int:
     return len(re.findall(r"^\(\d+\) Exchange\b", plan, re.M))
 
 
+def audit_line(spark, name: str, fn, sf_dir: str = SF_DIR) -> str:
+    """The audit line of one registry query: exchange/broadcast/SMJ
+    counts, scan widths and pushed filters of its formatted plan (plus
+    the cache-aware executed exchange count when the raw count is above
+    4), and the WIDE-SCAN / MANY-SHUFFLES flags."""
+    from mgo_liveagent_data_pipeline_spark.operators.dedup import (
+        release_intermediates,
+    )
+
+    try:
+        df = fn(spark, sf_dir)
+        # Release persisted intermediates BEFORE explain: a build-time
+        # -materialized cache (the iterative operators run actions)
+        # makes explain inline the cached relation's full original
+        # AQE dump — recursively, once per reference — which inflated
+        # dedup_ngram_pairs to exch=93 when its executed plan reads
+        # those stages from cache. Post-release the plan prints the
+        # raw recompute shape: the honest what-if-nothing-were-cached
+        # view, and the same semantics every earlier audit used for
+        # unmaterialized caches.
+        release_intermediates()
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        plan = buf.getvalue()
+    except Exception as e:
+        release_intermediates()
+        return f"{name}: ERROR {type(e).__name__}: {str(e)[:120]}"
+    n_exchange = len(re.findall(r"\bExchange\b", plan))
+    n_bhj = len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoopJoin", plan))
+    n_smj = len(re.findall(r"SortMergeJoin", plan))
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
+    widths = [len(s.split(",")) if s else 0 for s in schemas]
+    exec_note = ""
+    n_flag = n_exchange
+    if n_exchange > 4:
+        # the raw recompute shape of a multi-member union re-counts
+        # every cached stage per reference; re-explain with the
+        # operators' caches MATERIALIZED and count only exchanges
+        # outside InMemoryRelation subtrees — the shape execution
+        # actually runs — so MANY-SHUFFLES flags real plans, not
+        # audit artifacts
+        try:
+            df2 = fn(spark, sf_dir)
+            df2.count()
+            buf2 = io.StringIO()
+            with redirect_stdout(buf2):
+                df2.explain("formatted")
+            n_exec = _executed_exchange_count(buf2.getvalue())
+            release_intermediates()
+            exec_note = f"exec_exch={n_exec} "
+            n_flag = n_exec
+        except Exception:  # pragma: no cover - audit best-effort
+            # surface the failure instead of silently flagging the
+            # inflated raw count as if it were the executed shape
+            exec_note = "exec_exch=ERR "
+            release_intermediates()
+    flags = []
+    if any(w > 8 for w in widths):
+        flags.append(f"WIDE-SCAN({max(widths)} cols)")
+    if n_flag > 4:
+        flags.append(f"MANY-SHUFFLES({n_flag})")
+    return (
+        f"{name:28s} exch={n_exchange} {exec_note}bhj={n_bhj} smj={n_smj} "
+        f"scan_widths={widths} pushed={[p for p in pushed if p][:2]} "
+        f"{' '.join(flags)}"
+    )
+
+
 def main() -> None:
     only = set(sys.argv[1:])
     from mgo_liveagent_data_pipeline_spark.plans.registry import ALL_QUERIES as QUERIES
     from mgo_liveagent_data_pipeline_spark.session import get_spark
-
-    from mgo_liveagent_data_pipeline_spark.operators.dedup import (
-        release_intermediates,
-    )
 
     spark = get_spark("audit_plans")
     print(
@@ -72,66 +138,7 @@ def main() -> None:
             continue
         if name in SKIP:
             continue
-        try:
-            df = fn(spark, SF_DIR)
-            # Release persisted intermediates BEFORE explain: a build-time
-            # -materialized cache (the iterative operators run actions)
-            # makes explain inline the cached relation's full original
-            # AQE dump — recursively, once per reference — which inflated
-            # dedup_ngram_pairs to exch=93 when its executed plan reads
-            # those stages from cache. Post-release the plan prints the
-            # raw recompute shape: the honest what-if-nothing-were-cached
-            # view, and the same semantics every earlier audit used for
-            # unmaterialized caches.
-            release_intermediates()
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                df.explain("formatted")
-            plan = buf.getvalue()
-        except Exception as e:
-            print(f"{name}: ERROR {type(e).__name__}: {str(e)[:120]}")
-            release_intermediates()
-            continue
-        n_exchange = len(re.findall(r"\bExchange\b", plan))
-        n_bhj = len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoopJoin", plan))
-        n_smj = len(re.findall(r"SortMergeJoin", plan))
-        pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-        schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-        widths = [len(s.split(",")) if s else 0 for s in schemas]
-        exec_note = ""
-        n_flag = n_exchange
-        if n_exchange > 4:
-            # the raw recompute shape of a multi-member union re-counts
-            # every cached stage per reference; re-explain with the
-            # operators' caches MATERIALIZED and count only exchanges
-            # outside InMemoryRelation subtrees — the shape execution
-            # actually runs — so MANY-SHUFFLES flags real plans, not
-            # audit artifacts
-            try:
-                df2 = fn(spark, SF_DIR)
-                df2.count()
-                buf2 = io.StringIO()
-                with redirect_stdout(buf2):
-                    df2.explain("formatted")
-                n_exec = _executed_exchange_count(buf2.getvalue())
-                release_intermediates()
-                exec_note = f"exec_exch={n_exec} "
-                n_flag = n_exec
-            except Exception:  # pragma: no cover - audit best-effort
-                # surface the failure instead of silently flagging the
-                # inflated raw count as if it were the executed shape
-                exec_note = "exec_exch=ERR "
-                release_intermediates()
-        flags = []
-        if any(w > 8 for w in widths):
-            flags.append(f"WIDE-SCAN({max(widths)} cols)")
-        if n_flag > 4:
-            flags.append(f"MANY-SHUFFLES({n_flag})")
-        print(
-            f"{name:28s} exch={n_exchange} {exec_note}bhj={n_bhj} smj={n_smj} "
-            f"scan_widths={widths} pushed={[p for p in pushed if p][:2]} "
-            f"{' '.join(flags)}"
-        )
+        print(audit_line(spark, name, fn))
     spark.stop()
 
 
