@@ -404,6 +404,22 @@ def rh_lsh_topk(
     return _top_k(_pairs(c, q, query_key, _cosine_sim(), on="sig"), query_key, k)
 
 
+def _flip_bits(sig: Column, positions, bits: int) -> Column:
+    """The ``bits``-bit string ``sig`` with the given ascending 0-based
+    bit positions toggled — one multi-probe variant of a sign-bit or
+    SimHash signature."""
+    parts = []
+    prev = 0
+    for pos in positions:
+        parts.append(sig.substr(prev + 1, pos - prev))
+        parts.append(
+            F.when(sig.substr(pos + 1, 1) == "1", F.lit("0")).otherwise(F.lit("1"))
+        )
+        prev = pos + 1
+    parts.append(sig.substr(prev + 1, bits - prev))
+    return F.concat(*parts)
+
+
 def rh_multiprobe_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -433,17 +449,10 @@ def rh_multiprobe_topk(
     c = _float_side(corpus, F.col(key_col).alias("corpus_id"), vec_col, "c", planes)
     q = _float_side(queries, F.col(query_key), vec_col, "q", planes)
 
-    def flip(j: int) -> Column:
-        """sig with bit j toggled (1-indexed substr arithmetic)."""
-        return F.concat(
-            F.col("sig").substr(1, j),
-            F.when(F.col("sig").substr(j + 1, 1) == "1", F.lit("0")).otherwise(
-                F.lit("1")
-            ),
-            F.col("sig").substr(j + 2, num_planes - j - 1),
-        )
-
-    probes = F.array(F.col("sig"), *[flip(j) for j in range(num_planes)])
+    sig = F.col("sig")
+    probes = F.array(
+        sig, *[_flip_bits(sig, (j,), num_planes) for j in range(num_planes)]
+    )
     qp = q.select(query_key, "qv", "qn", F.explode(probes).alias("sig"))
     return _top_k(_pairs(c, qp, query_key, _cosine_sim(), on="sig"), query_key, k)
 
@@ -713,18 +722,21 @@ def pq_codebooks(
     lowest-key corpus vectors' subvectors (the same oracle-exact seeding
     trick as ``ivf_centroids``; production swaps in per-subspace k-means,
     plan shape unchanged). The seed fetch is a TakeOrdered (no full
-    sort); the codebook is ≤ M·K tiny rows — always broadcast."""
-    w = Window.orderBy(F.asc("__k"))
+    sort); the ≤ ``num_codes`` seeds are numbered in key order by one
+    posexplode of their sorted list (no single-partition window); the
+    codebook is ≤ M·K tiny rows — always broadcast."""
     seeds = (
         corpus.select(
             F.col(key_col).alias("__k"), _as_double(F.col(vec_col)).alias("v")
         )
         .orderBy(F.asc("__k"))
         .limit(num_codes)
-        .withColumn("code", (F.row_number().over(w) - 1).cast("int"))
+        .agg(F.array_sort(F.collect_list(F.struct("__k", "v"))).alias("__s"))
+        .select(F.posexplode("__s").alias("code", "seed"))
     )
     return seeds.select(
-        "code", F.explode(_subspaces(F.col("v"), num_subspaces, dim)).alias("s")
+        "code",
+        F.explode(_subspaces(F.col("seed.v"), num_subspaces, dim)).alias("s"),
     ).select(F.col("s.m").alias("m"), "code", F.col("s.sv").alias("sv"))
 
 

@@ -168,6 +168,269 @@ def minhash_signature(
     )
 
 
+# The pair operators below are one algorithm — post signatures into
+# buckets, cap the buckets, join within a bucket, verify the exact
+# distance — composed from these kernels, each written once. Posted and
+# candidate relations name the document ``key``; pairs are (id_a, id_b).
+
+
+def _bucket_n(df: DataFrame, cols, n: str = "__bn") -> DataFrame:
+    """``df`` plus ``n``: the row count of its bucket (the rows sharing
+    ``cols``), an unordered window — one shuffle, no sort, and the joins
+    downstream reuse the same hash partitioning."""
+    from pyspark.sql.window import Window
+
+    return df.withColumn(n, F.count(F.lit(1)).over(Window.partitionBy(*cols)))
+
+
+def _cap(df: DataFrame, cols, max_size: int | None, n: str = "__bn") -> DataFrame:
+    """The mega-bucket cap: every row of a bucket holding more than
+    ``max_size`` rows is dropped before the pair join (``None`` keeps
+    all). ``n`` names the transient count column."""
+    if max_size is None:
+        return df
+    return _bucket_n(df, cols, n).where(F.col(n) <= F.lit(max_size)).drop(n)
+
+
+def _self_join(posted: DataFrame, on, by: str = "key") -> DataFrame:
+    """Ordered self-join: rows ``a``, ``b`` of ``posted`` sharing ``on``
+    (column names, or a condition over the ``a``/``b`` aliases) with
+    ``a.by < b.by`` — each unordered pair once."""
+    a, b = posted.alias("a"), posted.alias("b")
+    return a.join(b, on).where(F.col(f"a.{by}") < F.col(f"b.{by}"))
+
+
+def _candidates(
+    posted: DataFrame,
+    on,
+    fp: str | None = None,
+    delta: DataFrame | None = None,
+) -> DataFrame:
+    """Distinct candidate pairs (id_a < id_b) of ``posted`` rows sharing a
+    bucket ``on``, carrying each side's ``fp`` column as fp_a/fp_b when
+    given. With ``delta`` (the delta's rows of ``posted``) only pairs with
+    a delta endpoint are generated — the delta side drives the join and
+    the pair is oriented by least/greatest, so no corpus×corpus pair is
+    ever formed."""
+    if delta is None:
+        pairs = _self_join(posted, on)
+        cols = [F.col("a.key").alias("id_a"), F.col("b.key").alias("id_b")]
+        if fp is not None:
+            cols += [F.col(f"a.{fp}").alias("fp_a"), F.col(f"b.{fp}").alias("fp_b")]
+    else:
+        a, b = delta.alias("a"), posted.alias("b")
+        pairs = a.join(b, on=on).where(F.col("a.key") != F.col("b.key"))
+        cols = [
+            F.least(F.col("a.key"), F.col("b.key")).alias("id_a"),
+            F.greatest(F.col("a.key"), F.col("b.key")).alias("id_b"),
+        ]
+        if fp is not None:
+            cols += [
+                F.when(F.col("a.key") < F.col("b.key"), F.col(f"a.{fp}"))
+                .otherwise(F.col(f"b.{fp}"))
+                .alias("fp_a"),
+                F.when(F.col("a.key") < F.col("b.key"), F.col(f"b.{fp}"))
+                .otherwise(F.col(f"a.{fp}"))
+                .alias("fp_b"),
+            ]
+    return pairs.select(*cols).dropDuplicates(["id_a", "id_b"])
+
+
+def _jaccard_verified(
+    cand: DataFrame,
+    df: DataFrame,
+    text_col: str,
+    key_col: str,
+    shingle_k: int,
+    threshold: float,
+    sh: str = "sh",
+) -> DataFrame:
+    """Verify candidate pairs by exact shingle Jaccard: the pair list is
+    persisted, shingles are computed only for the keys it names (a
+    semi-join prune of ``df``, persisted as column ``sh``), attached to
+    both sides, and pairs whose 6-dp rounded Jaccard is ≥ ``threshold``
+    are kept. The shingle arrays are never materialized corpus-wide.
+    Returns (id_a, id_b, jaccard_sim)."""
+    cand = _scoped_persist(cand)
+    pair_keys = (
+        cand.select(F.col("id_a").alias("key"))
+        .union(cand.select(F.col("id_b").alias("key")))
+        .distinct()
+    )
+    shingle_map = _scoped_persist(
+        df.join(
+            pair_keys.withColumnRenamed("key", key_col), on=key_col,
+            how="left_semi",
+        ).select(
+            F.col(key_col).alias("key"),
+            word_shingles(F.col(text_col), shingle_k).alias(sh),
+        )
+    )
+    scored = cand.join(
+        shingle_map.select(F.col("key").alias("id_a"), F.col(sh).alias("sh_a")),
+        on="id_a",
+    ).join(
+        shingle_map.select(F.col("key").alias("id_b"), F.col(sh).alias("sh_b")),
+        on="id_b",
+    )
+    sim = F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6)
+    return (
+        scored.withColumn("jaccard_sim", sim)
+        .where(F.col("jaccard_sim") >= threshold)
+        .select("id_a", "id_b", "jaccard_sim")
+    )
+
+
+def _hamming_within(cand: DataFrame, bits: int, radius: int) -> DataFrame:
+    """Candidate pairs whose bit-string fingerprints fp_a/fp_b differ in
+    at most ``radius`` of their ``bits`` positions — one codegen'd
+    substring comparison per bit. Returns (id_a, id_b, hamming_dist)."""
+    dist = None
+    for j in range(bits):
+        term = F.when(
+            F.col("fp_a").substr(j + 1, 1) != F.col("fp_b").substr(j + 1, 1),
+            F.lit(1),
+        ).otherwise(F.lit(0))
+        dist = term if dist is None else dist + term
+    return (
+        cand.withColumn("hamming_dist", dist)
+        .where(F.col("hamming_dist") <= radius)
+        .select("id_a", "id_b", "hamming_dist")
+    )
+
+
+def _band_postings(
+    fps: DataFrame,
+    fp_col: str,
+    key_col: str,
+    bits: int,
+    bands: int,
+    delta: int | None = None,
+) -> DataFrame:
+    """(key, fp[, __d], band_no, band_bits): each fingerprint posted once
+    per contiguous ``bits // bands``-bit band; ``delta`` tags every row
+    with ``__d`` (1 = delta side, 0 = corpus)."""
+    if bits % bands != 0:
+        raise ValueError(f"bits ({bits}) must divide into bands ({bands})")
+    width = bits // bands
+    tag = [] if delta is None else [F.lit(delta).alias("__d")]
+    keep = ["key", "fp"] + ([] if delta is None else ["__d"])
+    base = fps.select(F.col(key_col).alias("key"), F.col(fp_col).alias("fp"), *tag)
+    return base.select(
+        *keep,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("band_no"),
+                        F.col("fp").substr(j * width + 1, width).alias("band_bits"),
+                    )
+                    for j in range(bands)
+                ]
+            )
+        ).alias("band"),
+    ).select(*keep, "band.band_no", "band.band_bits")
+
+
+def _require_band_radius(radius: int, bands: int) -> None:
+    """Banding is complete only for radius ≤ bands−1 (pigeonhole): refuse
+    a radius whose pairs could be silently missed."""
+    if radius > bands - 1:
+        raise ValueError(
+            f"radius {radius} exceeds the banding guarantee (bands - 1 = "
+            f"{bands - 1}): pairs beyond it could be silently missed"
+        )
+
+
+def _delta_keys(delta: DataFrame, key_col: str) -> DataFrame:
+    """The delta's distinct keys as ``key``, persisted."""
+    return _scoped_persist(delta.select(F.col(key_col).alias("key")).distinct())
+
+
+def _superseded(
+    corpus: DataFrame, delta: DataFrame, delta_keys: DataFrame, key_col: str,
+    cols,
+) -> DataFrame:
+    """corpus ∪ delta over ``cols`` where a key in BOTH is a re-ingest:
+    the delta's version supersedes the corpus row (the replace-matched
+    semantics of the K4 MERGE sinks)."""
+    live = corpus.join(
+        delta_keys.withColumnRenamed("key", key_col), on=key_col,
+        how="left_anti",
+    )
+    return live.select(*cols).unionByName(delta.select(*cols))
+
+
+def _block_capped(
+    base: DataFrame,
+    cols,
+    max_block_size: int | None,
+    max_pairs_budget: int | None,
+    op: str,
+) -> DataFrame:
+    """``base`` (one row per doc, blocked by ``cols``) with the block cap
+    applied, persisted: both self-join branches consume it, so an
+    expensive upstream (a rewritten text, a mapInPandas encoder) runs
+    once. Without a budget the cap is the window cap at
+    ``max_block_size``. With ``max_pairs_budget`` the narrow relation is
+    persisted BEFORE the block-size histogram is collected (else the
+    upstream runs once for the sizes and again for the join),
+    ``derive_block_cap`` turns the measured sizes into the largest cap
+    within budget — effective cap ``min(max_block_size, derived)``, the
+    refused pairs logged — and the cap applies as a broadcast semi-join
+    against the tiny kept-block list."""
+    if max_pairs_budget is None:
+        return _scoped_persist(_cap(base, cols, max_block_size))
+    base = _scoped_persist(base)
+    block_sizes = _scoped_persist(
+        base.groupBy(*cols).agg(F.count(F.lit(1)).alias("bn"))
+    )
+    hist = block_sizes.groupBy(F.col("bn")).agg(
+        F.count(F.lit(1)).alias("nb")
+    ).collect()
+    derived, kept, refused = derive_block_cap(
+        [(int(r["bn"]), int(r["nb"])) for r in hist], max_pairs_budget
+    )
+    if refused > 0:
+        logging.getLogger(__name__).warning(
+            "%s: pair budget %d -> block cap %d; keeping %d candidate "
+            "pairs, REFUSING %d pairs in oversized blocks (route such "
+            "corpora through minhash_lsh_dedup)",
+            op, max_pairs_budget, derived, kept, refused,
+        )
+    cap = derived if max_block_size is None else min(max_block_size, derived)
+    return base.join(
+        F.broadcast(block_sizes.where(F.col("bn") <= cap).select(*cols)),
+        on=list(cols),
+        how="left_semi",
+    )
+
+
+def _pair_cosine() -> Column:
+    """6-dp cosine of the ``a``/``b`` sides' pre-normed vectors."""
+    from ..functions.similarity import cosine_prenorm
+
+    return F.round(
+        cosine_prenorm(F.col("a.v"), F.col("b.v"), F.col("a.nv"), F.col("b.nv")), 6
+    )
+
+
+def _verdicts(rows: DataFrame, dup_keys: DataFrame, key_col: str) -> DataFrame:
+    """SemDeDup verdict rows (key_col, cluster_id, centroid_sim, kept):
+    kept=0 iff the row's key is in ``dup_keys``."""
+    return rows.join(
+        dup_keys.withColumn("__dup", F.lit(1)), on="key", how="left"
+    ).select(
+        F.col("key").alias(key_col),
+        "cluster_id",
+        "centroid_sim",
+        F.when(F.col("__dup").isNull(), F.lit(1))
+        .otherwise(F.lit(0))
+        .cast("int")
+        .alias("kept"),
+    )
+
+
 def _banded_signatures(
     df: DataFrame,
     text_col: str,
@@ -205,8 +468,6 @@ def _banded_signatures(
     (bucket membership at depth d is confined to one depth-0 bucket, so
     the counts agree on every bucket a deep row can land in — the
     oracle uses that single-phase formulation)."""
-    from pyspark.sql.window import Window
-
     rows = num_hashes // bands
     sigs = minhash_signature(df, text_col, key_col, num_hashes, shingle_k)
     if salvage_depth > 0:
@@ -221,26 +482,17 @@ def _banded_signatures(
             for b in range(bands)
         ]
     )
-    if max_bucket_size is None:
-        return sigs.select("key", F.explode(band_arr).alias("band_key"))
-    if salvage_depth <= 0:
-        banded = sigs.select("key", F.explode(band_arr).alias("band_key"))
-        # bucket-size count as an unordered window over band_key: one
-        # shuffle, no sort, and the joins downstream reuse the same
-        # hash partitioning
-        bucket_n = F.count(F.lit(1)).over(Window.partitionBy("band_key"))
-        return banded.withColumn("__bn", bucket_n).where(
-            F.col("__bn") <= F.lit(max_bucket_size)
-        ).drop("__bn")
+    if max_bucket_size is None or salvage_depth <= 0:
+        return _cap(
+            sigs.select("key", F.explode(band_arr).alias("band_key")),
+            ["band_key"], max_bucket_size,
+        )
 
     # banding rows carry the band index so extension positions resolve
     banded = _scoped_persist(
-        sigs.select(
-            "key",
-            F.posexplode(band_arr).alias("b", "band_key"),
-        ).withColumn(
-            "__bn",
-            F.count(F.lit(1)).over(Window.partitionBy("band_key")),
+        _bucket_n(
+            sigs.select("key", F.posexplode(band_arr).alias("b", "band_key")),
+            ["band_key"],
         )
     )
     ok0 = banded.where(F.col("__bn") <= F.lit(max_bucket_size)).select(
@@ -357,54 +609,9 @@ def minhash_lsh_dedup(
             max_bucket_size, salvage_depth,
         )
     )
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(b, on="band_key")
-        .where(F.col("a.key") < F.col("b.key"))
-        .select(
-            F.col("a.key").alias("id_a"),
-            F.col("b.key").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    cand = _scoped_persist(cand)
-    # shingles only for keys that survived LSH — a semi-join prune of the
-    # corpus, so the expensive shingle arrays are computed for pairs ≪
-    # corpus rows and the persisted relation is small by construction
-    pair_keys = (
-        cand.select(F.col("id_a").alias("key"))
-        .union(cand.select(F.col("id_b").alias("key")))
-        .distinct()
-    )
-    shingle_map = (
-        df.join(pair_keys.withColumnRenamed("key", key_col), on=key_col, how="left_semi")
-        .select(
-            F.col(key_col).alias("key"),
-            word_shingles(F.col(text_col), shingle_k).alias("shingles"),
-        )
-    )
-    shingle_map = _scoped_persist(shingle_map)
-    cand = (
-        cand.join(
-            shingle_map.select(
-                F.col("key").alias("id_a"), F.col("shingles").alias("sh_a")
-            ),
-            on="id_a",
-        )
-        .join(
-            shingle_map.select(
-                F.col("key").alias("id_b"), F.col("shingles").alias("sh_b")
-            ),
-            on="id_b",
-        )
-    )
-    sim = F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6)
-    return (
-        cand.withColumn("jaccard_sim", sim)
-        .where(F.col("jaccard_sim") >= threshold)
-        .select("id_a", "id_b", "jaccard_sim")
+    return _jaccard_verified(
+        _candidates(banded, "band_key"), df, text_col, key_col, shingle_k,
+        threshold, sh="shingles",
     )
 
 
@@ -450,62 +657,19 @@ def incremental_minhash_dedup(
     Returns (id_a < id_b, jaccard_sim, pair_type) where pair_type is
     ``delta_corpus`` or ``delta_delta``.
     """
-    delta_keys = _scoped_persist(
-        delta.select(F.col(key_col).alias("key")).distinct()
-    )
-    corpus_live = corpus.join(
-        delta_keys.withColumnRenamed("key", key_col), on=key_col,
-        how="left_anti",
-    )
-    both = corpus_live.select(
-        F.col(key_col), F.col(text_col)
-    ).unionByName(delta.select(F.col(key_col), F.col(text_col)))
+    delta_keys = _delta_keys(delta, key_col)
+    both = _superseded(corpus, delta, delta_keys, key_col, [key_col, text_col])
     banded_all = _scoped_persist(
         _banded_signatures(
             both, text_col, key_col, num_hashes, bands, shingle_k,
             max_bucket_size,
         )
     )
-    banded_delta = banded_all.join(delta_keys, on="key", how="left_semi")
-    a = banded_delta.alias("a")
-    b = banded_all.alias("b")
-    cand = (
-        a.join(b, on="band_key")
-        .where(F.col("a.key") != F.col("b.key"))
-        .select(
-            F.least(F.col("a.key"), F.col("b.key")).alias("id_a"),
-            F.greatest(F.col("a.key"), F.col("b.key")).alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cand = _candidates(
+        banded_all, "band_key",
+        delta=banded_all.join(delta_keys, on="key", how="left_semi"),
     )
-    cand = _scoped_persist(cand)
-    pair_keys = (
-        cand.select(F.col("id_a").alias("key"))
-        .union(cand.select(F.col("id_b").alias("key")))
-        .distinct()
-    )
-    shingle_map = _scoped_persist(
-        both.join(
-            pair_keys.withColumnRenamed("key", key_col), on=key_col,
-            how="left_semi",
-        ).select(
-            F.col(key_col).alias("key"),
-            word_shingles(F.col(text_col), shingle_k).alias("sh"),
-        )
-    )
-    scored = cand.join(
-        shingle_map.select(F.col("key").alias("id_a"), F.col("sh").alias("sh_a")),
-        on="id_a",
-    ).join(
-        shingle_map.select(F.col("key").alias("id_b"), F.col("sh").alias("sh_b")),
-        on="id_b",
-    )
-    sim = F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6)
-    out = (
-        scored.withColumn("jaccard_sim", sim)
-        .where(F.col("jaccard_sim") >= threshold)
-        .select("id_a", "id_b", "jaccard_sim")
-    )
+    out = _jaccard_verified(cand, both, text_col, key_col, shingle_k, threshold)
     da = delta_keys.select(F.col("key").alias("id_a")).withColumn(
         "__da", F.lit(True)
     )
@@ -613,54 +777,14 @@ def simhash_near_dup(
 
     Returns (id_a < id_b, hamming_dist ≤ radius) pairs.
     """
-    from pyspark.sql.window import Window
+    from .annsearch import _flip_bits
 
     fps = simhash_fingerprint(df, text_col, key_col, bits)
-
-    def flip(j: int) -> Column:
-        return F.concat(
-            F.col("simhash").substr(1, j),
-            F.when(
-                F.col("simhash").substr(j + 1, 1) == "1", F.lit("0")
-            ).otherwise(F.lit("1")),
-            F.col("simhash").substr(j + 2, bits - j - 1),
-        )
-
-    probes = F.array(F.col("simhash"), *[flip(j) for j in range(bits)])
-    posted = fps.select(
-        "key", F.col("simhash"), F.explode(probes).alias("probe")
-    )
-    if max_bucket_size is not None:
-        bn = F.count(F.lit(1)).over(Window.partitionBy("probe"))
-        posted = posted.withColumn("__bn", bn).where(
-            F.col("__bn") <= F.lit(max_bucket_size)
-        ).drop("__bn")
-    posted = _scoped_persist(posted)
-
-    a, b = posted.alias("a"), posted.alias("b")
-    cand = (
-        a.join(b, on="probe")
-        .where(F.col("a.key") < F.col("b.key"))
-        .select(
-            F.col("a.key").alias("id_a"),
-            F.col("b.key").alias("id_b"),
-            F.col("a.simhash").alias("fp_a"),
-            F.col("b.simhash").alias("fp_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    dist = None
-    for j in range(bits):
-        term = F.when(
-            F.col("fp_a").substr(j + 1, 1) != F.col("fp_b").substr(j + 1, 1),
-            F.lit(1),
-        ).otherwise(F.lit(0))
-        dist = term if dist is None else dist + term
-    return (
-        cand.withColumn("hamming_dist", dist)
-        .where(F.col("hamming_dist") <= radius)
-        .select("id_a", "id_b", "hamming_dist")
-    )
+    fp = F.col("simhash")
+    probes = F.array(fp, *[_flip_bits(fp, (j,), bits) for j in range(bits)])
+    posted = fps.select("key", fp, F.explode(probes).alias("probe"))
+    posted = _scoped_persist(_cap(posted, ["probe"], max_bucket_size))
+    return _hamming_within(_candidates(posted, "probe", "simhash"), bits, radius)
 
 
 def hamming_banded_pairs(
@@ -690,61 +814,10 @@ def hamming_banded_pairs(
 
     Returns (id_a < id_b, hamming_dist ≤ radius), deduplicated across
     bands."""
-    from pyspark.sql.window import Window
-
-    if bits % bands != 0:
-        raise ValueError(f"bits ({bits}) must divide into bands ({bands})")
-    width = bits // bands
-    base = fps.select(
-        F.col(key_col).alias("key"), F.col(fp_col).alias("fp")
-    )
-    posted = base.select(
-        "key",
-        "fp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("band_no"),
-                        F.col("fp").substr(j * width + 1, width).alias("band_bits"),
-                    )
-                    for j in range(bands)
-                ]
-            )
-        ).alias("band"),
-    ).select("key", "fp", "band.band_no", "band.band_bits")
-    if max_bucket_size is not None:
-        bn = F.count(F.lit(1)).over(Window.partitionBy("band_no", "band_bits"))
-        posted = (
-            posted.withColumn("__bn", bn)
-            .where(F.col("__bn") <= F.lit(max_bucket_size))
-            .drop("__bn")
-        )
-    posted = _scoped_persist(posted)
-    a, b = posted.alias("a"), posted.alias("b")
-    cand = (
-        a.join(b, on=["band_no", "band_bits"])
-        .where(F.col("a.key") < F.col("b.key"))
-        .select(
-            F.col("a.key").alias("id_a"),
-            F.col("b.key").alias("id_b"),
-            F.col("a.fp").alias("fp_a"),
-            F.col("b.fp").alias("fp_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    dist = None
-    for j in range(bits):
-        term = F.when(
-            F.col("fp_a").substr(j + 1, 1) != F.col("fp_b").substr(j + 1, 1),
-            F.lit(1),
-        ).otherwise(F.lit(0))
-        dist = term if dist is None else dist + term
-    return (
-        cand.withColumn("hamming_dist", dist)
-        .where(F.col("hamming_dist") <= radius)
-        .select("id_a", "id_b", "hamming_dist")
-    )
+    band = ["band_no", "band_bits"]
+    posted = _band_postings(fps, fp_col, key_col, bits, bands)
+    posted = _scoped_persist(_cap(posted, band, max_bucket_size))
+    return _hamming_within(_candidates(posted, band, "fp"), bits, radius)
 
 
 def incremental_hamming_pairs(
@@ -776,75 +849,13 @@ def incremental_hamming_pairs(
     run refuses — content-derived fingerprint buckets stay far below it).
 
     Returns (id_a < id_b, hamming_dist ≤ radius)."""
-    from pyspark.sql.window import Window
-
-    if bits % bands != 0:
-        raise ValueError(f"bits ({bits}) must divide into bands ({bands})")
-    width = bits // bands
-
-    def post(df: DataFrame, is_delta: int) -> DataFrame:
-        base = df.select(
-            F.col(key_col).alias("key"),
-            F.col(fp_col).alias("fp"),
-            F.lit(is_delta).alias("__d"),
-        )
-        return base.select(
-            "key",
-            "fp",
-            "__d",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("band_no"),
-                            F.col("fp")
-                            .substr(j * width + 1, width)
-                            .alias("band_bits"),
-                        )
-                        for j in range(bands)
-                    ]
-                )
-            ).alias("band"),
-        ).select("key", "fp", "__d", "band.band_no", "band.band_bits")
-
-    posted = post(corpus_fps, 0).unionByName(post(delta_fps, 1))
-    if max_bucket_size is not None:
-        bn = F.count(F.lit(1)).over(Window.partitionBy("band_no", "band_bits"))
-        posted = (
-            posted.withColumn("__bn", bn)
-            .where(F.col("__bn") <= F.lit(max_bucket_size))
-            .drop("__bn")
-        )
-    posted = _scoped_persist(posted)
-    a = posted.where(F.col("__d") == 1).alias("a")  # delta side drives
-    b = posted.alias("b")
-    cand = (
-        a.join(b, on=["band_no", "band_bits"])
-        .where(F.col("a.key") != F.col("b.key"))
-        .select(
-            F.least(F.col("a.key"), F.col("b.key")).alias("id_a"),
-            F.greatest(F.col("a.key"), F.col("b.key")).alias("id_b"),
-            F.when(F.col("a.key") < F.col("b.key"), F.col("a.fp"))
-            .otherwise(F.col("b.fp"))
-            .alias("fp_a"),
-            F.when(F.col("a.key") < F.col("b.key"), F.col("b.fp"))
-            .otherwise(F.col("a.fp"))
-            .alias("fp_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    band = ["band_no", "band_bits"]
+    posted = _band_postings(corpus_fps, fp_col, key_col, bits, bands, 0).unionByName(
+        _band_postings(delta_fps, fp_col, key_col, bits, bands, 1)
     )
-    dist = None
-    for j in range(bits):
-        term = F.when(
-            F.col("fp_a").substr(j + 1, 1) != F.col("fp_b").substr(j + 1, 1),
-            F.lit(1),
-        ).otherwise(F.lit(0))
-        dist = term if dist is None else dist + term
-    return (
-        cand.withColumn("hamming_dist", dist)
-        .where(F.col("hamming_dist") <= radius)
-        .select("id_a", "id_b", "hamming_dist")
-    )
+    posted = _scoped_persist(_cap(posted, band, max_bucket_size))
+    cand = _candidates(posted, band, "fp", delta=posted.where(F.col("__d") == 1))
+    return _hamming_within(cand, bits, radius)
 
 
 def derive_block_cap(
@@ -889,28 +900,6 @@ def derive_block_cap(
     return cap, kept, total - kept
 
 
-def _budgeted_cap(
-    block_sizes: DataFrame, max_pairs_budget: int, op: str
-) -> int:
-    """Collect the block-size histogram (metadata-scale: one row per
-    DISTINCT size) and derive the cap; logs what the budget refused so a
-    silent truncation can't read as full coverage."""
-    hist = block_sizes.groupBy(F.col("bn")).agg(
-        F.count(F.lit(1)).alias("nb")
-    ).collect()
-    cap, kept, refused = derive_block_cap(
-        [(int(r["bn"]), int(r["nb"])) for r in hist], max_pairs_budget
-    )
-    if refused > 0:
-        logging.getLogger(__name__).warning(
-            "%s: pair budget %d -> block cap %d; keeping %d candidate "
-            "pairs, REFUSING %d pairs in oversized blocks (route such "
-            "corpora through minhash_lsh_dedup)",
-            op, max_pairs_budget, cap, kept, refused,
-        )
-    return cap
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -944,72 +933,15 @@ def ngram_jaccard_pairs(
     once per candidate key behind a semi-join prune and re-attached to the
     pair list for scoring. A saturated block still emits |block|²/2 pairs,
     but each is two keys wide, not two shingle arrays wide."""
-    from pyspark.sql.window import Window
-
-    base = df.select(F.col(key_col).alias("key"), *block_cols)
-    cap = max_block_size
-    if max_pairs_budget is not None:
-        # persist the narrow (key, block) relation BEFORE the histogram
-        # collect: a computed upstream (rewritten text, a join output)
-        # would otherwise run once for the sizes and again for the join
-        # — the double-run class the round-6 encoder bug belonged to.
-        # The cap then applies as a broadcast semi-join against the tiny
-        # kept-block list (no second persist, no per-branch re-shuffle).
-        base = _scoped_persist(base)
-        block_sizes = _scoped_persist(
-            base.groupBy(*block_cols).agg(F.count(F.lit(1)).alias("bn"))
-        )
-        derived = _budgeted_cap(
-            block_sizes.select("bn"), max_pairs_budget, "ngram_jaccard_pairs"
-        )
-        cap = derived if cap is None else min(cap, derived)
-        base = base.join(
-            F.broadcast(
-                block_sizes.where(F.col("bn") <= cap).select(*block_cols)
-            ),
-            on=list(block_cols),
-            how="left_semi",
-        )
-    else:
-        if cap is not None:
-            bn = F.count(F.lit(1)).over(Window.partitionBy(*block_cols))
-            base = base.withColumn("__bn", bn).where(
-                F.col("__bn") <= F.lit(cap)
-            ).drop("__bn")
-        base = _scoped_persist(base)
-    a, b = base.alias("a"), base.alias("b")
+    base = _block_capped(
+        df.select(F.col(key_col).alias("key"), *block_cols), block_cols,
+        max_block_size, max_pairs_budget, "ngram_jaccard_pairs",
+    )
     # each doc owns exactly one base row, so in-block pairs are unique
-    cand = (
-        a.join(b, on=list(block_cols))
-        .where(F.col("a.key") < F.col("b.key"))
-        .select(F.col("a.key").alias("id_a"), F.col("b.key").alias("id_b"))
+    cand = _self_join(base, list(block_cols)).select(
+        F.col("a.key").alias("id_a"), F.col("b.key").alias("id_b")
     )
-    cand = _scoped_persist(cand)
-    pair_keys = (
-        cand.select(F.col("id_a").alias("key"))
-        .union(cand.select(F.col("id_b").alias("key")))
-        .distinct()
-    )
-    shingle_map = df.join(
-        pair_keys.withColumnRenamed("key", key_col), on=key_col, how="left_semi"
-    ).select(
-        F.col(key_col).alias("key"),
-        word_shingles(F.col(text_col), shingle_k).alias("sh"),
-    )
-    shingle_map = _scoped_persist(shingle_map)
-    scored = cand.join(
-        shingle_map.select(F.col("key").alias("id_a"), F.col("sh").alias("sh_a")),
-        on="id_a",
-    ).join(
-        shingle_map.select(F.col("key").alias("id_b"), F.col("sh").alias("sh_b")),
-        on="id_b",
-    )
-    sim = F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6)
-    return (
-        scored.withColumn("jaccard_sim", sim)
-        .where(F.col("jaccard_sim") >= threshold)
-        .select("id_a", "id_b", "jaccard_sim")
-    )
+    return _jaccard_verified(cand, df, text_col, key_col, shingle_k, threshold)
 
 
 def connected_components(
@@ -1293,22 +1225,12 @@ def winnow_overlap_pairs(
 
     Returns (id_a < id_b, n_shared) pairs.
     """
-    from pyspark.sql.window import Window
-
     from .textops import winnow_selected_hashes
 
     posted = winnow_selected_hashes(df, text_col, key_col, k, w)
-    if max_bucket_size is not None:
-        bn = F.count(F.lit(1)).over(Window.partitionBy("h"))
-        posted = posted.withColumn("__bn", bn).where(
-            F.col("__bn") <= F.lit(max_bucket_size)
-        ).drop("__bn")
-    posted = _scoped_persist(posted)
-
-    a, b = posted.alias("a"), posted.alias("b")
+    posted = _scoped_persist(_cap(posted, ["h"], max_bucket_size))
     return (
-        a.join(b, on="h")
-        .where(F.col("a.key") < F.col("b.key"))
+        _self_join(posted, "h")
         .groupBy(
             F.col("a.key").alias("id_a"), F.col("b.key").alias("id_b")
         )
@@ -1334,55 +1256,19 @@ def embedding_near_dup(
     ``max_pairs_budget`` bounds the TOTAL pair count by deriving the cap
     from the measured block-size distribution (see ``derive_block_cap``;
     effective cap = min of both), logging what the budget refused."""
-    from pyspark.sql.window import Window
-
-    from ..functions.similarity import cosine_prenorm, norm2
+    from ..functions.similarity import norm2
 
     base = df.select(
         F.col(key_col).alias("key"),
         F.col(block_col).alias("block"),
         F.transform(F.col(vec_col), lambda v: v.cast("double")).alias("v"),
     ).withColumn("nv", norm2(F.col("v")))  # once per vector, not per pair
-    cap = max_block_size
-    if max_pairs_budget is not None:
-        # persist BEFORE the sizes collect: the upstream may be a
-        # mapInPandas encoder, and the histogram action would otherwise
-        # run it once for the sizes and again for the join (the round-6
-        # double-encode bug class). The cap applies as a broadcast
-        # semi-join against the tiny kept-block list — ONE cached copy of
-        # the vector payload, not a pre-cap and a post-cap copy
-        base = _scoped_persist(base)
-        block_sizes = _scoped_persist(
-            base.groupBy("block").agg(F.count(F.lit(1)).alias("bn"))
-        )
-        derived = _budgeted_cap(
-            block_sizes.select("bn"), max_pairs_budget, "embedding_near_dup"
-        )
-        cap = derived if cap is None else min(cap, derived)
-        base = base.join(
-            F.broadcast(block_sizes.where(F.col("bn") <= cap).select("block")),
-            on="block",
-            how="left_semi",
-        )
-    else:
-        if cap is not None:
-            bn = F.count(F.lit(1)).over(Window.partitionBy("block"))
-            base = base.withColumn("__bn", bn).where(
-                F.col("__bn") <= F.lit(cap)
-            ).drop("__bn")
-        # both self-join branches consume base: persist so an expensive
-        # upstream (e.g. the mapInPandas document encoder) runs once, not
-        # once per branch (released via release_intermediates, the house
-        # rule for doubly-consumed intermediates)
-        base = _scoped_persist(base)
-    a, b = base.alias("a"), base.alias("b")
-    sim = F.round(
-        cosine_prenorm(F.col("a.v"), F.col("b.v"), F.col("a.nv"), F.col("b.nv")), 6
+    base = _block_capped(
+        base, ["block"], max_block_size, max_pairs_budget, "embedding_near_dup"
     )
     return (
-        a.join(b, F.col("a.block") == F.col("b.block"))
-        .where(F.col("a.key") < F.col("b.key"))
-        .withColumn("cosine_sim", sim)
+        _self_join(base, F.col("a.block") == F.col("b.block"))
+        .withColumn("cosine_sim", _pair_cosine())
         .where(F.col("cosine_sim") >= threshold)
         .select(
             F.col("a.key").alias("id_a"),
@@ -1521,34 +1407,20 @@ def semantic_assign(
     if route_bits is None:
         cand = v.crossJoin(F.broadcast(cents))
     else:
-        from .annsearch import rh_planes, rh_signature
+        from .annsearch import _flip_bits, rh_planes, rh_signature
 
         planes = rh_planes(route_bits, dim)
         sig = rh_signature(F.col("centroid"), planes)
-
-        def flipped(positions: tuple[int, ...]) -> Column:
-            # signature with the given 0-based bit positions inverted
-            parts = []
-            prev = 0
-            for pos in positions:
-                parts.append(F.substring(sig, prev + 1, pos - prev))
-                parts.append(
-                    F.when(
-                        F.substring(sig, pos + 1, 1) == "1", F.lit("0")
-                    ).otherwise(F.lit("1"))
-                )
-                prev = pos + 1
-            parts.append(F.substring(sig, prev + 1, route_bits - prev))
-            return F.concat(*parts)
-
         # centroid probe list: own signature + every one-bit flip, plus
         # every two-bit flip under route_hamming=2 (adaptive widening for
         # corpora where Hamming-1 misses too much — expansion grows from
         # b+1 to 1+b+b(b-1)/2, still << 2^b for b ~ log2 k)
-        variants = [sig] + [flipped((j,)) for j in range(route_bits)]
+        variants = [sig] + [
+            _flip_bits(sig, (j,), route_bits) for j in range(route_bits)
+        ]
         if route_hamming >= 2:
             variants += [
-                flipped((j, l))
+                _flip_bits(sig, (j, l), route_bits)
                 for j in range(route_bits)
                 for l in range(j + 1, route_bits)
             ]
@@ -1622,8 +1494,6 @@ def _semantic_verdicts(
     pair probe and surface kept=1."""
     from pyspark.sql.window import Window
 
-    from ..functions.similarity import cosine_prenorm
-
     ranked = assigned.withColumn(
         "rnk",
         F.row_number().over(
@@ -1635,42 +1505,20 @@ def _semantic_verdicts(
     # both pair-join sides AND the verdict join consume the ranked
     # relation: one cached copy of the vector payload (house rule)
     ranked = _scoped_persist(ranked)
-    probe = ranked.where(F.col("cluster_id").isNotNull())
-    if max_cluster_size is not None:
-        # action-free refusal (same contract as embedding_near_dup's
-        # plain cap): oversized clusters never enter the pair join, so
-        # their members surface as kept=1 with no duplicate evidence
-        cn = F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
-        probe = (
-            probe.withColumn("__cn", cn)
-            .where(F.col("__cn") <= max_cluster_size)
-            .drop("__cn")
-        )
-    a, b = probe.alias("a"), probe.alias("b")
-    pair_sim = F.round(
-        cosine_prenorm(F.col("a.v"), F.col("b.v"), F.col("a.nv"), F.col("b.nv")), 6
+    # action-free refusal (same contract as embedding_near_dup's plain
+    # cap): oversized clusters never enter the pair join, so their
+    # members surface as kept=1 with no duplicate evidence
+    probe = _cap(
+        ranked.where(F.col("cluster_id").isNotNull()), ["cluster_id"],
+        max_cluster_size, "__cn",
     )
     dup_keys = (
-        a.join(b, F.col("a.cluster_id") == F.col("b.cluster_id"))
-        .where(F.col("a.rnk") < F.col("b.rnk"))
-        .where(pair_sim >= threshold)
+        _self_join(probe, F.col("a.cluster_id") == F.col("b.cluster_id"), "rnk")
+        .where(_pair_cosine() >= threshold)
         .select(F.col("b.key").alias("key"))
         .distinct()
     )
-    return (
-        ranked.join(
-            dup_keys.withColumn("__dup", F.lit(1)), on="key", how="left"
-        )
-        .select(
-            F.col("key").alias(key_col),
-            "cluster_id",
-            "centroid_sim",
-            F.when(F.col("__dup").isNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("kept"),
-        )
-    )
+    return _verdicts(ranked, dup_keys, key_col)
 
 
 def incremental_semantic_dedup(
@@ -1733,10 +1581,6 @@ def incremental_semantic_dedup(
     whatever the batch split — the invariant the streaming ingestion
     harness is built on (streaming/windows.py:stream_semantic_dedup).
     ``corpus`` may be None when ``corpus_index`` is given."""
-    from pyspark.sql.window import Window
-
-    from ..functions.similarity import cosine_prenorm
-
     from .annsearch import ivf_centroids
 
     if corpus is None and corpus_index is None:
@@ -1747,9 +1591,7 @@ def incremental_semantic_dedup(
     if corpus is not None:
         _require_numeric(corpus, [key_col], "incremental_semantic_dedup")
     _require_numeric(delta, [key_col], "incremental_semantic_dedup")
-    delta_keys = _scoped_persist(
-        delta.select(F.col(key_col).alias("key")).distinct()
-    )
+    delta_keys = _delta_keys(delta, key_col)
     if corpus_index is not None:
         # production path: the corpus participates through its STORED
         # assignment index — only the delta is assigned, against the
@@ -1770,15 +1612,8 @@ def incremental_semantic_dedup(
         )
         assigned = corpus_assigned.unionByName(delta_assigned)
     else:
-        corpus_live = corpus.join(
-            delta_keys.withColumnRenamed("key", key_col),
-            on=key_col,
-            how="left_anti",
-        )
-        both = corpus_live.select(
-            F.col(key_col), F.col(vec_col), F.col(label_col)
-        ).unionByName(
-            delta.select(F.col(key_col), F.col(vec_col), F.col(label_col))
+        both = _superseded(
+            corpus, delta, delta_keys, key_col, [key_col, vec_col, label_col]
         )
         cents = centroids
         if cents is None:
@@ -1799,19 +1634,12 @@ def incremental_semantic_dedup(
     hot = delta_assigned.where(F.col("cluster_id").isNotNull()).select(
         "cluster_id"
     ).distinct()
-    probe = assigned.join(hot, on="cluster_id", how="left_semi")
-    if max_cluster_size is not None:
-        cn = F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
-        probe = (
-            probe.withColumn("__cn", cn)
-            .where(F.col("__cn") <= max_cluster_size)
-            .drop("__cn")
-        )
+    probe = _cap(
+        assigned.join(hot, on="cluster_id", how="left_semi"), ["cluster_id"],
+        max_cluster_size, "__cn",
+    )
     delta_side = probe.join(delta_keys, on="key", how="left_semi")
     a, b = probe.alias("a"), delta_side.alias("b")
-    pair_sim = F.round(
-        cosine_prenorm(F.col("a.v"), F.col("b.v"), F.col("a.nv"), F.col("b.nv")), 6
-    )
     pairs = (
         a.join(b, F.col("a.cluster_id") == F.col("b.cluster_id"))
         .where(F.col("a.key") != F.col("b.key"))
@@ -1821,7 +1649,7 @@ def incremental_semantic_dedup(
             F.col("a.centroid_sim").alias("sa"),
             F.col("b.key").alias("kb"),
             F.col("b.centroid_sim").alias("sb"),
-            pair_sim.alias("sim"),
+            _pair_cosine().alias("sim"),
         )
         .where(F.col("sim") >= threshold)
     )
@@ -1834,18 +1662,9 @@ def incremental_semantic_dedup(
         # both directions consume the scored pair list: one copy
         pairs = _scoped_persist(pairs)
     dup_keys = pairs.where(a_first).select(F.col("kb").alias("key")).distinct()
-    verdicts = (
-        delta_assigned.select("key", "cluster_id", "centroid_sim")
-        .join(dup_keys.withColumn("__dup", F.lit(1)), on="key", how="left")
-        .select(
-            F.col("key").alias(key_col),
-            "cluster_id",
-            "centroid_sim",
-            F.when(F.col("__dup").isNull(), F.lit(1))
-            .otherwise(F.lit(0))
-            .cast("int")
-            .alias("kept"),
-        )
+    verdicts = _verdicts(
+        delta_assigned.select("key", "cluster_id", "centroid_sim"), dup_keys,
+        key_col,
     )
     if not emit_corpus_flips:
         return verdicts

@@ -851,13 +851,13 @@ def _hamming_dedup_tail(
     (image dHash, audio energy-dHash): Hamming-banded pairs → CC →
     keep-minimum-key. Guarantee check lives here: radius ≤ bands−1 or
     the banding could silently miss pairs."""
-    from .dedup import connected_components, hamming_banded_pairs
+    from .dedup import (
+        _require_band_radius,
+        connected_components,
+        hamming_banded_pairs,
+    )
 
-    if radius > bands - 1:
-        raise ValueError(
-            f"radius {radius} exceeds the banding guarantee (bands - 1 = "
-            f"{bands - 1}): pairs beyond it could be silently missed"
-        )
+    _require_band_radius(radius, bands)
     pairs = hamming_banded_pairs(
         fps, "fp", "key", bits=bits, bands=bands, radius=radius,
         max_bucket_size=max_bucket_size,
@@ -1273,13 +1273,13 @@ def video_phash_dedup(
     composite-key) ints — the video bytes stay columnar at rest."""
     if frame_stride < 1:
         raise ValueError("frame_stride must be >= 1")
-    from .dedup import connected_components, hamming_banded_pairs
+    from .dedup import (
+        _require_band_radius,
+        connected_components,
+        hamming_banded_pairs,
+    )
 
-    if radius > bands - 1:
-        raise ValueError(
-            f"radius {radius} exceeds the banding guarantee (bands - 1 = "
-            f"{bands - 1}): pairs beyond it could be silently missed"
-        )
+    _require_band_radius(radius, bands)
     fps = real_video_frame_dhash(df, key_col, media_col, frame_stride, hash_size)
     composite = fps.select(
         (F.col("key") * F.lit(1_000_000) + F.col("frame_no")).alias("key"),

@@ -31,6 +31,7 @@ from ..streaming.windows import session_windows, stream_tumbling_6h
 from . import pipeline as _pipe
 from .parity import _elt_parity_sql
 from .pipeline import ORACLES as _pipeline_oracles
+from .pipeline import _hamming_pairs_sql
 from .relational import MONEY
 from .relational import ORACLES as _relational_oracles
 
@@ -635,21 +636,7 @@ def _media_stream_pairs_sql() -> str:
     expected hashes — the drained streaming pair table's twin."""
     from ..operators.multimodal import phash_fixture_images
 
-    vals = ", ".join(
-        f"({c['img_id']}, '{c['dhash']}')" for c in phash_fixture_images()
-    )
-    ham = (
-        "list_sum(list_transform(range(1, 65), i -> CASE WHEN "
-        "substring(a.fp, CAST(i AS INT), 1) <> "
-        "substring(b.fp, CAST(i AS INT), 1) THEN 1 ELSE 0 END))"
-    )
-    return f"""
-    WITH items(k, fp) AS (VALUES {vals})
-    SELECT CAST(a.k AS BIGINT) AS id_a, CAST(b.k AS BIGINT) AS id_b,
-           CAST({ham} AS BIGINT) AS hamming_dist
-    FROM items a CROSS JOIN items b
-    WHERE a.k < b.k AND {ham} <= 7
-    """
+    return _hamming_pairs_sql(phash_fixture_images())
 
 
 def q_stream_scored_ingest(

@@ -32,8 +32,11 @@ from ..operators.dedup import (
 )
 from ..operators.textops import (
     bpe_encode,
+    decontaminate,
     fingerprint,
     language_id,
+    mixture_sample,
+    pack_shards,
     paragraph_dedup,
     quality_filter,
     quality_score,
@@ -671,8 +674,6 @@ def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     training docs sharing any 5-word shingle with the deterministic
     doc_id %% 23 == 0 eval split, with hit counts and fractions.
     Driver-visible via the ``decontam`` mode of ``text_corpus_stats``."""
-    from ..operators.textops import decontaminate
-
     docs = load_table(spark, sf_dir, "documents")
     ev = docs.where(F.col("doc_id") % DECONTAM_MODULUS == 0)
     train = docs.where(F.col("doc_id") % DECONTAM_MODULUS != 0)
@@ -704,8 +705,6 @@ def q_text_shard_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-doc shard assignment from a two-phase distributed prefix sum.
     Driver-visible (summarized per shard) via the ``shard`` mode of
     ``text_corpus_stats``."""
-    from ..operators.textops import pack_shards
-
     docs = load_table(spark, sf_dir, "documents")
     return pack_shards(
         docs, "text", "doc_id", shard_tokens=SHARD_TOKEN_BUDGET, block_size=100
@@ -802,6 +801,59 @@ def _neardup(c: DataFrame, checkpoint_dir: str | None) -> DataFrame:
         pairs.select("id_a", "id_b"), checkpoint_dir=checkpoint_dir
     )
     return _scoped_persist(dedup_apply(c, clusters, "doc_id"))
+
+
+def _decontam(c: DataFrame, ev: DataFrame, cut) -> DataFrame:
+    """Stage ``decontam`` — drop the docs of ``c`` sharing any
+    DECONTAM_NGRAM_K-word shingle with the ORIGINAL eval text ``ev``
+    (operators/textops.py:decontaminate); ``cut`` materializes the
+    result, as in ``_para``."""
+    hits = decontaminate(c, ev, "text", "doc_id", DECONTAM_NGRAM_K).select(
+        F.col("key").alias("doc_id")
+    )
+    return cut(c.join(hits, "doc_id", "left_anti"))
+
+
+def _mixture(
+    c: DataFrame, budget: int, token_count_col: str | None = None
+) -> DataFrame:
+    """Stage ``mixture`` — resample ``c`` by source toward
+    CURATION_MIX_WEIGHTS within ``budget`` tokens
+    (operators/textops.py:mixture_sample), counted in
+    ``token_count_col`` (whitespace tokens when None), persisted. A
+    chain budgeting in a count column keeps its counts in __lt/__bt
+    only: the sampler's own n_tokens and accept_rate are dropped."""
+    mixed = mixture_sample(
+        c, "source", CURATION_MIX_WEIGHTS, budget, "text", "doc_id",
+        token_count_col=token_count_col,
+    )
+    if token_count_col is not None:
+        mixed = mixed.drop("n_tokens", "accept_rate")
+    return _scoped_persist(mixed)
+
+
+def _shard(
+    c: DataFrame, shard_tokens: int, token_count_col: str | None = None
+) -> DataFrame:
+    """Stage ``shard`` — pack ``c`` into ~``shard_tokens``-token shards
+    (operators/textops.py:pack_shards, budget counted as in
+    ``_mixture``) and return the stage's 1-row output aggregate: the
+    shard count, the budget unit's token sum from the packing, and the
+    other unit's from ``c`` (packing drops no documents)."""
+    packed = pack_shards(
+        c, "text", "doc_id", shard_tokens=shard_tokens, block_size=100,
+        token_count_col=token_count_col,
+    )
+    unit, other, col = (
+        ("tok", "bpe", "__bt") if token_count_col is None
+        else ("bpe", "tok", "__lt")
+    )
+    return packed.agg(
+        F.countDistinct("shard_id").cast("long").alias("n"),
+        F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long").alias(unit),
+    ).crossJoin(
+        c.agg(F.coalesce(F.sum(col), F.lit(0)).cast("long").alias(other))
+    )
 
 
 def _stats(c: DataFrame) -> DataFrame:
@@ -908,8 +960,6 @@ def q_curation_pipeline(
     eval/rate relations; stage 6 is the two-phase prefix sum. The ledger
     rows are 1-row aggregates over persisted intermediates — the only
     driver-side data is the 6-row ledger itself."""
-    from ..operators.textops import decontaminate, mixture_sample, pack_shards
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
@@ -924,37 +974,13 @@ def q_curation_pipeline(
     c2 = _para(c1, _scoped_persist)
     c3 = _neardup(c2, checkpoint_dir)
 
-    # stage 4 — benchmark decontamination against the ORIGINAL eval text
-    hits = decontaminate(c3, ev, "text", "doc_id", DECONTAM_NGRAM_K).select(
-        F.col("key").alias("doc_id")
-    )
-    c4 = _scoped_persist(c3.join(hits, "doc_id", "left_anti"))
-
-    # stage 5 — domain-mixture resample by source
-    c5 = _scoped_persist(
-        mixture_sample(
-            c4, "source", CURATION_MIX_WEIGHTS, CURATION_MIX_BUDGET,
-            "text", "doc_id",
-        )
-    )
-
-    # stage 6 — shard packing (two-phase prefix sum)
-    packed = pack_shards(
-        c5, "text", "doc_id",
-        shard_tokens=CURATION_SHARD_TOKENS, block_size=100,
-    )
+    # stages 4-6 — decontamination against the ORIGINAL eval text,
+    # domain-mixture resample by source, shard packing
+    c4 = _decontam(c3, ev, _scoped_persist)
+    c5 = _mixture(c4, CURATION_MIX_BUDGET)
+    s6 = _shard(c5, CURATION_SHARD_TOKENS)
 
     s1, s2, s3, s4, s5 = (_stats(c) for c in (c1, c2, c3, c4, c5))
-    # packing drops no documents, so the shard stage's token sums equal
-    # stage 5's — recomputed from packed/c5 as written (1-row aggs)
-    s6 = packed.agg(
-        F.countDistinct("shard_id").cast("long").alias("n"),
-        F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long").alias("tok"),
-    ).crossJoin(
-        c5.agg(
-            F.coalesce(F.sum("__bt"), F.lit(0)).cast("long").alias("bpe")
-        )
-    )
     stages = [
         ("gate", s_in, s1), ("para", s1, s2), ("neardup", s2, s3),
         ("decontam", s3, s4), ("mixture", s4, s5), ("shard", s5, s6),
@@ -1006,7 +1032,6 @@ def q_curation_semantic_pipeline(
         rh_planes,
         rh_signature,
     )
-    from ..operators.textops import pack_shards
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
@@ -1043,18 +1068,9 @@ def q_curation_semantic_pipeline(
     )
 
     # stage 5 — shard packing
-    packed = pack_shards(
-        c4, "text", "doc_id",
-        shard_tokens=CURATION_SHARD_TOKENS, block_size=100,
-    )
+    s5 = _shard(c4, CURATION_SHARD_TOKENS)
 
     s1, s2, s3, s4 = (_stats(c) for c in (c1, c2, c3, c4))
-    s5 = packed.agg(
-        F.countDistinct("shard_id").cast("long").alias("n"),
-        F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long").alias("tok"),
-    ).crossJoin(
-        c4.agg(F.coalesce(F.sum("__bt"), F.lit(0)).cast("long").alias("bpe"))
-    )
     stages = [
         ("gate", s_in, s1), ("para", s1, s2), ("neardup", s2, s3),
         ("semdedup", s3, s4), ("shard", s4, s5),
@@ -1134,13 +1150,10 @@ def q_curation_scored_pipeline(
     loss on a real cluster (operators/dedup.py:lineage_cut)."""
     from ..operators.dedup import lineage_cut
     from ..operators.textops import (
-        decontaminate,
         dsir_gumbel_topk,
         dsir_importance_weight,
         fuzzy_decontaminate,
         lm_perplexity_score,
-        mixture_sample,
-        pack_shards,
     )
 
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1191,13 +1204,9 @@ def q_curation_scored_pipeline(
     # stage 5 — near-dup canonicalization on the rewritten corpus
     c5 = _neardup(c4, checkpoint_dir)
 
-    # stage 6 — exact n-gram decontamination vs the ORIGINAL eval text
-    xhits = decontaminate(c5, ev, "text", "doc_id", DECONTAM_NGRAM_K).select(
-        F.col("key").alias("doc_id")
-    )
-    c6 = lineage_cut(
-        c5.join(xhits, "doc_id", "left_anti"), checkpoint_dir
-    )
+    # stage 6 — exact n-gram decontamination vs the ORIGINAL eval text;
+    # third plan-depth cut
+    c6 = _decontam(c5, ev, lambda df: lineage_cut(df, checkpoint_dir))
 
     # stage 7 — fuzzy (LSH) decontamination: near-duplicate eval matches
     fhits = fuzzy_decontaminate(
@@ -1206,31 +1215,13 @@ def q_curation_scored_pipeline(
     ).select("doc_id")
     c7 = _scoped_persist(c6.join(fhits, "doc_id", "left_anti"))
 
-    # stage 8 — mixture resample budgeted in SUBWORD tokens
-    c8 = _scoped_persist(
-        mixture_sample(
-            c7, "source", CURATION_MIX_WEIGHTS, CURATION_SCORED_MIX_BUDGET,
-            "text", "doc_id", token_count_col="__bt",
-        ).drop("n_tokens", "accept_rate")
-    )
-
-    # stage 9 — shard packing budgeted in SUBWORD tokens
-    packed = pack_shards(
-        c8, "text", "doc_id",
-        shard_tokens=CURATION_SCORED_SHARD_TOKENS, block_size=100,
-        token_count_col="__bt",
-    )
+    # stages 8-9 — mixture resample and shard packing, both budgeted in
+    # SUBWORD tokens
+    c8 = _mixture(c7, CURATION_SCORED_MIX_BUDGET, "__bt")
+    s9 = _shard(c8, CURATION_SCORED_SHARD_TOKENS, "__bt")
 
     s1, s2, s3, s4, s5, s6, s7, s8 = (
         _stats(c) for c in (c1, c2, c3, c4, c5, c6, c7, c8)
-    )
-    s9 = packed.agg(
-        F.countDistinct("shard_id").cast("long").alias("n"),
-        F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long").alias("bpe"),
-    ).crossJoin(
-        c8.agg(
-            F.coalesce(F.sum("__lt"), F.lit(0)).cast("long").alias("tok")
-        )
     )
     stages = [
         ("gate", s_in, s1), ("ppl", s1, s2), ("dsirsel", s2, s3),
@@ -1648,8 +1639,6 @@ def q_text_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything (under-represented, rate caps at 1.0), en/zh downsample.
     Summarized per language. Driver-visible via the ``mixture`` mode of
     ``text_corpus_stats``."""
-    from ..operators.textops import mixture_sample
-
     docs = load_table(spark, sf_dir, "documents")
     kept = mixture_sample(
         docs, "lang", MIXTURE_WEIGHTS, MIXTURE_BUDGET, "text", "doc_id"
@@ -1848,17 +1837,12 @@ def _hamming_dedup_sql(vals: str, key_out: str, fp_out: str) -> str:
     each codec's pack→decode round trip), the brute-force Hamming-≤7
     spec the banded path provably equals (radius ≤ bands−1), a
     recursive CC label walk, and keep-one survival."""
-    ham = (
-        "list_sum(list_transform(range(1, 65), i -> CASE WHEN "
-        "substring(a.fp, CAST(i AS INT), 1) <> "
-        "substring(b.fp, CAST(i AS INT), 1) THEN 1 ELSE 0 END))"
-    )
     return f"""
     WITH RECURSIVE items(k, fp) AS (VALUES {vals}),
     pairs AS (
       SELECT a.k AS id_a, b.k AS id_b
       FROM items a CROSS JOIN items b
-      WHERE a.k < b.k AND {ham} <= 7),
+      WHERE a.k < b.k AND {_hamming_sql()} <= 7),
     edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs
       UNION
@@ -1906,17 +1890,12 @@ def _video_phash_sql() -> str:
         for c in video_fixture_clips()
         for i, h in enumerate(c["frame_dhashes"])
     )
-    ham = (
-        "list_sum(list_transform(range(1, 65), i -> CASE WHEN "
-        "substring(a.fp, CAST(i AS INT), 1) <> "
-        "substring(b.fp, CAST(i AS INT), 1) THEN 1 ELSE 0 END))"
-    )
     return f"""
     WITH RECURSIVE fps(vid, fno, fp) AS (VALUES {vals}),
     fpairs AS (
       SELECT a.vid AS va, b.vid AS vb
       FROM fps a CROSS JOIN fps b
-      WHERE a.vid < b.vid AND {ham} <= 5),
+      WHERE a.vid < b.vid AND {_hamming_sql()} <= 5),
     vp AS (
       SELECT va, vb FROM fpairs GROUP BY va, vb HAVING count(*) >= 4),
     edges AS (
@@ -2016,27 +1995,29 @@ def q_dedup_image_phash_inc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_hamming_pairs(fps(corpus), fps(delta))
 
 
-def _image_phash_inc_sql() -> str:
-    """DuckDB twin: brute-force Hamming-≤7 pairs over the fixture's
-    expected hashes RESTRICTED to delta-involved pairs — the exactness
-    property of the incremental path."""
-    corpus, delta = _image_phash_inc_split()
+def _hamming_pairs_sql(imgs, delta=()) -> str:
+    """Brute-force Hamming-≤7 pairs over the pHash fixture images'
+    expected hashes — the spec the banded path provably equals —
+    restricted to pairs touching a ``delta`` image when one is given."""
     vals = ", ".join(
-        f"({c['img_id']}, '{c['dhash']}', {int(c in delta)})"
-        for c in corpus + delta
+        f"({c['img_id']}, '{c['dhash']}', {int(c in delta)})" for c in imgs
     )
-    ham = (
-        "list_sum(list_transform(range(1, 65), i -> CASE WHEN "
-        "substring(a.fp, CAST(i AS INT), 1) <> "
-        "substring(b.fp, CAST(i AS INT), 1) THEN 1 ELSE 0 END))"
-    )
+    touch = " AND (a.d = 1 OR b.d = 1)" if delta else ""
     return f"""
     WITH items(k, fp, d) AS (VALUES {vals})
     SELECT CAST(a.k AS BIGINT) AS id_a, CAST(b.k AS BIGINT) AS id_b,
-           CAST({ham} AS BIGINT) AS hamming_dist
+           CAST({_hamming_sql()} AS BIGINT) AS hamming_dist
     FROM items a CROSS JOIN items b
-    WHERE a.k < b.k AND (a.d = 1 OR b.d = 1) AND {ham} <= 7
+    WHERE a.k < b.k{touch} AND {_hamming_sql()} <= 7
     """
+
+
+def _image_phash_inc_sql() -> str:
+    """DuckDB twin: the fixture's brute-force pairs RESTRICTED to
+    delta-involved pairs — the exactness property of the incremental
+    path."""
+    corpus, delta = _image_phash_inc_split()
+    return _hamming_pairs_sql(corpus + delta, delta)
 
 
 def q_dedup_audio_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2511,33 +2492,50 @@ _PAGERANK_RD_SQL = _pagerank_rd_sql()
 
 _PAGERANK_DAG_SQL = _pagerank_dag_sql()
 
-# distinct word 3-shingles of a document (tokens on \s+, space-joined runs)
-_SHINGLES = r"""
-  SELECT doc_id,
-         list_distinct(list_transform(
-           range(1, greatest(length(string_split_regex(trim(text), '\s+')) - {km1}, 1) + 1),
-           i -> array_to_string(string_split_regex(trim(text), '\s+')[i:i+{km1}], ' ')
-         )) AS sh
-  FROM documents
-"""
+# The dedup twins splice one SQL fragment per operator kernel
+# (operators/dedup.py): the bucket cap, the ordered candidate join, the
+# exact Hamming distance, and the MinHash-LSH chain from shingles through
+# verified pairs.
+
+
+def _cap_sql(part: str, cap: int) -> str:
+    """The mega-bucket cap as a QUALIFY tail (mirror of dedup._cap): every
+    row of a ``part`` bucket holding more than ``cap`` rows is dropped."""
+    return f"QUALIFY count(*) OVER (PARTITION BY {part}) <= {cap}"
+
+
+def _cand_sql(rel: str, on: str, fp: str | None = None) -> str:
+    """Distinct candidate pairs id_a < id_b of ``rel`` rows (key, …)
+    sharing ``on`` (mirror of dedup._candidates), each side's ``fp`` as
+    fp_a/fp_b when given."""
+    fps = "" if fp is None else f", a.{fp} AS fp_a, b.{fp} AS fp_b"
+    return f"""
+          SELECT DISTINCT a.key AS id_a, b.key AS id_b{fps}
+          FROM {rel} a JOIN {rel} b USING ({on})
+          WHERE a.key < b.key"""
+
+
+def _hamming_sql(a: str = "a.fp", b: str = "b.fp", bits: int = 64) -> str:
+    """The Hamming distance of two ``bits``-bit strings (mirror of
+    dedup._hamming_within)."""
+    return (
+        f"list_sum(list_transform(range(1, {bits} + 1), i -> CASE WHEN "
+        f"substring({a}, CAST(i AS INT), 1) <> "
+        f"substring({b}, CAST(i AS INT), 1) THEN 1 ELSE 0 END))"
+    )
+
 
 _JACCARD = (
     "CAST(length(list_intersect({a}, {b})) AS DOUBLE)"
     " / CAST(length(list_distinct(list_concat({a}, {b}))) AS DOUBLE)"
 )
 
-# minhash signature entry i: min over shingles of (a + i*b), a/b = 48-bit
-# halves of md5(shingle) — mirrors operators/dedup.py:minhash_signature
-_SIG = """
-  SELECT doc_id, sh,
-         [{mins}] AS sig
-  FROM shingled
-"""
-
 _A = "CAST(('0x' || substring(md5(s), 1, 12)) AS BIGINT)"
 _B = "CAST(('0x' || substring(md5(s), 13, 12)) AS BIGINT)"
 
-# the NUM_HASHES signature entries, as the list body of ``sig``
+# minhash signature entry i: min over shingles of (a + i*b), a/b = 48-bit
+# halves of md5(shingle) — mirrors operators/dedup.py:minhash_signature;
+# the NUM_HASHES entries as the list body of ``sig``
 _SIG_MINS = ", ".join(
     f"list_min(list_transform(sh, s -> {_A} + {i} * {_B}))"
     for i in range(NUM_HASHES)
@@ -2554,32 +2552,54 @@ _BAND_KEYS = ", ".join(
 )
 
 
-def _minhash_oracle() -> str:
-    max_bucket = LSH_MAX_BUCKET
-    shingled = _SHINGLES.format(km1=SHINGLE_K - 1)
-    sig = _SIG.format(mins=_SIG_MINS)
+def _sigs_ctes(src: str, p: str = "") -> str:
+    """``{p}sigs`` (doc_id, sh, sig): the distinct word SHINGLE_K-shingles
+    of ``src``'s text and their MinHash signature."""
+    km1 = SHINGLE_K - 1
+    return f"""{p}shingled AS (
+          SELECT doc_id,
+                 list_distinct(list_transform(
+                   range(1, greatest(length(string_split_regex(trim(text), '\\s+')) - {km1}, 1) + 1),
+                   i -> array_to_string(string_split_regex(trim(text), '\\s+')[i:i+{km1}], ' ')
+                 )) AS sh
+          FROM {src}),
+        {p}sigs AS (SELECT doc_id, sh, [{_SIG_MINS}] AS sig FROM {p}shingled)"""
+
+
+def _verify_sql(cand: str, sigs: str) -> str:
+    """Candidate pairs of ``cand`` scored by the shingle Jaccard of their
+    ``sigs`` rows, kept when the 6-dp rounded score is ≥ LSH_THRESHOLD
+    (mirror of dedup._jaccard_verified)."""
+    jac = _JACCARD.format(a="sh_a", b="sh_b")
     return f"""
-        WITH shingled AS ({shingled}),
-        sigs AS ({sig}),
-        banded0 AS (
-          SELECT doc_id AS key, unnest([{_BAND_KEYS}]) AS band_key FROM sigs),
-        banded AS (
-          -- mega-bucket cap (operators/dedup.py:minhash_lsh_dedup step 3)
-          SELECT key, band_key FROM banded0
-          QUALIFY count(*) OVER (PARTITION BY band_key) <= {max_bucket}),
-        cand AS (
-          SELECT DISTINCT a.key AS id_a, b.key AS id_b
-          FROM banded a JOIN banded b USING (band_key)
-          WHERE a.key < b.key),
-        pairs AS (
-          SELECT c.id_a, c.id_b, sa.sh AS sh_a, sb.sh AS sh_b
-          FROM cand c
-          JOIN sigs sa ON sa.doc_id = c.id_a
-          JOIN sigs sb ON sb.doc_id = c.id_b)
-        SELECT id_a, id_b,
-               round({_JACCARD.format(a="sh_a", b="sh_b")}, 6) AS jaccard_sim
-        FROM pairs
-        WHERE {_JACCARD.format(a="sh_a", b="sh_b")} >= {LSH_THRESHOLD}
+          SELECT id_a, id_b, round({jac}, 6) AS jaccard_sim
+          FROM (SELECT c.id_a, c.id_b, sa.sh AS sh_a, sb.sh AS sh_b
+                FROM {cand} c
+                JOIN {sigs} sa ON sa.doc_id = c.id_a
+                JOIN {sigs} sb ON sb.doc_id = c.id_b)
+          WHERE round({jac}, 6) >= {LSH_THRESHOLD}"""
+
+
+def _lsh_ctes(src: str, p: str = "") -> str:
+    """MinHash-LSH over ``src`` (doc_id, text) — mirror of
+    dedup.minhash_lsh_dedup: signatures in ``{p}sigs``, capped band
+    postings in ``{p}banded``, candidates in ``{p}cand``, and the verified
+    pairs (id_a < id_b, jaccard_sim) in ``{p}pairs``."""
+    return f"""{_sigs_ctes(src, p)},
+        {p}banded0 AS (
+          SELECT doc_id AS key, unnest([{_BAND_KEYS}]) AS band_key
+          FROM {p}sigs),
+        {p}banded AS (
+          SELECT key, band_key FROM {p}banded0
+          {_cap_sql("band_key", LSH_MAX_BUCKET)}),
+        {p}cand AS ({_cand_sql(f"{p}banded", "band_key")}),
+        {p}pairs AS ({_verify_sql(f"{p}cand", f"{p}sigs")})"""
+
+
+def _minhash_oracle() -> str:
+    return f"""
+        WITH {_lsh_ctes("documents")}
+        SELECT id_a, id_b, jaccard_sim FROM pairs
     """
 
 
@@ -2589,39 +2609,13 @@ def _scored_ingest_oracle() -> str:
     tail dropped) over the WHOLE documents table, then the standard
     capped MinHash-LSH pair set over exactly the surviving docs — what
     the gated micro-batch ingestion converges to for any batch split."""
-    jac = _JACCARD.format(a="sh_a", b="sh_b")
-    km1 = SHINGLE_K - 1
     return f"""
         WITH{_quality_ctes("documents")}
         g1 AS MATERIALIZED (
           SELECT d.doc_id, d.text FROM documents d
           JOIN qd USING (doc_id) WHERE qd.reasons = ''),{_ppl_gate_ctes("g1", "sv")}
-        shingled AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, greatest(length(string_split_regex(trim(text), '\\s+')) - {km1}, 1) + 1),
-                   i -> array_to_string(string_split_regex(trim(text), '\\s+')[i:i+{km1}], ' ')
-                 )) AS sh
-          FROM sv),
-        sigs AS (SELECT doc_id, sh, [{_SIG_MINS}] AS sig FROM shingled),
-        banded0 AS (
-          SELECT doc_id AS key, unnest([{_BAND_KEYS}]) AS band_key FROM sigs),
-        banded AS (
-          SELECT key, band_key FROM banded0
-          QUALIFY count(*) OVER (PARTITION BY band_key) <= {LSH_MAX_BUCKET}),
-        cand AS (
-          SELECT DISTINCT a.key AS id_a, b.key AS id_b
-          FROM banded a JOIN banded b USING (band_key)
-          WHERE a.key < b.key),
-        pairs AS (
-          SELECT c.id_a, c.id_b, sa.sh AS sh_a, sb.sh AS sh_b
-          FROM cand c
-          JOIN sigs sa ON sa.doc_id = c.id_a
-          JOIN sigs sb ON sb.doc_id = c.id_b)
-        SELECT id_a, id_b,
-               round({jac}, 6) AS jaccard_sim
-        FROM pairs
-        WHERE round({jac}, 6) >= {LSH_THRESHOLD}
+        {_lsh_ctes("sv")}
+        SELECT id_a, id_b, jaccard_sim FROM pairs
     """
 
 
@@ -2647,11 +2641,8 @@ def _minhash_salvage_oracle() -> str:
             entries.append(
                 f"struct_pack(b := {b}, d := {d}, k := {key})"
             )
-    shingled = _SHINGLES.format(km1=SHINGLE_K - 1)
-    sig = _SIG.format(mins=_SIG_MINS)
     return f"""
-        WITH shingled AS ({shingled}),
-        sigs AS ({sig}),
+        WITH {_sigs_ctes("documents")},
         lv AS (
           SELECT doc_id AS key, unnest([{", ".join(entries)}]) AS e
           FROM sigs),
@@ -2663,19 +2654,8 @@ def _minhash_salvage_oracle() -> str:
         acc AS (
           SELECT key, b, (min(struct_pack(d := d, k := k))).k AS band_key
           FROM fit GROUP BY key, b),
-        cand AS (
-          SELECT DISTINCT a.key AS id_a, b.key AS id_b
-          FROM acc a JOIN acc b USING (band_key)
-          WHERE a.key < b.key),
-        pairs AS (
-          SELECT c.id_a, c.id_b, sa.sh AS sh_a, sb.sh AS sh_b
-          FROM cand c
-          JOIN sigs sa ON sa.doc_id = c.id_a
-          JOIN sigs sb ON sb.doc_id = c.id_b)
-        SELECT id_a, id_b,
-               round({_JACCARD.format(a="sh_a", b="sh_b")}, 6) AS jaccard_sim
-        FROM pairs
-        WHERE round({_JACCARD.format(a="sh_a", b="sh_b")}, 6) >= {LSH_THRESHOLD}
+        cand AS ({_cand_sql("acc", "band_key")})
+        {_verify_sql("cand", "sigs")}
     """
 
 
@@ -2685,41 +2665,17 @@ def _fuzzy_decontam_oracle() -> str:
     operator's delta-vs-corpus run equals that set restricted to pairs
     involving a delta doc — eval keys are all negative, so a train×eval
     pair always orders (eval, train)), grouped per train doc."""
-    jac = _JACCARD.format(a="sh_a", b="sh_b")
-    km1 = SHINGLE_K - 1
     return f"""
         WITH src AS (
           SELECT CASE WHEN doc_id % {DECONTAM_MODULUS} = 0
                       THEN -doc_id - 1 ELSE doc_id END AS doc_id, text
           FROM documents),
-        shingled AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, greatest(length(string_split_regex(trim(text), '\\s+')) - {km1}, 1) + 1),
-                   i -> array_to_string(string_split_regex(trim(text), '\\s+')[i:i+{km1}], ' ')
-                 )) AS sh
-          FROM src),
-        sigs AS (SELECT doc_id, sh, [{_SIG_MINS}] AS sig FROM shingled),
-        banded0 AS (
-          SELECT doc_id AS key, unnest([{_BAND_KEYS}]) AS band_key FROM sigs),
-        banded AS (
-          SELECT key, band_key FROM banded0
-          QUALIFY count(*) OVER (PARTITION BY band_key) <= {LSH_MAX_BUCKET}),
-        cand AS (
-          SELECT DISTINCT a.key AS id_a, b.key AS id_b
-          FROM banded a JOIN banded b USING (band_key)
-          WHERE a.key < b.key),
-        pairs AS (
-          SELECT id_a, id_b, round({jac}, 6) AS jaccard_sim
-          FROM (SELECT c.id_a, c.id_b, sa.sh AS sh_a, sb.sh AS sh_b
-                FROM cand c
-                JOIN sigs sa ON sa.doc_id = c.id_a
-                JOIN sigs sb ON sb.doc_id = c.id_b))
+        {_lsh_ctes("src")}
         SELECT id_b AS doc_id,
                count(*) AS n_eval_matches,
                max(jaccard_sim) AS max_jaccard
         FROM pairs
-        WHERE jaccard_sim >= {LSH_THRESHOLD} AND id_a < 0 AND id_b >= 0
+        WHERE id_a < 0 AND id_b >= 0
         GROUP BY id_b
     """
 
@@ -2755,29 +2711,17 @@ def _simhash_oracle(bits: int = 32) -> str:
 def _simhash_near_dup_oracle(
     bits: int = 32, radius: int = 1, max_bucket: int = 1000
 ) -> str:
-    flips = ", ".join(
-        f"substr(simhash, 1, {j}) || (CASE WHEN substr(simhash, {j + 1}, 1) = '1'"
-        f" THEN '0' ELSE '1' END) || substr(simhash, {j + 2})"
-        for j in range(bits)
-    )
-    hamming = (
-        f"list_sum(list_transform(range(1, {bits} + 1), j -> CASE WHEN"
-        " substring(fp_a, CAST(j AS INT), 1) <> substring(fp_b, CAST(j AS INT), 1)"
-        " THEN 1 ELSE 0 END))"
-    )
+    hamming = _hamming_sql("fp_a", "fp_b", bits)
     return f"""
         WITH {_simhash_fp_cte(bits)},
         posted0 AS (
-          SELECT doc_id AS key, simhash, unnest([simhash, {flips}]) AS probe
+          SELECT doc_id AS key, simhash,
+                 unnest([simhash, {_flips_sql(bits, "simhash")}]) AS probe
           FROM fp),
         posted AS (
           SELECT key, simhash, probe FROM posted0
-          QUALIFY count(*) OVER (PARTITION BY probe) <= {max_bucket}),
-        cand AS (
-          SELECT DISTINCT a.key AS id_a, b.key AS id_b,
-                 a.simhash AS fp_a, b.simhash AS fp_b
-          FROM posted a JOIN posted b USING (probe)
-          WHERE a.key < b.key)
+          {_cap_sql("probe", max_bucket)}),
+        cand AS ({_cand_sql("posted", "probe", "simhash")})
         SELECT id_a, id_b, CAST({hamming} AS INT) AS hamming_dist
         FROM cand WHERE {hamming} <= {radius}
     """
@@ -2878,11 +2822,12 @@ def _rh_sig_sql(v: str, planes: list[list[int]]) -> str:
     )
 
 
-def _rh_flips_sql(bits: int) -> str:
-    """``sig``'s ``bits`` Hamming-1 neighbours, one bit flipped each."""
+def _flips_sql(bits: int, sig: str = "sig") -> str:
+    """``sig``'s ``bits`` Hamming-1 neighbours, one bit flipped each
+    (mirror of annsearch._flip_bits)."""
     return ", ".join(
-        f"substr(sig, 1, {j}) || (CASE WHEN substr(sig, {j + 1}, 1) = '1'"
-        f" THEN '0' ELSE '1' END) || substr(sig, {j + 2})"
+        f"substr({sig}, 1, {j}) || (CASE WHEN substr({sig}, {j + 1}, 1) = '1'"
+        f" THEN '0' ELSE '1' END) || substr({sig}, {j + 2})"
         for j in range(bits)
     )
 
@@ -2912,7 +2857,7 @@ def _rh_oracle(multiprobe: bool, num_planes: int = 8, dim: int = 64) -> str:
     from ..operators.annsearch import rh_planes
 
     planes = rh_planes(num_planes, dim)
-    probes = f"sig, {_rh_flips_sql(num_planes)}" if multiprobe else "sig"
+    probes = f"sig, {_flips_sql(num_planes)}" if multiprobe else "sig"
     return f"""
         WITH{_float_sides_sql()}
         cs AS (SELECT corpus_id, cv, {_rh_sig_sql("cv", planes)} AS sig FROM c),
@@ -3083,7 +3028,7 @@ def _semantic_routed_oracle(bits: int = 4, dim: int = 64) -> str:
           SELECT cluster_id, centroid, {_rh_sig_sql("centroid", planes)} AS sig FROM cents),
         cp AS (
           SELECT cluster_id, centroid,
-                 unnest(list_value(sig, {_rh_flips_sql(bits)})) AS psig
+                 unnest(list_value(sig, {_flips_sql(bits)})) AS psig
           FROM cs),
         v AS (
           SELECT vec_id AS key,
@@ -3128,7 +3073,7 @@ _NGRAM_PAIRS_SQL = f"""
       SELECT doc_id AS key, lang, source,
              list_distinct(string_split_regex(trim(text), '\\s+')) AS sh
       FROM documents
-      QUALIFY count(*) OVER (PARTITION BY lang, source) <= 10000)
+      {_cap_sql("lang, source", 10000)})
     SELECT a.key AS id_a, b.key AS id_b,
            round({_JACCARD.format(a="a.sh", b="b.sh")}, 6) AS score
     FROM base a JOIN base b USING (lang, source)
@@ -3171,11 +3116,13 @@ _SPLIT_SQL = f"""
 """
 
 
-# DuckDB twins of the shared curation stages (_gate, _para, _neardup):
-# CTE fragments from an input relation to an output relation, spliced
-# into one ``WITH RECURSIVE`` statement per chain. Every stage output
-# carries (doc_id, text, source, nt) — nt the whitespace-token count of
-# its current text — and is MATERIALIZED, because _ledger_sql's scalar
+# DuckDB twins of the shared curation stages (_gate, _para, _neardup,
+# _decontam, _mixture, _shard): CTE fragments from an input relation to
+# an output relation, spliced into one ``WITH RECURSIVE`` statement per
+# chain. Every stage output through decontam carries (doc_id, text,
+# source, nt) — nt the whitespace-token count of its current text; the
+# mixture output trades source for the subword count bt, and shard
+# emits ``packed``. Each is MATERIALIZED, because _ledger_sql's scalar
 # subqueries would otherwise re-inline it once per ledger cell.
 
 
@@ -3319,38 +3266,13 @@ def _para_ctes(src: str, out: str) -> str:
 
 
 def _neardup_ctes(src: str, out: str) -> str:
-    """Stage ``neardup`` over ``src``: MinHash-LSH pairs (mirror of
-    dedup_minhash_lsh), the CC label walk, keep-one-per-cluster into
-    ``out``. Needs the statement to be ``WITH RECURSIVE``."""
-    km1 = SHINGLE_K - 1
-    jac = _JACCARD.format(a="sh_a", b="sh_b")
+    """Stage ``neardup`` over ``src``: MinHash-LSH pairs (the
+    ``_lsh_ctes`` fragment, prefixed ``m``), the CC label walk,
+    keep-one-per-cluster into ``out``. Needs the statement to be
+    ``WITH RECURSIVE``."""
     return f"""        -- stage neardup: MinHash-LSH pairs, CC label walk,
         -- keep-one-per-cluster
-        shingled AS (
-          SELECT doc_id,
-                 list_distinct(list_transform(
-                   range(1, greatest(length(string_split_regex(trim(text), '\\s+')) - {km1}, 1) + 1),
-                   i -> array_to_string(string_split_regex(trim(text), '\\s+')[i:i+{km1}], ' ')
-                 )) AS sh
-          FROM {src}),
-        sigs AS (
-          SELECT doc_id, sh, [{_SIG_MINS}] AS sig FROM shingled),
-        banded0 AS (
-          SELECT doc_id AS key, unnest([{_BAND_KEYS}]) AS band_key FROM sigs),
-        banded AS (
-          SELECT key, band_key FROM banded0
-          QUALIFY count(*) OVER (PARTITION BY band_key) <= {LSH_MAX_BUCKET}),
-        mcand AS (
-          SELECT DISTINCT a.key AS id_a, b.key AS id_b
-          FROM banded a JOIN banded b USING (band_key)
-          WHERE a.key < b.key),
-        mpairs AS (
-          SELECT id_a, id_b
-          FROM (SELECT c.id_a, c.id_b, sa.sh AS sh_a, sb.sh AS sh_b
-                FROM mcand c
-                JOIN sigs sa ON sa.doc_id = c.id_a
-                JOIN sigs sb ON sb.doc_id = c.id_b)
-          WHERE round({jac}, 6) >= {LSH_THRESHOLD}),
+        {_lsh_ctes(src, "m")},
         edges AS (
           SELECT id_a AS src, id_b AS dst FROM mpairs
           UNION
@@ -3364,6 +3286,92 @@ def _neardup_ctes(src: str, out: str) -> str:
           SELECT c.doc_id, c.text, c.source, c.nt
           FROM {src} c LEFT JOIN comp ON comp.node = c.doc_id
           WHERE comp.node IS NULL OR c.doc_id = comp.cluster_id),"""
+
+
+def _decontam_ctes(src: str, out: str) -> str:
+    """Stage ``decontam`` (mirror of decontaminate): ``src`` minus the
+    docs sharing a DECONTAM_NGRAM_K-word shingle with the ORIGINAL eval
+    split, in ``out``."""
+    dk = DECONTAM_NGRAM_K - 1
+    grams = (
+        "list_distinct(list_transform("
+        f"range(1, greatest(length(tk) - {dk}, 1) + 1),"
+        f" i -> array_to_string(tk[CAST(i AS INT):CAST(i + {dk} AS INT)], ' ')))"
+    )
+    return f"""        -- stage decontam: exact n-gram decontamination vs the
+        -- ORIGINAL eval text
+        evg AS (
+          SELECT DISTINCT md5(g) AS h FROM (
+            SELECT unnest({grams}) AS g
+            FROM (SELECT string_split_regex(trim(text), '\\s+') AS tk
+                  FROM documents WHERE doc_id % {DECONTAM_MODULUS} = 0))),
+        dg AS (
+          SELECT doc_id, md5(g) AS h FROM (
+            SELECT doc_id, unnest({grams}) AS g
+            FROM (SELECT doc_id,
+                         string_split_regex(trim(text), '\\s+') AS tk
+                  FROM {src}))),
+        dhits AS (SELECT DISTINCT dg.doc_id FROM dg JOIN evg USING (h)),
+        {out} AS MATERIALIZED (
+          SELECT * FROM {src}
+          WHERE doc_id NOT IN (SELECT doc_id FROM dhits)),"""
+
+
+def _mixture_ctes(src: str, out: str, budget: int, unit: str) -> str:
+    """Stage ``mixture`` (mirror of mixture_sample): ``src``'s docs, with
+    their ``bpe2`` subword counts ``bt``, resampled by source toward
+    CURATION_MIX_WEIGHTS within ``budget`` tokens counted in ``unit``
+    (``nt`` whitespace, ``bt`` subword), in ``out`` (doc_id, text, nt,
+    bt). The per-source targets are computed in PYTHON exactly as
+    mixture_sample builds its literal (float(budget) * (w / total_w)) —
+    recomputing the product in SQL could differ by one ulp and flip a
+    boundary accept."""
+    total_w = sum(CURATION_MIX_WEIGHTS.values())
+    w_case = " ".join(
+        f"WHEN '{k}' THEN {float(budget) * (v / total_w)!r}"
+        for k, v in sorted(CURATION_MIX_WEIGHTS.items())
+    )
+    in_list = ", ".join(f"'{k}'" for k in sorted(CURATION_MIX_WEIGHTS))
+    return f"""        -- stage mixture: resample by source within the budget
+        mix AS (
+          SELECT s.doc_id, s.text, s.source, s.nt, b.bt
+          FROM {src} s JOIN bpe2 b USING (doc_id)),
+        mcur AS (SELECT source, CAST(sum({unit}) AS BIGINT) AS c
+                 FROM mix GROUP BY source),
+        mrate AS (
+          SELECT source,
+                 CASE WHEN c > 0
+                      THEN least(1.0,
+                        (CASE source {w_case} END) / CAST(c AS DOUBLE))
+                      ELSE 1.0 END AS accept_rate
+          FROM mcur WHERE source IN ({in_list})),
+        {out} AS MATERIALIZED (
+          SELECT mix.doc_id, mix.text, mix.nt, mix.bt
+          FROM mix JOIN mrate USING (source)
+          WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
+                     AS BIGINT) < accept_rate * 4294967296.0),"""
+
+
+def _shard_ctes(
+    src: str, shard_tokens: int,
+    tokens: str = "length(string_split_regex(trim(text), '\\s+'))",
+) -> str:
+    """Stage ``shard`` (mirror of pack_shards): ``src``'s docs in key
+    order packed into ~``shard_tokens``-token shards by the exclusive
+    running total of ``tokens``, in ``packed`` (key, n_tokens,
+    shard_id). The chain's last CTE: no trailing comma."""
+    return f"""        -- stage shard: token-budget shard packing
+        ptok AS (
+          SELECT CAST(doc_id AS BIGINT) AS key,
+                 CAST({tokens} AS BIGINT) AS n_tokens
+          FROM {src}),
+        packed AS MATERIALIZED (
+          SELECT key, n_tokens,
+                 CAST(floor((sum(n_tokens) OVER (ORDER BY key
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                      - n_tokens) / {shard_tokens}.0) AS BIGINT)
+                   AS shard_id
+          FROM ptok)"""
 
 
 def _bt_of(rel: str, counts: str = "bpe2") -> str:
@@ -3395,21 +3403,6 @@ def _curation_sql() -> str:
     wrong intermediate, double-applying a filter, or recounting tokens
     on the wrong text shows up as a ledger mismatch even when every
     member oracle stays green."""
-    # per-source token target computed in PYTHON exactly as mixture_sample
-    # builds its literal (float(budget) * (w / total_w)) — recomputing the
-    # product in SQL could differ by one ulp and flip a boundary accept
-    total_w = sum(CURATION_MIX_WEIGHTS.values())
-    w_case = " ".join(
-        f"WHEN '{k}' THEN {float(CURATION_MIX_BUDGET) * (v / total_w)!r}"
-        for k, v in sorted(CURATION_MIX_WEIGHTS.items())
-    )
-    in_list = ", ".join(f"'{k}'" for k in sorted(CURATION_MIX_WEIGHTS))
-    dk = DECONTAM_NGRAM_K - 1
-    grams5 = (
-        "list_distinct(list_transform("
-        f"range(1, greatest(length(tk) - {dk}, 1) + 1),"
-        f" i -> array_to_string(tk[CAST(i AS INT):CAST(i + {dk} AS INT)], ' ')))"
-    )
     ledger = _ledger_sql([
         ("gate", "tr", "count(*) FROM c1", "sum(nt) FROM c1",
          "sum(bt) FROM bpe1"),
@@ -3420,9 +3413,9 @@ def _curation_sql() -> str:
         ("decontam", "c3", "count(*) FROM c4", "sum(nt) FROM c4",
          _bt_of("c4")),
         ("mixture", "c4", "count(*) FROM c5", "sum(nt) FROM c5",
-         _bt_of("c5")),
+         "sum(bt) FROM c5"),
         ("shard", "c5", "count(DISTINCT shard_id) FROM packed",
-         "sum(n_tokens) FROM packed", _bt_of("c5")),
+         "sum(n_tokens) FROM packed", "sum(bt) FROM c5"),
     ])
     return f"""
         WITH RECURSIVE
@@ -3432,50 +3425,9 @@ def _curation_sql() -> str:
 {_gate_ctes("tr", "c1")}
 {_para_ctes("c1", "c2x")}
 {_neardup_ctes("c2x", "c3")}
-        -- stage 4: decontaminate vs the ORIGINAL eval split (5-grams)
-        evg AS (
-          SELECT DISTINCT md5(g) AS h FROM (
-            SELECT unnest({grams5}) AS g
-            FROM (SELECT string_split_regex(trim(text), '\\s+') AS tk
-                  FROM documents WHERE doc_id % {DECONTAM_MODULUS} = 0))),
-        c3g AS (
-          SELECT doc_id, md5(g) AS h FROM (
-            SELECT doc_id, unnest({grams5}) AS g
-            FROM (SELECT doc_id,
-                         string_split_regex(trim(text), '\\s+') AS tk
-                  FROM c3))),
-        hits AS (SELECT DISTINCT c3g.doc_id FROM c3g JOIN evg USING (h)),
-        c4 AS MATERIALIZED (
-          SELECT * FROM c3
-          WHERE doc_id NOT IN (SELECT doc_id FROM hits)),
-        -- stage 5: mixture resample by source (mirror of mixture_sample)
-        cur5 AS (SELECT source, CAST(sum(nt) AS BIGINT) AS c
-                 FROM c4 GROUP BY source),
-        r5 AS (
-          SELECT source,
-                 CASE WHEN c > 0
-                      THEN least(1.0,
-                        (CASE source {w_case} END) / CAST(c AS DOUBLE))
-                      ELSE 1.0 END AS accept_rate
-          FROM cur5 WHERE source IN ({in_list})),
-        c5 AS MATERIALIZED (
-          SELECT c4.doc_id, c4.text, c4.nt
-          FROM c4 JOIN r5 USING (source)
-          WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                     AS BIGINT) < accept_rate * 4294967296.0),
-        -- stage 6: shard packing (mirror of text_shard_pack)
-        p6 AS (
-          SELECT CAST(doc_id AS BIGINT) AS key,
-                 CAST(length(string_split_regex(trim(text), '\\s+'))
-                   AS BIGINT) AS n_tokens
-          FROM c5),
-        packed AS MATERIALIZED (
-          SELECT key, n_tokens,
-                 CAST(floor((sum(n_tokens) OVER (ORDER BY key
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      - n_tokens) / {CURATION_SHARD_TOKENS}.0) AS BIGINT)
-                   AS shard_id
-          FROM p6)
+{_decontam_ctes("c3", "c4")}
+{_mixture_ctes("c4", "c5", CURATION_MIX_BUDGET, "nt")}
+{_shard_ctes("c5", CURATION_SHARD_TOKENS)}
 {ledger}
     """
 
@@ -3503,8 +3455,8 @@ def _curation_semantic_sql() -> str:
          _bt_of("c3")),
         ("semdedup", "c3", "count(*) FROM c4s", "sum(nt) FROM c4s",
          _bt_of("c4s")),
-        ("shard", "c4s", "count(DISTINCT shard_id) FROM packed5",
-         "sum(n_tokens) FROM packed5", _bt_of("c4s")),
+        ("shard", "c4s", "count(DISTINCT shard_id) FROM packed",
+         "sum(n_tokens) FROM packed", _bt_of("c4s")),
     ])
     return f"""
         WITH RECURSIVE
@@ -3589,19 +3541,7 @@ def _curation_semantic_sql() -> str:
         c4s AS MATERIALIZED (
           SELECT * FROM c3
           WHERE doc_id NOT IN (SELECT doc_id FROM dups4)),
-        -- stage 5: shard packing over the semantic survivors
-        p5 AS (
-          SELECT CAST(doc_id AS BIGINT) AS key,
-                 CAST(length(string_split_regex(trim(text), '\\s+'))
-                   AS BIGINT) AS n_tokens
-          FROM c4s),
-        packed5 AS MATERIALIZED (
-          SELECT key, n_tokens,
-                 CAST(floor((sum(n_tokens) OVER (ORDER BY key
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      - n_tokens) / {CURATION_SHARD_TOKENS}.0) AS BIGINT)
-                   AS shard_id
-          FROM p5)
+{_shard_ctes("c4s", CURATION_SHARD_TOKENS)}
 {ledger}
     """
 
@@ -3665,36 +3605,17 @@ def _ppl_gate_ctes(src: str, out: str) -> str:
 def _curation_scored_sql() -> str:
     """DuckDB twin of q_curation_scored_pipeline — the nine-stage SCORED
     chain in one statement. Each stage mirrors its operator's member
-    oracle expression-for-expression (gate, para and LSH near-dup are
-    the CTE fragments the other two curation twins splice; decontam,
-    the ppl model, DSIR λ table, Gumbel perturbation and fuzzy-LSH CTEs
-    restate their standalone member oracles), with the raw-side model relations re-pointed at the
+    oracle expression-for-expression (gate, para, LSH near-dup, decontam,
+    mixture and shard are the CTE fragments the other curation twins
+    splice, the fuzzy stage the ``_lsh_ctes`` chain; the ppl model, DSIR
+    λ table and Gumbel perturbation restate their standalone member
+    oracles), with the raw-side model relations re-pointed at the
     chain's intermediates (DSIR's raw distribution is the ppl-surviving
     corpus, not the full table) and the mixture/shard budgets computed
     over BPE subword counts. The value is the COMPOSITION: a scorer
     reading the wrong intermediate or a budget still summing whitespace
     counts shows up as a ledger mismatch while every member oracle stays
     green."""
-    total_w = sum(CURATION_MIX_WEIGHTS.values())
-    w_case = " ".join(
-        f"WHEN '{k}' THEN "
-        f"{float(CURATION_SCORED_MIX_BUDGET) * (v / total_w)!r}"
-        for k, v in sorted(CURATION_MIX_WEIGHTS.items())
-    )
-    in_list = ", ".join(f"'{k}'" for k in sorted(CURATION_MIX_WEIGHTS))
-    jac = _JACCARD.format(a="sh_a", b="sh_b")
-    dk = DECONTAM_NGRAM_K - 1
-    km1 = SHINGLE_K - 1
-    grams5 = (
-        "list_distinct(list_transform("
-        f"range(1, greatest(length(tk) - {dk}, 1) + 1),"
-        f" i -> array_to_string(tk[CAST(i AS INT):CAST(i + {dk} AS INT)], ' ')))"
-    )
-    shingle_expr = (
-        "list_distinct(list_transform("
-        f"range(1, greatest(length(string_split_regex(trim(text), '\\s+')) - {km1}, 1) + 1),"
-        f" i -> array_to_string(string_split_regex(trim(text), '\\s+')[i:i+{km1}], ' ')))"
-    )
     ledger = _ledger_sql([
         ("gate", "tr", "count(*) FROM c1", "sum(nt) FROM c1",
          "sum(bt) FROM bpe1"),
@@ -3713,7 +3634,7 @@ def _curation_scored_sql() -> str:
         ("mixture", "c7", "count(*) FROM c8", "sum(nt) FROM c8",
          "sum(bt) FROM c8"),
         ("shard", "c8", "count(DISTINCT shard_id) FROM packed",
-         "sum(nt) FROM c8", "sum(bt) FROM packed"),
+         "sum(nt) FROM c8", "sum(n_tokens) FROM packed"),
     ])
     return f"""
         WITH RECURSIVE
@@ -3790,22 +3711,7 @@ def _curation_scored_sql() -> str:
           SELECT c2.* FROM c2 JOIN dsel USING (doc_id)),
 {_para_ctes("c3", "c4x")}
 {_neardup_ctes("c4x", "c5")}
-        -- stage 6: exact 5-gram decontamination vs the ORIGINAL eval text
-        evg AS (
-          SELECT DISTINCT md5(g) AS h FROM (
-            SELECT unnest({grams5}) AS g
-            FROM (SELECT string_split_regex(trim(text), '\\s+') AS tk
-                  FROM documents WHERE doc_id % {DECONTAM_MODULUS} = 0))),
-        c5g AS (
-          SELECT doc_id, md5(g) AS h FROM (
-            SELECT doc_id, unnest({grams5}) AS g
-            FROM (SELECT doc_id,
-                         string_split_regex(trim(text), '\\s+') AS tk
-                  FROM c5))),
-        xh AS (SELECT DISTINCT c5g.doc_id FROM c5g JOIN evg USING (h)),
-        c6 AS MATERIALIZED (
-          SELECT * FROM c5
-          WHERE doc_id NOT IN (SELECT doc_id FROM xh)),
+{_decontam_ctes("c5", "c6")}
         -- stage 7: fuzzy (LSH) decontamination — c6's rewritten text vs
         -- the negative-keyed eval split, same banding as stage 5
         fsrc AS (
@@ -3813,52 +3719,15 @@ def _curation_scored_sql() -> str:
           UNION ALL
           SELECT -doc_id - 1 AS doc_id, text FROM documents
           WHERE doc_id % {DECONTAM_MODULUS} = 0),
-        fsh AS (SELECT doc_id, {shingle_expr} AS sh FROM fsrc),
-        fsig AS (SELECT doc_id, sh, [{_SIG_MINS}] AS sig FROM fsh),
-        fband0 AS (
-          SELECT doc_id AS key, unnest([{_BAND_KEYS}]) AS band_key FROM fsig),
-        fband AS (
-          SELECT key, band_key FROM fband0
-          QUALIFY count(*) OVER (PARTITION BY band_key) <= {LSH_MAX_BUCKET}),
-        fcand AS (
-          SELECT DISTINCT a.key AS id_a, b.key AS id_b
-          FROM fband a JOIN fband b USING (band_key)
-          WHERE a.key < b.key),
+        {_lsh_ctes("fsrc", "f")},
         fh AS (
-          SELECT DISTINCT id_b AS doc_id
-          FROM (SELECT c.id_a, c.id_b, sa.sh AS sh_a, sb.sh AS sh_b
-                FROM fcand c
-                JOIN fsig sa ON sa.doc_id = c.id_a
-                JOIN fsig sb ON sb.doc_id = c.id_b)
-          WHERE round({jac}, 6) >= {LSH_THRESHOLD}
-            AND id_a < 0 AND id_b >= 0),
+          SELECT DISTINCT id_b AS doc_id FROM fpairs
+          WHERE id_a < 0 AND id_b >= 0),
         c7 AS MATERIALIZED (
           SELECT * FROM c6
           WHERE doc_id NOT IN (SELECT doc_id FROM fh)),
-        -- stage 8: mixture resample budgeted in SUBWORD tokens
-        cur8 AS (
-          SELECT source, CAST(sum(bt) AS BIGINT) AS c
-          FROM c7 JOIN bpe2 USING (doc_id) GROUP BY source),
-        r8 AS (
-          SELECT source,
-                 CASE WHEN c > 0
-                      THEN least(1.0,
-                        (CASE source {w_case} END) / CAST(c AS DOUBLE))
-                      ELSE 1.0 END AS accept_rate
-          FROM cur8 WHERE source IN ({in_list})),
-        c8 AS MATERIALIZED (
-          SELECT c7.doc_id, c7.text, c7.nt, bpe2.bt
-          FROM c7 JOIN r8 USING (source) JOIN bpe2 USING (doc_id)
-          WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))
-                     AS BIGINT) < accept_rate * 4294967296.0),
-        -- stage 9: shard packing in SUBWORD tokens
-        packed AS MATERIALIZED (
-          SELECT doc_id AS key, bt,
-                 CAST(floor((sum(bt) OVER (ORDER BY doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                      - bt) / {CURATION_SCORED_SHARD_TOKENS}.0) AS BIGINT)
-                   AS shard_id
-          FROM c8)
+{_mixture_ctes("c7", "c8", CURATION_SCORED_MIX_BUDGET, "bt")}
+{_shard_ctes("c8", CURATION_SCORED_SHARD_TOKENS, "bt")}
 {ledger}
     """
 
@@ -3983,7 +3852,7 @@ ORACLES: dict[str, str] = {
     # mirrors annsearch.py:hash_projection_encoder + cosine_topk: sparse
     # (doc, bucket) ±1 sums — exact integers, so dot/norm math is IEEE-
     # deterministic across engines — then the standard rounded-cosine rank
-    "ann_encode_topk": r"""
+    "ann_encode_topk": rf"""
         WITH tok AS (
           SELECT doc_id, unnest(string_split_regex(trim(text), '\s+')) AS t
           FROM documents),
@@ -4015,14 +3884,7 @@ ORACLES: dict[str, str] = {
           CROSS JOIN nrm cn
           LEFT JOIN dots d
             ON d.query_id = qn.doc_id AND d.corpus_id = cn.doc_id
-          WHERE cn.doc_id <> qn.doc_id),
-        ranked AS (
-          SELECT *, row_number() OVER (PARTITION BY query_id
-                    ORDER BY cosine_sim DESC, corpus_id ASC) AS "rank"
-          FROM pairs)
-        SELECT query_id, corpus_id, cosine_sim, "rank"
-        FROM ranked WHERE "rank" <= 5
-    """,
+          WHERE cn.doc_id <> qn.doc_id),{_rank_sql("pairs")}""",
     "multimodal_frames": """
         WITH base AS (
           SELECT doc_id, text,
@@ -4090,8 +3952,7 @@ ORACLES: dict[str, str] = {
                    unnest(list_distinct(list_transform(sel, p -> hs[CAST(p AS INT)]))) AS hv
             FROM ws),
           posted AS (
-            SELECT key, hv FROM posted0
-            QUALIFY count(*) OVER (PARTITION BY hv) <= 1000)
+            SELECT key, hv FROM posted0 {_cap_sql("hv", 1000)})
           SELECT a.key AS id_a, b.key AS id_b, count(*) AS n_shared
           FROM posted a JOIN posted b USING (hv)
           WHERE a.key < b.key
@@ -4257,7 +4118,7 @@ ORACLES: dict[str, str] = {
                  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
           FROM embeddings
           -- block-size cap (operators/dedup.py:embedding_near_dup)
-          QUALIFY count(*) OVER (PARTITION BY label) <= 100000)
+          {_cap_sql("label", 100000)})
         SELECT a.key AS id_a, b.key AS id_b,
                round({_COSINE.format(a="a.v", b="b.v")}, 6) AS cosine_sim
         FROM base a JOIN base b ON a.block = b.block

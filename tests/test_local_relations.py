@@ -347,9 +347,14 @@ def test_suites_are_spec_tables():
 
 _CHAIN_STAGE_CALLS = {
     "quality_filter", "bpe_encode", "paragraph_dedup", "minhash_lsh_dedup",
-    "connected_components", "dedup_apply", "history_append",
+    "connected_components", "dedup_apply", "decontaminate",
+    "mixture_sample", "pack_shards", "history_append",
 }
-_CHAIN_CTE_HEADS = ("qt AS", "segd AS", "mcand AS")
+# one head per shared stage fragment: gate, para, neardup, decontam,
+# mixture, shard
+_CHAIN_CTE_HEADS = (
+    "qt AS", "segd AS", "comp AS", "evg AS", "AS accept_rate", "AS shard_id",
+)
 # heads whose fragment every twin in the file splices, chain or not
 _FILE_CTE_HEADS = ("qt AS", "etoks AS")
 
@@ -359,9 +364,10 @@ def _composed_chain_offenders(plans_dir: str) -> list[str]:
     the ledger instead of calling the function that owns it: a
     ``q_curation_*`` chain calling a stage operator or the history sink
     itself, a ``rows_in`` alias outside ``_ledger``, an ``AS
-    bpe_tokens_out`` outside ``_ledger_sql``, a gate, para or near-dup
-    CTE head (``qt``, ``segd``, ``mcand``) not written exactly once in
-    the SQL the curation twins (``_curation*_sql``) build, and a
+    bpe_tokens_out`` outside ``_ledger_sql``, a gate, para, near-dup,
+    decontam, mixture or shard CTE head (``_CHAIN_CTE_HEADS``) not
+    written exactly once in the SQL the curation twins
+    (``_curation*_sql``) build, and a
     quality-gate or perplexity-model head (``qt``, ``etoks``) written
     more than once anywhere in the file."""
     hits = []
@@ -421,8 +427,10 @@ def _composed_chain_offenders(plans_dir: str) -> list[str]:
         heads = {head: [] for head in _CHAIN_CTE_HEADS} if reach else {}
         for owner in sorted(reach):
             for p in strings.get(owner, ()):
-                for m in re.finditer(r"\b(qt|segd|mcand) AS\b", p):
-                    heads[m.group(0)].append(owner)
+                for head in heads:
+                    heads[head] += [owner] * len(
+                        re.findall(rf"\b{head}\b", p)
+                    )
         hits += [
             f"{fn} {head} written {len(owners)}x: {', '.join(owners)}"
             for head, owners in heads.items()
@@ -443,11 +451,12 @@ def _composed_chain_offenders(plans_dir: str) -> list[str]:
 
 def test_composed_chains_share_their_stages():
     """The three curation chains call the one implementation of each
-    shared stage (``_gate``, ``_para``, ``_neardup``) instead of the
-    operators, and the four ledgered members build their ledger through
-    ``_ledger`` (the curation chains through its one history round
-    trip). Their DuckDB twins splice the one CTE fragment per shared
-    stage and render their ledger through ``_ledger_sql``; the
+    shared stage (``_gate``, ``_para``, ``_neardup``, ``_decontam``,
+    ``_mixture``, ``_shard``) instead of the operators, and the four
+    ledgered members build their ledger through ``_ledger`` (the
+    curation chains through its one history round trip). Their DuckDB
+    twins splice the one CTE fragment per shared stage and render their
+    ledger through ``_ledger_sql``; the
     ``stream_scored_ingest`` twin splices the same quality-gate
     (``_quality_ctes``) and perplexity-gate (``_ppl_gate_ctes``)
     fragments."""
@@ -470,12 +479,12 @@ _ANN_SQL_KERNELS = {
     "rank tail": ", corpus_id ASC) AS rn",
     "IVF route": "routed AS (",
     "literal-plane dot (sig builder)": "[i] * (",
-    "sig flips": " THEN '0' ELSE '1' END) || substr(sig, ",
+    "sig flips": " THEN '0' ELSE '1' END) || substr(",
     "SQ8 codes": "floor(x / s * 127 + 0.5)",
     "PQ ADC fold": "struct_pack(m := m, d := d)",
 }
-# the two row_number windows in annsearch.py that are not a top-k pick
-_ANN_OWN_WINDOWS = {"ivf_centroids", "pq_codebooks"}
+# the one row_number window in annsearch.py that is not a top-k pick
+_ANN_OWN_WINDOWS = {"ivf_centroids"}
 
 
 def _docstring_ids(tree: ast.AST) -> set[int]:
@@ -487,14 +496,12 @@ def _docstring_ids(tree: ast.AST) -> set[int]:
     }
 
 
-def _ann_kernel_offenders(ann_path: str, pipeline_path: str) -> list[str]:
-    """Kernels of the similarity-search family not written exactly once:
-    the Spark signatures in ``ann_path``, a ``row_number`` window there
-    outside the two that are not a top-k pick, and the DuckDB fragment
-    signatures in ``pipeline_path``."""
-    with open(ann_path) as f:
+def _code_only(path: str) -> tuple[str, ast.AST]:
+    """``path``'s source with comments and docstrings blanked, and its
+    syntax tree."""
+    with open(path) as f:
         src = f.read()
-    tree = ast.parse(src, ann_path)
+    tree = ast.parse(src, path)
     lines = src.splitlines(keepends=True)
     for tok in tokenize.generate_tokens(io.StringIO(src).readline):
         if tok.type == tokenize.COMMENT:
@@ -507,12 +514,48 @@ def _ann_kernel_offenders(ann_path: str, pipeline_path: str) -> list[str]:
         if isinstance(n, ast.Expr) and id(n.value) in docs
         for i in range(n.lineno - 1, n.end_lineno)
     }
-    code = "".join(line for i, line in enumerate(lines) if i not in drop)
-    hits = [
-        f"annsearch.py {name} written {code.count(sig)}x"
-        for name, sig in _ANN_SPARK_KERNELS.items()
-        if code.count(sig) != 1
+    return "".join(line for i, line in enumerate(lines) if i not in drop), tree
+
+
+def _sql_parts(path: str) -> list[str]:
+    """The non-docstring string constants of ``path`` (an f-string
+    contributes its literal parts)."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), path)
+    docs = _docstring_ids(tree)
+    return [
+        n.value
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and id(n) not in docs
     ]
+
+
+def _written_once(where: str, text: str, kernels: dict) -> list[str]:
+    return [
+        f"{where} {name} written {text.count(sig)}x"
+        for name, sig in kernels.items()
+        if text.count(sig) != 1
+    ]
+
+
+def _sql_written_once(where: str, parts: list[str], kernels: dict) -> list[str]:
+    counts = {
+        name: sum(p.count(sig) for p in parts) for name, sig in kernels.items()
+    }
+    return [
+        f"{where} {name} written {n}x" for name, n in counts.items() if n != 1
+    ]
+
+
+def _ann_kernel_offenders(ann_path: str, pipeline_path: str) -> list[str]:
+    """Kernels of the similarity-search family not written exactly once:
+    the Spark signatures in ``ann_path``, a ``row_number`` window there
+    outside the one that is not a top-k pick, and the DuckDB fragment
+    signatures in ``pipeline_path``."""
+    code, tree = _code_only(ann_path)
+    hits = _written_once("annsearch.py", code, _ANN_SPARK_KERNELS)
     for top in tree.body:
         for node in ast.walk(top):
             if (
@@ -521,21 +564,9 @@ def _ann_kernel_offenders(ann_path: str, pipeline_path: str) -> list[str]:
                 and getattr(top, "name", None) not in _ANN_OWN_WINDOWS
             ):
                 hits.append(f"annsearch.py:{node.lineno} row_number window")
-    with open(pipeline_path) as f:
-        tree = ast.parse(f.read(), pipeline_path)
-    docs = _docstring_ids(tree)
-    parts = [
-        n.value
-        for n in ast.walk(tree)
-        if isinstance(n, ast.Constant)
-        and isinstance(n.value, str)
-        and id(n) not in docs
-    ]
-    for name, sig in _ANN_SQL_KERNELS.items():
-        n = sum(p.count(sig) for p in parts)
-        if n != 1:
-            hits.append(f"pipeline.py {name} written {n}x")
-    return hits
+    return hits + _sql_written_once(
+        "pipeline.py", _sql_parts(pipeline_path), _ANN_SQL_KERNELS
+    )
 
 
 def test_ann_family_shares_its_kernels():
@@ -545,10 +576,75 @@ def test_ann_family_shares_its_kernels():
     ``windows.top_k_per_group``; their DuckDB twins in plans/pipeline.py
     splice one rank tail (``_rank_sql``), one IVF route
     (``_ivf_route_ctes``), one sign-bit builder and flip list
-    (``_rh_sig_sql`` over ``_plane_dot_sql``, ``_rh_flips_sql``), one
-    SQ8 code block and one PQ ADC fold. ``ann_encode_topk``'s sparse
-    twin keeps its own BIGINT ``rank`` column and is not counted."""
+    (``_rh_sig_sql`` over ``_plane_dot_sql``, ``_flips_sql``), one SQ8
+    code block and one PQ ADC fold."""
     assert _ann_kernel_offenders(
         os.path.join(PKG, "operators", "annsearch.py"),
         os.path.join(PKG, "plans", "pipeline.py"),
+    ) == []
+
+
+# Spark-side kernel signatures of the near-duplicate family, code only,
+# each written exactly once over operators/dedup.py, operators/annsearch.py
+# and operators/multimodal.py
+_DEDUP_SPARK_KERNELS = {
+    "bucket-size window": "F.count(F.lit(1)).over(Window.partitionBy(",
+    "ordered self-join": '.where(F.col(f"a.{by}") < F.col(f"b.{by}"))',
+    "delta-side orientation": 'F.least(F.col("a.key"), F.col("b.key"))',
+    "shingle-map attach": '.alias("sh_a")',
+    "Hamming fold": 'withColumn("hamming_dist"',
+    "band posting": '.alias("band_bits")',
+    "re-ingest supersede": 'delta_keys.withColumnRenamed("key", key_col)',
+    "kept/dropped verdict": '.alias("kept")',
+    "pair-budget cap": '.alias("bn")',
+    "pair cosine": 'cosine_prenorm(F.col("a.v")',
+    "bit-string flip": 'F.lit("0")).otherwise(F.lit("1"))',
+    "radius guard": "radius > bands - 1",
+}
+# DuckDB-side fragment signatures over plans/pipeline.py and
+# plans/persistence.py (non-docstring string parts)
+_DEDUP_SQL_KERNELS = {
+    "bucket cap": "QUALIFY count(*) OVER",
+    "candidate join": "SELECT DISTINCT a.key AS id_a, b.key AS id_b",
+    "Hamming distance": ", CAST(i AS INT), 1) <> ",
+    "shingle set": "(trim(text), '\\s+')[i:i+",
+    "MinHash signature": "] AS sig FROM ",
+    "band keys": "]) AS band_key",
+    "Jaccard verify": "sa.sh AS sh_a",
+}
+
+
+def _dedup_kernel_offenders(ops_dir: str, plans_dir: str) -> list[str]:
+    """Kernels of the near-duplicate family not written exactly once: the
+    Spark signatures across the operator modules that hold them, and the
+    DuckDB fragment signatures across the twins' modules."""
+    code = "".join(
+        _code_only(os.path.join(ops_dir, fn))[0]
+        for fn in ("dedup.py", "annsearch.py", "multimodal.py")
+    )
+    parts = [
+        p
+        for fn in ("pipeline.py", "persistence.py")
+        for p in _sql_parts(os.path.join(plans_dir, fn))
+    ]
+    return _written_once("operators", code, _DEDUP_SPARK_KERNELS) + (
+        _sql_written_once("plans", parts, _DEDUP_SQL_KERNELS)
+    )
+
+
+def test_dedup_family_shares_its_kernels():
+    """The near-duplicate pair operators in operators/dedup.py compose
+    one implementation each of the bucket cap (``_cap`` over
+    ``_bucket_n``), the ordered self-join and candidate pairs
+    (``_self_join``, ``_candidates``, delta side included), the shingle
+    Jaccard verify, the Hamming fold, the band posting, the re-ingest
+    supersede, the SemDeDup verdict, the pair-budget block cap and the
+    pair cosine; the bit-string flip (``annsearch._flip_bits``) and the
+    banding radius guard are written once for dedup, annsearch and
+    multimodal. Their DuckDB twins splice one bucket cap (``_cap_sql``),
+    one candidate join (``_cand_sql``), one Hamming distance
+    (``_hamming_sql``) and one MinHash-LSH chain (``_sigs_ctes``,
+    ``_verify_sql``, ``_lsh_ctes``)."""
+    assert _dedup_kernel_offenders(
+        os.path.join(PKG, "operators"), os.path.join(PKG, "plans")
     ) == []

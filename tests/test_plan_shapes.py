@@ -149,15 +149,9 @@ def test_ngram_block_join_is_narrow(spark):
     assert "CartesianProduct" not in s
 
 
-_ANN_GATE = sorted(n for n in QUERIES if n.startswith("ann_"))
-
-
-def test_ann_plans_match_plans_txt(spark):
-    """Plan gate for the similarity-search family: every ``ann_*`` member
-    and ``ann_suite`` audits (tools/audit_plans.py:audit_line, at its
-    sf0.01) to exactly its ``PLANS.txt`` line — exchange, broadcast and
-    sort-merge counts, scan widths, pushed filters and flags. A change
-    that moves one of these plans must regenerate PLANS.txt."""
+def _audit_lines(spark, names) -> tuple[dict, dict]:
+    """The audit lines of ``names`` (tools/audit_plans.py:audit_line, at
+    its sf0.01) and their ``PLANS.txt`` lines."""
     import importlib.util
     import os
 
@@ -169,7 +163,34 @@ def test_ann_plans_match_plans_txt(spark):
     spec.loader.exec_module(audit)
     with open(os.path.join(repo, "PLANS.txt")) as f:
         want = {line.split(" ", 1)[0]: line.rstrip("\n") for line in f}
-    assert len(_ANN_GATE) == 13
     sf = os.path.join(os.path.dirname(SF), "sf0.01")
-    got = {n: audit.audit_line(spark, n, QUERIES[n], sf) for n in _ANN_GATE}
-    assert got == {n: want[n] for n in _ANN_GATE}
+    got = {n: audit.audit_line(spark, n, QUERIES[n], sf) for n in names}
+    return got, {n: want[n] for n in names}
+
+
+_ANN_GATE = sorted(n for n in QUERIES if n.startswith("ann_"))
+
+
+def test_ann_plans_match_plans_txt(spark):
+    """Plan gate for the similarity-search family: every ``ann_*`` member
+    and ``ann_suite`` audits (tools/audit_plans.py:audit_line, at its
+    sf0.01) to exactly its ``PLANS.txt`` line — exchange, broadcast and
+    sort-merge counts, scan widths, pushed filters and flags. A change
+    that moves one of these plans must regenerate PLANS.txt."""
+    assert len(_ANN_GATE) == 13
+    got, want = _audit_lines(spark, _ANN_GATE)
+    assert got == want
+
+
+_DEDUP_GATE = sorted(
+    n for n in QUERIES if n.startswith("dedup_") and not n.endswith("_suite")
+) + ["text_decontaminate", "text_fuzzy_decontaminate", "text_paragraph_dedup"]
+
+
+def test_dedup_plans_match_plans_txt(spark):
+    """Plan gate for the near-duplicate family: the 17 ``dedup_*``
+    members and the three text dedup/decontamination members audit to
+    exactly their ``PLANS.txt`` lines (same check as the ANN gate)."""
+    assert len(_DEDUP_GATE) == 20
+    got, want = _audit_lines(spark, _DEDUP_GATE)
+    assert got == want

@@ -439,7 +439,7 @@ def test_derive_block_cap_respects_budget_and_is_maximal(sizes, budget):
         nxt = bigger[0]
         assert sum(pairs(n) for n in sizes if n <= nxt) > budget
     # histogram form ((size, count) pairs) is the same fold — the shape
-    # _budgeted_cap passes straight from its collected aggregate
+    # _block_capped passes straight from its collected aggregate
     from collections import Counter
 
     hist = sorted(Counter(sizes).items())
