@@ -225,12 +225,11 @@ def _candidates(
             F.greatest(F.col("a.key"), F.col("b.key")).alias("id_b"),
         ]
         if fp is not None:
+            a_first = F.col("a.key") < F.col("b.key")
             cols += [
-                F.when(F.col("a.key") < F.col("b.key"), F.col(f"a.{fp}"))
-                .otherwise(F.col(f"b.{fp}"))
+                F.when(a_first, F.col(f"a.{fp}")).otherwise(F.col(f"b.{fp}"))
                 .alias("fp_a"),
-                F.when(F.col("a.key") < F.col("b.key"), F.col(f"b.{fp}"))
-                .otherwise(F.col(f"a.{fp}"))
+                F.when(a_first, F.col(f"b.{fp}")).otherwise(F.col(f"a.{fp}"))
                 .alias("fp_b"),
             ]
     return pairs.select(*cols).dropDuplicates(["id_a", "id_b"])
